@@ -24,7 +24,7 @@ and the zipWithIndex lineage) re-expressed in DataFrame algebra.
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -37,6 +37,7 @@ def seq_number(
     order_cols: Sequence[str],
     bucket: Column,
     out: str = "rn",
+    counted: Optional[str] = None,
 ) -> DataFrame:
     """Add `out` = row_number() over (partition by part_cols order by
     order_cols), computed bucket-parallel.
@@ -45,15 +46,27 @@ def seq_number(
     partition (typically a block of the leading order column, e.g.
     ``floor(col("char_pos") / 8)``) — that is what makes within-bucket
     numbering + bucket offsets equal the global numbering.
+
+    With `counted` (the name of a boolean column) only counted rows
+    advance the number: `out` is the running count of counted rows up
+    to and including this row, i.e. ``sum(int(counted))`` over the
+    same window with a rows-unbounded-preceding frame.
     """
     part = list(part_cols)
     b = bucket.cast("long").alias("__bkt")
     dfb = df.withColumn("__bkt", b)
 
     w_in = Window.partitionBy(*part, "__bkt").orderBy(*order_cols)
-    dfb = dfb.withColumn("__rn_in", F.row_number().over(w_in))
+    if counted is None:
+        one, rank_in = F.lit(1), F.row_number().over(w_in)
+    else:
+        one = F.col(counted).cast("int")
+        rank_in = F.sum(one).over(
+            w_in.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        )
+    dfb = dfb.withColumn("__rn_in", rank_in)
 
-    counts = dfb.groupBy(*part, "__bkt").agg(F.count(F.lit(1)).alias("__n"))
+    counts = dfb.groupBy(*part, "__bkt").agg(F.sum(one).alias("__n"))
     w_off = (
         Window.partitionBy(*part)
         .orderBy("__bkt")

@@ -8,9 +8,19 @@ from __future__ import annotations
 
 from typing import List, Optional, Tuple
 
+from pyspark.sql import types as ST
+
 from rdf_generator_spark import terms as T
 
 Triple = Tuple[str, str, str, bool, Optional[str]]
+
+BASE_SCHEMA = ST.StructType([
+    ST.StructField("s", ST.StringType()),
+    ST.StructField("p", ST.StringType()),
+    ST.StructField("o", ST.StringType()),
+    ST.StructField("lit", ST.BooleanType()),
+    ST.StructField("dt", ST.StringType()),
+])
 
 
 def base_triples() -> List[Triple]:

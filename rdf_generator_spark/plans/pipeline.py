@@ -3,7 +3,8 @@
 Dataflow (SURVEY.md §3 "Spark lifecycle"):
 
     corpus(repo,path,commit,lang,content)
-      ├─ parse (Arrow mapInPandas)  -> chars / cells / species / meta
+      ├─ fused parse (one Arrow mapInPandas, one "parsed" hub)
+      │                             -> chars / cells / species / meta views
       ├─ vocab broadcast join (J1)  -> URI-filled chars
       ├─ per-state derivation (J2, K1) -> states_x   [long table]
       ├─ cells ⋈ chars (J4/J5) × sex variants (F2)   -> visits
@@ -57,10 +58,10 @@ from rdf_generator_spark.operators.graph_ops import (
     prune_unreferenced_scoped,
 )
 from rdf_generator_spark.operators.windows import seq_number
-from rdf_generator_spark.plans.base_scaffold import base_triples
+from rdf_generator_spark.plans.base_scaffold import BASE_SCHEMA, base_triples
 from rdf_generator_spark.plans.emit import emit, t, tl, union_emissions, when_t
 from rdf_generator_spark.sources import parsers
-from rdf_generator_spark.sources.corpus import vocab_df_from_corpus
+from rdf_generator_spark.sources.corpus import local_df, vocab_df_from_corpus
 
 DOC = ["repo", "commit"]
 
@@ -105,13 +106,6 @@ _GIANT_DOC_CONTENT_BYTES = 96 * 1024
 _GIANT_DOC_EXACT_BYTES = 192 * 1024
 _AUTO_COUNTER_BUCKET_WIDTH = 64
 _PROBE_FILE_CAP = 4096
-# exact-probe memo: file lists are immutable identities for parquet /
-# Iceberg data (part filenames are unique per write), so the one
-# fallback job per corpus is paid once per file set, not per build.
-# Keyed by the sorted file tuple itself (ADVICE r5: a 64-bit hash()
-# collision between two different file lists would silently alias).
-_PROBE_EXACT_CACHE: Dict[tuple, int] = {}
-_PROBE_EXACT_CACHE_MAX = 64
 
 
 def probe_max_doc_bytes(corpus: DataFrame, allow_job: bool = True):
@@ -135,9 +129,10 @@ def probe_max_doc_bytes(corpus: DataFrame, allow_job: bool = True):
       footer alone PROVES the gate can stay off — zero jobs.
     - otherwise the footer is ambiguous (a packed row group could hide
       a giant behind a small mean — VERDICT r4 item 2); run ONE
-      column-pruned ``max(octet_length(content))`` job (memoized per
-      file list) and return ``(exact_max, exact=True)``. At any scale
-      this is one scan of the one column the pipeline reads anyway.
+      column-pruned ``max(octet_length(content))`` job and return
+      ``(exact_max, exact=True)``. At any scale this is one scan of the
+      one column the pipeline reads anyway; it runs on every call, since
+      nothing caches a job result across builds.
 
     Returns ``None`` for in-memory corpora (createDataFrame —
     tests/golden scale, small by construction; a probe job there would
@@ -199,22 +194,16 @@ def probe_max_doc_bytes(corpus: DataFrame, allow_job: bool = True):
         return (max(best_mean, 1), False)
     if not allow_job:
         return (max(best_mean, 1), False)
-    key = tuple(sorted(files))
-    exact = _PROBE_EXACT_CACHE.get(key)
+    try:
+        exact = corpus.select(
+            F.max(F.octet_length(F.col("content"))).alias("m")
+        ).first()[0]
+    except Exception:
+        # fallback job failed (column renamed, source gone) — the
+        # footer mean is still a usable conservative estimate
+        return (max(best_mean, 1), False)
     if exact is None:
-        try:
-            exact = corpus.select(
-                F.max(F.octet_length(F.col("content"))).alias("m")
-            ).first()[0]
-        except Exception:
-            # fallback job failed (column renamed, source gone) — the
-            # footer mean is still a usable conservative estimate
-            return (max(best_mean, 1), False)
-        if exact is None:
-            return None
-        if len(_PROBE_EXACT_CACHE) >= _PROBE_EXACT_CACHE_MAX:
-            _PROBE_EXACT_CACHE.clear()
-        _PROBE_EXACT_CACHE[key] = int(exact)
+        return None
     return (int(exact), True)
 
 
@@ -319,8 +308,8 @@ def build_salts(
 def resolve_counter_buckets(corpus: DataFrame, counter_buckets):
     """Resolve build_graph's counter strategy: "auto" gates the
     two-phase bucketed numbering on the giant-document probe (footer
-    statistics when they decide, one memoized column-pruned job when
-    they are ambiguous — see probe_max_doc_bytes); int forces a bucket
+    statistics when they decide, one column-pruned job when they are
+    ambiguous — see probe_max_doc_bytes); int forces a bucket
     width; None forces the per-document window."""
     if counter_buckets != "auto":
         return counter_buckets
@@ -349,10 +338,11 @@ def build_graph(
 ) -> Dict[str, DataFrame]:
     """Run the full pipeline; returns named DataFrames.
 
-    With ``materialize`` (default) the hub tables (chars/states/visits and
-    the emitted triple union) are materialized: every downstream branch
-    (per-part outputs, prune, label priority, validation) reuses one
-    materialized dataset instead of replaying the parse+join lineage.
+    With ``materialize`` (default) the hub tables (the fused parse,
+    chars/states/visits and the emitted triple union) are materialized:
+    every downstream branch (per-part outputs, prune, label priority,
+    validation) reuses one materialized dataset instead of replaying the
+    parse+join lineage.
 
     Materialization mechanism: ``localCheckpoint`` by default (fastest on
     a single box, but the blocks live on executors — a lost executor
@@ -394,16 +384,22 @@ def build_graph(
         )
     bhint = F.broadcast if dim_broadcast else (lambda d: d)
 
-    def _seq(df, order_cols, out):
+    def _seq(df, order_cols, out, counted=None):
         """Per-document sequential numbering; two-phase when
-        counter_buckets is set (giant-document parallelism)."""
+        counter_buckets is set (giant-document parallelism). With
+        `counted` (a boolean column) only those rows advance the
+        counter: `out` is the number of counted rows up to this one."""
         if counter_buckets:
             return seq_number(
                 df, DOC, order_cols,
                 F.floor(F.col(order_cols[0]) / counter_buckets), out=out,
+                counted=counted,
             )
         w = Window.partitionBy(*DOC).orderBy(*order_cols)
-        return df.withColumn(out, F.row_number().over(w))
+        if counted is None:
+            return df.withColumn(out, F.row_number().over(w))
+        w = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        return df.withColumn(out, F.sum(F.col(counted).cast("int")).over(w))
 
     # Hub-table materialization happens TOP-DOWN: each hub is
     # checkpointed as soon as its plan is complete, and every downstream
@@ -420,16 +416,20 @@ def build_graph(
     def hub(df, name):
         return mat(df, name) if do_mat else df
 
-    chars_raw = parsers.parse_char_docs(corpus)
-    cells = parsers.parse_nexus_docs(corpus)
-    species = parsers.parse_species_docs(corpus)
+    # One fused parse per build, materialized as the first hub: every
+    # family below is a projection of it, so each document enters Python
+    # exactly once however many jobs read its records.
+    parsed = hub(parsers.parse_docs(corpus), "parsed")
+    chars_raw = parsers.family_view(parsed, "json")
+    cells = parsers.family_view(parsed, "nexus")
+    species = parsers.family_view(parsed, "species-json")
     # Last-row-wins per Char_ID, replaying the reference's dict overwrite
     # (main.py:214-221): a repeated Char_ID must update, not fan out the
     # char join below (which would duplicate every downstream visit row
     # and shift the sequential :id-N counters). Keys are per-document so
     # the aggregation shuffles on (repo, commit, char_id) — no skew risk.
     meta = (
-        parsers.parse_metadata_docs(corpus)
+        parsers.family_view(parsed, "csv")
         .groupBy(*DOC, "char_id")
         .agg(
             F.max_by(
@@ -466,7 +466,7 @@ def build_graph(
         for r in owl_rows:
             for k, v in build_label_index(r["content"]).items():
                 index.setdefault(k, v)
-        vocab = spark.createDataFrame(sorted(index.items()), VOCAB_SCHEMA)
+        vocab = local_df(spark, sorted(index.items()), VOCAB_SCHEMA)
         dataset_id = _dataset_id_from_yaml_rows(
             sorted(
                 (r for r in dim_rows if r["lang"] == "yaml"),
@@ -664,41 +664,50 @@ def build_graph(
         )
     )
     # A2 counters (single per-document window by default; two-phase via
-    # counter_buckets — see build_graph docstring)
-    st = _seq(st, ["char_pos", "state_idx"], "__rn")
+    # counter_buckets — see build_graph docstring). The reference labels
+    # a STATE/QUALITY node only when it has no label yet (the has_label
+    # guards in refsim's process_phenotype and handle_quality): two
+    # states of one character with the same IRI seed (same URI, or same
+    # label and no URI) take ONE number, and the repeat carries the
+    # first occurrence's label.
+    # Phase b (per-character graphs) guards within the character row;
+    # the matrix round guards within the document; the matrix STATE
+    # counter continues after phase b's, so its offset counts phase-b
+    # first occurrences.
+    w_doc_seed = Window.partitionBy(*DOC, "seed").orderBy("char_pos", "state_idx")
+    w_char_seed = Window.partitionBy(*DOC, "char_pos", "seed").orderBy("state_idx")
+    st = (
+        st.withColumn("__first_m", F.row_number().over(w_doc_seed) == 1)
+        .withColumn("__first_b", F.row_number().over(w_char_seed) == 1)
+    )
+    st = _seq(st, ["char_pos", "state_idx"], "__rn_m", counted="__first_m")
+    st = _seq(st, ["char_pos", "state_idx"], "__rn_b", counted="__first_b")
+    n_first_b = F.sum(F.col("__first_b").cast("int"))
     if counter_buckets:
-        st = st.join(
-            st.groupBy(*DOC).agg(F.count(F.lit(1)).alias("__n_states")), DOC
-        )
+        st = st.join(st.groupBy(*DOC).agg(n_first_b.alias("__n_states")), DOC)
     else:
-        st = st.withColumn(
-            "__n_states", F.count(F.lit(1)).over(Window.partitionBy(*DOC))
-        )
+        st = st.withColumn("__n_states", n_first_b.over(Window.partitionBy(*DOC)))
+    st = (
+        st.withColumn("__rn_m", F.first("__rn_m").over(w_doc_seed))
+        .withColumn("__label_m", F.first("labelN").over(w_doc_seed))
+        .withColumn("__rn_b", F.first("__rn_b").over(w_char_seed))
+        .withColumn("__label_b", F.first("labelN").over(w_char_seed))
+    )
+
+    def _id_label(label, fallback, n):
+        prefix = F.when(F.col(label) == "", F.lit(fallback)).otherwise(F.col(label))
+        return F.concat(prefix, F.lit(":id-"), n)
+
     st = (
         st.withColumn(
-            "sta_prefix",
-            F.when(F.col("labelN") == "", F.lit("state")).otherwise(F.col("labelN")),
-        )
-        .withColumn(
-            "qua_prefix",
-            F.when(F.col("labelN") == "", F.lit("quality")).otherwise(F.col("labelN")),
-        )
-        .withColumn(
             "sta_label",
-            F.concat(F.col("sta_prefix"), F.lit(":id-"),
-                     F.col("__n_states") + F.col("__rn")),
+            _id_label("__label_m", "state", F.col("__n_states") + F.col("__rn_m")),
         )
-        .withColumn(
-            # phase-b label (build_character_graphs round): visible only
-            # in per-character graphs; label priority replaces it with
-            # the matrix-round label in every written output
-            "sta_label_phase_b",
-            F.concat(F.col("sta_prefix"), F.lit(":id-"), F.col("__rn")),
-        )
-        .withColumn(
-            "qua_label",
-            F.concat(F.col("qua_prefix"), F.lit(":id-"), F.col("__rn")),
-        )
+        # phase-b label (build_character_graphs round): visible only in
+        # per-character graphs; label priority replaces it with the
+        # matrix-round label in every written output
+        .withColumn("sta_label_phase_b", _id_label("__label_b", "state", F.col("__rn_b")))
+        .withColumn("qua_label", _id_label("__label_m", "quality", F.col("__rn_m")))
     )
     if do_mat:
         # checkpoint only what downstream consumers read (RDD scans
@@ -923,12 +932,11 @@ def build_graph(
     visits = hub(visits, "visits")
     # cells_j deliberately NOT checkpointed: its two consumers (visits
     # above, cell_triples in _assemble) each sit directly on the
-    # materialized charsx hub + the narrow NEXUS parse, so Catalyst can
-    # prune columns per consumer and pipeline the parse into them. An
-    # interleaved A/B at bench scale (24 datasets, one JVM) measured
-    # skipping this checkpoint at 40.4 s vs 73.4 s for the full-mat
-    # ladder — the barrier + full-width recompute cost far more than the
-    # duplicated parse. charsx/states_x/visits/parts stay materialized:
+    # materialized charsx and parsed hubs, so each consumer re-runs only
+    # the cheap join (its NEXUS rows come from the parsed hub, not a
+    # second parse). An interleaved A/B at bench scale (24 datasets, one
+    # JVM) measured skipping this checkpoint at 40.4 s vs 73.4 s for the
+    # full-mat ladder. charsx/states_x/visits/parts stay materialized:
     # they bound Catalyst plan depth and keep the final-graph plan free
     # of Python stages (test_plans.py).
 
@@ -1009,9 +1017,7 @@ def _assemble(spark, corpus, charsx, states_x, cells_j, visits, species, cells, 
 
     # -- base part (constant scaffold per document) -----------------------
     docs = corpus.select(*DOC).distinct()
-    base_df = spark.createDataFrame(
-        base_triples(), "s string, p string, o string, lit boolean, dt string"
-    )
+    base_df = local_df(spark, base_triples(), BASE_SCHEMA)
     base_part = docs.join(F.broadcast(base_df))
 
     # -- char part: char node + provenance + state typing -----------------
@@ -1299,8 +1305,8 @@ def _assemble(spark, corpus, charsx, states_x, cells_j, visits, species, cells, 
     if materialize:
         # taxa_sp is a per-taxon dimension table (rows = distinct taxa)
         # consumed by TWO emission branches (species_part and tu_part) —
-        # without pinning, each branch re-ran the NEXUS parse, distinct,
-        # species-key join and min_by aggregation inside the dedup job.
+        # without pinning, each branch re-ran the distinct, species-key
+        # join and min_by aggregation inside the dedup job.
         taxa_sp = mat(taxa_sp, "taxa_sp")
     species_part = emit(taxa_sp, *_memo_cols("species_part", lambda: [
         t("sp_uri", T.RDF_TYPE, T.OWL_CLASS),

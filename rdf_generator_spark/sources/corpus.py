@@ -156,7 +156,28 @@ def vocab_df_from_corpus(
     for r in rows.select("path", "content").collect():
         for k, v in build_label_index(r["content"]).items():
             index.setdefault(k, v)
-    return spark.createDataFrame(sorted(index.items()), VOCAB_SCHEMA)
+    return local_df(spark, sorted(index.items()), VOCAB_SCHEMA)
+
+
+def local_df(
+    spark: SparkSession, rows: List[tuple], schema: T.StructType
+) -> DataFrame:
+    """A small in-memory table (vocabulary, scaffold) as a DataFrame.
+
+    Built from a ``pyarrow.Table``, which Spark converts in the JVM into
+    a local relation; ``createDataFrame`` on a Python list would instead
+    plan a Python RDD that spins up Python workers on every scan."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    return spark.createDataFrame(
+        pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+            schema=arrow_schema,
+        )
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -1,10 +1,15 @@
 """Arrow-batched document parsers: corpus `content` -> typed DataFrames.
 
-Every parser is a ``mapInPandas`` transform over the corpus table
-``(repo, path, commit, lang, content)`` — documents stream through in
-Arrow batches, one output row per extracted record, so a single giant
-document fans out inside its partition without a shuffle. The irregular
-positional key names of the character JSON ("Locator 1 label",
+One ``mapInPandas`` transform (`parse_docs`) parses every document kind
+of the corpus table ``(repo, path, commit, lang, content)`` in a single
+pass — documents stream through in Arrow batches, one output row per
+extracted record, so a single giant document fans out inside its
+partition without a shuffle. `FAMILIES` maps each ``lang`` to its row
+extractor and record schema; each record lands in its family's struct
+column and the other families' slots stay null. `family_view` projects
+one family back to its flat table.
+
+The irregular positional key names of the character JSON ("Locator 1 label",
 "State 0 URI" — /root/reference/rdf_generator/main.py:752,1003,1099) are
 normalized to fixed StructTypes here so everything downstream is
 statically typed and stays in the JVM.
@@ -16,10 +21,13 @@ import csv
 import io
 import json
 import re
-from typing import Any, Dict, Iterator, List, Optional
+from typing import (
+    Any, Callable, Dict, Iterator, List, NamedTuple, Optional, Sequence,
+)
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from rdf_generator_spark.normalize import (
@@ -46,64 +54,52 @@ STATE_STRUCT = T.StructType(
     ]
 )
 
-CHARS_SCHEMA = T.StructType(
-    _DOC_KEY_FIELDS
-    + [
-        T.StructField("char_pos", T.IntegerType()),
-        T.StructField("char_id", T.StringType()),
-        T.StructField("char_label", T.StringType()),
-        T.StructField("org_label", T.StringType()),
-        T.StructField("org_uri", T.StringType()),
-        T.StructField("locators", T.ArrayType(LABEL_URI)),
-        T.StructField("has_variable", T.BooleanType()),
-        T.StructField("var_label", T.StringType()),
-        T.StructField("var_uri", T.StringType()),
-        T.StructField("var_comment", T.StringType()),
-        T.StructField("states", T.ArrayType(STATE_STRUCT)),
-        T.StructField("tag", T.StringType()),
-        T.StructField("species_label", T.StringType()),
-        T.StructField("species_id", T.StringType()),
-        # Quirk F12: the reference reads MatrixLabel from the *leaked* last
-        # loop variable of the load phase (main.py:500 + 1720), i.e. the
-        # document's LAST row. Replicated per document on every row.
-        T.StructField("doc_matrix_label", T.StringType()),
-    ]
-)
+CHARS_FIELDS = [
+    T.StructField("char_pos", T.IntegerType()),
+    T.StructField("char_id", T.StringType()),
+    T.StructField("char_label", T.StringType()),
+    T.StructField("org_label", T.StringType()),
+    T.StructField("org_uri", T.StringType()),
+    T.StructField("locators", T.ArrayType(LABEL_URI)),
+    T.StructField("has_variable", T.BooleanType()),
+    T.StructField("var_label", T.StringType()),
+    T.StructField("var_uri", T.StringType()),
+    T.StructField("var_comment", T.StringType()),
+    T.StructField("states", T.ArrayType(STATE_STRUCT)),
+    T.StructField("tag", T.StringType()),
+    T.StructField("species_label", T.StringType()),
+    T.StructField("species_id", T.StringType()),
+    # Quirk F12: the reference reads MatrixLabel from the *leaked* last
+    # loop variable of the load phase (main.py:500 + 1720), i.e. the
+    # document's LAST row. Replicated per document on every row.
+    T.StructField("doc_matrix_label", T.StringType()),
+]
 
-CELLS_SCHEMA = T.StructType(
-    _DOC_KEY_FIELDS
-    + [
-        T.StructField("taxon_pos", T.IntegerType()),
-        T.StructField("taxon", T.StringType()),
-        T.StructField("char_index", T.IntegerType()),
-        T.StructField("symbol", T.StringType()),
-    ]
-)
+CELLS_FIELDS = [
+    T.StructField("taxon_pos", T.IntegerType()),
+    T.StructField("taxon", T.StringType()),
+    T.StructField("char_index", T.IntegerType()),
+    T.StructField("symbol", T.StringType()),
+]
 
-SPECIES_SCHEMA = T.StructType(
-    _DOC_KEY_FIELDS
-    + [
-        T.StructField("sp_pos", T.IntegerType()),
-        T.StructField("input_name", T.StringType()),
-        T.StructField("valid_name", T.StringType()),
-        T.StructField("gbif_id", T.StringType()),
-        T.StructField("zoobank_id", T.StringType()),
-        T.StructField("match_level", T.StringType()),
-        T.StructField("uri", T.StringType()),
-    ]
-)
+SPECIES_FIELDS = [
+    T.StructField("sp_pos", T.IntegerType()),
+    T.StructField("input_name", T.StringType()),
+    T.StructField("valid_name", T.StringType()),
+    T.StructField("gbif_id", T.StringType()),
+    T.StructField("zoobank_id", T.StringType()),
+    T.StructField("match_level", T.StringType()),
+    T.StructField("uri", T.StringType()),
+]
 
-METADATA_SCHEMA = T.StructType(
-    _DOC_KEY_FIELDS
-    + [
-        T.StructField("char_id", T.StringType()),
-        T.StructField("source_text", T.StringType()),
-        # CSV row position: the reference folds rows into a dict where a
-        # repeated Char_ID overwrites (main.py:214-221) — carrying the
-        # position lets the pipeline replay last-row-wins distributively.
-        T.StructField("meta_pos", T.IntegerType()),
-    ]
-)
+METADATA_FIELDS = [
+    T.StructField("char_id", T.StringType()),
+    T.StructField("source_text", T.StringType()),
+    # CSV row position: the reference folds rows into a dict where a
+    # repeated Char_ID overwrites (main.py:214-221) — carrying the
+    # position lets the pipeline replay last-row-wins distributively.
+    T.StructField("meta_pos", T.IntegerType()),
+]
 
 
 def _first_value(d: Dict[str, Any], needle: str, require_truthy: bool = False):
@@ -194,22 +190,6 @@ def char_rows_from_json(content: str) -> List[dict]:
     return out
 
 
-def parse_char_docs(corpus: DataFrame) -> DataFrame:
-    """Character JSON documents (lang='json') -> one row per character."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: List[dict] = []
-            for repo, path, commit, content in zip(
-                pdf["repo"], pdf["path"], pdf["commit"], pdf["content"]
-            ):
-                for row in char_rows_from_json(content):
-                    out.append({"repo": repo, "path": path, "commit": commit, **row})
-            yield pd.DataFrame(out, columns=[f.name for f in CHARS_SCHEMA.fields])
-
-    return corpus.filter(corpus.lang == "json").mapInPandas(gen, CHARS_SCHEMA)
-
-
 _NEXUS_ROW = re.compile(r"^\s*(?:'([^']*)'|\"([^\"]*)\"|(\S+))\s*(.*)$")
 
 
@@ -260,32 +240,6 @@ def _parse_nexus_matrix(content: str) -> List[tuple]:
         for pos, taxon in enumerate(order)
         for idx, sym in enumerate(symbols[taxon])
     ]
-
-
-def parse_nexus_docs(corpus: DataFrame) -> DataFrame:
-    """NEXUS documents (lang='nexus') -> long cells table."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: List[dict] = []
-            for repo, path, commit, content in zip(
-                pdf["repo"], pdf["path"], pdf["commit"], pdf["content"]
-            ):
-                for taxon_pos, taxon, char_index, symbol in _parse_nexus_matrix(content or ""):
-                    out.append(
-                        {
-                            "repo": repo,
-                            "path": path,
-                            "commit": commit,
-                            "taxon_pos": taxon_pos,
-                            "taxon": taxon,
-                            "char_index": char_index,
-                            "symbol": symbol,
-                        }
-                    )
-            yield pd.DataFrame(out, columns=[f.name for f in CELLS_SCHEMA.fields])
-
-    return corpus.filter(corpus.lang == "nexus").mapInPandas(gen, CELLS_SCHEMA)
 
 
 def species_rows_from_json(content: str) -> List[dict]:
@@ -344,38 +298,103 @@ def metadata_rows_from_csv(content: str) -> List[dict]:
     return out
 
 
+def nexus_rows(content: Optional[str]) -> List[dict]:
+    """One NEXUS document -> long cell records (taxon x character)."""
+    return [
+        {"taxon_pos": pos, "taxon": taxon, "char_index": idx, "symbol": sym}
+        for pos, taxon, idx, sym in _parse_nexus_matrix(content or "")
+    ]
+
+
+class Family(NamedTuple):
+    """One document kind: the struct column its records land in, the
+    extractor turning one document's content into records, and the
+    record fields."""
+
+    column: str
+    extract: Callable[[Optional[str]], List[dict]]
+    fields: List[T.StructField]
+
+
+# lang -> family: the single table the fused parse dispatches on
+FAMILIES: Dict[str, Family] = {
+    "json": Family("chars", char_rows_from_json, CHARS_FIELDS),
+    "nexus": Family("cells", nexus_rows, CELLS_FIELDS),
+    "species-json": Family("species", species_rows_from_json, SPECIES_FIELDS),
+    "csv": Family("meta", metadata_rows_from_csv, METADATA_FIELDS),
+}
+
+
+def parse_docs(corpus: DataFrame, langs: Sequence[str] = tuple(FAMILIES)) -> DataFrame:
+    """Fused parse of every document whose ``lang`` is in `langs`.
+
+    Output: the document key, ``lang``, and one nullable struct column
+    per family in `langs`. A row carries its own family's record and
+    nulls in the other slots, so a materialized (non-pruning) scan of
+    the result reads each record's own fields plus a few null markers,
+    not the union of every family's columns. Python runs once per
+    document here, whatever number of families a build reads.
+    """
+    fams = {lang: FAMILIES[lang] for lang in langs}
+    schema = T.StructType(
+        _DOC_KEY_FIELDS
+        + [T.StructField("lang", T.StringType())]
+        + [T.StructField(f.column, T.StructType(f.fields)) for f in fams.values()]
+    )
+    names = [f.name for f in schema.fields]
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out: Dict[str, list] = {n: [] for n in names}
+            for doc in zip(pdf["repo"], pdf["path"], pdf["commit"],
+                           pdf["lang"], pdf["content"]):
+                fam = fams[doc[3]]
+                recs = fam.extract(doc[4])
+                for n, v in zip(names, doc[:4]):
+                    out[n].extend([v] * len(recs))
+                for f in fams.values():
+                    out[f.column].extend(recs if f is fam else [None] * len(recs))
+            yield pd.DataFrame(out, columns=names)
+
+    return (
+        corpus.filter(F.col("lang").isin(*fams))
+        .select("repo", "path", "commit", "lang", "content")
+        .mapInPandas(gen, schema)
+    )
+
+
+def family_view(parsed: DataFrame, lang: str) -> DataFrame:
+    """One family of a `parse_docs` result as its flat table
+    (document key + record fields)."""
+    return parsed.filter(F.col("lang") == lang).select(
+        "repo", "path", "commit", f"{FAMILIES[lang].column}.*"
+    )
+
+
+def _parse_one(corpus: DataFrame, lang: str) -> DataFrame:
+    return family_view(parse_docs(corpus, [lang]), lang)
+
+
+def parse_char_docs(corpus: DataFrame) -> DataFrame:
+    """Character JSON documents (lang='json') -> one row per character."""
+    return _parse_one(corpus, "json")
+
+
+def parse_nexus_docs(corpus: DataFrame) -> DataFrame:
+    """NEXUS documents (lang='nexus') -> long cells table."""
+    return _parse_one(corpus, "nexus")
+
+
 def parse_species_docs(corpus: DataFrame) -> DataFrame:
     """Species JSON documents (lang='species-json') -> species records.
 
     Names are taxon-normalized at load, URIs species-normalized —
     mirroring main.py:537-551.
     """
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: List[dict] = []
-            for repo, path, commit, content in zip(
-                pdf["repo"], pdf["path"], pdf["commit"], pdf["content"]
-            ):
-                for row in species_rows_from_json(content):
-                    out.append({"repo": repo, "path": path, "commit": commit, **row})
-            yield pd.DataFrame(out, columns=[f.name for f in SPECIES_SCHEMA.fields])
-
-    return corpus.filter(corpus.lang == "species-json").mapInPandas(gen, SPECIES_SCHEMA)
+    return _parse_one(corpus, "species-json")
 
 
 def parse_metadata_docs(corpus: DataFrame) -> DataFrame:
     """Metadata CSVs (lang='csv') -> (char_id, source_text); empty rows
     dropped and 'Modified from ' stripped (main.py:208-224)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: List[dict] = []
-            for repo, path, commit, content in zip(
-                pdf["repo"], pdf["path"], pdf["commit"], pdf["content"]
-            ):
-                for row in metadata_rows_from_csv(content):
-                    out.append({"repo": repo, "path": path, "commit": commit, **row})
-            yield pd.DataFrame(out, columns=[f.name for f in METADATA_SCHEMA.fields])
-
-    return corpus.filter(corpus.lang == "csv").mapInPandas(gen, METADATA_SCHEMA)
+    return _parse_one(corpus, "csv")

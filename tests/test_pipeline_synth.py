@@ -50,6 +50,51 @@ def test_synth_corpus_matches_oracle_per_doc(spark, seed):
         )
 
 
+def _kgbench_jobs():
+    import importlib.util
+    import os
+
+    path = os.path.join(os.path.dirname(os.path.dirname(__file__)),
+                        "kgbench", "jobs.py")
+    spec = importlib.util.spec_from_file_location("kgbench_jobs", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+@pytest.mark.parametrize("counter_buckets", [None, 2])
+def test_repeated_state_seed_matches_oracle(spark, counter_buckets):
+    """A character with two states of one IRI seed (same label, no URI):
+    the reference numbers the state once (has_label guards), so the
+    STATE/QUALITY :id-N counters must skip the repeat, on the single
+    window and on the bucketed path alike, or every later label of the
+    document differs."""
+    rows = synth_corpus_rows(n_datasets=3, ntax=5, nchar=5, seed=7)
+    jobs = _kgbench_jobs()
+    flagged = [r[0] for r in rows if r[3] == "json" and jobs.repeated_state_seed(r[4])]
+    assert flagged, "seed no longer draws a repeated state seed"
+    res = build_graph(spark, corpus_df(spark, rows), counter_buckets=counter_buckets)
+    got_by_doc = defaultdict(set)
+    for r in res["triples"].collect():
+        got_by_doc[r["repo"]].add((r["s"], r["p"], r["o"], bool(r["lit"]), r["dt"]))
+
+    by_repo = defaultdict(dict)
+    for repo, path, commit, lang, content in rows:
+        by_repo[repo][lang] = content
+    assert set(got_by_doc) == set(by_repo)
+    for repo, docs in by_repo.items():
+        want = RefSim(
+            P.char_rows_from_json(docs["json"]),
+            P._parse_nexus_matrix(docs["nexus"]),
+            P.species_rows_from_json(docs["species-json"]),
+            {r["char_id"]: r["source_text"]
+             for r in P.metadata_rows_from_csv(docs["csv"])},
+            build_label_index(docs["owl"]),
+        ).run()["final"].triples()
+        got = got_by_doc[repo]
+        assert got == want, (repo, sorted(got - want)[:4], sorted(want - got)[:4])
+
+
 def test_no_metadata_corpus_uses_input_salt_tier(spark):
     """K2 tier 3 end-to-end (reference main.py:245-247): with no
     metadata CSV and no dataset_id, the salt is

@@ -195,14 +195,13 @@ def test_probe_exact_fallback_packed_row_group(spark, tmp_path):
     the pre-round-5 probe missed the giant and the 592 s straggler
     returned. The hardened probe detects the ambiguity from the group's
     TOTAL content bytes (a giant row forces total >= its own size, even
-    dictionary-encoded) and settles it with ONE memoized column-pruned
-    max(octet_length) job."""
+    dictionary-encoded) and settles it with ONE column-pruned
+    max(octet_length) job, run on every probe (no cross-build cache)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from rdf_generator_spark.plans.pipeline import (
         _AUTO_COUNTER_BUCKET_WIDTH,
-        _PROBE_EXACT_CACHE,
         probe_max_doc_bytes,
         resolve_counter_buckets,
     )
@@ -224,17 +223,17 @@ def test_probe_exact_fallback_packed_row_group(spark, tmp_path):
     assert md.num_row_groups == 1  # the packing the probe must survive
     df = spark.read.parquet(p)
 
-    _PROBE_EXACT_CACHE.clear()
     got = probe_max_doc_bytes(df)
     assert got == (giant, True)  # exact job ran and found the giant
     assert resolve_counter_buckets(df, "auto") == _AUTO_COUNTER_BUCKET_WIDTH
     # allow_job=False degrades to the conservative footer mean (off)
     assert probe_max_doc_bytes(df, allow_job=False)[1] is False
-    # memoized: a second probe of the same file list launches no job
+    # not memoized: a second probe of the same file list runs the job
+    # again and gets the same answer
     tracker = spark.sparkContext.statusTracker()
     before = len(tracker.getJobIdsForGroup(None) or [])
     assert probe_max_doc_bytes(df) == (giant, True)
-    assert len(tracker.getJobIdsForGroup(None) or []) == before
+    assert len(tracker.getJobIdsForGroup(None) or []) > before
 
 
 def test_probe_file_cap_falls_through_to_exact(spark, tmp_path, monkeypatch):
@@ -270,7 +269,6 @@ def test_probe_file_cap_falls_through_to_exact(spark, tmp_path, monkeypatch):
     df = spark.read.parquet(str(d))
 
     monkeypatch.setattr(P, "_PROBE_FILE_CAP", 2)
-    P._PROBE_EXACT_CACHE.clear()
     got = P.probe_max_doc_bytes(df)
     assert got == (1600 * 1024, True)  # exact job ran, tail giant found
     assert (
@@ -296,3 +294,111 @@ def test_fuzzy_match_plan_is_gram_bucketed(spark):
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "BroadcastHashJoin" in plan, plan
+
+
+def _family_rows(df):
+    """Rows of a parser output as a sorted multiset of JSON strings."""
+    import json
+
+    return sorted(
+        json.dumps(r.asDict(recursive=True), sort_keys=True) for r in df.collect()
+    )
+
+
+@pytest.mark.parametrize("extras", [True, False])
+def test_fused_parse_family_views_match_parsers(spark, extras):
+    """Each family view of the fused parse equals its single-kind
+    parse_*_docs output and the pure-Python extractor's records. Without
+    csv / species-json / owl documents those families are empty and the
+    Arrow-built vocabulary has no rows but keeps its schema."""
+    import json
+
+    from rdf_generator_spark.sources import parsers
+    from rdf_generator_spark.sources.corpus import (
+        VOCAB_SCHEMA,
+        corpus_df,
+        vocab_df_from_corpus,
+    )
+    from rdf_generator_spark.sources.synth import synth_corpus_rows
+
+    rows = synth_corpus_rows(n_datasets=2, ntax=4, nchar=4, seed=11)
+    if not extras:
+        rows = [r for r in rows if r[3] not in ("csv", "species-json", "owl")]
+    corpus = corpus_df(spark, rows)
+    fused = parsers.parse_docs(corpus)
+    single = {
+        "json": parsers.parse_char_docs,
+        "nexus": parsers.parse_nexus_docs,
+        "species-json": parsers.parse_species_docs,
+        "csv": parsers.parse_metadata_docs,
+    }
+    for lang, fam in parsers.FAMILIES.items():
+        view = parsers.family_view(fused, lang)
+        got = _family_rows(view)
+        assert view.schema == single[lang](corpus).schema, lang
+        assert got == _family_rows(single[lang](corpus)), lang
+        want = sorted(
+            json.dumps({"repo": r[0], "path": r[1], "commit": r[2], **rec},
+                       sort_keys=True)
+            for r in rows if r[3] == lang for rec in fam.extract(r[4])
+        )
+        assert got == want, lang
+        if lang not in ("json", "nexus"):
+            assert bool(got) == extras, lang
+    vocab = vocab_df_from_corpus(spark, corpus)
+    assert vocab.schema == VOCAB_SCHEMA
+    assert (vocab.count() > 0) == extras
+
+
+def test_build_runs_python_once(spark, tmp_path):
+    """Python-stage budget of one materialized build on a file-backed
+    corpus: exactly one MapInPandas evaluation (the fused parse hub)
+    across the build's SQL executions, and no stage scanning a Python
+    RDD (the vocabulary and base scaffold are Arrow-built local
+    relations)."""
+    from rdf_generator_spark.sources.corpus import corpus_parquet_df
+    from rdf_generator_spark.sources.synth import synth_corpus_rows
+
+    rows = synth_corpus_rows(n_datasets=2, ntax=4, nchar=4, seed=3)
+    corpus = corpus_parquet_df(spark, rows, str(tmp_path / "corpus"))
+    sc = spark.sparkContext
+    sql_store = spark._jsparkSession.sharedState().statusStore()
+    app_store = sc._jsc.sc().statusStore()
+
+    def execution_ids():
+        ex = sql_store.executionsList()
+        return {ex.apply(i).executionId() for i in range(ex.size())}
+
+    before = execution_ids()
+    sc.setJobGroup("python-budget", "python-stage budget")
+    try:
+        res = build_graph(spark, corpus)
+        assert res["triples"].count() > 0
+    finally:
+        sc._jsc.clearJobGroup()
+
+    map_in_pandas = 0
+    for eid in execution_ids() - before:
+        nodes = sql_store.planGraph(eid).allNodes()
+        map_in_pandas += sum(
+            nodes.apply(i).name() == "MapInPandas" for i in range(nodes.size())
+        )
+
+    def rdd_names(cluster):
+        nodes, subs = cluster.childNodes(), cluster.childClusters()
+        names = [nodes.apply(i).name() for i in range(nodes.size())]
+        for i in range(subs.size()):
+            names += rdd_names(subs.apply(i))
+        return names
+
+    tracker = sc.statusTracker()
+    python_rdd_stages = 0
+    for job in tracker.getJobIdsForGroup("python-budget"):
+        for sid in tracker.getJobInfo(job).stageIds:
+            info = tracker.getStageInfo(sid)
+            if info is None or not info.numCompletedTasks:
+                continue  # skipped: its shuffle output was reused
+            graph = app_store.operationGraphForStage(sid)
+            python_rdd_stages += "PythonRDD" in rdd_names(graph.rootCluster())
+    assert map_in_pandas == 1
+    assert python_rdd_stages == 0
