@@ -1,8 +1,8 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-``entry`` runs the flagship composition on sf0.001; ``queries`` /
-``oracle_sql`` expose the operator registry (rdf_generator_spark.queries)
-checked against DuckDB at sf0.01.
+``entry`` runs the flagship KG build on a seeded synthetic corpus;
+``queries`` / ``oracle_sql`` expose the operator registry
+(rdf_generator_spark.queries) checked against DuckDB at sf0.01.
 """
 
 from __future__ import annotations
@@ -22,26 +22,24 @@ from rdf_generator_spark import queries_kg as QK  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query on /root/testdata/sf0.001; driver checks rows>0.
-
-    Composition of the engine's signature relational operators: broadcast
-    dimension join + windowed first-wins + integer-cents aggregation.
-    """
-    sf_dir = "/root/testdata/sf0.001"
-    return Q.q3_shipping_topk(spark, sf_dir)
+    """Flagship: the KG build (parse -> link -> mint -> prune -> label
+    priority) on a seeded synthetic corpus, as per-repo triple counts
+    (repo, n_triples). The corpus is generated in-process, so no input
+    file is read."""
+    return Q.kg_pipeline_synth(spark, "")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Canonical registry (<= 50 entries so every SURVEY.md §2 operator
-    sits inside the driver's 50-row correctness window): relational +
-    training-data-pipeline entries (rdf_generator_spark.queries) and
-    KG-native golden-corpus entries incl. the consolidated family/suite
-    digests (rdf_generator_spark.queries_kg). Granular variants live in
+    sits inside the driver's 50-row correctness window): relational KG
+    operator analogues (rdf_generator_spark.queries) and KG-native
+    golden-corpus entries incl. the consolidated family/suite digests
+    (rdf_generator_spark.queries_kg). Granular variants live in
     the modules' QUERIES_EXTRA dicts, checked by pytest."""
     return {**Q.QUERIES, **QK.QUERIES}
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL for every oracle-checkable query; the few
-    engine-native entries without a twin are rows-only."""
+    """DuckDB-equivalent SQL (or a pinned VALUES table) for every
+    queries() entry."""
     return {**Q.ORACLES, **QK.ORACLES}

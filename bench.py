@@ -23,15 +23,12 @@ if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
 HEADLINE = [
-    "q1_pricing_summary",
-    "q3_shipping_topk",
     "j1_broadcast_fill",
     "j5_symbol_state_join",
     "a5_prune_anti_join",
     "a2_sequential_counters",
     "dedup_exact",
     "text_token_stats",
-    "events_sessionize",
     "ann_cosine_topk",
 ]
 
@@ -156,8 +153,8 @@ def run_bench(spark, sf_dir: str, kg_scale: int) -> dict:
 
     # Best-of-2 for the relational headline queries too (the kg cell
     # already is): the box swings ±40% run-to-run, and single-shot
-    # numbers made healthy plans look like regressions (q3 +23% in
-    # BENCH_r02 was pure variance — VERDICT r2 item 8).
+    # numbers made healthy plans look like regressions (VERDICT r2
+    # item 8).
     allq = {**Q.QUERIES, **Q.QUERIES_EXTRA}
     for name in HEADLINE:
         fn = allq[name]

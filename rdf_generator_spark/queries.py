@@ -1,11 +1,12 @@
 """Driver-contract query registry: Spark impls + DuckDB oracle SQL.
 
-Each entry maps a SURVEY.md §2 operator (or a training-data-pipeline
-operator) onto the driver's relational testdata
-(/root/testdata/sf*/: region nation customer supplier part orders
-lineitem events documents embeddings). Numeric outputs are integers
-(cents / scaled) so the value-hash comparison is immune to float
-formatting; every computed column is aliased identically on both sides.
+Each relational entry maps a SURVEY.md §2 KG operator (or a text/dedup
+operator of ``textops/``) onto the relational testdata (sf*/: region
+nation customer supplier part orders lineitem events documents
+embeddings). Numeric outputs are integers (cents / scaled) so the
+value-hash comparison is immune to float formatting; every computed
+column is aliased identically on both sides. ``kg_pipeline_synth`` runs
+the KG build itself on a seeded synthetic corpus.
 """
 
 from __future__ import annotations
@@ -263,61 +264,6 @@ def v1_cardinality_rule(spark, sf_dir):
     return counts.filter((F.col("actual") < 1) | (F.col("actual") > 40))
 
 
-def q1_pricing_summary(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    cents = lambda c: F.round(c * 100).cast("bigint")  # noqa: E731
-    return (
-        li.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(F.col("l_quantity").cast("bigint")).alias("sum_qty"),
-            F.sum(cents(F.col("l_extendedprice"))).alias("sum_base_cents"),
-            F.sum(cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias(
-                "sum_disc_cents"
-            ),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
-def q3_shipping_topk(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    rev = F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100).cast(
-        "bigint"
-    )
-    return (
-        c.filter(F.col("c_mktsegment") == "BUILDING")
-        .join(o, c.c_custkey == o.o_custkey)
-        .join(li, o.o_orderkey == li.l_orderkey)
-        .groupBy("o_orderkey")
-        .agg(F.sum(rev).alias("revenue_cents"))
-        .orderBy(F.desc("revenue_cents"), "o_orderkey")
-        .limit(10)
-    )
-
-
-def q5_local_volume(spark, sf_dir):
-    """TPC-H Q5-style 6-way join: revenue per nation where customer and
-    supplier share the nation, dimensions broadcast."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
-    rev = F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100).cast("bigint")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey)
-        .join(li, o.o_orderkey == li.l_orderkey)
-        .join(s, (li.l_suppkey == s.s_suppkey) & (c.c_nationkey == s.s_nationkey))
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy("n_name")
-        .agg(F.sum(rev).alias("revenue_cents"), F.count(F.lit(1)).alias("n_items"))
-    )
-
-
 def a4_distinct_rollup(spark, sf_dir):
     """Exact distinct-count rollup (A4-style stats): suppliers and parts
     per nation across lineitem."""
@@ -495,32 +441,6 @@ def ann_cosine_topk(spark, sf_dir):
     return top.withColumn("rank", F.row_number().over(w)).select("rank", "vec_id")
 
 
-def events_sessionize(spark, sf_dir):
-    """Stateful sessionization (gap > 1800 s) as batch windows."""
-    e = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-    return (
-        e.withColumn("new_sess", F.when(gap.isNull() | (gap > 1800), 1).otherwise(0))
-        .groupBy("user_id")
-        .agg(F.sum("new_sess").alias("n_sessions"))
-    )
-
-
-def w1_tumbling_window(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
-    return (
-        e.groupBy(
-            F.date_format(F.date_trunc("hour", F.col("ts")), "yyyy-MM-dd HH:mm:ss").alias("hour"),
-            "event_type",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("v_cents"),
-        )
-    )
-
-
 # --------------------------------------------------------------------------
 # Engine-native entries (no SQL oracle — rows-only checks)
 # --------------------------------------------------------------------------
@@ -596,70 +516,6 @@ def text_winnow_fingerprint(spark, sf_dir):
                        shingle_hash="md5")
 
 
-def multimodal_features(spark, sf_dir):
-    """REAL binary-column decode (round 5): BMP/PPM/WAV-PCM payloads
-    are encoded from closed-form pixel/sample formulas, decoded by the
-    pure-numpy codec layer (textops/codecs.py) inside the mapInPandas
-    stage, and the decoded statistics are re-quantized to the exact
-    integers DuckDB derives from the same formulas WITHOUT touching the
-    containers. n_bytes doubles as a container-layout check (BMP row
-    padding, netpbm header, RIFF framing)."""
-    import numpy as np
-
-    from rdf_generator_spark.textops.codecs import (
-        encode_bmp,
-        encode_ppm,
-        encode_wav_pcm,
-    )
-    from rdf_generator_spark.textops.multimodal import (
-        MEDIA_SCHEMA,
-        extract_features,
-    )
-
-    ensure_workers_can_import(spark)
-    rows = []
-    for i in range(8):
-        w, h = 16 + i, 8 + i
-        x = np.arange(w)[None, :, None]
-        y = np.arange(h)[:, None, None]
-        c = np.arange(3)[None, None, :]
-        img = ((x * 7 + y * 13 + c * 31 + i) % 256).astype(np.uint8)
-        enc = encode_bmp(img) if i % 2 == 0 else encode_ppm(img)
-        mime = "image/bmp" if i % 2 == 0 else "image/x-portable-pixmap"
-        rows.append((i, "image", bytearray(enc), (mime, w, h, None)))
-    for i in range(8, 16):
-        n = 512 + i
-        t = np.arange(n)
-        s = (((t * 2654435761 + i * 7919) % 65536) - 32768).astype(np.int16)
-        rows.append(
-            (i, "audio", bytearray(encode_wav_pcm(s[:, None], 8000 + i)),
-             ("audio/wav", None, None, None))
-        )
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    f = extract_features(media, dim=8, fake=False)
-    isimg = F.col("format") != F.lit("wav")
-    # feature floats carry exact small integers (w/h/ch/n/rate/zc) and a
-    # float32 mean whose *count-scaled* round is provably the integer
-    # pixel sum (|err| = count * mean * 2^-24 << 0.5) — every emitted
-    # column is therefore integer-exact on both engines
-    return f.select(
-        "media_id", "format", "n_bytes",
-        F.round(F.col("feature")[0]).cast("bigint").alias("d0"),
-        F.round(F.col("feature")[1]).cast("bigint").alias("d1"),
-        F.round(F.col("feature")[2]).cast("bigint").alias("d2"),
-        F.when(
-            isimg,
-            F.round(
-                F.col("feature")[3]
-                * F.col("feature")[0] * F.col("feature")[1] * F.col("feature")[2]
-            ),
-        )
-        .otherwise(F.round(F.col("feature")[6]))
-        .cast("bigint")
-        .alias("d3"),
-    )
-
-
 def kg_pipeline_synth(spark, sf_dir):
     """Full KG pipeline on a small deterministic synthetic corpus."""
     from rdf_generator_spark.plans.pipeline import build_graph
@@ -691,9 +547,6 @@ QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "f3_statement_typing": f3_statement_typing,
     "k2_metadata_salt": k2_metadata_salt,
     "v1_cardinality_rule": v1_cardinality_rule,
-    "q1_pricing_summary": q1_pricing_summary,
-    "q3_shipping_topk": q3_shipping_topk,
-    "q5_local_volume": q5_local_volume,
     "a4_distinct_rollup": a4_distinct_rollup,
     "o3_bucket_route": o3_bucket_route,
     "dedup_exact": dedup_exact,
@@ -703,8 +556,6 @@ QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "text_langid": text_langid,
     "text_fingerprint": text_fingerprint,
     "ann_cosine_topk": ann_cosine_topk,
-    "events_sessionize": events_sessionize,
-    "w1_tumbling_window": w1_tumbling_window,
     "k1_uuid5_mint": k1_uuid5_mint,
     "kg_pipeline_synth": kg_pipeline_synth,
     "text_quality_score": text_quality_score,
@@ -712,7 +563,6 @@ QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "dedup_embedding_neardup": dedup_embedding_neardup,
     "ann_ivf_topk": ann_ivf_topk,
     "text_winnow_fingerprint": text_winnow_fingerprint,
-    "multimodal_features": multimodal_features,
 }
 
 ORACLES: Dict[str, str] = {
@@ -795,44 +645,6 @@ ORACLES: Dict[str, str] = {
         FROM customer LEFT JOIN orders ON o_custkey=c_custkey
         GROUP BY c_custkey
         HAVING COUNT(o_orderkey) < 1 OR COUNT(o_orderkey) > 40
-    """,
-    "q1_pricing_summary": """
-        SELECT l_returnflag, l_linestatus,
-               CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
-               CAST(SUM(CAST(ROUND(l_extendedprice*100) AS BIGINT)) AS BIGINT)
-                 AS sum_base_cents,
-               CAST(SUM(CAST(ROUND(l_extendedprice*(1-l_discount)*100)
-                             AS BIGINT)) AS BIGINT)
-                 AS sum_disc_cents,
-               COUNT(*) AS count_order
-        FROM lineitem GROUP BY l_returnflag, l_linestatus
-    """,
-    "q3_shipping_topk": """
-        SELECT o_orderkey,
-               CAST(SUM(CAST(ROUND(l_extendedprice*(1-l_discount)*100)
-                             AS BIGINT)) AS BIGINT)
-                 AS revenue_cents
-        FROM customer
-        JOIN orders ON c_custkey=o_custkey
-        JOIN lineitem ON o_orderkey=l_orderkey
-        WHERE c_mktsegment='BUILDING'
-        GROUP BY o_orderkey
-        ORDER BY revenue_cents DESC, o_orderkey
-        LIMIT 10
-    """,
-    "q5_local_volume": """
-        SELECT n_name,
-               CAST(SUM(CAST(ROUND(l_extendedprice*(1-l_discount)*100)
-                             AS BIGINT)) AS BIGINT)
-                 AS revenue_cents,
-               COUNT(*) AS n_items
-        FROM customer
-        JOIN orders ON c_custkey=o_custkey
-        JOIN lineitem ON o_orderkey=l_orderkey
-        JOIN supplier ON l_suppkey=s_suppkey AND c_nationkey=s_nationkey
-        JOIN nation ON s_nationkey=n_nationkey
-        JOIN region ON n_regionkey=r_regionkey
-        GROUP BY n_name
     """,
     "a4_distinct_rollup": """
         SELECT n_name,
@@ -967,27 +779,6 @@ ORACLES: Dict[str, str] = {
                  AS quality_score
         FROM c
     """,
-    "events_sessionize": """
-        WITH g AS (
-            SELECT user_id,
-                   CASE WHEN lag(ts) OVER (PARTITION BY user_id
-                                           ORDER BY ts, event_id) IS NULL
-                             OR date_diff('second',
-                                          lag(ts) OVER (PARTITION BY user_id
-                                                        ORDER BY ts, event_id),
-                                          ts) > 1800
-                        THEN 1 ELSE 0 END AS new_sess
-            FROM events
-        )
-        SELECT user_id, CAST(SUM(new_sess) AS BIGINT) AS n_sessions
-        FROM g GROUP BY user_id
-    """,
-    "w1_tumbling_window": """
-        SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
-               event_type, COUNT(*) AS n,
-               CAST(SUM(CAST(ROUND(value*100) AS BIGINT)) AS BIGINT) AS v_cents
-        FROM events GROUP BY 1, 2
-    """,
     "dedup_embedding_neardup": """
         WITH base AS (
             SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
@@ -1005,58 +796,6 @@ ORACLES: Dict[str, str] = {
         WHERE list_dot_product(a.v, b.v)
               / (sqrt(list_dot_product(a.v, a.v))
                  * sqrt(list_dot_product(b.v, b.v))) >= 0.98
-    """,
-    # Closed-form twin of the REAL decode path: the Spark side decodes
-    # actual BMP/PPM/WAV containers; DuckDB derives the identical
-    # integers from the generative pixel/sample formulas plus the
-    # containers' documented layout arithmetic (BMP 54-byte header +
-    # 4-byte row padding, netpbm text header, RIFF 44-byte framing) —
-    # an independent derivation, not a pin.
-    "multimodal_features": """
-        WITH img AS (
-            SELECT CAST(t.i AS BIGINT) AS media_id,
-                   CASE WHEN t.i % 2 = 0 THEN 'bmp' ELSE 'ppm' END AS format,
-                   16 + t.i AS w, 8 + t.i AS h, t.i AS i
-            FROM range(8) t(i)
-        ), px AS (
-            SELECT img.media_id,
-                   SUM((x.x*7 + y.y*13 + c.c*31 + img.i) % 256) AS px_sum
-            FROM img, range(23) x(x), range(15) y(y), range(3) c(c)
-            WHERE x.x < img.w AND y.y < img.h
-            GROUP BY img.media_id
-        ), irows AS (
-            SELECT img.media_id, img.format,
-                   CAST(CASE WHEN img.format = 'bmp'
-                        THEN 54 + ((img.w*3 + 3) // 4) * 4 * img.h
-                        ELSE 3 + length(CAST(img.w AS VARCHAR)) + 1
-                             + length(CAST(img.h AS VARCHAR)) + 1 + 4
-                             + 3 * img.w * img.h END AS INT) AS n_bytes,
-                   CAST(img.w AS BIGINT) AS d0, CAST(img.h AS BIGINT) AS d1,
-                   CAST(3 AS BIGINT) AS d2, CAST(px.px_sum AS BIGINT) AS d3
-            FROM img JOIN px USING (media_id)
-        ), wav AS (
-            SELECT 8 + t.i AS i, 520 + t.i AS n, 8008 + t.i AS rate
-            FROM range(8) t(i)
-        ), samp AS (
-            SELECT wav.i, s.t,
-                   ((s.t * 2654435761 + wav.i * 7919) % 65536) - 32768 AS v
-            FROM wav, range(528) s(t)
-            WHERE s.t < wav.n
-        ), zc AS (
-            SELECT i, SUM(CASE WHEN (v < 0) <> (pv < 0) THEN 1 ELSE 0 END) AS zc
-            FROM (SELECT i, v,
-                         lag(v) OVER (PARTITION BY i ORDER BY t) AS pv
-                  FROM samp)
-            WHERE pv IS NOT NULL
-            GROUP BY i
-        ), arows AS (
-            SELECT CAST(w.i AS BIGINT) AS media_id, 'wav' AS format,
-                   CAST(44 + 2 * w.n AS INT) AS n_bytes,
-                   CAST(w.n AS BIGINT) AS d0, CAST(1 AS BIGINT) AS d1,
-                   CAST(w.rate AS BIGINT) AS d2, CAST(zc.zc AS BIGINT) AS d3
-            FROM wav w JOIN zc ON zc.i = w.i
-        )
-        SELECT * FROM irows UNION ALL SELECT * FROM arows
     """,
     # simhash md5 mode: per token t, bit b of the fingerprint input is
     # bit (b%4) of hex nibble b//4 of md5(t) — reproduced here verbatim;
@@ -1506,67 +1245,6 @@ ORACLES["embedding_quantize_int8"] = """
 QUERIES["embedding_quantize_int8"] = embedding_quantize_int8
 
 
-def multimodal_frame_sampling(spark, sf_dir):
-    """REAL video frame sampling (round 5): Y4M (YUV4MPEG2 C420)
-    payloads with closed-form luma planes are decoded by the pure-numpy
-    codec inside the mapInPandas stage; the sampled frame index and its
-    count-scaled mean luma re-quantize to the exact integers DuckDB
-    derives from the same formulas without touching the container."""
-    import numpy as np
-
-    from rdf_generator_spark.textops.codecs import encode_y4m
-    from rdf_generator_spark.textops.multimodal import (
-        MEDIA_SCHEMA,
-        sample_frames,
-    )
-
-    ensure_workers_can_import(spark)
-    w, h = 16, 8
-    rows = []
-    for i in range(6):
-        nf = 3 + i
-        f = np.arange(nf)[:, None, None]
-        y = np.arange(h)[None, :, None]
-        x = np.arange(w)[None, None, :]
-        luma = ((f * 17 + y * 5 + x * 3 + i) % 256).astype(np.uint8)
-        # 5 fps -> 200 ms per frame; duration_ms drives the fan-out
-        rows.append(
-            (i, "video", bytearray(encode_y4m(luma, (5, 1))),
-             ("video/x-yuv4mpeg", w, h, nf * 200))
-        )
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    return sample_frames(media, every_ms=300, fake=False).select(
-        "media_id", "ts_ms", "frame_index",
-        # mean_luma is an exact ratio of integers; scaling by the plane
-        # size recovers the integer luma sum on both engines
-        F.round(F.col("mean_luma") * w * h).cast("bigint").alias("luma_sum"),
-    )
-
-
-ORACLES["multimodal_frame_sampling"] = """
-    WITH m AS (
-        SELECT t.i AS i, 3 + t.i AS nf, (3 + t.i) * 200 AS dur
-        FROM range(6) t(i)
-    ), ts AS (
-        SELECT i, nf,
-               CAST(unnest(range(0, greatest(dur, 1), 300)) AS INT) AS ts_ms
-        FROM m
-    ), fr AS (
-        SELECT i, ts_ms,
-               least(nf - 1, ts_ms * 5 // 1000) AS idx
-        FROM ts
-    )
-    SELECT CAST(fr.i AS BIGINT) AS media_id, fr.ts_ms,
-           CAST(fr.idx AS INT) AS frame_index,
-           CAST(SUM((fr.idx*17 + y.y*5 + x.x*3 + fr.i) % 256) AS BIGINT)
-             AS luma_sum
-    FROM fr, range(8) y(y), range(16) x(x)
-    GROUP BY fr.i, fr.ts_ms, fr.idx
-"""
-
-QUERIES["multimodal_frame_sampling"] = multimodal_frame_sampling
-
-
 # --------------------------------------------------------------------------
 # Canonical-vs-extra split (VERDICT r2 item 1): the driver checks only the
 # first 50 entries of the merged queries() dict, so the canonical registry
@@ -1580,8 +1258,6 @@ QUERIES["multimodal_frame_sampling"] = multimodal_frame_sampling
 QUERIES_EXTRA: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES_EXTRA: Dict[str, str] = {}
 for _retired in [
-    "q1_pricing_summary",      # TPC-H analogue; q3_shipping_topk keeps the slot
-    "q5_local_volume",         # 6-way join analogue; a4_distinct_rollup covers A4
     "f2_variant_fanout",       # F2 canonical: kg_family_digests (f2_phe_statements)
     "f3_statement_typing",     # F3 canonical: kg_family_digests (f3_statement_types_kg)
     "a2_sequential_counters",  # A2 canonical: kg_family_digests (a2_counter_labels_kg)
@@ -1591,17 +1267,13 @@ for _retired in [
 
 
 # --------------------------------------------------------------------------
-# Round-4 consolidation (VERDICT r3 item 2): fold the streaming pair and
-# the five text-analysis entries into two suites (same escaped-stringify
-# mechanism as the KG-side suites) to restore driver-window headroom.
-# The granular members stay pytest-oracled in QUERIES_EXTRA.
+# Round-4 consolidation (VERDICT r3 item 2): fold the five text-analysis
+# entries into one suite (same escaped-stringify mechanism as the KG-side
+# suites) to restore driver-window headroom. The granular members stay
+# pytest-oracled in QUERIES_EXTRA.
 # --------------------------------------------------------------------------
 
 _SUITES_REL = {
-    "stream_suite": [
-        (events_sessionize, ["user_id", "n_sessions"]),
-        (w1_tumbling_window, ["hour", "event_type", "n", "v_cents"]),
-    ],
     "text_analysis_suite": [
         (text_token_stats, ["doc_id", "n_tokens", "n_uniq", "avg_len_x100"]),
         (text_langid, ["doc_id", "n_stop", "lang_guess"]),

@@ -44,8 +44,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rdf_generator_spark import terms as T
+from rdf_generator_spark.sources.golden import REF as _REF
 
-_REF = os.environ.get("RDFGEN_REFERENCE_DIR", "/root/reference")
 _EX = os.path.join(_REF, "data/examples")
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}

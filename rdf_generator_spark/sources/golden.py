@@ -1,9 +1,9 @@
 """Golden example corpus loader (reference's shipped example data).
 
 Wraps the reference repo's example files (read-only) into the engine's
-corpus-table shape — the same fixture tests/fixtures.py uses, exposed
-package-side so the driver-contract registry (queries.py) can run KG
-operators end-to-end on a corpus with known, pinned outputs.
+corpus-table shape. The one place the reference location is defined:
+the query registry (queries_kg.py) and the tests load the golden
+corpus from here.
 """
 
 from __future__ import annotations

@@ -22,8 +22,10 @@ from typing import List, Optional, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from rdf_generator_spark import terms as T
+from rdf_generator_spark.sources.corpus import local_df
 
 
 @dataclass(frozen=True)
@@ -145,7 +147,16 @@ def expanded_types(triples: DataFrame, keys=None) -> DataFrame:
     return types.unionByName(inherited).distinct()
 
 
+_RULES_SCHEMA = StructType(
+    [StructField("rule_id", IntegerType())]
+    + [StructField(c, StringType())
+       for c in ("shape", "kind", "target", "p1", "p2")]
+    + [StructField(c, IntegerType()) for c in ("min_count", "max_count")]
+)
+
+
 def _rules_df(spark):
+    """The rule table as a JVM local relation (no Python worker per scan)."""
     rows = [
         (
             i, r.shape, r.target_kind, r.target,
@@ -154,11 +165,7 @@ def _rules_df(spark):
         )
         for i, r in enumerate(RULES)
     ]
-    return spark.createDataFrame(
-        rows,
-        "rule_id int, shape string, kind string, target string, "
-        "p1 string, p2 string, min_count int, max_count int",
-    )
+    return local_df(spark, rows, _RULES_SCHEMA)
 
 
 def validate(triples: DataFrame, scope: str = "final", keys=None) -> DataFrame:

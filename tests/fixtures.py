@@ -1,37 +1,10 @@
-"""Golden fixture: wrap the reference's shipped example corpus into the
-engine's corpus-table shape (FIXTURES.md §1). Read-only access to
-/root/reference; used only by tests."""
+"""Golden fixture, Spark-free: the reference's shipped example corpus
+(loaded by rdf_generator_spark.sources.golden; FIXTURES.md §1) parsed
+by the pure-Python extractors."""
 
 from __future__ import annotations
 
-import os
-
-REF = os.environ.get("RDFGEN_REFERENCE_DIR", "/root/reference")
-
-EXAMPLES = [
-    ("data/examples/minimal.json", "json"),
-    ("data/examples/minimal.nex", "nexus"),
-    ("data/examples/species.json", "species-json"),
-    ("data/examples/minimal_metadata.csv", "csv"),
-    ("data/ontologies/pmck.owl", "owl"),
-]
-
-GOLDEN_REPO = "bees/roig-alsina-1993"
-GOLDEN_COMMIT = "f" * 40
-
-
-def golden_corpus_rows():
-    rows = []
-    for rel, lang in EXAMPLES:
-        with open(os.path.join(REF, rel), encoding="utf-8") as f:
-            rows.append((GOLDEN_REPO, rel, GOLDEN_COMMIT, lang, f.read()))
-    return rows
-
-
-def golden_corpus_df(spark):
-    from rdf_generator_spark.sources.corpus import corpus_df
-
-    return corpus_df(spark, golden_corpus_rows())
+from rdf_generator_spark.sources.golden import golden_corpus_rows
 
 
 def golden_parsed():
@@ -39,8 +12,7 @@ def golden_parsed():
     from rdf_generator_spark.sources import parsers as P
     from rdf_generator_spark.sources.corpus import build_label_index
 
-    by_lang = {lang: content for _, _, _, lang, content in
-               [(r[0], r[1], r[2], r[3], r[4]) for r in golden_corpus_rows()]}
+    by_lang = {lang: content for _, _, _, lang, content in golden_corpus_rows()}
     chars = P.char_rows_from_json(by_lang["json"])
     cells = P._parse_nexus_matrix(by_lang["nexus"])
     species = P.species_rows_from_json(by_lang["species-json"])

@@ -2,8 +2,7 @@ from __future__ import annotations
 
 from rdf_generator_spark.sources import parsers
 from rdf_generator_spark.sources.corpus import build_label_index, vocab_df_from_corpus
-
-from tests.fixtures import golden_corpus_df, golden_corpus_rows
+from rdf_generator_spark.sources.golden import golden_corpus_df, golden_corpus_rows
 
 
 def test_parse_chars(spark):

@@ -12,8 +12,9 @@ from collections import Counter
 import pytest
 
 from rdf_generator_spark.plans.pipeline import build_graph
+from rdf_generator_spark.sources.golden import golden_corpus_df
 
-from tests.fixtures import golden_corpus_df, golden_parsed
+from tests.fixtures import golden_parsed
 from tests.oracle.refsim import RefSim
 
 

@@ -11,6 +11,7 @@ from collections import defaultdict
 
 import pytest
 
+from rdf_generator_spark import terms as T
 from rdf_generator_spark.plans.pipeline import build_graph
 from rdf_generator_spark.sources import parsers as P
 from rdf_generator_spark.sources.corpus import build_label_index, corpus_df
@@ -95,6 +96,31 @@ def test_repeated_state_seed_matches_oracle(spark, counter_buckets):
         assert got == want, (repo, sorted(got - want)[:4], sorted(want - got)[:4])
 
 
+@pytest.mark.parametrize("seed,counter_buckets", [(7, None), (23, 2)])
+def test_label_subjects_only_premise(spark, seed, counter_buckets):
+    """The final graph's apply_label_priority(label_subjects_only=True)
+    assumes (a) every matrix-labelled subject of its target keeps an
+    rdfs:label row there and (b) the target has no duplicate rows. The
+    fast path keeps its target's subject set and label presence, so both
+    are checked on the outputs build_graph returns."""
+    rows = synth_corpus_rows(n_datasets=3, ntax=6, nchar=6, seed=seed)
+    res = build_graph(spark, corpus_df(spark, rows), counter_buckets=counter_buckets)
+
+    def key(r):
+        return r["repo"], r["commit"], r["s"]
+
+    matrix_labelled = {
+        key(r) for r in res["matrix_pruned"].collect() if r["p"] == T.RDFS_LABEL
+    }
+    triples = res["triples"].collect()
+    subjects = {key(r) for r in triples}
+    labelled = {key(r) for r in triples if r["p"] == T.RDFS_LABEL}
+    checked = matrix_labelled & subjects
+    assert checked, "premise is vacuous on this corpus"
+    assert checked <= labelled, sorted(checked - labelled)[:4]
+    assert len(triples) == len(set(triples))
+
+
 def test_no_metadata_corpus_uses_input_salt_tier(spark):
     """K2 tier 3 end-to-end (reference main.py:245-247): with no
     metadata CSV and no dataset_id, the salt is
@@ -140,7 +166,6 @@ def test_dataset_id_from_yaml_config(spark):
     """SRC1: dataset_id in a lang='yaml' config row salts every org seed
     (reference main.py:232-235: config dominates the metadata salt)."""
     from rdf_generator_spark.ids import uuid5_kb
-    from rdf_generator_spark import terms as T
 
     rows = synth_corpus_rows(n_datasets=1, ntax=4, nchar=4, seed=5)
     repo, _, commit, _, _ = rows[0]
@@ -290,7 +315,9 @@ def test_multi_matrix_contract_and_shard_roundtrip(spark):
     from rdf_generator_spark.sources.corpus import (
         corpus_df, shard_multi_matrix_groups,
     )
-    from tests.fixtures import GOLDEN_REPO, golden_corpus_rows, golden_parsed
+    from rdf_generator_spark.sources.golden import GOLDEN_REPO, golden_corpus_rows
+
+    from tests.fixtures import golden_parsed
     from tests.oracle.refsim import RefSim
 
     rows = golden_corpus_rows()
@@ -328,7 +355,7 @@ def test_shard_ambiguous_pairing_raises(spark):
     from rdf_generator_spark.sources.corpus import (
         corpus_df, shard_multi_matrix_groups,
     )
-    from tests.fixtures import golden_corpus_rows
+    from rdf_generator_spark.sources.golden import golden_corpus_rows
 
     rows = golden_corpus_rows()
     multi = []

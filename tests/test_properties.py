@@ -163,93 +163,3 @@ def test_nexus_roundtrip_property():
             for ci in range(nchar)
         ]
         assert cells == want, (taxa, grid, interleave)
-
-
-# ------------------------------------------------------------- codecs
-# Pure-numpy media codecs (textops/codecs.py): encode -> decode must be
-# the identity for every shape the encoders accept, not just the
-# hand-picked fixtures in test_textops.py. No Spark involved, so these
-# run with full hypothesis budgets. The interesting edges: BMP row
-# stride padding when width*3 is not a multiple of 4, odd Y4M
-# dimensions (chroma plane arithmetic uses floor division), and WAV
-# channel counts that don't divide the sample count evenly.
-
-
-@given(
-    st.integers(min_value=1, max_value=23),  # height
-    st.integers(min_value=1, max_value=23),  # width — hits all 4 strides
-    st.integers(min_value=0, max_value=2**31),
-)
-@settings(max_examples=40, deadline=None)
-def test_bmp_ppm_roundtrip_any_shape(h, w, seed):
-    import numpy as np
-
-    from rdf_generator_spark.textops import codecs as C
-
-    img = np.random.RandomState(seed % 2**31).randint(
-        0, 256, (h, w, 3), dtype=np.uint8
-    )
-    assert (C.decode_bmp(C.encode_bmp(img)) == img).all()
-    assert (C.decode_ppm(C.encode_ppm(img)) == img).all()
-    assert (C.decode_pgm(C.encode_pgm(img[:, :, 0])) == img[:, :, :1]).all()
-
-
-@given(
-    st.integers(min_value=1, max_value=500),  # sample count
-    st.integers(min_value=1, max_value=4),    # channels
-    st.sampled_from([8000, 16000, 44100]),
-    st.integers(min_value=0, max_value=2**31),
-)
-@settings(max_examples=40, deadline=None)
-def test_wav_pcm16_roundtrip_any_shape(n, ch, rate, seed):
-    import numpy as np
-
-    from rdf_generator_spark.textops import codecs as C
-
-    s = np.random.RandomState(seed % 2**31).randint(
-        -32768, 32768, (n, ch)
-    ).astype(np.int16)
-    dec, got_rate = C.decode_wav_pcm(C.encode_wav_pcm(s, rate))
-    assert got_rate == rate and dec.shape == (n, ch)
-    assert np.allclose(dec, s / 32768.0, atol=1e-6)
-
-
-def test_wav_pcm8_decode_branch():
-    """The encoder always writes 16-bit, so the 8-bit decode branch
-    needs a hand-assembled fixture: unsigned 8-bit PCM maps 128 -> 0.0,
-    0 -> -1.0, 255 -> +127/128."""
-    import struct
-
-    import numpy as np
-
-    from rdf_generator_spark.textops import codecs as C
-
-    data = bytes([0, 128, 255, 64])
-    fmt = struct.pack("<HHIIHH", 1, 1, 8000, 8000, 1, 8)
-    body = (b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(data)) + data)
-    raw = b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WAVE" + body
-    dec, rate = C.decode_wav_pcm(raw)
-    assert rate == 8000 and dec.shape == (4, 1)
-    assert np.allclose(
-        dec[:, 0], [(b - 128) / 128.0 for b in (0, 128, 255, 64)]
-    )
-
-
-@given(
-    st.integers(min_value=1, max_value=4),   # frames
-    st.integers(min_value=1, max_value=17),  # height (odd exercises h//2)
-    st.integers(min_value=1, max_value=17),  # width
-    st.integers(min_value=0, max_value=2**31),
-)
-@settings(max_examples=40, deadline=None)
-def test_y4m_roundtrip_any_shape(n, h, w, seed):
-    import numpy as np
-
-    from rdf_generator_spark.textops import codecs as C
-
-    luma = np.random.RandomState(seed % 2**31).randint(
-        0, 256, (n, h, w), dtype=np.uint8
-    )
-    fr, fps = C.decode_y4m(C.encode_y4m(luma, (24, 1)))
-    assert fps == (24, 1) and (fr == luma).all()

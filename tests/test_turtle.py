@@ -11,8 +11,7 @@ import pytest
 from rdf_generator_spark import terms as T
 from rdf_generator_spark.plans.pipeline import build_graph
 from rdf_generator_spark.sinks import turtle
-
-from tests.fixtures import golden_corpus_df
+from rdf_generator_spark.sources.golden import golden_corpus_df
 
 PREFIX_MAP = dict(T.PREFIXES)
 
@@ -219,7 +218,7 @@ def test_write_turtle_auto_no_path_collision(spark, tmp_path):
     per-document writer must still produce two distinct files (a stable
     hash of the unsanitized identity is appended), and n_docs must equal
     the number of files actually on disk."""
-    from tests.fixtures import golden_corpus_rows
+    from rdf_generator_spark.sources.golden import golden_corpus_rows
 
     from rdf_generator_spark.sinks.turtle import write_turtle_auto
     from rdf_generator_spark.sources.corpus import corpus_df

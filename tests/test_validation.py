@@ -12,14 +12,13 @@ from pyspark.sql import functions as F
 
 from rdf_generator_spark import terms as T
 from rdf_generator_spark.plans.pipeline import build_graph
+from rdf_generator_spark.sources.golden import golden_corpus_df
 from rdf_generator_spark.validation.shacl_rules import (
     RULES,
     conformance_report,
     expanded_types,
     validate,
 )
-
-from tests.fixtures import golden_corpus_df
 
 
 @pytest.fixture(scope="module")
