@@ -29,7 +29,6 @@ HEADLINE = [
     "a2_sequential_counters",
     "dedup_exact",
     "text_token_stats",
-    "ann_cosine_topk",
 ]
 
 

@@ -27,11 +27,10 @@ Input contract: one character-JSON and one NEXUS document per
 `(repo, commit)` group (the reference's config points at exactly one of
 each). Multiple JSON files in one group would make character order —
 and thus the matrix column mapping — ambiguous. `build_graph` fails
-loudly on offending groups (check_input_contract=True, default; the
-check rides the materialized characters table, so it is skipped in
-materialize=False diagnostic mode); `sources.corpus.
-shard_multi_matrix_groups` rewrites such corpora into one group per
-matrix automatically (json/nexus paired by path stem).
+loudly on offending groups (the check rides the materialized characters
+table, so it is skipped in materialize=False diagnostic mode);
+`sources.corpus.shard_multi_matrix_groups` rewrites such corpora into
+one group per matrix automatically (json/nexus paired by path stem).
 """
 
 from __future__ import annotations
@@ -54,12 +53,11 @@ from rdf_generator_spark.operators import linking
 from rdf_generator_spark.operators.graph_ops import (
     apply_label_priority,
     dedup_triples,
-    prune_unreferenced,  # noqa: F401 — re-exported for external callers
     prune_unreferenced_scoped,
 )
 from rdf_generator_spark.operators.windows import seq_number
 from rdf_generator_spark.plans.base_scaffold import BASE_SCHEMA, base_triples
-from rdf_generator_spark.plans.emit import emit, t, tl, union_emissions, when_t
+from rdf_generator_spark.plans.emit import Triple, const, emit, union_emissions
 from rdf_generator_spark.sources import parsers
 from rdf_generator_spark.sources.corpus import local_df, vocab_df_from_corpus
 
@@ -332,8 +330,6 @@ def build_graph(
     assemble: bool = True,
     dim_broadcast: Optional[bool] = None,
     staging_dir: Optional[str] = None,
-    fuzzy_link_threshold: Optional[float] = None,
-    check_input_contract: bool = True,
     counter_buckets="auto",
 ) -> Dict[str, DataFrame]:
     """Run the full pipeline; returns named DataFrames.
@@ -480,11 +476,7 @@ def build_graph(
             dataset_id = dataset_id_from_config(corpus)
 
     # --- J1 vocab fill + per-char derived columns ------------------------
-    # fuzzy_link_threshold routes exact-tier misses through the
-    # similarity tier (opt-in; default preserves reference parity)
-    chars_f = linking.fill_character_uris(
-        chars_raw, vocab, fuzzy_threshold=fuzzy_link_threshold
-    )
+    chars_f = linking.fill_character_uris(chars_raw, vocab)
 
     if dataset_id is not None:
         did = norm_seed_component(F.lit(dataset_id))
@@ -570,7 +562,7 @@ def build_graph(
         .when(has_locs, F.concat(F.lit("__malformed__::"), F.col("char_id"))),
     )
     charsx = hub(charsx, "charsx")
-    if do_mat and check_input_contract:
+    if do_mat:
         # Contract check rides the (cheap, already-materialized) parsed
         # characters table instead of re-scanning the raw corpus: a
         # second char-JSON in a group shows up as a second distinct
@@ -810,107 +802,98 @@ def build_graph(
     # post-AQE partitions) to <1 s.
     visits = visits.repartition("repo", "commit", "char_pos", "taxon_pos")
 
-    # Mint/fold expressions are constant Column trees — built once per
-    # JVM (_memo_cols) and applied in three chained projections that
+    # The mint/fold columns apply in three chained projections that
     # respect their data dependencies (org_iri -> loc_chain/var;
     # loc_chain -> last_loc_iri).
-    def _build_mint_exprs():
-        org_seed = F.concat_ws(
-            "::",
-            F.col("salt"),
-            F.coalesce(
-                F.nullif(norm_seed_component(F.col("norm_taxon")), F.lit("")),
-                F.lit("unknown-taxon"),
-            ),
-            F.coalesce(
-                F.nullif(norm_seed_component(F.col("v_org_label")), F.lit("")),
-                F.lit("organism"),
-            ),
-        )
-        # Locator-chain fold (F4): sequential-in-array,
-        # parallel-across-rows.
-        loc_filtered = F.filter(
-            F.col("locators"), lambda l: F.coalesce(l["label"], F.lit("")) != ""
-        )
-        seed_base = lambda l: F.coalesce(  # noqa: E731
-            _truthy_uri(l["uri"]), F.lower(strip_col(l["label"]))
-        )
-        var_seed = F.when(
-            F.col("chain_seed").isNotNull(),
-            F.concat(
-                F.col("org_iri"), F.lit("::"), F.col("chain_seed"), F.lit("::"),
-                F.lower(strip_col(F.col("var_label_eff"))),
-            ),
-        ).otherwise(
-            F.concat(
-                F.lit("__noloc__::"), F.col("char_id"), F.lit("::"),
-                F.lower(strip_col(F.col("var_label_eff"))),
-            )
-        )
-        return {
-            "org_iri": kb_iri("org", org_seed).alias("org_iri"),
-            "phe_iri": kb_iri(
-                "phe",
-                F.concat(
-                    F.lit("pheno-"),
-                    F.col("char_id"),
-                    F.lit("::"),
-                    F.lower(strip_col(F.col("taxon"))),
-                    F.col("suffix"),
-                ),
-            ).alias("phe_iri"),
-            "tu_iri": kb_iri(
-                "tu", F.lower(strip_col(F.col("norm_taxon")))
-            ).alias("tu_iri"),
-            "loc_chain": F.aggregate(
-                loc_filtered,
-                F.struct(
-                    F.col("org_iri").alias("prev"),
-                    F.array().cast(_LOC_CHAIN_TYPE).alias("acc"),
-                ),
-                lambda acc, l: F.struct(
-                    kb_iri("loc", F.concat(acc["prev"], F.lit("::"), seed_base(l))).alias("prev"),
-                    F.concat(
-                        acc["acc"],
-                        F.array(
-                            F.struct(
-                                kb_iri(
-                                    "loc", F.concat(acc["prev"], F.lit("::"), seed_base(l))
-                                ).alias("iri"),
-                                l["label"].alias("label"),
-                                _truthy_uri(l["uri"]).alias("uri"),
-                                acc["prev"].alias("prev"),
-                            )
-                        ),
-                    ).alias("acc"),
-                ),
-                lambda acc: acc["acc"],
-            ).alias("loc_chain"),
-            "last_loc_iri": F.when(
-                F.size("loc_chain") > 0, F.element_at("loc_chain", -1)["iri"]
-            ).alias("last_loc_iri"),
-            "var_iri": F.when(
-                F.col("has_variable"), kb_iri("var", var_seed)
-            ).alias("var_iri"),
-            "per_org_qua_iri": F.when(
-                F.col("st_qua_iri").isNotNull(),
-                kb_iri(
-                    "qua",
-                    F.concat(
-                        F.col("org_iri"), F.lit("::"), F.col("char_id"), F.lit("::"),
-                        F.col("st_qua_iri"),
-                    ),
-                ),
-            ).alias("per_org_qua_iri"),
-        }
-
-    mints = _memo_cols("visit_mints", _build_mint_exprs)
-    visits = visits.select(
-        "*", mints["org_iri"], mints["phe_iri"], mints["tu_iri"]
+    org_seed = F.concat_ws(
+        "::",
+        F.col("salt"),
+        F.coalesce(
+            F.nullif(norm_seed_component(F.col("norm_taxon")), F.lit("")),
+            F.lit("unknown-taxon"),
+        ),
+        F.coalesce(
+            F.nullif(norm_seed_component(F.col("v_org_label")), F.lit("")),
+            F.lit("organism"),
+        ),
     )
-    visits = visits.select("*", mints["loc_chain"])
     visits = visits.select(
-        "*", mints["last_loc_iri"], mints["var_iri"], mints["per_org_qua_iri"]
+        "*",
+        kb_iri("org", org_seed).alias("org_iri"),
+        kb_iri(
+            "phe",
+            F.concat(
+                F.lit("pheno-"),
+                F.col("char_id"),
+                F.lit("::"),
+                F.lower(strip_col(F.col("taxon"))),
+                F.col("suffix"),
+            ),
+        ).alias("phe_iri"),
+        kb_iri("tu", F.lower(strip_col(F.col("norm_taxon")))).alias("tu_iri"),
+    )
+    # Locator-chain fold (F4): sequential-in-array, parallel-across-rows.
+    loc_filtered = F.filter(
+        F.col("locators"), lambda l: F.coalesce(l["label"], F.lit("")) != ""
+    )
+    seed_base = lambda l: F.coalesce(  # noqa: E731
+        _truthy_uri(l["uri"]), F.lower(strip_col(l["label"]))
+    )
+    visits = visits.select(
+        "*",
+        F.aggregate(
+            loc_filtered,
+            F.struct(
+                F.col("org_iri").alias("prev"),
+                F.array().cast(_LOC_CHAIN_TYPE).alias("acc"),
+            ),
+            lambda acc, l: F.struct(
+                kb_iri("loc", F.concat(acc["prev"], F.lit("::"), seed_base(l))).alias("prev"),
+                F.concat(
+                    acc["acc"],
+                    F.array(
+                        F.struct(
+                            kb_iri(
+                                "loc", F.concat(acc["prev"], F.lit("::"), seed_base(l))
+                            ).alias("iri"),
+                            l["label"].alias("label"),
+                            _truthy_uri(l["uri"]).alias("uri"),
+                            acc["prev"].alias("prev"),
+                        )
+                    ),
+                ).alias("acc"),
+            ),
+            lambda acc: acc["acc"],
+        ).alias("loc_chain"),
+    )
+    var_seed = F.when(
+        F.col("chain_seed").isNotNull(),
+        F.concat(
+            F.col("org_iri"), F.lit("::"), F.col("chain_seed"), F.lit("::"),
+            F.lower(strip_col(F.col("var_label_eff"))),
+        ),
+    ).otherwise(
+        F.concat(
+            F.lit("__noloc__::"), F.col("char_id"), F.lit("::"),
+            F.lower(strip_col(F.col("var_label_eff"))),
+        )
+    )
+    visits = visits.select(
+        "*",
+        F.when(
+            F.size("loc_chain") > 0, F.element_at("loc_chain", -1)["iri"]
+        ).alias("last_loc_iri"),
+        F.when(F.col("has_variable"), kb_iri("var", var_seed)).alias("var_iri"),
+        F.when(
+            F.col("st_qua_iri").isNotNull(),
+            kb_iri(
+                "qua",
+                F.concat(
+                    F.col("org_iri"), F.lit("::"), F.col("char_id"), F.lit("::"),
+                    F.col("st_qua_iri"),
+                ),
+            ),
+        ).alias("per_org_qua_iri"),
     )
     # Project the checkpoint down to the columns _assemble consumes
     # (guide §2.3 "project before the exchange"): a localCheckpoint scan
@@ -954,33 +937,6 @@ def build_graph(
     )
 
 
-import weakref
-
-_COL_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
-def _memo_cols(key: str, builder):
-    """Memoize CONSTANT (context-free) Column expression lists per py4j
-    gateway (round 6, driver overhead): Column objects are immutable
-    unresolved expression trees, so the same objects can seed emit() in
-    every build on this JVM — only plan construction is memoized, every
-    job still computes from its inputs. Rebuilding the two biggest
-    emission lists cost ~10k py4j round trips (~1 s of driver time) per
-    build. Keyed weakly by the gateway so a fresh JVM rebuilds."""
-    from pyspark import SparkContext
-
-    gw = SparkContext._gateway
-    if gw is None:
-        return builder()
-    d = _COL_MEMO.get(gw)
-    if d is None:
-        d = {}
-        _COL_MEMO[gw] = d
-    if key not in d:
-        d[key] = builder()
-    return d[key]
-
-
 def _materializer(spark, staging_dir: Optional[str]):
     """Hub-table materializer: parquet staging when `staging_dir` is
     set (cluster-durable), localCheckpoint otherwise (single-box).
@@ -1005,15 +961,9 @@ def _materializer(spark, staging_dir: Optional[str]):
 
 
 def _assemble(spark, corpus, charsx, states_x, cells_j, visits, species, cells, meta,
-              materialize=True, bhint=F.broadcast, mat=None, seq=None):
+              materialize, bhint, mat, seq):
     """Emit all triple families, tag parts, and build the final graph."""
-    if mat is None:
-        mat = lambda df, name: df.localCheckpoint(eager=True)  # noqa: E731
-    if seq is None:
-        def seq(df, order_cols, out):
-            w = Window.partitionBy(*DOC).orderBy(*order_cols)
-            return df.withColumn(out, F.row_number().over(w))
-    NI = T.OWL_NAMED_INDIVIDUAL
+    NI = const(T.OWL_NAMED_INDIVIDUAL)
 
     # -- base part (constant scaffold per document) -----------------------
     docs = corpus.select(*DOC).distinct()
@@ -1023,156 +973,136 @@ def _assemble(spark, corpus, charsx, states_x, cells_j, visits, species, cells, 
     # -- char part: char node + provenance + state typing -----------------
     # (tagged with char_id so validation can rebuild per-character scopes)
     CDOC = ("repo", "commit", "char_id")
-    char_nodes = emit(charsx, *_memo_cols("char_nodes", lambda: [
-        t("char_iri", T.RDF_TYPE, T.CDAO_CHARACTER),
-        tl("char_iri", T.RDFS_LABEL, F.col("char_label_eff")),
-        t("char_iri", T.RDF_TYPE, NI),
-        when_t(F.col("src_iri").isNotNull(), t("src_iri", T.RDF_TYPE, T.PROV_ENTITY)),
-        when_t(F.col("src_iri").isNotNull(), tl("src_iri", T.RDFS_LABEL, F.col("source_text"))),
-        when_t(F.col("src_iri").isNotNull(), t("char_iri", T.PROV_HAD_PRIMARY_SOURCE, F.col("src_iri"))),
-    ]), doc_cols=CDOC)
+    char_nodes = emit(charsx, [
+        Triple("char_iri", T.RDF_TYPE, const(T.CDAO_CHARACTER)),
+        Triple("char_iri", T.RDFS_LABEL, "char_label_eff", lit=True),
+        Triple("char_iri", T.RDF_TYPE, NI),
+        Triple("src_iri", T.RDF_TYPE, const(T.PROV_ENTITY)),
+        Triple("src_iri", T.RDFS_LABEL, "source_text", lit=True),
+        Triple("char_iri", T.PROV_HAD_PRIMARY_SOURCE, "src_iri"),
+    ], doc_cols=CDOC)
     # F9 second sp- mint site (SpeciesLabel+SpeciesID rows)
     sp2 = charsx.filter(
         (norm_taxon_label(F.col("species_label")) != "") & F.col("species_id").isNotNull()
     ).withColumn("sp2_label", norm_taxon_label(F.col("species_label"))).withColumn(
         "sp2_iri", kb_iri("sp", F.col("sp2_label"))
     )
-    sp2_triples = emit(
-        sp2,
-        t("sp2_iri", T.RDF_TYPE, T.TXR_SPECIES),
-        tl("sp2_iri", T.RDFS_LABEL, F.col("sp2_label")),
-        t("sp2_iri", T.DWC_PARENT_NAME_USAGE_ID,
-          F.concat(F.lit("https://www.gbif.org/species/"), F.col("species_id"))),
-        doc_cols=CDOC,
-    )
-    char_states = emit(
-        states_x,
-        t("sta_iri", T.RDF_TYPE, T.CDAO_STATE),
-        t("sta_iri", T.RDF_TYPE, T.OWL_NAMED_INDIVIDUAL),
-        tl("sta_iri", T.RDFS_LABEL, F.col("sta_label_phase_b")),
-        t("char_iri", T.PHB_MAY_HAVE_STATE, "sta_iri"),
-        doc_cols=CDOC,
-    )
+    sp2_triples = emit(sp2, [
+        Triple("sp2_iri", T.RDF_TYPE, const(T.TXR_SPECIES)),
+        Triple("sp2_iri", T.RDFS_LABEL, "sp2_label", lit=True),
+        Triple("sp2_iri", T.DWC_PARENT_NAME_USAGE_ID,
+               "concat('https://www.gbif.org/species/', species_id)"),
+    ], doc_cols=CDOC)
+    char_states = emit(states_x, [
+        Triple("sta_iri", T.RDF_TYPE, const(T.CDAO_STATE)),
+        Triple("sta_iri", T.RDF_TYPE, NI),
+        Triple("sta_iri", T.RDFS_LABEL, "sta_label_phase_b", lit=True),
+        Triple("char_iri", T.PHB_MAY_HAVE_STATE, "sta_iri"),
+    ], doc_cols=CDOC)
     char_part_tagged = union_emissions(char_nodes, sp2_triples, char_states)
     char_part = char_part_tagged.drop("char_id")
 
     # -- matrix part ------------------------------------------------------
     mx = charsx.select(*DOC, "mx_iri").distinct()
-    mx_triples = emit(
-        mx,
-        t("mx_iri", T.RDF_TYPE, T.CDAO_MATRIX),
-        tl("mx_iri", T.RDFS_LABEL, F.lit("matrix:id-1")),
-        tl("mx_iri", T.DC_DESCRIPTION, F.lit("matrix description")),
-        t("mx_iri", T.RDF_TYPE, NI),
-    )
-    mx_char_links = emit(charsx, t("mx_iri", T.CDAO_HAS_CHARACTER, "char_iri"))
+    mx_triples = emit(mx, [
+        Triple("mx_iri", T.RDF_TYPE, const(T.CDAO_MATRIX)),
+        Triple("mx_iri", T.RDFS_LABEL, const("matrix:id-1"), lit=True),
+        Triple("mx_iri", T.DC_DESCRIPTION, const("matrix description"), lit=True),
+        Triple("mx_iri", T.RDF_TYPE, NI),
+    ])
+    mx_char_links = emit(charsx, [Triple("mx_iri", T.CDAO_HAS_CHARACTER, "char_iri")])
 
-    sta_qua_triples = emit(states_x, *_memo_cols("sta_qua", lambda: [
+    NEG = "neg_resolved"
+    sta_qua_triples = emit(states_x, [
         # quality class typing (handle_quality, main.py:1026-1035)
-        when_t(F.col("uri_t").isNotNull(), t("uri_t", T.RDF_TYPE, T.OWL_CLASS)),
-        when_t(F.col("uri_t").isNotNull(), tl("uri_t", T.RDFS_LABEL, F.col("labelN"))),
-        when_t(F.col("uri_t").isNotNull(), t("qua_iri", T.RDF_TYPE, "uri_t")),
-        t("qua_iri", T.RDF_TYPE, NI),
-        tl("qua_iri", T.RDFS_LABEL, F.col("qua_label")),
+        Triple("uri_t", T.RDF_TYPE, const(T.OWL_CLASS)),
+        Triple("uri_t", T.RDFS_LABEL, "labelN", lit=True),
+        Triple("qua_iri", T.RDF_TYPE, "uri_t"),
+        Triple("qua_iri", T.RDF_TYPE, NI),
+        Triple("qua_iri", T.RDFS_LABEL, "qua_label", lit=True),
         # negation restriction/complement (F7, main.py:1037-1076)
-        when_t(F.col("neg_resolved"),
-               tl("restr_iri", T.RDFS_LABEL,
-                  F.concat(F.lit("has_characteristic some "), F.col("base_label")))),
-        when_t(F.col("neg_resolved"), t("restr_iri", T.RDF_TYPE, T.OWL_RESTRICTION)),
-        when_t(F.col("neg_resolved"), t("restr_iri", T.OWL_ON_PROPERTY, T.RO_HAS_CHARACTERISTIC)),
-        when_t(F.col("neg_resolved"), t("restr_iri", T.OWL_SOME_VALUES_FROM, "resolved_uri")),
-        when_t(F.col("neg_resolved"), t("comp_iri", T.RDF_TYPE, T.OWL_CLASS)),
-        when_t(F.col("neg_resolved"), t("comp_iri", T.OWL_COMPLEMENT_OF, "restr_iri")),
-        when_t(F.col("neg_resolved"),
-               tl("comp_iri", T.RDFS_LABEL,
-                  F.concat(F.lit("NOT (has_characteristic some "), F.col("base_label"), F.lit(")")))),
-        when_t(F.col("neg_resolved"), t("qua_iri", T.RDF_TYPE, "comp_iri")),
-        when_t(F.col("neg_resolved") & F.col("char_var_uri").isNotNull(),
-               t("char_var_uri", T.RDF_TYPE, T.OWL_CLASS)),
-        when_t(F.col("neg_resolved") & F.col("char_var_uri").isNotNull(),
-               t("qua_iri", T.RDF_TYPE, "char_var_uri")),
+        Triple("restr_iri", T.RDFS_LABEL,
+               "concat('has_characteristic some ', base_label)", lit=True, cond=NEG),
+        Triple("restr_iri", T.RDF_TYPE, const(T.OWL_RESTRICTION), cond=NEG),
+        Triple("restr_iri", T.OWL_ON_PROPERTY, const(T.RO_HAS_CHARACTERISTIC), cond=NEG),
+        Triple("restr_iri", T.OWL_SOME_VALUES_FROM, "resolved_uri", cond=NEG),
+        Triple("comp_iri", T.RDF_TYPE, const(T.OWL_CLASS), cond=NEG),
+        Triple("comp_iri", T.OWL_COMPLEMENT_OF, "restr_iri", cond=NEG),
+        Triple("comp_iri", T.RDFS_LABEL,
+               "concat('NOT (has_characteristic some ', base_label, ')')",
+               lit=True, cond=NEG),
+        Triple("qua_iri", T.RDF_TYPE, "comp_iri", cond=NEG),
+        Triple("char_var_uri", T.RDF_TYPE, const(T.OWL_CLASS), cond=NEG),
+        Triple("qua_iri", T.RDF_TYPE, "char_var_uri", cond=NEG),
         # matrix-phase state labels (A2 with phase-b offset)
-        t("sta_iri", T.RDF_TYPE, T.CDAO_STATE),
-        t("sta_iri", T.RDF_TYPE, NI),
-        tl("sta_iri", T.RDFS_LABEL, F.col("sta_label")),
-        t("char_iri", T.PHB_MAY_HAVE_STATE, "sta_iri"),
-    ]))
+        Triple("sta_iri", T.RDF_TYPE, const(T.CDAO_STATE)),
+        Triple("sta_iri", T.RDF_TYPE, NI),
+        Triple("sta_iri", T.RDFS_LABEL, "sta_label", lit=True),
+        Triple("char_iri", T.PHB_MAY_HAVE_STATE, "sta_iri"),
+    ])
 
-    cell_triples = emit(cells_j, *_memo_cols("cell_triples", lambda: [
-        tl("cell_iri", T.RDFS_LABEL, F.concat(F.lit("cell:id-"), F.col("cell_n"))),
-        tl("cell_iri", T.DC_DESCRIPTION,
-           F.concat(F.lit("Cell for taxon "), F.col("taxon"),
-                    F.lit(", character "), F.col("char_id"))),
-        t("cell_iri", T.RDF_TYPE, NI),
-        t("cell_iri", T.RDF_TYPE, T.CDAO_CELL),
-        t("cell_iri", T.CDAO_BELONGS_TO_CHARACTER, "char_iri"),
-    ]))
+    cell_triples = emit(cells_j, [
+        Triple("cell_iri", T.RDFS_LABEL, "concat('cell:id-', cell_n)", lit=True),
+        Triple("cell_iri", T.DC_DESCRIPTION,
+               "concat('Cell for taxon ', taxon, ', character ', char_id)", lit=True),
+        Triple("cell_iri", T.RDF_TYPE, NI),
+        Triple("cell_iri", T.RDF_TYPE, const(T.CDAO_CELL)),
+        Triple("cell_iri", T.CDAO_BELONGS_TO_CHARACTER, "char_iri"),
+    ])
 
-    visit_triples = emit(visits, *_memo_cols("visit_triples", lambda: [
-        tl("phe_iri", T.KB_SORT_CHAR_NUM, F.col("char_sort_num"), dt=T.XSD_INTEGER),
-        tl("phe_iri", T.KB_SORT_SPECIES, F.col("norm_taxon")),
-        tl("phe_iri", T.DC_DESCRIPTION,
-           F.concat(F.lit("Phenotype statement for "),
-                    F.coalesce(F.col("char_label"), F.col("char_id")),
-                    F.lit(" in "), F.col("norm_taxon"))),
-        t("phe_iri", T.RDF_TYPE, NI),
-        tl("phe_iri", T.RDFS_LABEL, F.concat(F.lit("phenotype:id-"), F.col("phe_n"))),
-        t("phe_iri", T.RDF_TYPE, "stmt_type"),
+    VAR_URI = "var_iri IS NOT NULL AND var_uri != ''"
+    visit_triples = emit(visits, [
+        Triple("phe_iri", T.KB_SORT_CHAR_NUM, "char_sort_num", lit=True, dt=T.XSD_INTEGER),
+        Triple("phe_iri", T.KB_SORT_SPECIES, "norm_taxon", lit=True),
+        Triple("phe_iri", T.DC_DESCRIPTION,
+               "concat('Phenotype statement for ', coalesce(char_label, char_id),"
+               " ' in ', norm_taxon)", lit=True),
+        Triple("phe_iri", T.RDF_TYPE, NI),
+        Triple("phe_iri", T.RDFS_LABEL, "concat('phenotype:id-', phe_n)", lit=True),
+        Triple("phe_iri", T.RDF_TYPE, "stmt_type"),
         # organism class + instance typing (handle_organism)
-        t("v_org_uri", T.RDF_TYPE, T.OWL_CLASS),
-        tl("v_org_uri", T.RDFS_LABEL, F.col("v_org_label")),
-        t("org_iri", T.RDF_TYPE, "v_org_uri"),
-        t("org_iri", T.RDF_TYPE, NI),
+        Triple("v_org_uri", T.RDF_TYPE, const(T.OWL_CLASS)),
+        Triple("v_org_uri", T.RDFS_LABEL, "v_org_label", lit=True),
+        Triple("org_iri", T.RDF_TYPE, "v_org_uri"),
+        Triple("org_iri", T.RDF_TYPE, NI),
         # TU scaffolding in the cell loop (main.py:1833-1842)
-        t("tu_iri", T.RDF_TYPE, NI),
-        t("tu_iri", T.RDF_TYPE, T.CDAO_TU),
-        t("org_iri", T.RO_HAS_ROLE_IN_MODELLING, "tu_iri"),
-        t("cell_iri", T.CDAO_BELONGS_TO_TU, "tu_iri"),
-        t("mx_iri", T.CDAO_HAS_TU, "tu_iri"),
-        t("phe_iri", T.PHB_HAS_ORGANISM, "org_iri"),
+        Triple("tu_iri", T.RDF_TYPE, NI),
+        Triple("tu_iri", T.RDF_TYPE, const(T.CDAO_TU)),
+        Triple("org_iri", T.RO_HAS_ROLE_IN_MODELLING, "tu_iri"),
+        Triple("cell_iri", T.CDAO_BELONGS_TO_TU, "tu_iri"),
+        Triple("mx_iri", T.CDAO_HAS_TU, "tu_iri"),
+        Triple("phe_iri", T.PHB_HAS_ORGANISM, "org_iri"),
         # variable (handle_variable_component)
-        when_t(F.col("var_iri").isNotNull() & F.col("var_uri").isNotNull() & (F.col("var_uri") != ""),
-               t("var_uri", T.RDF_TYPE, T.OWL_CLASS)),
-        when_t(F.col("var_iri").isNotNull() & F.col("var_uri").isNotNull() & (F.col("var_uri") != ""),
-               tl("var_uri", T.RDFS_LABEL, F.col("var_label_eff"))),
-        when_t(F.col("var_iri").isNotNull() & F.col("var_uri").isNotNull() & (F.col("var_uri") != ""),
-               t("var_iri", T.RDF_TYPE, "var_uri")),
-        when_t(F.col("var_iri").isNotNull() & F.col("var_comment").isNotNull()
-               & (F.col("var_comment") != ""),
-               tl("var_iri", T.RDFS_COMMENT, F.col("var_comment"))),
-        when_t(F.col("var_iri").isNotNull(), t("phe_iri", T.PHB_HAS_VARIABLE, "var_iri")),
+        Triple("var_uri", T.RDF_TYPE, const(T.OWL_CLASS), cond=VAR_URI),
+        Triple("var_uri", T.RDFS_LABEL, "var_label_eff", lit=True, cond=VAR_URI),
+        Triple("var_iri", T.RDF_TYPE, "var_uri", cond=VAR_URI),
+        Triple("var_iri", T.RDFS_COMMENT, "var_comment", lit=True, cond="var_comment != ''"),
+        Triple("phe_iri", T.PHB_HAS_VARIABLE, "var_iri"),
         # per-organism quality clone (F6, main.py:1864-1883)
-        when_t(F.col("per_org_qua_iri").isNotNull(), t("per_org_qua_iri", T.RDF_TYPE, NI)),
-        when_t(F.col("per_org_qua_iri").isNotNull(),
-               tl("per_org_qua_iri", T.RDFS_LABEL, F.coalesce(F.col("st_qua_label"), F.lit("quality")))),
-        when_t(F.col("per_org_qua_iri").isNotNull() & F.col("st_uri").isNotNull(),
-               t("per_org_qua_iri", T.RDF_TYPE, "st_uri")),
-        when_t(F.col("per_org_qua_iri").isNotNull() & F.col("st_neg_resolved"),
-               t("per_org_qua_iri", T.RDF_TYPE, "st_comp_iri")),
-        when_t(F.col("per_org_qua_iri").isNotNull() & F.col("st_neg_resolved")
-               & F.col("st_var_uri").isNotNull(),
-               t("per_org_qua_iri", T.RDF_TYPE, "st_var_uri")),
-        when_t(F.col("per_org_qua_iri").isNotNull() & F.col("last_loc_iri").isNotNull(),
-               t("last_loc_iri", T.RO_HAS_CHARACTERISTIC, "per_org_qua_iri")),
-        when_t(F.col("per_org_qua_iri").isNotNull(),
-               t("phe_iri", T.PHB_HAS_QUALITY, "per_org_qua_iri")),
+        Triple("per_org_qua_iri", T.RDF_TYPE, NI),
+        Triple("per_org_qua_iri", T.RDFS_LABEL, "coalesce(st_qua_label, 'quality')", lit=True),
+        Triple("per_org_qua_iri", T.RDF_TYPE, "st_uri"),
+        Triple("per_org_qua_iri", T.RDF_TYPE, "st_comp_iri", cond="st_neg_resolved"),
+        Triple("per_org_qua_iri", T.RDF_TYPE, "st_var_uri", cond="st_neg_resolved"),
+        Triple("last_loc_iri", T.RO_HAS_CHARACTERISTIC, "per_org_qua_iri"),
+        Triple("phe_iri", T.PHB_HAS_QUALITY, "per_org_qua_iri"),
         # cell -> state / phenotype links
-        when_t(F.col("st_sta_iri").isNotNull(), t("cell_iri", T.CDAO_HAS_STATE, "st_sta_iri")),
-        t("cell_iri", T.PHB_REFERS_TO_STATEMENT, "phe_iri"),
-    ]))
+        Triple("cell_iri", T.CDAO_HAS_STATE, "st_sta_iri"),
+        Triple("cell_iri", T.PHB_REFERS_TO_STATEMENT, "phe_iri"),
+    ])
 
     # locator triples per visit (F4 chain links + classes + phe links)
     loc_x = visits.select(
         *DOC, "char_pos", "taxon_pos", "vord", "phe_iri",
         F.posexplode("loc_chain").alias("lpos", "lc"),
     )
-    loc_triples = emit(loc_x, *_memo_cols("loc_triples", lambda: [
-        when_t(F.col("lc.uri").isNotNull(), tl(F.col("lc.uri"), T.RDFS_LABEL, F.col("lc.label"))),
-        when_t(F.col("lc.uri").isNotNull(), t(F.col("lc.uri"), T.RDF_TYPE, T.OWL_CLASS)),
-        when_t(F.col("lc.uri").isNotNull(), t(F.col("lc.iri"), T.RDF_TYPE, F.col("lc.uri"))),
-        t(F.col("lc.prev"), T.BFO_HAS_PART, F.col("lc.iri")),
-        t("phe_iri", T.PHB_HAS_ENTITY, F.col("lc.iri")),
-    ]))
+    loc_triples = emit(loc_x, [
+        Triple("lc.uri", T.RDFS_LABEL, "lc.label", lit=True),
+        Triple("lc.uri", T.RDF_TYPE, const(T.OWL_CLASS)),
+        Triple("lc.iri", T.RDF_TYPE, "lc.uri"),
+        Triple("lc.prev", T.BFO_HAS_PART, "lc.iri"),
+        Triple("phe_iri", T.PHB_HAS_ENTITY, "lc.iri"),
+    ])
 
     # first-visit sequential labels (A1/A2) for org / loc / var entities,
     # all three families in ONE tagged pass over the visits checkpoint
@@ -1194,7 +1124,7 @@ def _assemble(spark, corpus, charsx, states_x, cells_j, visits, species, cells, 
     )
     first_cands = visits.select(
         *DOC,
-        _memo_cols("first_cands_expr", lambda: F.explode(F.concat(
+        F.explode(F.concat(
             F.array(
                 _FC("org", F.col("org_iri"), F.lit(0), F.col("v_org_label")),
                 F.when(
@@ -1206,7 +1136,7 @@ def _assemble(spark, corpus, charsx, states_x, cells_j, visits, species, cells, 
                 F.coalesce(F.col("loc_chain"), F.array().cast(_LOC_CHAIN_TYPE)),
                 lambda lc, i: _FC("loc", lc["iri"], i, lc["label"]),
             ),
-        )).alias("c")),
+        )).alias("c"),
     ).filter(F.col("c").isNotNull() & F.col("c.iri").isNotNull()).select(*DOC, "c.*")
     firsts_all = (
         first_cands.groupBy(*DOC, "kind", "iri")
@@ -1219,17 +1149,20 @@ def _assemble(spark, corpus, charsx, states_x, cells_j, visits, species, cells, 
         .select(*DOC, "kind", "iri", "__f.*")
     )
 
+    first_visit = [
+        Triple("iri", T.RDF_TYPE, NI),
+        Triple("iri", T.RDFS_LABEL, "concat(pfx, ':id-', __n)", lit=True),
+    ]
+
     def first_visit_labels(kind, order_cols, fallback):
         firsts = firsts_all.filter(F.col("kind") == kind).drop("kind")
         firsts = seq(firsts, list(order_cols), "__n")
-        prefix = F.when(
-            F.col("pfx").isNull(), F.lit(fallback)
-        ).otherwise(strip_col(F.col("pfx")))
-        return emit(
-            firsts,
-            t("iri", T.RDF_TYPE, NI),
-            tl("iri", T.RDFS_LABEL, F.concat(prefix, F.lit(":id-"), F.col("__n"))),
+        firsts = firsts.withColumn(
+            "pfx",
+            F.when(F.col("pfx").isNull(), F.lit(fallback))
+            .otherwise(strip_col(F.col("pfx"))),
         )
+        return emit(firsts, first_visit)
 
     org_labels = first_visit_labels("org", ["char_pos", "taxon_pos", "vord"], "organism")
     loc_labels = first_visit_labels(
@@ -1278,52 +1211,44 @@ def _assemble(spark, corpus, charsx, states_x, cells_j, visits, species, cells, 
     )
     # normalize_species_uri(info.URI, taxon_label) — input uri is already
     # load-normalized; renormalization is idempotent (main.py:146-167,627).
-    # Constant trees, built once per JVM, applied in one projection.
-    def _build_taxa_exprs():
-        sp_uri = F.when(
-            F.col("uri").isNull() | (F.col("uri") == ""),
-            F.concat(F.lit(T.KB), F.col("taxon_label")),
-        ).when(
-            strip_col(F.col("uri")).startswith("kb:"),
-            F.concat(F.lit(T.KB),
-                     norm_taxon_label(F.substring(strip_col(F.col("uri")), 4, 2 ** 30))),
-        ).when(
-            strip_col(F.col("uri")).startswith(T.KB),
-            F.concat(F.lit(T.KB),
-                     norm_taxon_label(F.substring(strip_col(F.col("uri")), len(T.KB) + 1, 2 ** 30))),
-        ).otherwise(strip_col(F.col("uri")))
-        return [
-            sp_uri.alias("sp_uri"),
-            norm_taxon_label(
-                F.coalesce(F.nullif(F.col("valid_name"), F.lit("")), F.col("taxon_label"))
-            ).alias("concept_label"),
-            kb_iri("sp", F.lower(strip_col(F.col("taxon_label")))).alias("sp_inst"),
-            kb_iri("tu", F.lower(strip_col(F.col("taxon_label")))).alias("tu_iri"),
-        ]
-
-    taxa_sp = taxa_sp.select("*", *_memo_cols("taxa_exprs", _build_taxa_exprs))
+    sp_uri = F.when(
+        F.col("uri").isNull() | (F.col("uri") == ""),
+        F.concat(F.lit(T.KB), F.col("taxon_label")),
+    ).when(
+        strip_col(F.col("uri")).startswith("kb:"),
+        F.concat(F.lit(T.KB),
+                 norm_taxon_label(F.substring(strip_col(F.col("uri")), 4, 2 ** 30))),
+    ).when(
+        strip_col(F.col("uri")).startswith(T.KB),
+        F.concat(F.lit(T.KB),
+                 norm_taxon_label(F.substring(strip_col(F.col("uri")), len(T.KB) + 1, 2 ** 30))),
+    ).otherwise(strip_col(F.col("uri")))
+    taxa_sp = taxa_sp.select(
+        "*",
+        sp_uri.alias("sp_uri"),
+        norm_taxon_label(
+            F.coalesce(F.nullif(F.col("valid_name"), F.lit("")), F.col("taxon_label"))
+        ).alias("concept_label"),
+        kb_iri("sp", F.lower(strip_col(F.col("taxon_label")))).alias("sp_inst"),
+        kb_iri("tu", F.lower(strip_col(F.col("taxon_label")))).alias("tu_iri"),
+    )
     if materialize:
         # taxa_sp is a per-taxon dimension table (rows = distinct taxa)
         # consumed by TWO emission branches (species_part and tu_part) —
         # without pinning, each branch re-ran the distinct, species-key
         # join and min_by aggregation inside the dedup job.
         taxa_sp = mat(taxa_sp, "taxa_sp")
-    species_part = emit(taxa_sp, *_memo_cols("species_part", lambda: [
-        t("sp_uri", T.RDF_TYPE, T.OWL_CLASS),
-        tl("sp_uri", T.RDFS_LABEL, F.col("concept_label")),
-        t("sp_uri", T.RDF_TYPE, T.TXR_SPECIES),
-        t("sp_inst", T.RDF_TYPE, "sp_uri"),
-        t("sp_inst", T.RDF_TYPE, NI),
-        tl("sp_inst", T.RDFS_LABEL, F.col("taxon_label")),
-        when_t(F.col("gbif_id").isNotNull(),
-               tl("sp_inst", T.DWC_PARENT_NAME_USAGE_ID,
-                  F.concat(F.lit("GBIF:"), F.col("gbif_id")))),
-        when_t(F.col("gbif_id").isNotNull(),
-               t("sp_inst", T.RDFS_SEEALSO,
-                 F.concat(F.lit("https://www.gbif.org/species/"), F.col("gbif_id")))),
-        when_t(F.col("zoobank_id").isNotNull(),
-               tl("sp_inst", T.DWC_TAXON_ID, F.col("zoobank_id"))),
-    ]))
+    species_part = emit(taxa_sp, [
+        Triple("sp_uri", T.RDF_TYPE, const(T.OWL_CLASS)),
+        Triple("sp_uri", T.RDFS_LABEL, "concept_label", lit=True),
+        Triple("sp_uri", T.RDF_TYPE, const(T.TXR_SPECIES)),
+        Triple("sp_inst", T.RDF_TYPE, "sp_uri"),
+        Triple("sp_inst", T.RDF_TYPE, NI),
+        Triple("sp_inst", T.RDFS_LABEL, "taxon_label", lit=True),
+        Triple("sp_inst", T.DWC_PARENT_NAME_USAGE_ID, "concat('GBIF:', gbif_id)", lit=True),
+        Triple("sp_inst", T.RDFS_SEEALSO, "concat('https://www.gbif.org/species/', gbif_id)"),
+        Triple("sp_inst", T.DWC_TAXON_ID, "zoobank_id", lit=True),
+    ])
 
     # TU enrichment (F10): default organism from the first char row that
     # carries both Organism and SpeciesLabel (main.py:871-890), else a
@@ -1351,52 +1276,46 @@ def _assemble(spark, corpus, charsx, states_x, cells_j, visits, species, cells, 
             ).alias("default_org_iri"),
         )
     )
-    # tu enrichment columns are constant trees (built once per JVM) and
-    # apply in three dependency-ordered projections
-    def _build_tu_exprs():
-        return {
-            "a": [
-                F.coalesce(
-                    F.col("default_org_iri"),
-                    kb_iri("org", F.concat(F.lower(strip_col(F.col("taxon_label"))),
-                                           F.lit("::organism"))),
-                ).alias("org_eff"),
-                strip_col(
-                    F.coalesce(
-                        F.nullif(F.col("valid_name"), F.lit("")),
-                        F.nullif(F.col("input_name"), F.lit("")),
-                        F.nullif(F.col("taxon_label"), F.lit("")),
-                        F.lit("Unknown species"),
-                    )
-                ).alias("valid_label"),
-            ],
-            "b": [F.split(F.col("valid_label"), " ", 3).alias("__parts")],
-            "c": [
-                F.when(
-                    F.size("__parts") >= 2,
-                    F.concat(F.col("__parts")[0], F.lit(" "), F.col("__parts")[1]),
-                ).otherwise(F.col("valid_label")).alias("binomial"),
-                F.when(F.size("__parts") == 3, F.col("__parts")[2])
-                .otherwise(F.lit("")).alias("author"),
-            ],
-            "d": [
-                strip_col(F.concat(F.lit("<i>"), F.col("binomial"),
-                                   F.lit("</i> "), F.col("author"))).alias("tu_comment"),
-            ],
-        }
-
-    tue = _memo_cols("tu_exprs", _build_tu_exprs)
-    tu_rows = taxa_sp.join(bhint(default_org), DOC, "left")
-    for stage_key in ("a", "b", "c", "d"):
-        tu_rows = tu_rows.select("*", *tue[stage_key])
-    tu_part = emit(tu_rows, *_memo_cols("tu_part", lambda: [
-        t("tu_iri", T.RDF_TYPE, NI),
-        tl("tu_iri", T.RDFS_LABEL, F.col("taxon_label")),
-        tl("tu_iri", T.RDFS_COMMENT, F.col("tu_comment")),
-        t("org_eff", T.RDF_TYPE, NI),
-        t("tu_iri", T.RDF_TYPE, T.CDAO_TU),
-        t("tu_iri", T.IAO_DENOTES, "sp_inst"),
-    ]))
+    # tu enrichment columns apply in dependency-ordered projections
+    tu_rows = taxa_sp.join(bhint(default_org), DOC, "left").select(
+        "*",
+        F.coalesce(
+            F.col("default_org_iri"),
+            kb_iri("org", F.concat(F.lower(strip_col(F.col("taxon_label"))),
+                                   F.lit("::organism"))),
+        ).alias("org_eff"),
+        strip_col(
+            F.coalesce(
+                F.nullif(F.col("valid_name"), F.lit("")),
+                F.nullif(F.col("input_name"), F.lit("")),
+                F.nullif(F.col("taxon_label"), F.lit("")),
+                F.lit("Unknown species"),
+            )
+        ).alias("valid_label"),
+    )
+    tu_rows = tu_rows.select("*", F.split(F.col("valid_label"), " ", 3).alias("__parts"))
+    tu_rows = tu_rows.select(
+        "*",
+        F.when(
+            F.size("__parts") >= 2,
+            F.concat(F.col("__parts")[0], F.lit(" "), F.col("__parts")[1]),
+        ).otherwise(F.col("valid_label")).alias("binomial"),
+        F.when(F.size("__parts") == 3, F.col("__parts")[2])
+        .otherwise(F.lit("")).alias("author"),
+    )
+    tu_rows = tu_rows.select(
+        "*",
+        strip_col(F.concat(F.lit("<i>"), F.col("binomial"),
+                           F.lit("</i> "), F.col("author"))).alias("tu_comment"),
+    )
+    tu_part = emit(tu_rows, [
+        Triple("tu_iri", T.RDF_TYPE, NI),
+        Triple("tu_iri", T.RDFS_LABEL, "taxon_label", lit=True),
+        Triple("tu_iri", T.RDFS_COMMENT, "tu_comment", lit=True),
+        Triple("org_eff", T.RDF_TYPE, NI),
+        Triple("tu_iri", T.RDF_TYPE, const(T.CDAO_TU)),
+        Triple("tu_iri", T.IAO_DENOTES, "sp_inst"),
+    ])
 
     # -- final assembly ---------------------------------------------------
     def with_part(df, name):
@@ -1474,7 +1393,7 @@ def _assemble(spark, corpus, charsx, states_x, cells_j, visits, species, cells, 
     TP, VO = F.col("taxon_pos"), F.col("vord")
     state_cands = states_x.select(
         *DOC,
-        _memo_cols("state_cands_expr", lambda: F.explode(F.array(
+        F.explode(F.array(
             _cand(F.col("uri_t").isNotNull(),
                   F.col("uri_t"), F.col("labelN"), _ord(CP, 0, SI, Z, Z)),
             _cand(None, F.col("qua_iri"), F.col("qua_label"),
@@ -1488,11 +1407,11 @@ def _assemble(spark, corpus, charsx, states_x, cells_j, visits, species, cells, 
                   _ord(CP, 0, SI, F.lit(3), Z)),
             _cand(None, F.col("sta_iri"), F.col("sta_label"),
                   _ord(CP, 1, SI, Z, Z)),
-        )).alias("c")),
+        )).alias("c"),
     )
     visit_cands = visits.select(
         *DOC,
-        _memo_cols("visit_cands_expr", lambda: F.explode(F.concat(
+        F.explode(F.concat(
             F.array(
                 _cand(None, F.col("v_org_uri"), F.col("v_org_label"),
                       _ord(CP, 2, TP, VO, Z)),
@@ -1514,7 +1433,7 @@ def _assemble(spark, corpus, charsx, states_x, cells_j, visits, species, cells, 
                     ),
                 ),
             ),
-        )).alias("c")),
+        )).alias("c"),
     )
     label_order = (
         state_cands.unionByName(visit_cands)

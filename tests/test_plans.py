@@ -32,9 +32,8 @@ def test_anti_join_is_real_antijoin(spark):
 def test_no_python_eval_in_relational_queries(spark):
     allq = {**Q.QUERIES, **Q.QUERIES_EXTRA}
     for name in ["a2_sequential_counters",
-                 "dedup_jaccard_pairs", "minhash_band_pairs", "text_quality_score",
-                 "text_sample_deterministic", "text_pack_sequences",
-                 "embedding_quantize_int8"]:
+                 "dedup_jaccard_pairs", "minhash_band_pairs",
+                 "text_quality_score"]:
         plan = plan_of(allq[name](spark, SF))
         assert "BatchEvalPython" not in plan, name
         assert "MapInPandas" not in plan, name
@@ -81,14 +80,6 @@ def test_kg_join_shuffle_fallback_past_gate(spark):
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
 
 
-def test_ann_topk_plans_as_take_ordered(spark):
-    """The registry ann_cosine_topk must compile to TakeOrderedAndProject
-    (per-partition top-k merged on the driver), not a single-partition
-    global window."""
-    plan = plan_of(Q.QUERIES["ann_cosine_topk"](spark, SF))
-    assert "TakeOrderedAndProject" in plan, plan
-
-
 def test_lsh_ops_have_no_cartesian_product(spark):
     """Every near-dup/ANN candidate generator must pair via bucketed
     equi-joins — an all-pairs CartesianProduct would be the 100-TB
@@ -99,23 +90,6 @@ def test_lsh_ops_have_no_cartesian_product(spark):
         plan = plan_of(Q.QUERIES[name](spark, SF))
         assert "CartesianProduct" not in plan, name
         assert "BroadcastNestedLoopJoin" not in plan, name
-
-
-def test_ivf_seeding_is_distributed_topk(spark):
-    """IVF centroid seeding must compile to TakeOrderedAndProject
-    (per-partition partial top-k), never an unpartitioned row_number
-    window funneling every vector through one task."""
-    from rdf_generator_spark.textops.similarity import ivf_build
-
-    vecs = spark.read.parquet(f"{SF}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    # iters=0 keeps the returned frame as the raw seeding plan (Lloyd
-    # rounds localCheckpoint, which would hide the lineage under a scan)
-    cents, _ = ivf_build(vecs, n_cells=8, iters=0)
-    plan = plan_of(cents)
-    assert "TakeOrderedAndProject" in plan, plan
-    assert "Window" not in plan, plan
 
 
 def test_final_graph_plan_is_jvm_only(spark):
@@ -276,6 +250,39 @@ def test_fuzzy_match_plan_is_gram_bucketed(spark):
     assert "BroadcastHashJoin" in plan, plan
 
 
+def test_emit_compiles_family_rows(spark):
+    """emit() on a 3-row frame: an unconditional IRI row, a row whose
+    condition is false on one input row, an xsd:integer literal and a
+    constant holding a quote and a backslash, checked row for row."""
+    from rdf_generator_spark import terms as T
+    from rdf_generator_spark.plans.emit import Triple, const, emit
+
+    df = spark.createDataFrame(
+        [("r", "c1", "http://x/a", 1, True),
+         ("r", "c1", "http://x/b", 2, False),
+         ("r", "c2", "http://x/c", 3, True)],
+        "repo string, commit string, node string, n int, flag boolean",
+    )
+    family = [
+        Triple("node", T.RDF_TYPE, const("http://x/Thing")),
+        Triple("node", "http://x/flagged", "concat(node, '/yes')", cond="flag"),
+        Triple("node", "http://x/n", "n", lit=True, dt=T.XSD_INTEGER),
+        Triple("node", T.RDFS_LABEL, const("it's a \\ label"), lit=True),
+    ]
+    out = emit(df, family)
+    assert out.columns == ["repo", "commit", "s", "p", "o", "lit", "dt"]
+    want = []
+    for commit, node, n, flag in [("c1", "a", 1, True), ("c1", "b", 2, False),
+                                  ("c2", "c", 3, True)]:
+        iri = f"http://x/{node}"
+        want += [("r", commit, iri, T.RDF_TYPE, "http://x/Thing", False, None),
+                 ("r", commit, iri, "http://x/n", str(n), True, T.XSD_INTEGER),
+                 ("r", commit, iri, T.RDFS_LABEL, "it's a \\ label", True, None)]
+        if flag:
+            want.append(("r", commit, iri, "http://x/flagged", iri + "/yes", False, None))
+    assert sorted(tuple(r) for r in out.collect()) == sorted(want)
+
+
 def _family_rows(df):
     """Rows of a parser output as a sorted multiset of JSON strings."""
     import json
@@ -411,6 +418,11 @@ def synth_build(spark, tmp_path_factory):
 FINAL_EXCHANGE_BUDGET = 22
 VISITS_EXCHANGE_BUDGET = 82
 VISITS_MAP_IN_PANDAS_BUDGET = 22
+# py4j commands the driver sends for one build_graph on the same corpus
+# (plan construction plus the hub materialization jobs), not counting
+# the release commands py4j sends when Python garbage-collects a JVM
+# reference: their number follows the collector's timing.
+BUILD_PY4J_BUDGET = 20255
 
 
 def test_final_graph_exchange_budget(synth_build):
@@ -429,6 +441,29 @@ def test_visits_plan_budget(spark, synth_build):
     n_exchange, n_map = plan.count("Exchange"), plan.count("MapInPandas")
     assert n_exchange <= VISITS_EXCHANGE_BUDGET, n_exchange
     assert n_map <= VISITS_MAP_IN_PANDAS_BUDGET, n_map
+
+
+def test_build_py4j_budget(spark, synth_build):
+    """py4j commands of one materialized build, counted by wrapping the
+    gateway client's send_command for the duration of the call."""
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    corpus, _ = synth_build
+    client = spark.sparkContext._gateway._gateway_client
+    orig = client.send_command
+    calls = 0
+
+    def send_command(command, *args, **kwargs):
+        nonlocal calls
+        calls += not command.startswith(MEMORY_COMMAND_NAME)
+        return orig(command, *args, **kwargs)
+
+    client.send_command = send_command
+    try:
+        build_graph(spark, corpus)
+    finally:
+        client.send_command = orig
+    assert calls <= BUILD_PY4J_BUDGET, calls
 
 
 def test_validate_runs_no_python_rdd(spark, synth_build, tmp_path):

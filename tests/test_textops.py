@@ -1,12 +1,11 @@
-"""Training-data pipeline operators: dedup, similarity, analysis,
-sampling."""
+"""Training-data pipeline operators: dedup and analysis."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from rdf_generator_spark.textops import analysis, dedupe, similarity
+from rdf_generator_spark.textops import analysis, dedupe
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -30,124 +29,6 @@ def test_exact_dup_groups(spark):
     with_m = {r["keeper"]: (r["n"], sorted(r["members"])) for r in
               dedupe.exact_dup_groups(df, max_members=10).collect()}
     assert with_m == {1: (2, [1, 2]), 3: (1, [3])}
-
-
-def test_quantize_embeddings_randomized_invariants(spark):
-    """Seeded random vectors (incl. negatives, tiny and huge magnitudes):
-    |q| <= 127 always, and dequantized values reconstruct within
-    scale/2 per component."""
-    import random
-
-    rng = random.Random(99)
-    rows = []
-    for i in range(200):
-        mag = 10.0 ** rng.randint(-6, 6)
-        rows.append((i, [rng.uniform(-mag, mag) for _ in range(16)]))
-    df = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
-    out = similarity.quantize_embeddings(df).collect()
-    assert len(out) == 200 * 16
-    import struct
-
-    f32 = lambda x: struct.unpack("f", struct.pack("f", x))[0]  # noqa: E731
-    by_vec = {}
-    for r in out:
-        by_vec.setdefault(r["vec_id"], {})[r["dim"]] = (r["q"], r["scale_ppb"])
-    for i, vec in rows:
-        scale = max(abs(f32(x)) for x in vec) / 127.0
-        for d, x in enumerate(vec):
-            q, sppb = by_vec[i][d]
-            assert -127 <= q <= 127
-            assert sppb == int(scale * 1e9) or abs(sppb - scale * 1e9) <= 1
-            assert abs(q * scale - f32(x)) <= scale / 2 + 1e-12
-
-
-def test_sample_and_pack_randomized_invariants(spark):
-    """Seeded random corpus: sampling is a deterministic subset at any
-    fraction (0 and 1 edges exact); packing conserves rows and respects
-    the streaming budget bound for several (max_tokens, buckets)."""
-    import random
-
-    from rdf_generator_spark.textops.sampling import (
-        deterministic_sample, pack_sequences,
-    )
-
-    rng = random.Random(4242)
-    rows = [(i, " ".join(["w"] * rng.randint(1, 300))) for i in range(500)]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    assert deterministic_sample(df, 0.0, seed=3).count() == 0
-    assert deterministic_sample(df, 1.0, seed=3).count() == 500
-    for mt, b in [(500, 2), (1000, 8), (10_000, 1)]:
-        out = pack_sequences(df, max_tokens=mt, buckets=b).collect()
-        assert len(out) == 500
-        packs = {}
-        for r in out:
-            assert 0 <= r["bucket"] < b
-            packs.setdefault((r["bucket"], r["pack_id"]), []).append(r["n_tokens"])
-        for sizes in packs.values():
-            assert sum(sizes) <= mt + max(sizes)
-
-
-def test_quantize_embeddings_roundtrip(spark):
-    from rdf_generator_spark.textops.similarity import quantize_embeddings
-
-    rows = [
-        (1, [0.5, -1.0, 0.25, 0.0]),
-        (2, [0.0, 0.0, 0.0, 0.0]),     # zero vector -> scale 0, all q 0
-        (3, [127.0, -127.0, 63.5, 1.0]),
-    ]
-    df = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
-    out = quantize_embeddings(df).collect()
-    by_vec = {}
-    for r in out:
-        by_vec.setdefault(r["vec_id"], {})[r["dim"]] = (r["q"], r["scale_ppb"])
-    assert {d for d in by_vec[1]} == {0, 1, 2, 3}
-    # vec 1: scale = 1.0/127; q = round(v * 127)
-    assert [by_vec[1][d][0] for d in range(4)] == [64, -127, 32, 0]
-    assert all(q == 0 and s == 0 for q, s in by_vec[2].values())
-    # reconstruction error bounded by scale/2 per component
-    scale3 = by_vec[3][0][1] / 1e9
-    recon = [by_vec[3][d][0] * scale3 for d in range(4)]
-    for got, want in zip(recon, rows[2][1]):
-        assert abs(got - want) <= scale3 / 2 + 1e-9
-
-
-def test_deterministic_sample_properties(spark):
-    from rdf_generator_spark.textops.sampling import deterministic_sample
-
-    df = spark.range(10_000).select(F.col("id").alias("doc_id"))
-    s1 = {r["doc_id"] for r in deterministic_sample(df, 0.3, seed=1).collect()}
-    s2 = {r["doc_id"] for r in deterministic_sample(df, 0.3, seed=1).collect()}
-    assert s1 == s2  # retry-stable
-    # fraction within binomial tolerance
-    assert 0.25 < len(s1) / 10_000 < 0.35
-    # monotone in fraction: 0.1 sample is a subset of the 0.3 sample
-    s_small = {r["doc_id"] for r in deterministic_sample(df, 0.1, seed=1).collect()}
-    assert s_small < s1
-    # different seed -> different membership
-    s3 = {r["doc_id"] for r in deterministic_sample(df, 0.3, seed=2).collect()}
-    assert s3 != s1
-
-
-def test_pack_sequences_budget(spark):
-    from rdf_generator_spark.textops.sampling import pack_sequences
-
-    rows = [(i, " ".join(["tok"] * (50 + (i * 37) % 400))) for i in range(300)]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = pack_sequences(df, max_tokens=1000, buckets=4).collect()
-    assert len(out) == 300  # no document dropped or split
-    packs = {}
-    for r in out:
-        packs.setdefault((r["bucket"], r["pack_id"]), []).append(r["n_tokens"])
-    for (b, p), sizes in packs.items():
-        # streaming-packing bound: a pack may overflow by at most its
-        # last (straddling) document
-        assert sum(sizes) <= 1000 + max(sizes), (b, p, sizes)
-    # pack ids are contiguous from 0 within each bucket
-    by_bucket = {}
-    for (b, p), _ in packs.items():
-        by_bucket.setdefault(b, set()).add(p)
-    for b, pids in by_bucket.items():
-        assert pids == set(range(len(pids))), (b, pids)
 
 
 def test_exact_dup_groups_hot_key_bounded(spark):
@@ -208,20 +89,6 @@ def test_embedding_neardup(spark, embeds):
     ids = [r["vec_id"] for r in sub.select("vec_id").collect()]
     hits = sum((i, i + 100000) in got for i in ids)
     assert hits == len(ids)  # identical vectors always bucket together
-
-
-def test_brute_force_vs_ivf_recall(spark, embeds):
-    vecs = embeds.select("vec_id", "embedding")
-    queries = vecs.limit(5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    exact = similarity.brute_force_topk(vecs, queries, k=5)
-    cents, assign = similarity.ivf_build(vecs, n_cells=8, iters=2)
-    approx = similarity.ivf_topk(vecs, assign, cents, queries, k=5, n_probe=4)
-    e = {(r["q_id"], r["vec_id"]) for r in exact.collect()}
-    a = {(r["q_id"], r["vec_id"]) for r in approx.collect()}
-    recall = len(e & a) / len(e)
-    assert recall >= 0.5, recall  # probing half the cells on random data
 
 
 def test_token_stats_and_langid(spark, docs):
@@ -391,29 +258,6 @@ def test_repetition_score(spark):
     assert got[2] == (3, 3, 0)
     assert got[3] == (1, 1, 0)
     assert got[4] == (1, 1, 0)
-
-
-def test_stratified_sample(spark):
-    from rdf_generator_spark.textops.sampling import stratified_sample
-
-    rows = [(i, "s%d" % (i % 3)) for i in range(60)]
-    df = spark.createDataFrame(rows, ["doc_id", "source"])
-    got = stratified_sample(df, "source", cap=5, seed=1).collect()
-    by_src = {}
-    for r in got:
-        by_src.setdefault(r["source"], set()).add(r["doc_id"])
-    assert all(len(v) == 5 for v in by_src.values()) and len(by_src) == 3
-    # deterministic: same selection on re-run and after repartition
-    again = stratified_sample(df.repartition(7), "source", cap=5, seed=1).collect()
-    assert {(r["doc_id"], r["source"]) for r in again} == {
-        (r["doc_id"], r["source"]) for r in got
-    }
-    # growing a stratum only displaces at the quota boundary
-    bigger = spark.createDataFrame(rows + [(100, "s0")], ["doc_id", "source"])
-    g2 = {r["doc_id"] for r in
-          stratified_sample(bigger, "source", cap=5, seed=1).collect()
-          if r["source"] == "s0"}
-    assert len(g2) == 5 and len(g2 - by_src["s0"]) <= 1
 
 
 def test_incremental_dedup(spark):
