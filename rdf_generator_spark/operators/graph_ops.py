@@ -116,8 +116,8 @@ def _drop_victims(df: DataFrame, victims: DataFrame, hint) -> DataFrame:
     return out
 
 
-def prune_unreferenced_scoped(df: DataFrame, mx_col: str,
-                              hint=F.broadcast, materialize_flags=None):
+def prune_unreferenced_scoped(df: DataFrame, mx_col: str, materialize_flags,
+                              hint=F.broadcast):
     """Prune the full triple set AND its ``mx_col`` subset, sharing one
     victim scan (round 6).
 
@@ -129,11 +129,11 @@ def prune_unreferenced_scoped(df: DataFrame, mx_col: str,
     one scan and one small exchange instead of two of each. Returns
     ``(pruned_full, pruned_subset)``; neither output carries ``mx_col``.
 
-    ``materialize_flags``: optional ``f(flags_df) -> flags_df`` that
-    pins the (small) per-node flag table; without it the flag subtree
-    appears under four broadcast builds and exchange reuse is left to
-    the engine (measured NOT to fire across AQE broadcast stages here,
-    so the scan ran twice). The pipeline passes its hub materializer.
+    ``materialize_flags``: ``f(flags_df) -> flags_df`` that pins the
+    (small) per-node flag table; unpinned, the flag subtree appears
+    under four broadcast builds and exchange reuse is left to the
+    engine (measured NOT to fire across AQE broadcast stages here, so
+    the scan ran twice). The pipeline passes its hub materializer.
     """
     QUA, ORG = T.KB + "qua-", T.KB + "org-"
     is_ni = (F.col("p") == T.RDF_TYPE) & (F.col("o") == T.OWL_NAMED_INDIVIDUAL)
@@ -175,8 +175,7 @@ def prune_unreferenced_scoped(df: DataFrame, mx_col: str,
         F.max((F.col("kind") == 2) & F.col("__cmx")).alias("__refq_mx"),
         F.max((F.col("kind") == 3) & F.col("__cmx")).alias("__refo_mx"),
     )
-    if materialize_flags is not None:
-        flags = materialize_flags(flags)
+    flags = materialize_flags(flags)
 
     def _victims(named, refq, refo):
         return flags.filter(

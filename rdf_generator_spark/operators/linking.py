@@ -43,41 +43,6 @@ def fill_scalar_uri(
     ).drop("norm_label", "__resolved")
 
 
-def fill_array_uris(
-    df: DataFrame,
-    array_col: str,
-    vocab: DataFrame,
-    id_cols: Sequence[str],
-    extra_fields: Sequence[str] = (),
-) -> DataFrame:
-    """Fill `uri` inside an array<struct<label,uri[,...]>> column.
-
-    posexplode -> broadcast join -> ordered re-assembly. The groupBy is
-    keyed by the row identity (document + char_pos) so re-assembly is a
-    narrow-ish shuffle on the dimension-sized characters table.
-    """
-    keys = list(id_cols)
-    ex = df.select(*keys, F.posexplode_outer(array_col).alias("__pos", "__item"))
-    item = F.col("__item")
-    cond = missing_uri(item["uri"]) & (norm_term_label(item["label"]) != "")
-    v = F.broadcast(vocab.withColumnRenamed("uri", "__resolved"))
-    ex = ex.join(v, cond & (norm_term_label(item["label"]) == v.norm_label), "left")
-    fields = [item["label"].alias("label"),
-              F.when(cond & F.col("__resolved").isNotNull(), F.col("__resolved"))
-               .otherwise(item["uri"]).alias("uri")]
-    for f in extra_fields:
-        fields.append(item[f].alias(f))
-    new_item = F.struct(*fields)
-    packed = F.when(F.col("__pos").isNotNull(), F.struct(F.col("__pos").alias("p"), new_item.alias("i")))
-    regrouped = (
-        ex.groupBy(*keys)
-        .agg(F.sort_array(F.collect_list(packed)).alias("__packed"))
-        .withColumn(array_col, F.expr("transform(__packed, x -> x.i)"))
-        .drop("__packed")
-    )
-    return df.drop(array_col).join(regrouped, keys, "left")
-
-
 def _missing_mention_labels(chars: DataFrame) -> DataFrame:
     """Distinct normalized labels of mentions whose URI slot is still
     missing after the exact tier — the fuzzy tier's candidate set."""
@@ -110,13 +75,15 @@ def fill_both_arrays_uris(
 ) -> DataFrame:
     """Fused fill of the `locators` and `states` array slots (round 6).
 
-    `fill_array_uris` per column costs one explode + one groupBy
-    exchange + one join-back each; tagging both arrays' elements with a
-    kind and exploding them TOGETHER halves that machinery (one explode
-    pass, one vocabulary join, one re-assembly aggregation, one
-    join-back) while producing byte-identical arrays: positions are
-    assigned within the concatenated (locators ++ states) array, so
-    per-kind sort order equals the original element order."""
+    A fill per array column costs one explode + one groupBy exchange +
+    one join-back each; tagging both arrays' elements with a kind and
+    exploding them TOGETHER halves that machinery (one explode pass, one
+    vocabulary join, one re-assembly aggregation, one join-back) while
+    producing byte-identical arrays: positions are assigned within the
+    concatenated (locators ++ states) array, so per-kind sort order
+    equals the original element order. Neither array is ever NULL (the
+    parser emits ``[]`` for a missing or null list), so the concat is
+    never NULL either."""
     keys = list(id_cols)
     loc_tagged = F.transform(
         F.col("locators"),
@@ -171,7 +138,7 @@ def fill_character_uris(
 
     Default is the reference's exact-match tier only (golden parity).
     With ``fuzzy_threshold`` set, exact-tier misses are routed through
-    `fuzzy_match_labels` (character-n-gram Dice similarity >= threshold)
+    `fuzzy_match_labels` (character-trigram Dice similarity >= threshold)
     as an opt-in second pass — a north-star generalization the exact
     reference cannot do. The fuzzy map is distinct-labels-sized (bounded
     by the vocabulary fan-in), so the second pass reuses the same
@@ -198,30 +165,26 @@ def fill_character_uris(
 
 
 def fuzzy_match_labels(
-    mentions: DataFrame,
-    vocab: DataFrame,
-    label_col: str = "label",
-    threshold: float = 0.7,
-    ngram: int = 3,
+    mentions: DataFrame, vocab: DataFrame, threshold: float = 0.7
 ) -> DataFrame:
     """Similarity tier of entity linking (north-star generalization of
     the reference's exact-match-only J1): batched candidate generation
-    via character-n-gram overlap against the broadcast vocabulary,
+    via character-trigram overlap against the broadcast vocabulary,
     scored with Dice similarity, best-above-threshold per mention.
 
-    Input: distinct mention labels. Output: (label, uri, score) for
-    mentions resolvable at >= threshold. Keep the exact tier first;
-    route only its misses here."""
+    Input: distinct mention labels in a `label` column. Output:
+    (label, uri, score) for mentions resolvable at >= threshold. Keep
+    the exact tier first; route only its misses here."""
     from pyspark.sql.window import Window
 
     def grams(c: Column) -> Column:
         padded = F.concat(F.lit(" "), norm_term_label(c), F.lit(" "))
-        n = F.greatest(F.length(padded) - (ngram - 1), F.lit(1))
+        n = F.greatest(F.length(padded) - 2, F.lit(1))
         return F.array_distinct(
-            F.transform(F.sequence(F.lit(1), n), lambda i: padded.substr(i, F.lit(ngram)))
+            F.transform(F.sequence(F.lit(1), n), lambda i: padded.substr(i, F.lit(3)))
         )
 
-    m = mentions.select(F.col(label_col).alias("label")).distinct().select(
+    m = mentions.select("label").distinct().select(
         "label", F.explode(grams(F.col("label"))).alias("g"),
         F.size(grams(F.col("label"))).alias("n_m"),
     )

@@ -28,9 +28,8 @@ Input contract: one character-JSON and one NEXUS document per
 each). Multiple JSON files in one group would make character order —
 and thus the matrix column mapping — ambiguous. `build_graph` fails
 loudly on offending groups (the check rides the materialized characters
-table, so it is skipped in materialize=False diagnostic mode);
-`sources.corpus.shard_multi_matrix_groups` rewrites such corpora into
-one group per matrix automatically (json/nexus paired by path stem).
+hub); `sources.corpus.shard_multi_matrix_groups` rewrites such corpora
+into one group per matrix automatically (json/nexus paired by path stem).
 """
 
 from __future__ import annotations
@@ -59,7 +58,7 @@ from rdf_generator_spark.operators.windows import seq_number
 from rdf_generator_spark.plans.base_scaffold import BASE_SCHEMA, base_triples
 from rdf_generator_spark.plans.emit import Triple, const, emit, union_emissions
 from rdf_generator_spark.sources import parsers
-from rdf_generator_spark.sources.corpus import local_df, vocab_df_from_corpus
+from rdf_generator_spark.sources.corpus import local_df, vocab_df_from_owl_rows
 
 DOC = ["repo", "commit"]
 
@@ -106,7 +105,7 @@ _AUTO_COUNTER_BUCKET_WIDTH = 64
 _PROBE_FILE_CAP = 4096
 
 
-def probe_max_doc_bytes(corpus: DataFrame, allow_job: bool = True):
+def probe_max_doc_bytes(corpus: DataFrame):
     """Estimate (or exactly measure) the largest document's content size.
 
     Returns ``(bytes, exact)`` or ``None``. File-backed corpora
@@ -189,8 +188,6 @@ def probe_max_doc_bytes(corpus: DataFrame, allow_job: bool = True):
         # cap a tail giant would be invisible (VERDICT r5 item 1), so
         # an over-cap corpus falls through to the exact job instead of
         # claiming proof it doesn't have.
-        return (max(best_mean, 1), False)
-    if not allow_job:
         return (max(best_mean, 1), False)
     try:
         exact = corpus.select(
@@ -325,20 +322,24 @@ def build_graph(
     spark: SparkSession,
     corpus: DataFrame,
     dataset_id: Optional[str] = None,
-    vocab: Optional[DataFrame] = None,
-    materialize: bool = True,
-    assemble: bool = True,
     dim_broadcast: Optional[bool] = None,
     staging_dir: Optional[str] = None,
     counter_buckets="auto",
 ) -> Dict[str, DataFrame]:
     """Run the full pipeline; returns named DataFrames.
 
-    With ``materialize`` (default) the hub tables (the fused parse,
-    chars/states/visits and the emitted triple union) are materialized:
-    every downstream branch (per-part outputs, prune, label priority,
-    validation) reuses one materialized dataset instead of replaying the
-    parse+join lineage.
+    The hub tables (the fused parse, chars/states/visits, taxa, the
+    deduplicated triple union and the prune flags) are materialized as
+    the build goes: every downstream branch (per-part outputs, prune,
+    label priority, validation) reuses one materialized dataset instead
+    of replaying the parse+join lineage. The returned outputs are lazy
+    plans over those hubs.
+
+    ``dataset_id`` is the tier-1 IRI salt; when it is ``None`` a
+    ``dataset_id`` in the corpus's yaml config rows is used, if any
+    (see `dataset_id_from_config`). ``dim_broadcast`` (``None``: gated
+    on the corpus file count) keeps or drops the broadcast hints on the
+    per-document dimension joins.
 
     Materialization mechanism: ``localCheckpoint`` by default (fastest on
     a single box, but the blocks live on executors — a lost executor
@@ -407,15 +408,11 @@ def build_graph(
     # exchanges. Checkpoint-then-build collapses each hub job to its own
     # stage chain — guide §2.4: remove repeated subtree shuffles.)
     mat = _materializer(spark, staging_dir)
-    do_mat = materialize and assemble
-
-    def hub(df, name):
-        return mat(df, name) if do_mat else df
 
     # One fused parse per build, materialized as the first hub: every
     # family below is a projection of it, so each document enters Python
     # exactly once however many jobs read its records.
-    parsed = hub(parsers.parse_docs(corpus), "parsed")
+    parsed = mat(parsers.parse_docs(corpus), "parsed")
     chars_raw = parsers.family_view(parsed, "json")
     cells = parsers.family_view(parsed, "nexus")
     species = parsers.family_view(parsed, "species-json")
@@ -433,47 +430,30 @@ def build_graph(
             ).alias("source_text")
         )
     )
-    if vocab is None and dataset_id is None:
-        # one combined dimension collect (round 6): the OWL vocabulary
-        # rows and the (bounded, ordered — see dataset_id_from_config)
-        # yaml config window used to be two separate driver jobs per
-        # build; one filtered scan fetches both. Bounds are preserved:
-        # yaml rows ride a per-lang rank capped at the config-scan
-        # limit, owl rows are dimension docs by contract.
-        w_yaml = Window.partitionBy("lang").orderBy("repo", "path", "commit")
-        dim_rows = (
-            corpus.filter(F.col("lang").isin("owl", "yaml"))
-            .select("repo", "path", "commit", "lang", "content")
-            .withColumn("__rn", F.row_number().over(w_yaml))
-            .filter((F.col("lang") == "owl")
-                    | (F.col("__rn") <= _CONFIG_SCAN_LIMIT))
-            .collect()
-        )
-        from rdf_generator_spark.sources.corpus import (
-            VOCAB_SCHEMA,
-            build_label_index,
-        )
-
-        index: Dict[str, str] = {}
-        owl_rows = sorted(
-            (r for r in dim_rows if r["lang"] == "owl"),
-            key=lambda r: (r["repo"], r["path"], r["commit"]),
-        )
-        for r in owl_rows:
-            for k, v in build_label_index(r["content"]).items():
-                index.setdefault(k, v)
-        vocab = local_df(spark, sorted(index.items()), VOCAB_SCHEMA)
+    # One combined dimension collect (round 6): the OWL vocabulary rows
+    # and the (bounded, ordered — see dataset_id_from_config) yaml config
+    # window come from one filtered scan. Bounds are preserved: yaml rows
+    # ride a per-lang rank capped at the config-scan limit, owl rows are
+    # dimension docs by contract.
+    w_yaml = Window.partitionBy("lang").orderBy("repo", "path", "commit")
+    dim_rows = (
+        corpus.filter(F.col("lang").isin("owl", "yaml"))
+        .select("repo", "path", "commit", "lang", "content")
+        .withColumn("__rn", F.row_number().over(w_yaml))
+        .filter((F.col("lang") == "owl")
+                | (F.col("__rn") <= _CONFIG_SCAN_LIMIT))
+        .collect()
+    )
+    vocab = vocab_df_from_owl_rows(
+        spark, [r for r in dim_rows if r["lang"] == "owl"]
+    )
+    if dataset_id is None:
         dataset_id = _dataset_id_from_yaml_rows(
             sorted(
                 (r for r in dim_rows if r["lang"] == "yaml"),
                 key=lambda r: (r["repo"], r["path"], r["commit"]),
             )
         )
-    else:
-        if vocab is None:
-            vocab = vocab_df_from_corpus(spark, corpus)
-        if dataset_id is None:
-            dataset_id = dataset_id_from_config(corpus)
 
     # --- J1 vocab fill + per-char derived columns ------------------------
     chars_f = linking.fill_character_uris(chars_raw, vocab)
@@ -561,30 +541,29 @@ def build_graph(
         .when(has_locs & all_of(label_comps), F.array_join(label_comps, "::"))
         .when(has_locs, F.concat(F.lit("__malformed__::"), F.col("char_id"))),
     )
-    charsx = hub(charsx, "charsx")
-    if do_mat:
-        # Contract check rides the (cheap, already-materialized) parsed
-        # characters table instead of re-scanning the raw corpus: a
-        # second char-JSON in a group shows up as a second distinct
-        # `path` here. Raises before any result is returned.
-        bad = (
-            charsx.select(*DOC, "path").distinct()
-            .groupBy(*DOC).count().filter(F.col("count") > 1)
-            .limit(10).collect()
+    charsx = mat(charsx, "charsx")
+    # Contract check rides the (cheap, already-materialized) parsed
+    # characters table instead of re-scanning the raw corpus: a second
+    # char-JSON in a group shows up as a second distinct `path` here.
+    # Raises before any result is returned.
+    bad = (
+        charsx.select(*DOC, "path").distinct()
+        .groupBy(*DOC).count().filter(F.col("count") > 1)
+        .limit(10).collect()
+    )
+    if bad:
+        groups = ", ".join(
+            f"{r['repo']}@{r['commit'][:8]} ({r['count']} JSONs)"
+            for r in bad
         )
-        if bad:
-            groups = ", ".join(
-                f"{r['repo']}@{r['commit'][:8]} ({r['count']} JSONs)"
-                for r in bad
-            )
-            raise ValueError(
-                "input contract violated — multiple character-JSON "
-                f"files in one (repo, commit) group: {groups}. "
-                "Pre-process the corpus with "
-                "sources.corpus.shard_multi_matrix_groups (pairs "
-                "json/nexus by path stem, one group per matrix) or "
-                "split the groups yourself."
-            )
+        raise ValueError(
+            "input contract violated — multiple character-JSON "
+            f"files in one (repo, commit) group: {groups}. "
+            "Pre-process the corpus with "
+            "sources.corpus.shard_multi_matrix_groups (pairs "
+            "json/nexus by path stem, one group per matrix) or "
+            "split the groups yourself."
+        )
 
     # --- states_x: long per-state table with J2 + counters (K1/A2) -------
     st = charsx.select(
@@ -701,16 +680,15 @@ def build_graph(
         .withColumn("sta_label_phase_b", _id_label("__label_b", "state", F.col("__rn_b")))
         .withColumn("qua_label", _id_label("__label_m", "quality", F.col("__rn_m")))
     )
-    if do_mat:
-        # checkpoint only what downstream consumers read (RDD scans
-        # cannot column-prune — see the visits projection note)
-        st = st.select(
-            *DOC, "char_pos", "state_idx", "char_id", "char_iri",
-            "char_var_uri", "base_label", "labelN", "uri_t", "sta_iri",
-            "qua_iri", "resolved_uri", "neg_resolved", "restr_iri",
-            "comp_iri", "sta_label", "sta_label_phase_b", "qua_label",
-        )
-    states_x = hub(st, "states_x")
+    # checkpoint only what downstream consumers read (RDD scans cannot
+    # column-prune — see the visits projection note)
+    st = st.select(
+        *DOC, "char_pos", "state_idx", "char_id", "char_iri",
+        "char_var_uri", "base_label", "labelN", "uri_t", "sta_iri",
+        "qua_iri", "resolved_uri", "neg_resolved", "restr_iri",
+        "comp_iri", "sta_label", "sta_label_phase_b", "qua_label",
+    )
+    states_x = mat(st, "states_x")
 
     # --- cells ⋈ chars (J4): broadcast the dimension-sized character
     # table keyed on the matrix column index (char_ids_in_order semantics,
@@ -902,17 +880,16 @@ def build_graph(
     # `locators`/`states` arrays and the pre-mint intermediates through
     # every one of those deserializing scans measurably dominated the
     # final job's CPU.
-    if do_mat:
-        visits = visits.select(
-            *DOC, "char_pos", "taxon_pos", "vord", "phe_n",
-            "char_sort_num", "norm_taxon", "char_label", "char_id",
-            "phe_iri", "stmt_type", "v_org_uri", "v_org_label", "org_iri",
-            "tu_iri", "cell_iri", "mx_iri", "var_iri", "var_uri",
-            "var_label_eff", "var_comment", "per_org_qua_iri",
-            "st_qua_label", "st_uri", "st_neg_resolved", "st_comp_iri",
-            "st_var_uri", "last_loc_iri", "st_sta_iri", "loc_chain",
-        )
-    visits = hub(visits, "visits")
+    visits = visits.select(
+        *DOC, "char_pos", "taxon_pos", "vord", "phe_n",
+        "char_sort_num", "norm_taxon", "char_label", "char_id",
+        "phe_iri", "stmt_type", "v_org_uri", "v_org_label", "org_iri",
+        "tu_iri", "cell_iri", "mx_iri", "var_iri", "var_uri",
+        "var_label_eff", "var_comment", "per_org_qua_iri",
+        "st_qua_label", "st_uri", "st_neg_resolved", "st_comp_iri",
+        "st_var_uri", "last_loc_iri", "st_sta_iri", "loc_chain",
+    )
+    visits = mat(visits, "visits")
     # cells_j deliberately NOT checkpointed: its two consumers (visits
     # above, cell_triples in _assemble) each sit directly on the
     # materialized charsx and parsed hubs, so each consumer re-runs only
@@ -923,17 +900,9 @@ def build_graph(
     # they bound Catalyst plan depth and keep the final-graph plan free
     # of Python stages (test_plans.py).
 
-    if not assemble:
-        # diagnostic mode: hub tables with full (un-truncated) lineage,
-        # e.g. for .explain plan audits
-        return {
-            "chars": charsx, "states": states_x, "cells": cells_j,
-            "visits": visits, "species": species,
-        }
-
     return _assemble(
         spark, corpus, charsx, states_x, cells_j, visits, species, cells, meta,
-        materialize, bhint, mat, _seq,
+        bhint, mat, _seq,
     )
 
 
@@ -961,7 +930,7 @@ def _materializer(spark, staging_dir: Optional[str]):
 
 
 def _assemble(spark, corpus, charsx, states_x, cells_j, visits, species, cells, meta,
-              materialize, bhint, mat, seq):
+              bhint, mat, seq):
     """Emit all triple families, tag parts, and build the final graph."""
     NI = const(T.OWL_NAMED_INDIVIDUAL)
 
@@ -1232,12 +1201,11 @@ def _assemble(spark, corpus, charsx, states_x, cells_j, visits, species, cells, 
         kb_iri("sp", F.lower(strip_col(F.col("taxon_label")))).alias("sp_inst"),
         kb_iri("tu", F.lower(strip_col(F.col("taxon_label")))).alias("tu_iri"),
     )
-    if materialize:
-        # taxa_sp is a per-taxon dimension table (rows = distinct taxa)
-        # consumed by TWO emission branches (species_part and tu_part) —
-        # without pinning, each branch re-ran the distinct, species-key
-        # join and min_by aggregation inside the dedup job.
-        taxa_sp = mat(taxa_sp, "taxa_sp")
+    # taxa_sp is a per-taxon dimension table (rows = distinct taxa)
+    # consumed by TWO emission branches (species_part and tu_part) —
+    # without pinning, each branch re-ran the distinct, species-key join
+    # and min_by aggregation inside the dedup job.
+    taxa_sp = mat(taxa_sp, "taxa_sp")
     species_part = emit(taxa_sp, [
         Triple("sp_uri", T.RDF_TYPE, const(T.OWL_CLASS)),
         Triple("sp_uri", T.RDFS_LABEL, "concept_label", lit=True),
@@ -1344,17 +1312,13 @@ def _assemble(spark, corpus, charsx, states_x, cells_j, visits, species, cells, 
         .groupBy("repo", "commit", "s", "p", "o", "lit", "dt")
         .agg(F.max("__mx").alias("__mx"))
     )
-    if materialize:
-        dd = mat(dd, "dedup")
+    dd = mat(dd, "dedup")
 
     # both prune scopes share one victim scan over dd (see
     # prune_unreferenced_scoped); the small per-node flag table is
     # pinned so the four broadcast victim builds don't re-run the scan
     pruned, matrix_pruned = prune_unreferenced_scoped(
-        dd, "__mx", hint=bhint,
-        materialize_flags=(
-            (lambda f: mat(f, "victim_flags")) if materialize else None
-        ),
+        dd, "__mx", lambda f: mat(f, "victim_flags"), hint=bhint,
     )
     # Emission-order key for matrix labels: the reference's label-priority
     # pass takes the FIRST label in graph insertion order (main.py:1243-1270

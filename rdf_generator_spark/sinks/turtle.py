@@ -24,6 +24,11 @@ from rdf_generator_spark import terms as T
 
 DOC = ["repo", "commit"]
 
+# Hash-salt groups of the block renderer, and range shards of the
+# sharded writer.
+_SALT_GROUPS = 64
+_N_SHARDS = 8
+
 _PREFIX_BLOCK = "\n".join(f"@prefix {p}: <{ns}> ." for p, ns in T.PREFIXES)
 
 _ONTOLOGY_HEADER = (
@@ -193,7 +198,7 @@ def classify_subjects(triples: DataFrame) -> DataFrame:
     return sectioned.unionByName(others)
 
 
-def turtle_blocks(triples: DataFrame, salt_groups: int = 64) -> DataFrame:
+def turtle_blocks(triples: DataFrame) -> DataFrame:
     """Render per-subject blocks -> (doc, section, bucket, sort1, sort2,
     s, text), ready to be ordered into files/shards."""
     subjects = classify_subjects(triples)
@@ -243,7 +248,7 @@ def turtle_blocks(triples: DataFrame, salt_groups: int = 64) -> DataFrame:
     )
 
     joined = triples.join(subjects, DOC + ["s"], "inner").withColumn(
-        "__salt", F.abs(F.hash("s")) % salt_groups
+        "__salt", F.abs(F.hash("s")) % _SALT_GROUPS
     )
 
     def render_group(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -384,9 +389,7 @@ def write_species_files_distributed(result: dict, out_dir: str) -> int:
     return joined.rdd.mapPartitions(write_part).sum()
 
 
-def write_turtle_shards(
-    triples: DataFrame, out_dir: str, n_shards: int = 8, salt_groups: int = 64
-) -> dict:
+def write_turtle_shards(triples: DataFrame, out_dir: str) -> dict:
     """Cluster-scale Turtle output: ordered range shards.
 
     Blocks are range-partitioned on the full ordering key and each
@@ -401,8 +404,8 @@ def write_turtle_shards(
         f.write(_PREFIX_BLOCK + "\n\n" + _ONTOLOGY_HEADER)
 
     blocks = (
-        turtle_blocks(triples, salt_groups)
-        .repartitionByRange(n_shards, *DOC, "section", "bucket", "sort1", "sort2", "s")
+        turtle_blocks(triples)
+        .repartitionByRange(_N_SHARDS, *DOC, "section", "bucket", "sort1", "sort2", "s")
         .sortWithinPartitions(*DOC, "section", "bucket", "sort1", "sort2", "s")
     )
 
@@ -433,22 +436,19 @@ def write_turtle_shards(
     return {"n_shards": len(manifest), "manifest": manifest}
 
 
-# Size gates for automatic writer selection (VERDICT r3 item 4): the
-# reference-parity single-file paths collect/iterate on the driver —
-# fine at golden scale, a driver bottleneck past it. Above these bounds
-# the distributed variants (same rendered text, executor-side writes)
-# are selected automatically; both remain callable directly.
+# Size gate for automatic writer selection (VERDICT r3 item 4): the
+# reference-parity per-document files iterate on the driver — fine at
+# golden scale, a driver bottleneck past it. Above this bound the
+# sharded writer (same rendered text, executor-side writes) is selected
+# automatically; both remain callable directly.
 _AUTO_SHARD_TRIPLES = 2_000_000
-_AUTO_DISTRIBUTED_SPECIES = 200
 
 
 def write_turtle_auto(
     triples: DataFrame,
     out_dir: str,
     n_triples: int = None,
-    n_shards: int = 8,
     threshold: int = _AUTO_SHARD_TRIPLES,
-    salt_groups: int = 64,
 ) -> dict:
     """Size-gated Turtle output: per-document single files (reference
     parity, driver-streamed) below `threshold` triples, ordered range
@@ -461,9 +461,7 @@ def write_turtle_auto(
     if n_triples is None:
         n_triples = triples.count()
     if n_triples > threshold:
-        info = write_turtle_shards(
-            triples, out_dir, n_shards=n_shards, salt_groups=salt_groups
-        )
+        info = write_turtle_shards(triples, out_dir)
         return {"mode": "shards", "n_triples": n_triples, **info}
     os.makedirs(out_dir, exist_ok=True)
 
@@ -478,31 +476,15 @@ def write_turtle_auto(
         tag = hashlib.sha1(f"{repo}\x00{commit}".encode()).hexdigest()[:8]
         return os.path.join(out_dir, f"{safe}-{tag}.ttl")
 
-    n_docs = write_turtle(triples, path_fn, salt_groups=salt_groups)
+    n_docs = write_turtle(triples, path_fn)
     return {"mode": "per-document", "n_triples": n_triples, "n_docs": n_docs}
 
 
-def write_species_files_auto(
-    result: dict, out_dir: str, threshold: int = _AUTO_DISTRIBUTED_SPECIES
-) -> dict:
-    """Size-gated S2: driver-side per-species writer below `threshold`
-    species (reference parity), executor-side distributed writer above.
-    The species count probe runs on the (small) species partition."""
-    n_species = (
-        _species_joined(result).select("taxon_label").distinct().count()
-    )
-    if n_species > threshold:
-        n = write_species_files_distributed(result, out_dir)
-        return {"mode": "distributed", "n_species": n}
-    n = write_species_files(result, out_dir)
-    return {"mode": "driver", "n_species": n}
-
-
-def write_turtle(triples: DataFrame, out_path_fn, salt_groups: int = 64) -> int:
+def write_turtle(triples: DataFrame, out_path_fn) -> int:
     """Write one .ttl per document. ``out_path_fn(repo, commit) -> path``.
     Returns number of documents written. Ordered streaming per document
     via toLocalIterator (shard-per-range at cluster scale instead)."""
-    blocks = turtle_blocks(triples, salt_groups).orderBy(
+    blocks = turtle_blocks(triples).orderBy(
         *DOC, "section", "bucket", "sort1", "sort2", "s"
     )
     n = 0

@@ -144,19 +144,24 @@ def build_label_index(content: str) -> Dict[str, str]:
     return index
 
 
-def vocab_df_from_corpus(
-    spark: SparkSession, corpus: DataFrame, owl_path_hint: Optional[str] = None
-) -> DataFrame:
-    """Collect lang='owl' rows (tiny dimension docs) and build the vocab
-    table. `owl_path_hint` restricts to a path substring (e.g. 'pmck')."""
-    rows = corpus.filter(corpus.lang == "owl")
-    if owl_path_hint:
-        rows = rows.filter(rows.path.contains(owl_path_hint))
+def vocab_df_from_owl_rows(spark: SparkSession, rows) -> DataFrame:
+    """The vocab table of collected lang='owl' rows: label index entries
+    first-wins across documents in (repo, path, commit) order, so the
+    winner does not depend on collect order."""
     index: Dict[str, str] = {}
-    for r in rows.select("path", "content").collect():
+    for r in sorted(rows, key=lambda r: (r["repo"], r["path"], r["commit"])):
         for k, v in build_label_index(r["content"]).items():
             index.setdefault(k, v)
     return local_df(spark, sorted(index.items()), VOCAB_SCHEMA)
+
+
+def vocab_df_from_corpus(spark: SparkSession, corpus: DataFrame) -> DataFrame:
+    """Collect lang='owl' rows (tiny dimension docs) and build the vocab
+    table."""
+    rows = corpus.filter(corpus.lang == "owl").select(
+        "repo", "path", "commit", "content"
+    )
+    return vocab_df_from_owl_rows(spark, rows.collect())
 
 
 def local_df(

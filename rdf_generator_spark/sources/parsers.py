@@ -102,13 +102,11 @@ METADATA_FIELDS = [
 ]
 
 
-def _first_value(d: Dict[str, Any], needle: str, require_truthy: bool = False):
+def _first_value(d: Dict[str, Any], needle: str):
     """Positional-key matcher: first value whose key contains `needle`
     (case-insensitive) — the reference's `next(v for k,v in ...)` idiom."""
     for k, v in d.items():
         if needle in k.lower():
-            if require_truthy and not v:
-                continue
             return v
     return None
 

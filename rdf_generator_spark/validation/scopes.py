@@ -20,7 +20,7 @@ TRIPLE = ["s", "p", "o", "lit", "dt"]
 SKEYS = ["repo", "commit", "scope"]
 
 
-def scoped_triples(result: dict, include_per_tu: bool = True) -> DataFrame:
+def scoped_triples(result: dict) -> DataFrame:
     """Union of all validation scopes, each row tagged with `scope`.
 
     Reference semantics per scope:
@@ -54,13 +54,12 @@ def scoped_triples(result: dict, include_per_tu: bool = True) -> DataFrame:
         *SKEYS, *TRIPLE
     )
 
-    scopes = per_char.unionByName(matrix)
-
-    if include_per_tu:
-        tu_template = base.select(*DOC, *TRIPLE).unionByName(
-            charp.select(*DOC, *TRIPLE)
-        ).withColumn("scope", F.lit("TU __template__"))
-        scopes = scopes.unionByName(tu_template.select(*SKEYS, *TRIPLE))
+    tu_template = base.select(*DOC, *TRIPLE).unionByName(
+        charp.select(*DOC, *TRIPLE)
+    ).withColumn("scope", F.lit("TU __template__"))
+    scopes = per_char.unionByName(matrix).unionByName(
+        tu_template.select(*SKEYS, *TRIPLE)
+    )
 
     species = result["species_part"].withColumn(
         "scope", F.lit("Species Combined")
@@ -82,10 +81,10 @@ def _expand_tu(df: DataFrame, taxa: DataFrame) -> DataFrame:
     return non_tu.unionByName(tu.select(non_tu.columns))
 
 
-def validation_report(result: dict, include_per_tu: bool = True):
+def validation_report(result: dict):
     """(violations, conformance) over all scopes — the DataFrame
     equivalent of validation_summary.txt + validation_report.ttl."""
-    scoped = scoped_triples(result, include_per_tu=include_per_tu)
+    scoped = scoped_triples(result)
     violations = validate(scoped, keys=SKEYS)
 
     # scope universe from the small dimension frames (not by re-running
@@ -95,18 +94,16 @@ def validation_report(result: dict, include_per_tu: bool = True):
     universe = char_ids.select(
         *DOC, F.concat(F.lit("Char_ID "), F.col("char_id")).alias("scope")
     )
-    for name in ["CDAO Matrix", "Species Combined", "Final Combined Graph"] + (
-        ["TU __template__"] if include_per_tu else []
-    ):
+    for name in ["CDAO Matrix", "Species Combined", "Final Combined Graph",
+                 "TU __template__"]:
         universe = universe.unionByName(
             docs.withColumn("scope", F.lit(name))
         )
     conformance = conformance_report(violations, universe=universe)
 
-    if include_per_tu:
-        taxa = result["taxa"].select(*DOC, "taxon_label").distinct()
-        violations = _expand_tu(violations, taxa)
-        conformance = _expand_tu(conformance, taxa)
+    taxa = result["taxa"].select(*DOC, "taxon_label").distinct()
+    violations = _expand_tu(violations, taxa)
+    conformance = _expand_tu(conformance, taxa)
     return violations, conformance
 
 

@@ -24,6 +24,33 @@ def test_parse_chars(spark):
     assert c6["locators"][1]["uri"] is None
 
 
+def test_parsers_never_emit_null_arrays(spark):
+    """`locators` and `states` are [] — never NULL — for a null, missing
+    or empty list, in the pure-Python extractor and in the fused parse.
+    linking.fill_both_arrays_uris concatenates the two arrays, and a
+    NULL input would make the whole concat NULL."""
+    import json
+
+    from rdf_generator_spark.sources.corpus import corpus_df
+
+    content = json.dumps([
+        {"Char_ID": "C1", "Locators": None, "States": None},
+        {"Char_ID": "C2"},
+        {"Char_ID": "C3", "Locators": [], "States": []},
+        {"Char_ID": "C4", "Locators": ["x/head"],
+         "States": [{"State label": "broad"}]},
+    ])
+    want = [(0, 0), (0, 0), (0, 0), (1, 1)]
+    rows = parsers.char_rows_from_json(content)
+    assert [(len(r["locators"]), len(r["states"])) for r in rows] == want
+    corpus = corpus_df(spark, [("r", "chars.json", "c" * 40, "json", content)])
+    view = parsers.family_view(parsers.parse_docs(corpus), "json")
+    got = view.orderBy("char_pos").collect()
+    assert [r["locators"] is not None and r["states"] is not None
+            for r in got] == [True] * 4
+    assert [(len(r["locators"]), len(r["states"])) for r in got] == want
+
+
 def test_parse_nexus(spark):
     cells = parsers.parse_nexus_docs(golden_corpus_df(spark)).collect()
     assert len(cells) == 100

@@ -20,11 +20,16 @@ from rdf_generator_spark.sources.synth import synth_corpus_rows
 from tests.oracle.refsim import RefSim
 
 
-@pytest.mark.parametrize("seed", [7, 23])
-def test_synth_corpus_matches_oracle_per_doc(spark, seed):
+@pytest.mark.parametrize("seed,dataset_id", [
+    pytest.param(7, None, id="7"),
+    pytest.param(23, None, id="23"),
+    # run_pipeline.py --dataset-id: tier-1 salt over the metadata salt
+    pytest.param(7, "demo", id="7-demo"),
+])
+def test_synth_corpus_matches_oracle_per_doc(spark, seed, dataset_id):
     rows = synth_corpus_rows(n_datasets=3, ntax=8, nchar=8, seed=seed)
     corpus = corpus_df(spark, rows)
-    res = build_graph(spark, corpus)
+    res = build_graph(spark, corpus, dataset_id=dataset_id)
     got_by_doc = defaultdict(set)
     for r in res["triples"].collect():
         got_by_doc[r["repo"]].add((r["s"], r["p"], r["o"], bool(r["lit"]), r["dt"]))
@@ -41,7 +46,8 @@ def test_synth_corpus_matches_oracle_per_doc(spark, seed):
         metadata = {r["char_id"]: r["source_text"]
                     for r in P.metadata_rows_from_csv(docs["csv"])}
         vocab = build_label_index(docs["owl"])
-        want = RefSim(chars, cells, species, metadata, vocab).run()["final"].triples()
+        want = RefSim(chars, cells, species, metadata, vocab,
+                      dataset_id=dataset_id).run()["final"].triples()
         got = got_by_doc[repo]
         extra, missing = got - want, want - got
         assert got == want, (

@@ -5,11 +5,12 @@ and plan-shape budgets (Exchange / MapInPandas counts) for the KG build."""
 
 from __future__ import annotations
 
+import inspect
+
 import pytest
 
 from rdf_generator_spark import queries as Q
 from rdf_generator_spark.plans.pipeline import build_graph
-from rdf_generator_spark.sources.golden import golden_corpus_df
 
 SF = "/root/testdata/sf0.01"
 
@@ -22,6 +23,32 @@ def formatted(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
+
+
+def executions(spark, run):
+    """`run()`'s result and the SQL executions it added to the status
+    store, each as (plan-graph node names, physicalPlanDescription).
+    The store holds the plan each execution ran (with AQE, the final
+    adaptive plan); the listener bus is drained on both sides so no
+    earlier execution is counted and no later one is missed."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def ids():
+        bus.waitUntilEmpty()
+        ex = store.executionsList()
+        return {ex.apply(i).executionId() for i in range(ex.size())}
+
+    before = ids()
+    out = run()
+    execs = []
+    for eid in sorted(ids() - before):
+        nodes = store.planGraph(eid).allNodes()
+        execs.append((
+            [nodes.apply(i).name() for i in range(nodes.size())],
+            store.execution(eid).get().physicalPlanDescription(),
+        ))
+    return out, execs
 
 
 def test_anti_join_is_real_antijoin(spark):
@@ -39,47 +66,6 @@ def test_no_python_eval_in_relational_queries(spark):
         assert "MapInPandas" not in plan, name
 
 
-def test_kg_pipeline_python_only_at_parse(spark):
-    res = build_graph(spark, golden_corpus_df(spark), materialize=False, assemble=False)
-    visits = res["visits"]
-    plan = plan_of(visits)
-    # the only Python stages are the Arrow-batched document parsers
-    assert "BatchEvalPython" not in plan
-    assert plan.count("MapInPandas") >= 1  # parsers
-    assert "sha1" in plan  # uuid5 minting is plain column algebra
-    # AQE hides codegen stages until execution; disable it to audit the
-    # static plan's codegen coverage
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        res2 = build_graph(
-            spark, golden_corpus_df(spark), materialize=False, assemble=False
-        )
-        static_plan = plan_of(res2["visits"])
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-    # codegen stages print as "*(n) Operator" in plan.toString
-    assert "*(" in static_plan
-    assert "InterpretedEval" not in static_plan
-
-
-def test_kg_join_broadcasts_character_dimension(spark):
-    res = build_graph(spark, golden_corpus_df(spark), materialize=False, assemble=False)
-    plan = plan_of(res["cells"])
-    assert "BroadcastHashJoin" in plan
-
-
-def test_kg_join_shuffle_fallback_past_gate(spark):
-    """With the dimension-broadcast gate tripped (many-document corpus)
-    the char join must plan as a shuffle join, not an unbounded
-    broadcast."""
-    res = build_graph(
-        spark, golden_corpus_df(spark), materialize=False, assemble=False,
-        dim_broadcast=False,
-    )
-    plan = plan_of(res["cells"])
-    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
-
-
 def test_lsh_ops_have_no_cartesian_product(spark):
     """Every near-dup/ANN candidate generator must pair via bucketed
     equi-joins — an all-pairs CartesianProduct would be the 100-TB
@@ -90,17 +76,6 @@ def test_lsh_ops_have_no_cartesian_product(spark):
         plan = plan_of(Q.QUERIES[name](spark, SF))
         assert "CartesianProduct" not in plan, name
         assert "BroadcastNestedLoopJoin" not in plan, name
-
-
-def test_final_graph_plan_is_jvm_only(spark):
-    """Past the hub materialization, the entire graph algebra (dedup,
-    prune, label priority, canonicalization inputs) is pure JVM column
-    work — no Python stage anywhere in the final plan."""
-    res = build_graph(spark, golden_corpus_df(spark))
-    for key in ["triples", "matrix_pruned", "char_combined"]:
-        plan = plan_of(res[key])
-        assert "BatchEvalPython" not in plan, key
-        assert "MapInPandas" not in plan, key
 
 
 def test_counter_bucket_auto_gate(spark, tmp_path):
@@ -180,8 +155,6 @@ def test_probe_exact_fallback_packed_row_group(spark, tmp_path):
     got = probe_max_doc_bytes(df)
     assert got == (giant, True)  # exact job ran and found the giant
     assert resolve_counter_buckets(df, "auto") == _AUTO_COUNTER_BUCKET_WIDTH
-    # allow_job=False degrades to the conservative footer mean (off)
-    assert probe_max_doc_bytes(df, allow_job=False)[1] is False
     # not memoized: a second probe of the same file list runs the job
     # again and gets the same answer
     tracker = spark.sparkContext.statusTracker()
@@ -373,33 +346,23 @@ def test_build_runs_python_once(spark, tmp_path):
     rows = synth_corpus_rows(n_datasets=2, ntax=4, nchar=4, seed=3)
     corpus = corpus_parquet_df(spark, rows, str(tmp_path / "corpus"))
     sc = spark.sparkContext
-    sql_store = spark._jsparkSession.sharedState().statusStore()
-
-    def execution_ids():
-        ex = sql_store.executionsList()
-        return {ex.apply(i).executionId() for i in range(ex.size())}
-
-    before = execution_ids()
     sc.setJobGroup("python-budget", "python-stage budget")
     try:
-        res = build_graph(spark, corpus)
-        assert res["triples"].count() > 0
+        n, execs = executions(
+            spark, lambda: build_graph(spark, corpus)["triples"].count()
+        )
     finally:
         sc._jsc.clearJobGroup()
 
-    map_in_pandas = 0
-    for eid in execution_ids() - before:
-        nodes = sql_store.planGraph(eid).allNodes()
-        map_in_pandas += sum(
-            nodes.apply(i).name() == "MapInPandas" for i in range(nodes.size())
-        )
-    assert map_in_pandas == 1
+    assert n > 0
+    assert sum(names.count("MapInPandas") for names, _ in execs) == 1
     assert _python_rdd_stages(sc, "python-budget") == 0
 
 
 @pytest.fixture(scope="module")
 def synth_build(spark, tmp_path_factory):
-    """(corpus, build_graph result) for a seeded file-backed synth corpus."""
+    """(corpus, build_graph result, the build's SQL executions) for a
+    seeded file-backed synth corpus."""
     from rdf_generator_spark.sources.corpus import corpus_parquet_df
     from rdf_generator_spark.sources.synth import synth_corpus_rows
 
@@ -407,17 +370,80 @@ def synth_build(spark, tmp_path_factory):
     corpus = corpus_parquet_df(
         spark, rows, str(tmp_path_factory.mktemp("synth") / "corpus")
     )
-    return corpus, build_graph(spark, corpus)
+    res, execs = executions(spark, lambda: build_graph(spark, corpus))
+    return corpus, res, execs
 
 
-# Plan-shape budgets on the synth_build corpus: "Exchange" mentions
-# (shuffle + broadcast exchanges; each node is named twice in the
-# formatted explain) and MapInPandas nodes. Each is pinned at the value
-# it has now; a change that grows a plan fails here before it shows in
-# wall time, and one that shrinks it should lower the budget.
+def test_kg_pipeline_python_only_at_parse(spark, synth_build):
+    """Over every plan a build executes: no row-at-a-time Python, uuid5
+    minting as plain column algebra, and (with AQE off, so the static
+    plan is what runs) whole-stage codegen with no interpreted
+    fallback."""
+    corpus, _, execs = synth_build
+    plans = "\n".join(desc for _, desc in execs)
+    assert "BatchEvalPython" not in plans
+    assert "sha1" in plans
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        _, static = executions(spark, lambda: build_graph(spark, corpus))
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    assert any(n.startswith("WholeStageCodegen") for names, _ in static for n in names)
+    assert not any("InterpretedEval" in desc for _, desc in static)
+
+
+def test_kg_join_broadcasts_character_dimension(synth_build):
+    """The cells ⋈ chars join (lazy over the parsed and charsx hubs)
+    broadcasts the character side."""
+    _, res, _ = synth_build
+    assert "BroadcastHashJoin" in plan_of(res["cells"])
+
+
+def test_kg_join_shuffle_fallback_past_gate(spark, synth_build):
+    """The dimension-broadcast gate controls the broadcast hint: with it
+    tripped (many-document corpus) the char join carries no hint, and
+    the planner picks the join from statistics alone."""
+    corpus, res, _ = synth_build
+
+    def analyzed(df):
+        return df._jdf.queryExecution().analyzed().toString()
+
+    assert "ResolvedHint" in analyzed(res["cells"])
+    off = build_graph(spark, corpus, dim_broadcast=False)
+    assert "ResolvedHint" not in analyzed(off["cells"])
+
+
+def test_final_graph_plan_is_jvm_only(synth_build):
+    """Past the hub materialization, the entire graph algebra (dedup,
+    prune, label priority, canonicalization inputs) is pure JVM column
+    work — no Python stage anywhere in the final plan."""
+    _, res, _ = synth_build
+    for key in ["triples", "matrix_pruned", "char_combined"]:
+        plan = plan_of(res[key])
+        assert "BatchEvalPython" not in plan, key
+        assert "MapInPandas" not in plan, key
+
+
+def test_build_graph_options():
+    """build_graph's options are the ones callers set; a new option
+    fails here until it has a caller that needs it."""
+    assert list(inspect.signature(build_graph).parameters) == [
+        "spark", "corpus", "dataset_id", "dim_broadcast", "staging_dir",
+        "counter_buckets",
+    ]
+
+
+# Plan-shape budgets on the synth_build corpus. Each is pinned at the
+# value it has now; a change that grows a plan fails here before it
+# shows in wall time, and one that shrinks it should lower the budget.
+# "Exchange" mentions in the final graph's formatted explain (shuffle +
+# broadcast exchanges; each node is named twice there).
 FINAL_EXCHANGE_BUDGET = 22
-VISITS_EXCHANGE_BUDGET = 82
-VISITS_MAP_IN_PANDAS_BUDGET = 22
+# Shuffle and broadcast exchange nodes over the plans one build executes
+# (the hub materializations, the contract check and the dimension
+# collect), as the SQL status store records them.
+BUILD_EXCHANGE_BUDGET = 26
+BUILD_BROADCAST_EXCHANGE_BUDGET = 11
 # py4j commands the driver sends for one build_graph on the same corpus
 # (plan construction plus the hub materialization jobs), not counting
 # the release commands py4j sends when Python garbage-collects a JVM
@@ -427,20 +453,18 @@ BUILD_PY4J_BUDGET = 20255
 
 def test_final_graph_exchange_budget(synth_build):
     """The final `triples` plan, built over the materialized hubs."""
-    _, res = synth_build
+    _, res, _ = synth_build
     n = formatted(res["triples"]).count("Exchange")
     assert n <= FINAL_EXCHANGE_BUDGET, n
 
 
-def test_visits_plan_budget(spark, synth_build):
-    """The unmaterialized visits plan: full lineage from the corpus scan,
-    with the fused parse repeated in every subtree that reads it."""
-    corpus, _ = synth_build
-    res = build_graph(spark, corpus, materialize=False, assemble=False)
-    plan = formatted(res["visits"])
-    n_exchange, n_map = plan.count("Exchange"), plan.count("MapInPandas")
-    assert n_exchange <= VISITS_EXCHANGE_BUDGET, n_exchange
-    assert n_map <= VISITS_MAP_IN_PANDAS_BUDGET, n_map
+def test_build_exchange_budget(synth_build):
+    """Exchanges over every plan one build executes."""
+    _, _, execs = synth_build
+    names = [n for ns, _ in execs for n in ns]
+    assert names.count("Exchange") <= BUILD_EXCHANGE_BUDGET, names.count("Exchange")
+    n_bcast = names.count("BroadcastExchange")
+    assert n_bcast <= BUILD_BROADCAST_EXCHANGE_BUDGET, n_bcast
 
 
 def test_build_py4j_budget(spark, synth_build):
@@ -448,7 +472,7 @@ def test_build_py4j_budget(spark, synth_build):
     gateway client's send_command for the duration of the call."""
     from py4j.protocol import MEMORY_COMMAND_NAME
 
-    corpus, _ = synth_build
+    corpus, _, _ = synth_build
     client = spark.sparkContext._gateway._gateway_client
     orig = client.send_command
     calls = 0
@@ -471,7 +495,7 @@ def test_validate_runs_no_python_rdd(spark, synth_build, tmp_path):
     PythonRDD: the rule table is an Arrow-built local relation."""
     from rdf_generator_spark.validation.shacl_rules import validate
 
-    _, res = synth_build
+    _, res, _ = synth_build
     path = str(tmp_path / "triples")
     res["triples"].write.parquet(path)
     triples = spark.read.parquet(path)

@@ -156,7 +156,7 @@ def test_shard_writer_matches_single_file(spark, tmp_path):
     from rdf_generator_spark.sinks.turtle import write_turtle_shards
 
     out = tmp_path / "shards"
-    info = write_turtle_shards(res["triples"], str(out), n_shards=4)
+    info = write_turtle_shards(res["triples"], str(out))
     assert info["n_shards"] >= 1
     parts = sorted(p for p in os.listdir(out) if p.startswith("part-"))
     text = open(out / "header.ttl").read() + "".join(
@@ -179,8 +179,8 @@ def test_shard_writer_rerun_is_byte_identical(spark, tmp_path):
 
     res = build_graph(spark, golden_corpus_df(spark))
     a, b = tmp_path / "s1", tmp_path / "s2"
-    i1 = write_turtle_shards(res["triples"], str(a), n_shards=4)
-    i2 = write_turtle_shards(res["triples"], str(b), n_shards=4)
+    i1 = write_turtle_shards(res["triples"], str(a))
+    i2 = write_turtle_shards(res["triples"], str(b))
     assert i1["n_shards"] == i2["n_shards"]
     f1, f2 = sorted(os.listdir(a)), sorted(os.listdir(b))
     assert f1 == f2
@@ -234,16 +234,3 @@ def test_write_turtle_auto_no_path_collision(spark, tmp_path):
     assert info["mode"] == "per-document" and info["n_docs"] == 2
     ttl = [p for p in os.listdir(out) if p.endswith(".ttl")]
     assert len(ttl) == 2, ttl
-
-
-def test_write_species_files_auto(spark, tmp_path):
-    from rdf_generator_spark.sinks.turtle import write_species_files_auto
-
-    res = build_graph(spark, golden_corpus_df(spark))
-    drv = write_species_files_auto(res, str(tmp_path / "drv"))
-    assert drv == {"mode": "driver", "n_species": 10}
-    dist = write_species_files_auto(res, str(tmp_path / "dist"), threshold=2)
-    assert dist == {"mode": "distributed", "n_species": 10}
-    assert sorted(os.listdir(tmp_path / "drv")) == sorted(
-        os.listdir(tmp_path / "dist")
-    )
