@@ -57,16 +57,9 @@ def content_commit(contents: Iterable[str]) -> str:
 
 def corpus_df(spark: SparkSession, rows: List[tuple]) -> DataFrame:
     """In-memory corpus (tests/bench; real corpora come from
-    tableio.read_table). Slices capped at len(rows): a handful of
-    documents spread over 32 near-empty slices costs a Python-worker
-    spin-up and task round per slice in EVERY downstream stage
-    (measured ~20% of the tiny-corpus fixed cost). Never MORE slices
-    than defaultParallelism — an interleaved A/B at bench scale showed
-    extra slices cost ~40% wall (more per-stage task overhead, no
-    added parallelism on the box)."""
-    n_slices = max(1, min(len(rows), spark.sparkContext.defaultParallelism))
-    rdd = spark.sparkContext.parallelize(rows, n_slices)
-    return spark.createDataFrame(rdd, CORPUS_SCHEMA)
+    tableio.read_table): an Arrow-built local relation (`local_df`), so
+    scanning it starts no Python worker."""
+    return local_df(spark, rows, CORPUS_SCHEMA)
 
 
 def corpus_parquet_df(
@@ -75,14 +68,13 @@ def corpus_parquet_df(
     """Stage an in-memory corpus to parquet once and read it back — the
     file-backed shape real corpora have (tableio parquet/Iceberg refs).
 
-    A `createDataFrame` corpus is a pickled local relation: EVERY
-    downstream subtree that touches it (each mapInPandas parser, the
-    yaml config probe, the salt tier-3 path scan, base_part's doc list)
-    re-ships the full relation through Python workers per job. Parquet
-    backing turns those into pruned columnar scans — the path/lang-only
-    subtrees never read `content` at all. Use for benchmarks and any
-    multi-action workload; plain `corpus_df` remains for one-shot
-    tests."""
+    A file-backed corpus exposes its file list and parquet footers, which
+    `build_graph` reads (no job) to gate the counters and dimension
+    broadcasts and to size the parse, and its path/lang-only subtrees
+    become pruned columnar scans that never read `content`. The staging
+    write is a JVM job over `corpus_df`'s local relation. Use for
+    benchmarks and any multi-action workload; plain `corpus_df` remains
+    for one-shot tests."""
     import os
     import tempfile
 

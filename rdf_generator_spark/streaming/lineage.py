@@ -99,10 +99,18 @@ def run_resumable(
     tableio.write_table(triples, triples_ref, partition_by=("repo", "commit"))
     wall_ms = int((time.perf_counter() - t0) * 1000)
 
-    counts = triples.groupBy(*DOC).agg(F.count(F.lit(1)).alias("n_triples"))
+    # Per-document counts come from the committed table, not a second
+    # run of the final plan: dynamic partition overwrite leaves the
+    # batch's (repo, commit) partitions holding exactly its triples.
+    files = content_lineage(todo)
+    committed = tableio.read_table(spark, triples_ref)
+    counts = (
+        committed.join(files.select(*DOC).distinct(), DOC, "left_semi")
+        .groupBy(*DOC)
+        .agg(F.count(F.lit(1)).alias("n_triples"))
+    )
     lineage_rows = (
-        content_lineage(todo)
-        .join(counts, DOC, "left")
+        files.join(counts, DOC, "left")
         .fillna(0, subset=["n_triples"])
         .withColumn("partition_id", F.spark_partition_id())
         .withColumn("snapshot_id", F.lit(snapshot_id))
@@ -112,5 +120,5 @@ def run_resumable(
     tableio.write_table(
         lineage_rows, lineage_ref, partition_by=("repo", "commit")
     )
-    n_triples = tableio.read_table(spark, triples_ref).count()
+    n_triples = committed.count()
     return {"docs": n_docs, "triples": n_triples}

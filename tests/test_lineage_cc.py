@@ -57,6 +57,38 @@ def test_resume_skips_done_docs(spark, tmp_path):
     assert lin.count() == 15
 
 
+def test_resume_runs_final_graph_once(spark, tmp_path):
+    """run_resumable runs the final graph once, for the triples write,
+    and takes the lineage's per-document counts from the committed
+    table. The final plan is the only reader of the staged prune flags;
+    the staged dedup hub is read by the flags and by that write."""
+    import re
+
+    from tests.test_plans import executions
+
+    out = str(tmp_path / "out")
+    rows = synth_corpus_rows(n_datasets=2, ntax=4, nchar=4, seed=11)
+    r, execs = executions(
+        spark, lambda: L.run_resumable(spark, corpus_df(spark, rows), out)
+    )
+
+    def scans(hub):
+        return sum(
+            any(loc.endswith("/_staging/" + hub) for loc in
+                re.findall(r"InMemoryFileIndex[^\[]*\[([^\]]*)\]", desc))
+            for _, desc, _ in execs
+        )
+
+    assert scans("victim_flags") == 1
+    assert scans("dedup") == 2
+    per_doc = (
+        spark.read.parquet(os.path.join(out, "lineage"))
+        .select("repo", "commit", "n_triples").distinct().collect()
+    )
+    assert len(per_doc) == r["docs"] == 2
+    assert sum(x["n_triples"] for x in per_doc) == r["triples"]
+
+
 def test_resume_with_catalog_tables(spark, tmp_path):
     """run_resumable against session-catalog managed tables (`table:`
     refs) — the offline stand-in for the Iceberg deployment. Exercises

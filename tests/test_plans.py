@@ -27,12 +27,15 @@ def formatted(df) -> str:
 
 def executions(spark, run):
     """`run()`'s result and the SQL executions it added to the status
-    store, each as (plan-graph node names, physicalPlanDescription).
-    The store holds the plan each execution ran (with AQE, the final
-    adaptive plan); the listener bus is drained on both sides so no
-    earlier execution is counted and no later one is missed."""
+    store, each as (plan-graph node names, physicalPlanDescription,
+    task count of each of its stages). The store holds the plan each
+    execution ran (with AQE, the final adaptive plan); the listener bus
+    is drained on both sides so no earlier execution is counted and no
+    later one is missed."""
     store = spark._jsparkSession.sharedState().statusStore()
     bus = spark.sparkContext._jsc.sc().listenerBus()
+    tracker = spark.sparkContext.statusTracker()
+    to_java = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava
 
     def ids():
         bus.waitUntilEmpty()
@@ -44,9 +47,12 @@ def executions(spark, run):
     execs = []
     for eid in sorted(ids() - before):
         nodes = store.planGraph(eid).allNodes()
+        data = store.execution(eid).get()
+        stages = [tracker.getStageInfo(s) for s in sorted(to_java(data.stages()))]
         execs.append((
             [nodes.apply(i).name() for i in range(nodes.size())],
-            store.execution(eid).get().physicalPlanDescription(),
+            data.physicalPlanDescription(),
+            [s.numTasks for s in stages if s is not None],
         ))
     return out, execs
 
@@ -203,6 +209,56 @@ def test_probe_file_cap_falls_through_to_exact(spark, tmp_path, monkeypatch):
     )
 
 
+def test_parse_task_sizing(spark, tmp_path, monkeypatch):
+    """One parse task per `_PARSE_TASK_BYTES` of content (summed over
+    the corpus files' footers), at least one. No coalesce is planned
+    when the total is unknown: an in-memory corpus has no files, and
+    past the footer cap not every footer is read."""
+    from urllib.parse import urlparse
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from rdf_generator_spark.plans import pipeline as P
+    from rdf_generator_spark.sources.corpus import corpus_df
+
+    mib32 = 32 * 1024 * 1024
+    assert P._PARSE_TASK_BYTES == mib32
+    assert [
+        P._parse_tasks(P._Footers(1, 1, n)) for n in (0, 1, mib32, mib32 + 1)
+    ] == [1, 1, 1, 2]
+
+    mem = corpus_df(spark, [("r", "chars.json", "c", "json", "{}")])
+    assert P._read_footers(P._input_files(mem)) is None
+    assert P._parse_tasks(None) is None
+
+    d = tmp_path / "corpus"
+    d.mkdir()
+    for name in ("aaa", "bbb", "zzz"):
+        pq.write_table(
+            pa.table({"repo": [name], "path": ["chars.json"], "commit": ["c"],
+                      "lang": ["json"], "content": [name * 1000]}),
+            str(d / f"part-{name}.parquet"),
+        )
+    files = P._input_files(spark.read.parquet(str(d)))
+    want = 0
+    for f in files:
+        md = pq.ParquetFile(urlparse(f).path).metadata
+        want += sum(
+            md.row_group(g).column(c).total_uncompressed_size
+            for g in range(md.num_row_groups)
+            for c in range(md.num_columns)
+            if md.row_group(g).column(c).path_in_schema == "content"
+        )
+    footers = P._read_footers(files)
+    assert footers.total == want
+    assert P._parse_tasks(footers) == 1
+    monkeypatch.setattr(P, "_PROBE_FILE_CAP", 2)
+    over = P._read_footers(files)
+    assert over is not None and over.total is None
+    assert P._parse_tasks(over) is None
+
+
 def test_fuzzy_match_plan_is_gram_bucketed(spark):
     """j1_fuzzy_fill's engine (fuzzy_match_labels) must generate
     candidates through the n-gram equi-join — a broadcast hash join on
@@ -355,8 +411,25 @@ def test_build_runs_python_once(spark, tmp_path):
         sc._jsc.clearJobGroup()
 
     assert n > 0
-    assert sum(names.count("MapInPandas") for names, _ in execs) == 1
+    assert sum(names.count("MapInPandas") for names, _, _ in execs) == 1
     assert _python_rdd_stages(sc, "python-budget") == 0
+
+
+def test_corpus_staging_runs_no_python_rdd(spark, tmp_path):
+    """corpus_parquet_df stages through an Arrow-built local relation:
+    its write starts no Python worker."""
+    from rdf_generator_spark.sources.corpus import corpus_parquet_df
+    from rdf_generator_spark.sources.synth import synth_corpus_rows
+
+    rows = synth_corpus_rows(n_datasets=2, ntax=4, nchar=4, seed=3)
+    sc = spark.sparkContext
+    sc.setJobGroup("staging-budget", "corpus staging python-stage budget")
+    try:
+        corpus_parquet_df(spark, rows, str(tmp_path / "corpus"))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert sc.statusTracker().getJobIdsForGroup("staging-budget")
+    assert _python_rdd_stages(sc, "staging-budget") == 0
 
 
 @pytest.fixture(scope="module")
@@ -374,13 +447,23 @@ def synth_build(spark, tmp_path_factory):
     return corpus, res, execs
 
 
+def test_build_parses_in_one_task(synth_build):
+    """The synth corpus's content is far below `_PARSE_TASK_BYTES`, so
+    the build's one MapInPandas stage runs one task (one Python worker)
+    however many files the corpus spans."""
+    corpus, _, execs = synth_build
+    assert len(corpus.inputFiles()) > 1
+    parse = [tasks for names, _, tasks in execs if "MapInPandas" in names]
+    assert parse == [[1]], parse
+
+
 def test_kg_pipeline_python_only_at_parse(spark, synth_build):
     """Over every plan a build executes: no row-at-a-time Python, uuid5
     minting as plain column algebra, and (with AQE off, so the static
     plan is what runs) whole-stage codegen with no interpreted
     fallback."""
     corpus, _, execs = synth_build
-    plans = "\n".join(desc for _, desc in execs)
+    plans = "\n".join(desc for _, desc, _ in execs)
     assert "BatchEvalPython" not in plans
     assert "sha1" in plans
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -388,8 +471,8 @@ def test_kg_pipeline_python_only_at_parse(spark, synth_build):
         _, static = executions(spark, lambda: build_graph(spark, corpus))
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
-    assert any(n.startswith("WholeStageCodegen") for names, _ in static for n in names)
-    assert not any("InterpretedEval" in desc for _, desc in static)
+    assert any(n.startswith("WholeStageCodegen") for names, _, _ in static for n in names)
+    assert not any("InterpretedEval" in desc for _, desc, _ in static)
 
 
 def test_kg_join_broadcasts_character_dimension(synth_build):
@@ -461,7 +544,7 @@ def test_final_graph_exchange_budget(synth_build):
 def test_build_exchange_budget(synth_build):
     """Exchanges over every plan one build executes."""
     _, _, execs = synth_build
-    names = [n for ns, _ in execs for n in ns]
+    names = [n for ns, _, _ in execs for n in ns]
     assert names.count("Exchange") <= BUILD_EXCHANGE_BUDGET, names.count("Exchange")
     n_bcast = names.count("BroadcastExchange")
     assert n_bcast <= BUILD_BROADCAST_EXCHANGE_BUDGET, n_bcast
