@@ -34,7 +34,7 @@ into one group per matrix automatically (json/nexus paired by path stem).
 
 from __future__ import annotations
 
-from typing import Dict, List, NamedTuple, Optional
+from typing import Dict, List, NamedTuple, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -108,9 +108,18 @@ _PROBE_FILE_CAP = 4096
 # Python stage; it runs at ~16-28 MiB/s of content per core, while
 # starting a Python worker costs ~0.6 s of CPU and ~70 MiB. So a parse
 # task gets ~2 s of content: a small corpus parses in one task (one
-# worker) however many files it spans, and a large one keeps the scan's
-# parallelism (a 128 MiB file split already holds more than this).
+# worker) however many files it spans.
 _PARSE_TASK_BYTES = 32 * 1024 * 1024
+
+# Content bytes per task of the JVM stages that read the parse hub
+# (family views, cells ⋈ chars, IRI mints). Their work per content byte
+# varies ~400x with document shape (~0.09 triples per byte for large
+# character JSONs, ~31 for a large NEXUS matrix), so this is sized for
+# the densest shape: a NEXUS cell takes at least one content byte, and
+# cells ⋈ chars with its per-cell mints ran at ~11 us per cell in one
+# task (90k cells on a 4-core box). A hub task so gets at most ~3 s of
+# per-cell work, the parse's order of task size.
+_HUB_TASK_BYTES = 256 * 1024
 
 
 class _Footers(NamedTuple):
@@ -176,24 +185,26 @@ def _read_footers(files: List[str]) -> Optional[_Footers]:
     )
 
 
-def _parse_tasks(footers: Optional[_Footers]) -> Optional[int]:
-    """Parse task count for the corpus the footers describe: one per
-    ``_PARSE_TASK_BYTES`` of content, at least one. ``None`` (keep the
-    scan's partitioning) when the content total is unknown."""
-    if footers is None or footers.total is None:
-        return None
-    return max(1, -(-footers.total // _PARSE_TASK_BYTES))
+def _task_counts(total: int, n_scan: int) -> Tuple[int, int]:
+    """Task counts of the fused parse and of the stages reading its hub
+    for ``total`` content bytes over a scan of ``n_scan`` partitions:
+    one per ``_PARSE_TASK_BYTES`` and one per ``_HUB_TASK_BYTES`` of
+    content, at least one and never more than the scan has."""
+    return tuple(
+        min(n_scan, max(1, -(-total // per)))
+        for per in (_PARSE_TASK_BYTES, _HUB_TASK_BYTES)
+    )
 
 
-def probe_max_doc_bytes(corpus: DataFrame):
+def _max_doc_bytes(corpus: DataFrame, footers: Optional[_Footers]):
     """Estimate (or exactly measure) the largest document's content size.
 
     Returns ``(bytes, exact)`` or ``None``. File-backed corpora
     (parquet/Iceberg — every real deployment) expose their file list
     from the already-built file index (``inputFiles()``, no job);
     parquet footers then give per-row-group uncompressed byte totals
-    for the ``content`` column (`_read_footers`, the same footer pass
-    that sizes the parse). Three footer-only outcomes:
+    for the ``content`` column (`footers`, from `_read_footers`: the
+    footer pass that also sizes the parse). Three footer-only outcomes:
 
     - max per-row-group MEAN >= ``_GIANT_DOC_CONTENT_BYTES``: large
       docs dominate some group — return ``(mean, exact=False)``,
@@ -216,11 +227,6 @@ def probe_max_doc_bytes(corpus: DataFrame):
     is capped (footer reads are cheap but not free); an explicit
     ``counter_buckets=`` always overrides.
     """
-    return _max_doc_bytes(corpus, _read_footers(_input_files(corpus)))
-
-
-def _max_doc_bytes(corpus: DataFrame, footers: Optional[_Footers]):
-    """`probe_max_doc_bytes` over already-read footers."""
     if footers is None:
         return None
     if footers.max_mean >= _GIANT_DOC_CONTENT_BYTES:
@@ -345,11 +351,11 @@ def build_salts(
 
 
 def resolve_counter_buckets(corpus: DataFrame, counter_buckets):
-    """Resolve build_graph's counter strategy: "auto" gates the
-    two-phase bucketed numbering on the giant-document probe (footer
-    statistics when they decide, one column-pruned job when they are
-    ambiguous — see probe_max_doc_bytes); int forces a bucket
-    width; None forces the per-document window."""
+    """The counter strategy build_graph would pick, for callers that
+    report it: "auto" gates the two-phase bucketed numbering on the
+    giant-document probe (footer statistics when they decide, one
+    column-pruned job when they are ambiguous — see `_max_doc_bytes`);
+    int forces a bucket width; None forces the per-document window."""
     if counter_buckets != "auto":
         return counter_buckets
     return _auto_counter_buckets(corpus, _read_footers(_input_files(corpus)))
@@ -384,15 +390,15 @@ def build_graph(
     of replaying the parse+join lineage. The returned outputs are lazy
     plans over those hubs.
 
-    The fused parse (the build's one Python stage) runs
-    ``ceil(content bytes / _PARSE_TASK_BYTES)`` tasks, at least one: the
-    content bytes are the ``content`` column's uncompressed size summed
-    over the corpus files' parquet footers (the footer pass the
-    counter gate reads anyway, zero jobs). The corpus is coalesced to
-    that many partitions, which never raises the scan's own count, so
-    a small corpus starts one Python worker however many files it
-    spans. In-memory corpora, and file lists past ``_PROBE_FILE_CAP``
-    (total unknown), keep the scan's partitioning.
+    Task counts come from the ``content`` column's uncompressed size
+    summed over the corpus files' parquet footers (the footer pass the
+    counter gate reads anyway, zero jobs), capped at the scan's
+    partition count: the fused parse (the build's one Python stage)
+    runs one task per ``_PARSE_TASK_BYTES``, so a small corpus starts
+    one Python worker however many files it spans, and the stages that
+    read its hub run one task per ``_HUB_TASK_BYTES``. In-memory
+    corpora, and file lists past ``_PROBE_FILE_CAP`` (total unknown),
+    keep the scan's partitioning throughout.
 
     ``dataset_id`` is the tier-1 IRI salt; when it is ``None`` a
     ``dataset_id`` in the corpus's yaml config rows is used, if any
@@ -410,21 +416,21 @@ def build_graph(
     directory automatically.
 
     ``counter_buckets``: sequential :id-N counter execution strategy.
-    ``"auto"`` (default) gates on the zero-job `probe_max_doc_bytes`
-    probe: when the largest document's content reaches
-    ``_GIANT_DOC_CONTENT_BYTES`` the counters switch to the two-phase
-    bucketed numbering in operators/windows.py (identical output —
-    golden-tested — but a giant matrix numbers across
-    nchar/``_AUTO_COUNTER_BUCKET_WIDTH`` tasks instead of sorting in
-    one); otherwise the plain per-document window runs (cheapest at
+    ``"auto"`` (default) gates on the footer probe `_max_doc_bytes`
+    (zero jobs unless the footers are ambiguous): when the largest
+    document's content reaches ``_GIANT_DOC_CONTENT_BYTES`` the counters
+    switch to the two-phase bucketed numbering in operators/windows.py
+    (identical output — golden-tested — but a giant matrix numbers
+    across nchar/``_AUTO_COUNTER_BUCKET_WIDTH`` tasks instead of sorting
+    in one); otherwise the plain per-document window runs (cheapest at
     normal document sizes — the two-phase variant's extra
     aggregation+join rounds cost ~15% at bench scale). Pass an int
     bucket width to force two-phase, or ``None`` to force the single
     window.
     """
-    # One file list and one footer pass (zero jobs) feed the three
-    # input-sized decisions: the counter gate, the broadcast gate and
-    # the parse task count.
+    # One file list and one footer pass (zero jobs) feed the input-sized
+    # decisions: the counter gate, the broadcast gate and the task
+    # counts of the parse and its hub.
     files = _input_files(corpus)
     footers = _read_footers(files)
     if counter_buckets == "auto":
@@ -465,11 +471,20 @@ def build_graph(
 
     # One fused parse per build, materialized as the first hub: every
     # family below is a projection of it, so each document enters Python
-    # exactly once however many jobs read its records. Its task count
-    # comes from the footers; coalesce never raises the scan's.
-    n_parse = _parse_tasks(footers)
-    parse_input = corpus if n_parse is None else corpus.coalesce(n_parse)
-    parsed = mat(parsers.parse_docs(parse_input), "parsed")
+    # exactly once however many jobs read its records. The footers size
+    # the parse and the hub separately (`_task_counts`); a hub wider
+    # than its parse gets the parsed records dealt round-robin, which
+    # spreads even one giant document's cells over the hub's tasks.
+    if footers is None or footers.total is None:
+        parsed = parsers.parse_docs(corpus)
+    else:
+        n_parse, n_hub = _task_counts(
+            footers.total, corpus._jdf.rdd().getNumPartitions()
+        )
+        parsed = parsers.parse_docs(corpus.coalesce(n_parse))
+        if n_hub > n_parse:
+            parsed = parsed.repartition(n_hub)
+    parsed = mat(parsed, "parsed")
     chars_raw = parsers.family_view(parsed, "json")
     cells = parsers.family_view(parsed, "nexus")
     species = parsers.family_view(parsed, "species-json")

@@ -100,8 +100,14 @@ def run_resumable(
     wall_ms = int((time.perf_counter() - t0) * 1000)
 
     # Per-document counts come from the committed table, not a second
-    # run of the final plan: dynamic partition overwrite leaves the
-    # batch's (repo, commit) partitions holding exactly its triples.
+    # run of the final plan. Every document group emits at least its
+    # base scaffold, so the write replaces each of the batch's
+    # (repo, commit) partitions (dynamic partition overwrite), which
+    # then hold exactly this batch's triples. The batch side of the
+    # semi-join carries no selective filter, so no dynamic partition
+    # pruning applies: the count opens every file of the committed
+    # table (row counts only, no data columns), a cost that grows with
+    # the table's file count rather than with the batch.
     files = content_lineage(todo)
     committed = tableio.read_table(spark, triples_ref)
     counts = (

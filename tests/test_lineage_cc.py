@@ -61,7 +61,9 @@ def test_resume_runs_final_graph_once(spark, tmp_path):
     """run_resumable runs the final graph once, for the triples write,
     and takes the lineage's per-document counts from the committed
     table. The final plan is the only reader of the staged prune flags;
-    the staged dedup hub is read by the flags and by that write."""
+    the staged dedup hub is read by the flags and by that write. Every
+    document group writes triples (its base scaffold at least), so the
+    write replaces each group's partition and its count is this run's."""
     import re
 
     from tests.test_plans import executions
@@ -86,6 +88,7 @@ def test_resume_runs_final_graph_once(spark, tmp_path):
         .select("repo", "commit", "n_triples").distinct().collect()
     )
     assert len(per_doc) == r["docs"] == 2
+    assert all(x["n_triples"] > 0 for x in per_doc)
     assert sum(x["n_triples"] for x in per_doc) == r["triples"]
 
 

@@ -35,7 +35,6 @@ def executions(spark, run):
     store = spark._jsparkSession.sharedState().statusStore()
     bus = spark.sparkContext._jsc.sc().listenerBus()
     tracker = spark.sparkContext.statusTracker()
-    to_java = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava
 
     def ids():
         bus.waitUntilEmpty()
@@ -48,7 +47,9 @@ def executions(spark, run):
     for eid in sorted(ids() - before):
         nodes = store.planGraph(eid).allNodes()
         data = store.execution(eid).get()
-        stages = [tracker.getStageInfo(s) for s in sorted(to_java(data.stages()))]
+        st = data.stages().toSeq()
+        stages = [tracker.getStageInfo(s)
+                  for s in sorted(st.apply(i) for i in range(st.size()))]
         execs.append((
             [nodes.apply(i).name() for i in range(nodes.size())],
             data.physicalPlanDescription(),
@@ -91,7 +92,9 @@ def test_counter_bucket_auto_gate(spark, tmp_path):
     straggler-sized document is present."""
     from rdf_generator_spark.plans.pipeline import (
         _AUTO_COUNTER_BUCKET_WIDTH,
-        probe_max_doc_bytes,
+        _input_files,
+        _max_doc_bytes,
+        _read_footers,
         resolve_counter_buckets,
     )
     from rdf_generator_spark.sources.corpus import corpus_df
@@ -114,7 +117,7 @@ def test_counter_bucket_auto_gate(spark, tmp_path):
 
     tracker = spark.sparkContext.statusTracker()
     jobs_before = len(tracker.getJobIdsForGroup(None) or [])
-    assert probe_max_doc_bytes(mem) is None
+    assert _max_doc_bytes(mem, _read_footers(_input_files(mem))) is None
     assert resolve_counter_buckets(c_norm, "auto") is None
     assert resolve_counter_buckets(c_skew, "auto") == _AUTO_COUNTER_BUCKET_WIDTH
     jobs_after = len(tracker.getJobIdsForGroup(None) or [])
@@ -137,9 +140,14 @@ def test_probe_exact_fallback_packed_row_group(spark, tmp_path):
 
     from rdf_generator_spark.plans.pipeline import (
         _AUTO_COUNTER_BUCKET_WIDTH,
-        probe_max_doc_bytes,
+        _input_files,
+        _max_doc_bytes,
+        _read_footers,
         resolve_counter_buckets,
     )
+
+    def probe(df):
+        return _max_doc_bytes(df, _read_footers(_input_files(df)))
 
     n = 4000
     giant = 1600 * 1024
@@ -158,14 +166,14 @@ def test_probe_exact_fallback_packed_row_group(spark, tmp_path):
     assert md.num_row_groups == 1  # the packing the probe must survive
     df = spark.read.parquet(p)
 
-    got = probe_max_doc_bytes(df)
+    got = probe(df)
     assert got == (giant, True)  # exact job ran and found the giant
     assert resolve_counter_buckets(df, "auto") == _AUTO_COUNTER_BUCKET_WIDTH
     # not memoized: a second probe of the same file list runs the job
     # again and gets the same answer
     tracker = spark.sparkContext.statusTracker()
     before = len(tracker.getJobIdsForGroup(None) or [])
-    assert probe_max_doc_bytes(df) == (giant, True)
+    assert probe(df) == (giant, True)
     assert len(tracker.getJobIdsForGroup(None) or []) > before
 
 
@@ -202,7 +210,7 @@ def test_probe_file_cap_falls_through_to_exact(spark, tmp_path, monkeypatch):
     df = spark.read.parquet(str(d))
 
     monkeypatch.setattr(P, "_PROBE_FILE_CAP", 2)
-    got = P.probe_max_doc_bytes(df)
+    got = P._max_doc_bytes(df, P._read_footers(P._input_files(df)))
     assert got == (1600 * 1024, True)  # exact job ran, tail giant found
     assert (
         P.resolve_counter_buckets(df, "auto") == P._AUTO_COUNTER_BUCKET_WIDTH
@@ -210,10 +218,11 @@ def test_probe_file_cap_falls_through_to_exact(spark, tmp_path, monkeypatch):
 
 
 def test_parse_task_sizing(spark, tmp_path, monkeypatch):
-    """One parse task per `_PARSE_TASK_BYTES` of content (summed over
-    the corpus files' footers), at least one. No coalesce is planned
-    when the total is unknown: an in-memory corpus has no files, and
-    past the footer cap not every footer is read."""
+    """One parse task per `_PARSE_TASK_BYTES` and one hub task per
+    `_HUB_TASK_BYTES` of content (summed over the corpus files'
+    footers), at least one and at most the scan's partition count. No
+    resizing is planned when the total is unknown: an in-memory corpus
+    has no files, and past the footer cap not every footer is read."""
     from urllib.parse import urlparse
 
     import pyarrow as pa
@@ -224,13 +233,19 @@ def test_parse_task_sizing(spark, tmp_path, monkeypatch):
 
     mib32 = 32 * 1024 * 1024
     assert P._PARSE_TASK_BYTES == mib32
+    big = mib32 + 1
     assert [
-        P._parse_tasks(P._Footers(1, 1, n)) for n in (0, 1, mib32, mib32 + 1)
+        P._task_counts(n, 1 << 20)[0] for n in (0, 1, mib32, mib32 + 1)
     ] == [1, 1, 1, 2]
+    hub = P._HUB_TASK_BYTES
+    assert hub < mib32
+    assert [
+        P._task_counts(n, 2) for n in (0, 1, hub, hub + 1, 3 * hub, big)
+    ] == [(1, 1), (1, 1), (1, 1), (1, 2), (1, 2), (2, 2)]
+    assert P._task_counts(big, 1) == (1, 1)
 
     mem = corpus_df(spark, [("r", "chars.json", "c", "json", "{}")])
     assert P._read_footers(P._input_files(mem)) is None
-    assert P._parse_tasks(None) is None
 
     d = tmp_path / "corpus"
     d.mkdir()
@@ -250,13 +265,10 @@ def test_parse_task_sizing(spark, tmp_path, monkeypatch):
             for c in range(md.num_columns)
             if md.row_group(g).column(c).path_in_schema == "content"
         )
-    footers = P._read_footers(files)
-    assert footers.total == want
-    assert P._parse_tasks(footers) == 1
+    assert P._read_footers(files).total == want
     monkeypatch.setattr(P, "_PROBE_FILE_CAP", 2)
     over = P._read_footers(files)
     assert over is not None and over.total is None
-    assert P._parse_tasks(over) is None
 
 
 def test_fuzzy_match_plan_is_gram_bucketed(spark):
@@ -448,13 +460,44 @@ def synth_build(spark, tmp_path_factory):
 
 
 def test_build_parses_in_one_task(synth_build):
-    """The synth corpus's content is far below `_PARSE_TASK_BYTES`, so
+    """The synth corpus's content is below both per-task budgets, so
     the build's one MapInPandas stage runs one task (one Python worker)
-    however many files the corpus spans."""
+    however many files the corpus spans, and hands its hub on as is."""
     corpus, _, execs = synth_build
     assert len(corpus.inputFiles()) > 1
     parse = [tasks for names, _, tasks in execs if "MapInPandas" in names]
     assert parse == [[1]], parse
+
+
+@pytest.mark.parametrize("parse_tasks", [1, 2, "scan"])
+def test_hub_keeps_scan_parallelism(spark, synth_build, monkeypatch, parse_tasks):
+    """With a hub budget of one content byte per task (a corpus with
+    cells enough to fill every core), the stages after the parse run as
+    many tasks as the scan has partitions whatever the parse's count: a
+    1- or 2-task parse deals its records round-robin to the hub, and a
+    parse as wide as the scan needs no exchange. The triples equal the
+    default build's."""
+    from rdf_generator_spark.plans import pipeline as P
+
+    corpus, res, _ = synth_build
+    n_scan = corpus._jdf.rdd().getNumPartitions()
+    assert n_scan > 2
+    total = P._read_footers(P._input_files(corpus)).total
+    monkeypatch.setattr(P, "_HUB_TASK_BYTES", 1)
+    if parse_tasks == "scan":
+        monkeypatch.setattr(P, "_PARSE_TASK_BYTES", 1)
+        parse_tasks = n_scan
+    else:
+        monkeypatch.setattr(P, "_PARSE_TASK_BYTES", -(-total // parse_tasks))
+    got, execs = executions(spark, lambda: build_graph(spark, corpus))
+    parse = [t for names, _, t in execs if "MapInPandas" in names]
+    assert len(parse) == 1, parse
+    assert (parse[0][0], parse[0][-1]) == (parse_tasks, n_scan), parse
+    assert ("Exchange" in [n for names, _, _ in execs if "MapInPandas" in names
+                           for n in names]) == (parse_tasks < n_scan)
+    a, b = got["triples"], res["triples"]
+    assert a.count() == b.count() > 0
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
 def test_kg_pipeline_python_only_at_parse(spark, synth_build):
