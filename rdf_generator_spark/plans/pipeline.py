@@ -397,8 +397,8 @@ def build_graph(
     runs one task per ``_PARSE_TASK_BYTES``, so a small corpus starts
     one Python worker however many files it spans, and the stages that
     read its hub run one task per ``_HUB_TASK_BYTES``. In-memory
-    corpora, and file lists past ``_PROBE_FILE_CAP`` (total unknown),
-    keep the scan's partitioning throughout.
+    corpora, file lists past ``_PROBE_FILE_CAP`` (total unknown) and
+    corpus plans with exchanges keep their own partitioning throughout.
 
     ``dataset_id`` is the tier-1 IRI salt; when it is ``None`` a
     ``dataset_id`` in the corpus's yaml config rows is used, if any
@@ -474,8 +474,15 @@ def build_graph(
     # exactly once however many jobs read its records. The footers size
     # the parse and the hub separately (`_task_counts`); a hub wider
     # than its parse gets the parsed records dealt round-robin, which
-    # spreads even one giant document's cells over the hub's tasks.
-    if footers is None or footers.total is None:
+    # spreads even one giant document's cells over the hub's tasks. An
+    # adaptive plan (one with exchanges, e.g. a resumed batch's
+    # semi-join) learns its partition count only by running its stages,
+    # so it keeps its own partitioning.
+    adaptive = (
+        corpus._jdf.queryExecution().executedPlan().nodeName()
+        == "AdaptiveSparkPlan"
+    )
+    if footers is None or footers.total is None or adaptive:
         parsed = parsers.parse_docs(corpus)
     else:
         n_parse, n_hub = _task_counts(

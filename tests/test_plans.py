@@ -500,6 +500,22 @@ def test_hub_keeps_scan_parallelism(spark, synth_build, monkeypatch, parse_tasks
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
+def test_exchange_plan_is_not_run_for_sizing(spark, synth_build):
+    """Under adaptive execution a corpus plan with exchanges (a resumed
+    batch is the corpus semi-joined to its pending documents) learns
+    its partition count only by running its stages, so build_graph
+    keeps that plan's partitioning: no execution before the parse runs
+    a stage."""
+    corpus, _, _ = synth_build
+    keys = corpus.select("repo", "commit").distinct()
+    todo = corpus.join(keys, ["repo", "commit"], "left_semi")
+    _, execs = executions(spark, lambda: build_graph(spark, todo))
+    first = next(
+        i for i, (names, _, _) in enumerate(execs) if "MapInPandas" in names
+    )
+    assert not any(tasks for _, _, tasks in execs[:first]), execs[:first]
+
+
 def test_kg_pipeline_python_only_at_parse(spark, synth_build):
     """Over every plan a build executes: no row-at-a-time Python, uuid5
     minting as plain column algebra, and (with AQE off, so the static
