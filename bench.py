@@ -28,7 +28,6 @@ HEADLINE = [
     "a5_prune_anti_join",
     "a2_sequential_counters",
     "dedup_exact",
-    "text_token_stats",
 ]
 
 

@@ -20,76 +20,6 @@ def dedup_triples(df: DataFrame) -> DataFrame:
     return df.dropDuplicates(DOC_KEYS + TRIPLE_COLS)
 
 
-def prune_unreferenced(df: DataFrame, hint=F.broadcast) -> DataFrame:
-    """prune_unreferenced_prototypes (main.py:1596-1634).
-
-    Victims: kb:qua-* NamedIndividuals not objects of phb:0000003 and
-    kb:org-* not objects of phb:0000002; drop all triples where a victim
-    is subject or (IRI) object. Two left-anti joins on the victim set.
-
-    `hint` wraps the victim side (default broadcast). The victim set
-    grows with the corpus, so the pipeline passes its gated hint — past
-    the document threshold the anti-joins shuffle on (repo, commit, node)
-    instead of broadcasting an unbounded table.
-    """
-    # Single-pass victim derivation (round 6): the direct transcription
-    # was three full distinct shuffles (all NamedIndividual subjects,
-    # all phb:hasQuality objects, all phb:hasOrganism objects) plus two
-    # anti-joins and a union-distinct — six exchanges, several carrying
-    # every NI subject in the graph. Only kb:qua-*/kb:org-* nodes can
-    # ever be victims, and a referenced node only matters if it has that
-    # same prefix, so one tagged explode over the triples followed by
-    # one (doc, node) aggregation computes the identical victim set:
-    # victim == named NI with its prefix's reference flag unset.
-    QUA, ORG = T.KB + "qua-", T.KB + "org-"
-    is_ni = (F.col("p") == T.RDF_TYPE) & (F.col("o") == T.OWL_NAMED_INDIVIDUAL)
-    named_node = F.when(
-        is_ni & (F.col("s").startswith(QUA) | F.col("s").startswith(ORG)),
-        F.col("s"),
-    )
-    refq_node = F.when(
-        (F.col("p") == T.PHB_HAS_QUALITY) & (~F.col("lit"))
-        & F.col("o").startswith(QUA),
-        F.col("o"),
-    )
-    refo_node = F.when(
-        (F.col("p") == T.PHB_HAS_ORGANISM) & (~F.col("lit"))
-        & F.col("o").startswith(ORG),
-        F.col("o"),
-    )
-    cand = (
-        df.select(
-            *DOC_KEYS,
-            F.explode(
-                F.array(
-                    F.struct(named_node.alias("node"), F.lit(1).alias("kind")),
-                    F.struct(refq_node.alias("node"), F.lit(2).alias("kind")),
-                    F.struct(refo_node.alias("node"), F.lit(3).alias("kind")),
-                )
-            ).alias("c"),
-        )
-        .filter(F.col("c.node").isNotNull())
-        .select(*DOC_KEYS, F.col("c.node").alias("node"), F.col("c.kind").alias("kind"))
-    )
-    victims = (
-        cand.groupBy(*DOC_KEYS, "node")
-        .agg(
-            F.max(F.col("kind") == 1).alias("__named"),
-            F.max(F.col("kind") == 2).alias("__refq"),
-            F.max(F.col("kind") == 3).alias("__refo"),
-        )
-        .filter(
-            F.col("__named")
-            & (
-                (F.col("node").startswith(QUA) & ~F.col("__refq"))
-                | (F.col("node").startswith(ORG) & ~F.col("__refo"))
-            )
-        )
-        .select(*DOC_KEYS, "node")
-    )
-    return _drop_victims(df, victims, hint)
-
-
 def _drop_victims(df: DataFrame, victims: DataFrame, hint) -> DataFrame:
     """Drop all triples whose subject or (IRI) object is a victim —
     two left-anti joins with the victim set on the hinted side."""
@@ -117,17 +47,27 @@ def _drop_victims(df: DataFrame, victims: DataFrame, hint) -> DataFrame:
 
 
 def prune_unreferenced_scoped(df: DataFrame, mx_col: str, materialize_flags,
-                              hint=F.broadcast):
-    """Prune the full triple set AND its ``mx_col`` subset, sharing one
-    victim scan (round 6).
+                              hint):
+    """prune_unreferenced_prototypes (main.py:1596-1634), run on the full
+    triple set AND its ``mx_col`` subset, sharing one victim scan.
+
+    Victims per scope: kb:qua-* NamedIndividuals not objects of
+    phb:0000003 and kb:org-* not objects of phb:0000002; drop all
+    triples where a victim is subject or (IRI) object.
 
     ``df`` carries the triple columns plus a boolean ``mx_col`` marking
-    subset membership. Victim semantics per scope are exactly
-    `prune_unreferenced` run on that scope's triples: the candidate
-    explode tags every entry with the subset flag, and the (doc, node)
-    aggregation derives both scopes' named/referenced flags at once —
-    one scan and one small exchange instead of two of each. Returns
-    ``(pruned_full, pruned_subset)``; neither output carries ``mx_col``.
+    subset membership. Only kb:qua-*/kb:org-* nodes can ever be victims,
+    and a reference only matters for a node of the same prefix, so one
+    tagged explode over the triples (each entry also tagged with the
+    subset flag) and one (doc, node) aggregation derive both scopes'
+    named/referenced flags at once — one scan and one small exchange.
+    Returns ``(pruned_full, pruned_subset)``; neither output carries
+    ``mx_col``.
+
+    ``hint`` wraps the victim side of the anti-joins. The victim set
+    grows with the corpus, so the pipeline passes its gated hint — past
+    the document threshold the anti-joins shuffle on (repo, commit,
+    node) instead of broadcasting an unbounded table.
 
     ``materialize_flags``: ``f(flags_df) -> flags_df`` that pins the
     (small) per-node flag table; unpinned, the flag subtree appears
@@ -198,45 +138,37 @@ def prune_unreferenced_scoped(df: DataFrame, mx_col: str, materialize_flags,
 
 
 def apply_label_priority(matrix_labels: DataFrame, target: DataFrame,
-                         hint=None, label_subjects_only: bool = False
+                         hint, label_subjects_only: bool = False
                          ) -> DataFrame:
     """apply_matrix_label_priority (main.py:1243-1270).
 
-    `matrix_labels`: (doc, s, o) authoritative rdfs:label values. For
-    every subject of `target` that has a matrix label, all its
+    `matrix_labels`: (doc, s, o, ord) authoritative rdfs:label values.
+    For every subject of `target` that has a matrix label, all its
     rdfs:label triples are replaced by the matrix one.
 
     The reference takes the FIRST label in graph insertion order
-    (main.py pref_labels[0]); when `matrix_labels` carries an `ord`
-    struct (emission-order key built by the pipeline), min_by replays
-    that order. Labels with no order key sort last, tie-broken on the
-    label text so the choice stays deterministic.
+    (main.py pref_labels[0]); min_by over the `ord` struct
+    (emission-order key built by the pipeline) replays that order.
+    Labels with no order key sort last, tie-broken on the label text so
+    the choice stays deterministic.
 
     ``hint`` wraps the aggregated label-map side of the two joins (the
     pipeline passes its corpus-gated broadcast hint, same policy as
-    prune_unreferenced): the map is per-document small but grows with
-    the corpus, so past the document gate the joins shuffle on
-    (repo, commit, s) instead of broadcasting an unbounded table. With
-    no hint the join is left to AQE (fixture-scale callers)."""
-    if hint is None:
-        hint = lambda d: d  # noqa: E731
-    if "ord" in matrix_labels.columns:
-        # nulls-last fill must match the ord struct's field names/types
-        max_ord = F.struct(
-            *[F.lit(2 ** 62).cast("long").alias(f"k{i}") for i in range(1, 6)]
-        )
-        key = F.struct(
-            F.coalesce(F.col("ord"), max_ord).alias("eo"), F.col("o").alias("tb")
-        )
-        ml = (
-            matrix_labels.select(*DOC_KEYS, "s", "o", "ord")
-            .groupBy(*DOC_KEYS, "s")
-            .agg(F.min_by("o", key).alias("o"))
-        )
-    else:
-        ml = matrix_labels.select(*DOC_KEYS, "s", "o").groupBy(*DOC_KEYS, "s").agg(
-            F.min("o").alias("o")
-        )
+    prune_unreferenced_scoped): the map is per-document small but grows
+    with the corpus, so past the document gate the joins shuffle on
+    (repo, commit, s) instead of broadcasting an unbounded table."""
+    # nulls-last fill must match the ord struct's field names/types
+    max_ord = F.struct(
+        *[F.lit(2 ** 62).cast("long").alias(f"k{i}") for i in range(1, 6)]
+    )
+    key = F.struct(
+        F.coalesce(F.col("ord"), max_ord).alias("eo"), F.col("o").alias("tb")
+    )
+    ml = (
+        matrix_labels.select(*DOC_KEYS, "s", "o", "ord")
+        .groupBy(*DOC_KEYS, "s")
+        .agg(F.min_by("o", key).alias("o"))
+    )
     non_labels = target.filter(F.col("p") != T.RDFS_LABEL)
     if label_subjects_only:
         # Fast path for callers that guarantee (a) every ml subject

@@ -314,11 +314,7 @@ def _dataset_id_from_yaml_rows(rows) -> Optional[str]:
     return None
 
 
-def build_salts(
-    meta: DataFrame,
-    dataset_id: Optional[str],
-    json_names: Optional[DataFrame] = None,
-) -> DataFrame:
+def build_salts(meta: DataFrame, json_names: DataFrame) -> DataFrame:
     """build_dataset_seed_salt (main.py:227-249), per document.
 
     Tier 2: sha256 fingerprint of the sorted non-empty normalized
@@ -334,8 +330,6 @@ def build_salts(
         F.when(F.size(vals) > 0,
                F.concat(F.lit("metadata::"), fp)).alias("salt")
     )
-    if json_names is None:
-        return m
     jb = json_names.groupBy(*DOC).agg(F.min("json_base").alias("__jb"))
     jbn = norm_seed_component(F.col("__jb"))
     return (
@@ -546,7 +540,7 @@ def build_graph(
         json_names = corpus.filter(F.col("lang") == "json").select(
             *DOC, F.element_at(F.split(F.col("path"), "/"), -1).alias("json_base")
         )
-        salts = build_salts(meta, dataset_id, json_names)
+        salts = build_salts(meta, json_names)
 
     charsx = (
         chars_f.join(salts, DOC, "left")
@@ -1511,18 +1505,11 @@ def _assemble(spark, corpus, charsx, states_x, cells_j, visits, species, cells, 
     )
 
     return {
-        "chars": charsx,
-        "states": states_x,
         "cells": cells_j,
-        "visits": visits,
-        "species": species,
         "taxa": taxa_sp,
-        "parts": parts,
         "char_part_tagged": char_part_tagged,
         "matrix_part": matrix_part,
-        "char_part": char_part,
         "species_part": species_part,
-        "tu_part": tu_part,
         "base_part": base_part,
         "matrix_pruned": matrix_pruned,
         "char_combined": char_combined,

@@ -1,7 +1,7 @@
 """Driver-contract query registry: Spark impls + DuckDB oracle SQL.
 
-Each relational entry maps a SURVEY.md §2 KG operator (or a text/dedup
-operator of ``textops/``) onto the relational testdata (sf*/: region
+Each relational entry maps a SURVEY.md §2 KG operator (or a dedup
+operator of ``textops/dedupe.py``) onto the relational testdata (sf*/: region
 nation customer supplier part orders lineitem events documents
 embeddings). Numeric outputs are integers (cents / scaled) so the
 value-hash comparison is immune to float formatting; every computed
@@ -369,44 +369,6 @@ def minhash_band_pairs(spark, sf_dir):
     )
 
 
-def text_token_stats(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
-    return toks.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_tokens"),
-        F.count_distinct(F.col("tok")).alias("n_uniq"),
-        F.round(
-            100.0 * F.sum(F.length("tok")) / F.count(F.lit(1))
-        ).cast("bigint").alias("avg_len_x100"),
-    )
-
-
-_STOPWORDS = ["the", "a", "of", "and", "to", "in", "is"]
-
-
-def text_langid(spark, sf_dir):
-    """Stopword-ratio language heuristic."""
-    d = _t(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
-    agg = toks.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(F.col("tok").isin(_STOPWORDS), 1).otherwise(0)).alias("n_stop"),
-    )
-    return agg.select(
-        "doc_id",
-        "n_stop",
-        F.when(F.col("n_stop") * 20 >= F.col("n"), "en").otherwise("other").alias(
-            "lang_guess"
-        ),
-    )
-
-
-def text_fingerprint(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
-    norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " ")
-    return d.select("doc_id", F.md5(norm).alias("fp"))
-
-
 # --------------------------------------------------------------------------
 # Engine-native entries (no SQL oracle — rows-only checks)
 # --------------------------------------------------------------------------
@@ -419,12 +381,6 @@ def k1_uuid5_mint(spark, sf_dir):
 
     n = _t(spark, sf_dir, "nation")
     return n.select("n_name", kb_iri("doc", F.col("n_name")).alias("iri"))
-
-
-def text_quality_score(spark, sf_dir):
-    from rdf_generator_spark.textops.analysis import quality_score
-
-    return quality_score(_t(spark, sf_dir, "documents"))
 
 
 def dedup_simhash_pairs(spark, sf_dir):
@@ -456,16 +412,6 @@ def dedup_embedding_neardup(spark, sf_dir):
     return embedding_neardup_pairs(
         e.unionByName(planted), threshold=0.98
     ).select("d1", "d2")
-
-
-def text_winnow_fingerprint(spark, sf_dir):
-    """Winnowing fingerprint with the md5 shingle-hash variant so the
-    full rolling-min algebra has a DuckDB twin (DuckDB lacks xxhash64;
-    the default xxhash64 variant is covered by pytest)."""
-    from rdf_generator_spark.textops.analysis import fingerprint
-
-    return fingerprint(_t(spark, sf_dir, "documents"), window=4,
-                       shingle_hash="md5")
 
 
 def kg_pipeline_synth(spark, sf_dir):
@@ -504,15 +450,10 @@ QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "dedup_exact": dedup_exact,
     "dedup_jaccard_pairs": dedup_jaccard_pairs,
     "minhash_band_pairs": minhash_band_pairs,
-    "text_token_stats": text_token_stats,
-    "text_langid": text_langid,
-    "text_fingerprint": text_fingerprint,
     "k1_uuid5_mint": k1_uuid5_mint,
     "kg_pipeline_synth": kg_pipeline_synth,
-    "text_quality_score": text_quality_score,
     "dedup_simhash_pairs": dedup_simhash_pairs,
     "dedup_embedding_neardup": dedup_embedding_neardup,
-    "text_winnow_fingerprint": text_winnow_fingerprint,
 }
 
 ORACLES: Dict[str, str] = {
@@ -652,67 +593,6 @@ ORACLES: Dict[str, str] = {
         FROM bands a JOIN bands b ON a.band=b.band AND a.bh=b.bh
                                   AND a.doc_id<b.doc_id
     """,
-    "text_token_stats": """
-        WITH toks AS (
-            SELECT doc_id, t.tok
-            FROM documents, UNNEST(string_split(text,' ')) AS t(tok)
-        )
-        SELECT doc_id, COUNT(*) AS n_tokens, COUNT(DISTINCT tok) AS n_uniq,
-               CAST(ROUND(100.0*SUM(LENGTH(tok))/COUNT(*)) AS BIGINT) AS avg_len_x100
-        FROM toks GROUP BY doc_id
-    """,
-    "text_langid": """
-        WITH toks AS (
-            SELECT doc_id, t.tok
-            FROM documents, UNNEST(string_split(text,' ')) AS t(tok)
-        ),
-        agg AS (
-            SELECT doc_id, COUNT(*) AS n,
-                   CAST(SUM(CASE WHEN tok IN
-                                 ('the','a','of','and','to','in','is')
-                            THEN 1 ELSE 0 END) AS BIGINT) AS n_stop
-            FROM toks GROUP BY doc_id
-        )
-        SELECT doc_id, n_stop,
-               CASE WHEN n_stop*20 >= n THEN 'en' ELSE 'other' END AS lang_guess
-        FROM agg
-    """,
-    "text_fingerprint": """
-        SELECT doc_id,
-               md5(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')) AS fp
-        FROM documents
-    """,
-    "text_quality_score": """
-        WITH base AS (
-            SELECT doc_id, text, length(text) AS n_chars,
-                   list_filter(regexp_split_to_array(text, '\\s+'),
-                               t -> t <> '') AS toks
-            FROM documents
-        ),
-        c AS (
-            SELECT doc_id, n_chars, len(toks) AS n,
-                   GREATEST(len(toks), 1) AS n1,
-                   len(list_filter(toks, t -> list_contains(
-                       ['the','a','an','of','and','to','in','is','it','that',
-                        'for','on','with','as','was','at','by','this'],
-                       lower(t)))) AS n_stop,
-                   len(list_distinct(toks)) AS n_uniq,
-                   n_chars - length(regexp_replace(text, '[^\\w\\s]', '', 'g'))
-                     AS n_punct,
-                   n_chars - len(toks) + 1 AS sum_wordlen
-            FROM base
-        )
-        SELECT doc_id, n AS n_tokens, n_stop AS n_stopwords,
-               CAST(FLOOR(100*sum_wordlen/n1) AS BIGINT) AS mean_wordlen_x100,
-               CAST(FLOOR(1000*n_uniq/n1) AS BIGINT) AS uniq_ratio_x1000,
-               CAST((CASE WHEN n < 5 THEN 0 ELSE 25 END)
-                  + (CASE WHEN sum_wordlen >= 3*n1 AND sum_wordlen <= 12*n1
-                          THEN 25 ELSE 0 END)
-                  + (CASE WHEN n_punct*5 < n_chars THEN 25 ELSE 0 END)
-                  + (CASE WHEN 10*n_uniq >= 3*n1 THEN 25 ELSE 0 END) AS INT)
-                 AS quality_score
-        FROM c
-    """,
     "dedup_embedding_neardup": """
         WITH base AS (
             SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
@@ -768,32 +648,6 @@ ORACLES: Dict[str, str] = {
         SELECT d1, d2, CAST(hamming AS INT) AS hamming
         FROM pr WHERE hamming <= 3
     """,
-    "text_winnow_fingerprint": """
-        WITH n AS (
-            SELECT doc_id,
-                   regexp_replace(trim(lower(text)), '\\s+', ' ', 'g') AS nt
-            FROM documents
-        ),
-        t AS (SELECT doc_id, md5(nt) AS content_fp,
-                     string_split(nt, ' ') AS ts FROM n),
-        sh AS (
-            SELECT doc_id, content_fp,
-                   list_transform(
-                       range(0, greatest(len(ts) - 3, 0) + 1),
-                       i -> md5(array_to_string(ts[i+1:i+3], ' '))) AS shs
-            FROM t
-        ),
-        w AS (
-            SELECT doc_id, content_fp,
-                   list_sort(list_distinct(list_transform(
-                       range(0, greatest(len(shs) - 4, 0) + 1),
-                       i -> list_aggregate(shs[i+1:i+4], 'min')))) AS wn
-            FROM sh
-        )
-        SELECT doc_id, content_fp, CAST(len(wn) AS INT) AS n_winnowed,
-               md5(array_to_string(wn, ',')) AS winnow_fp
-        FROM w
-    """,
 }
 
 # UUID5 seeds are known a priori (the 25 fixed nation names), so the k1
@@ -816,87 +670,6 @@ ORACLES["kg_pipeline_synth"] = (
     + ", ".join(f"('{r}', {n})" for r, n in _KG_SYNTH_PINNED)
     + ") AS t(repo, n_triples)"
 )
-
-
-def text_pii_redact(spark, sf_dir):
-    """PII scrub over documents with planted emails/IPs/phones (the
-    synthetic corpus has none, so five docs get deterministic PII
-    appended on BOTH sides of the compare)."""
-    from rdf_generator_spark.textops.analysis import redact_pii
-
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
-    planted = F.when(
-        F.col("doc_id") < 5,
-        F.concat(F.col("text"),
-                 F.lit(" contact a.b-c_1@ex-ample.org or +4915112345678 "
-                       "at 10.0.0.1 now")),
-    ).otherwise(F.col("text"))
-    return redact_pii(d.select("doc_id", planted.alias("text")))
-
-
-ORACLES["text_pii_redact"] = """
-    WITH d AS (
-        SELECT doc_id,
-               CASE WHEN doc_id < 5
-                    THEN text || ' contact a.b-c_1@ex-ample.org or '
-                         || '+4915112345678 at 10.0.0.1 now'
-                    ELSE text END AS text
-        FROM documents WHERE doc_id < 50
-    )
-    SELECT doc_id,
-        CAST(len(regexp_extract_all(text,
-            '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}')) AS INT)
-          AS n_email,
-        CAST(len(regexp_extract_all(text,
-            '\\b[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\b')) AS INT)
-          AS n_ipv4,
-        CAST(len(regexp_extract_all(text, '\\+[0-9]{7,15}\\b')) AS INT)
-          AS n_phone,
-        regexp_replace(regexp_replace(regexp_replace(text,
-            '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
-            '\\b[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\b',
-            '[IPV4]', 'g'),
-            '\\+[0-9]{7,15}\\b', '[PHONE]', 'g') AS redacted_text
-    FROM d
-"""
-
-
-def text_decontaminate(spark, sf_dir):
-    """Benchmark decontamination: docs 0 and 1 are the 'benchmark'
-    (full 13-gram overlap with themselves), so the survivor set is
-    exactly the other doc_ids < 100 that share no 13-gram."""
-    from rdf_generator_spark.textops.analysis import decontaminate
-
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100).select(
-        "doc_id", "text"
-    )
-    bench = d.filter(F.col("doc_id") < 2).select(
-        F.col("doc_id").alias("bench_id"), "text"
-    )
-    return decontaminate(d, bench, n=13).select("doc_id")
-
-
-ORACLES["text_decontaminate"] = """
-    WITH d AS (
-        SELECT doc_id, string_split_regex(text, '\\s+') AS ts
-        FROM documents WHERE doc_id < 100
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id, unnest(list_transform(
-            range(0, greatest(len(ts) - 13, 0) + 1),
-            i -> array_to_string(ts[i+1:i+13], ' '))) AS tok
-        FROM d WHERE len(ts) >= 13
-    ),
-    bad AS (
-        SELECT DISTINCT a.doc_id
-        FROM sh a JOIN sh b ON a.tok = b.tok AND b.doc_id < 2
-    )
-    SELECT doc_id FROM d
-    WHERE doc_id NOT IN (SELECT doc_id FROM bad)
-"""
-
-QUERIES["text_pii_redact"] = text_pii_redact
-QUERIES["text_decontaminate"] = text_decontaminate
 
 
 def dedup_near_groups(spark, sf_dir):
@@ -1104,37 +877,6 @@ for _retired in [
     ORACLES_EXTRA[_retired] = ORACLES.pop(_retired)
 
 
-# --------------------------------------------------------------------------
-# Round-4 consolidation (VERDICT r3 item 2): fold the five text-analysis
-# entries into one suite (same escaped-stringify mechanism as the KG-side
-# suites) to restore driver-window headroom. The granular members stay
-# pytest-oracled in QUERIES_EXTRA.
-# --------------------------------------------------------------------------
-
-_SUITES_REL = {
-    "text_analysis_suite": [
-        (text_token_stats, ["doc_id", "n_tokens", "n_uniq", "avg_len_x100"]),
-        (text_langid, ["doc_id", "n_stop", "lang_guess"]),
-        (text_quality_score, ["doc_id", "n_tokens", "n_stopwords",
-                              "mean_wordlen_x100", "uniq_ratio_x1000",
-                              "quality_score"]),
-        (text_fingerprint, ["doc_id", "fp"]),
-        (text_winnow_fingerprint, ["doc_id", "content_fp", "n_winnowed",
-                                   "winnow_fp"]),
-    ],
-}
-
-for _sname, _specs in _SUITES_REL.items():
-    _sq = make_suite_query(_specs)
-    _sq.__name__ = _sname
-    QUERIES[_sname] = _sq
-    ORACLES[_sname] = make_suite_oracle(_specs, ORACLES)
-
-for _g in [fn.__name__ for specs in _SUITES_REL.values() for (fn, _c) in specs]:
-    QUERIES_EXTRA[_g] = QUERIES.pop(_g)
-    ORACLES_EXTRA[_g] = ORACLES.pop(_g)
-
-
 def j1_fuzzy_fill(spark, sf_dir):
     """J1 similarity tier, driver-visible (the north-star generalization
     of the reference's exact-match-only vocabulary fill,
@@ -1210,68 +952,3 @@ ORACLES["j1_fuzzy_fill"] = """
 """
 
 QUERIES["j1_fuzzy_fill"] = j1_fuzzy_fill
-
-
-def text_vocab_top(spark, sf_dir):
-    """Corpus vocabulary build (tokenizer shape): global token counts,
-    min_count floor, deterministic top-N (textops/analysis.py::
-    build_vocab; TakeOrderedAndProject top-N, single bounded shuffle)."""
-    from rdf_generator_spark.textops.analysis import build_vocab
-
-    return build_vocab(
-        _t(spark, sf_dir, "documents"), min_count=2, top_n=200
-    )
-
-
-ORACLES["text_vocab_top"] = """
-    WITH toks AS (
-        SELECT lower(t.tok) AS tok
-        FROM documents, UNNEST(string_split_regex(text, '\\s+')) AS t(tok)
-        WHERE t.tok <> ''
-    ),
-    c AS (
-        SELECT tok, COUNT(*) AS cnt FROM toks
-        GROUP BY tok HAVING COUNT(*) >= 2
-    )
-    SELECT ROW_NUMBER() OVER (ORDER BY cnt DESC, tok) AS rank, tok, cnt
-    FROM c
-    QUALIFY rank <= 200
-"""
-
-QUERIES["text_vocab_top"] = text_vocab_top
-
-
-def text_repetition_score(spark, sf_dir):
-    """Intra-document 3-gram repetition quality signal
-    (textops/analysis.py::repetition_score) — integer-exact per-row
-    array algebra, no shuffle."""
-    from rdf_generator_spark.textops.analysis import repetition_score
-
-    return repetition_score(_t(spark, sf_dir, "documents"), n=3)
-
-
-ORACLES["text_repetition_score"] = """
-    WITH d AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(text, '\\s+'),
-                           t -> t <> '') AS ts
-        FROM documents
-    ),
-    g AS (
-        SELECT doc_id,
-               list_transform(
-                   range(0, GREATEST(len(ts) - 3, 0) + 1),
-                   i -> array_to_string(
-                       ts[CAST(i + 1 AS INT):CAST(i + 3 AS INT)], ' '))
-                 AS gs
-        FROM d
-    )
-    SELECT doc_id,
-           CAST(len(gs) AS INT) AS n_ngrams,
-           CAST(len(list_distinct(gs)) AS INT) AS n_uniq_ngrams,
-           CAST(FLOOR(1000 * (len(gs) - len(list_distinct(gs)))
-                      / GREATEST(len(gs), 1)) AS BIGINT) AS dup_ratio_x1000
-    FROM g
-"""
-
-QUERIES["text_repetition_score"] = text_repetition_score

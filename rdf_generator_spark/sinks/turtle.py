@@ -13,7 +13,7 @@ the golden corpus a single file per document.
 
 from __future__ import annotations
 
-from typing import Iterable, List, Tuple
+from typing import List, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -287,25 +287,6 @@ def turtle_blocks(triples: DataFrame) -> DataFrame:
     )
 
 
-def assemble_document(blocks_rows: Iterable) -> str:
-    """Driver-side assembly of one document's ordered block rows into the
-    full sectioned Turtle text (headers per main.py:1372-1570)."""
-    parts = [_PREFIX_BLOCK, "\n\n", _ONTOLOGY_HEADER]
-    cur_section = None
-    cur_bucket = None
-    for r in blocks_rows:
-        if r["section"] != cur_section:
-            cur_section = r["section"]
-            cur_bucket = None
-            parts.append(_SECTION_HEADERS[cur_section])
-        if cur_section == SECTION_INDIVIDUALS and r["bucket"] != cur_bucket:
-            cur_bucket = r["bucket"]
-            parts.append(_BUCKETS[cur_bucket][1] + "\n\n")
-        parts.append(r["text"])
-        parts.append("\n")
-    return "".join(parts)
-
-
 def _species_joined(result: dict) -> DataFrame:
     """(taxon_label, s, p, o, lit, dt): each species' own triples —
     the species part joined against that taxon's two sp- nodes."""
@@ -394,9 +375,15 @@ def write_turtle_shards(triples: DataFrame, out_dir: str) -> dict:
 
     Blocks are range-partitioned on the full ordering key and each
     partition writes one `part-NNNNN.ttl` shard (executor-local here; a
-    shared filesystem / object store on a cluster). `header.ttl` +
-    shards concatenated in shard order reproduce the single-file output
-    for each document. Returns {'n_shards', 'manifest'}."""
+    shared filesystem / object store on a cluster). One shard set holds
+    every document: `header.ttl` (prefix block and ontology header,
+    written once) followed by the shards in shard order gives the
+    per-document writer's subject blocks, in its (document, section,
+    bucket, sort key) order, under one prefix header. Shards hold block
+    text only, with no CLASSES/INDIVIDUALS section headers or bucket
+    headers, so the concatenation is not the single-file output; only
+    its triple set equals the graph's (`test_shard_writer_matches_single_file`).
+    Returns {'n_shards', 'manifest'}."""
     import os
 
     os.makedirs(out_dir, exist_ok=True)

@@ -358,8 +358,7 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     ``token_hash``: "xxhash64" (default, fastest — stays in codegen) or
     "md5" (bit b = bit (b%4) of md5-hex nibble b//4) — the md5 mode
     exists so a DuckDB twin can reproduce the exact fingerprints
-    (DuckDB lacks xxhash64); same dual-hash pattern as
-    analysis.fingerprint(shingle_hash=)."""
+    (DuckDB lacks xxhash64)."""
     toks = _tokens(df, id_col, text_col)
     if token_hash == "md5":
         hx = F.md5(F.col("tok"))

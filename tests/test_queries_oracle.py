@@ -119,7 +119,6 @@ def test_suite_stringify_escaping(spark, duck):
 def test_rows_only_queries_run(spark):
     for name in [
         "k1_uuid5_mint", "dedup_simhash_pairs", "dedup_embedding_neardup",
-        "text_winnow_fingerprint",
     ]:
         df = ALL_QUERIES[name](spark, SF_DIR)
         assert df.count() >= 0 and len(df.columns) >= 2, name

@@ -70,14 +70,12 @@ def test_spark_build_salts_matches_refsim(spark):
 
     def salts(rows, json_rows=None):
         meta = spark.createDataFrame(rows, schema)
-        jn = None
-        if json_rows is not None:
-            jn = spark.createDataFrame(
-                json_rows, "repo string, commit string, json_base string"
-            )
+        jn = spark.createDataFrame(
+            json_rows or [], "repo string, commit string, json_base string"
+        )
         return {
             (r["repo"], r["commit"]): r["salt"]
-            for r in build_salts(meta, None, jn).collect()
+            for r in build_salts(meta, jn).collect()
         }
 
     # tier 2: fingerprint equality with refsim, sensitivity to content
@@ -104,7 +102,7 @@ def test_spark_build_salts_matches_refsim(spark):
         for r in __import__(
             "rdf_generator_spark.plans.pipeline", fromlist=["build_salts"]
         ).build_salts(
-            empty, None,
+            empty,
             spark.createDataFrame(
                 [("r", "c", "m.json"), ("r2", "c2", "   ")],
                 "repo string, commit string, json_base string",

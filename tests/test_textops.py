@@ -1,11 +1,11 @@
-"""Training-data pipeline operators: dedup and analysis."""
+"""Training-data pipeline operators: dedup."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from rdf_generator_spark.textops import analysis, dedupe
+from rdf_generator_spark.textops import dedupe
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -91,30 +91,6 @@ def test_embedding_neardup(spark, embeds):
     assert hits == len(ids)  # identical vectors always bucket together
 
 
-def test_token_stats_and_langid(spark, docs):
-    stats = analysis.token_stats(docs).limit(5).collect()
-    for r in stats:
-        assert r["n_ws_tokens"] > 0 and r["n_subword_tokens"] >= r["n_ws_tokens"] - 1
-    lang = analysis.lang_id(docs)
-    assert lang.filter(F.col("lang_guess") == "en").count() > 0
-
-
-def test_quality_and_fingerprint(spark, docs):
-    q = analysis.quality_score(docs).limit(5).collect()
-    for r in q:
-        assert 0 <= r["quality_score"] <= 100
-    fp = analysis.fingerprint(docs, window=4)
-    row = fp.first()
-    assert len(row["content_fp"]) == 32 and len(row["winnow_fp"]) == 32
-    # winnow fingerprint robust to trailing whitespace
-    fp2 = analysis.fingerprint(
-        docs.withColumn("text", F.concat(F.col("text"), F.lit("   "))), window=4
-    )
-    a = {r["doc_id"]: r["winnow_fp"] for r in fp.collect()}
-    b = {r["doc_id"]: r["winnow_fp"] for r in fp2.collect()}
-    assert a == b
-
-
 def test_near_dup_groups_end_to_end(spark):
     rows = [
         (1, "the quick brown fox jumps over the lazy dog today"),
@@ -193,71 +169,6 @@ def test_embedding_neardup_multiband_recall(spark):
         for r in dedupe.embedding_neardup_pairs(df, threshold=0.98).collect()
     }
     assert pairs == {(i, 1000 + i) for i in range(10)}
-
-
-def test_redact_pii(spark):
-    df = spark.createDataFrame(
-        [(1, "mail me at jo.doe+x@corp.example.com or +4915112345678"),
-         (2, "server at 10.0.0.1 and 192.168.1.255, version 1.2"),
-         (3, "clean text, no pii")],
-        ["doc_id", "text"],
-    )
-    got = {r["doc_id"]: r for r in analysis.redact_pii(df).collect()}
-    assert got[1]["n_email"] == 1 and got[1]["n_phone"] == 1
-    assert "[EMAIL]" in got[1]["redacted_text"]
-    assert "[PHONE]" in got[1]["redacted_text"]
-    assert "jo.doe" not in got[1]["redacted_text"]
-    assert got[2]["n_ipv4"] == 2
-    assert got[2]["redacted_text"].count("[IPV4]") == 2
-    assert "version 1.2" in got[2]["redacted_text"]  # not an IPv4
-    assert got[3]["redacted_text"] == "clean text, no pii"
-
-
-def test_decontaminate(spark):
-    words = " ".join(f"w{i}" for i in range(20))
-    docs = spark.createDataFrame(
-        [(1, words + " tail one"),            # contains the benchmark 13-gram
-         (2, "totally different words " * 5),
-         # w9 sits inside every 13-token window of a 20-token text,
-         # so changing it breaks every shared shingle
-         (3, words.replace("w9", "q9"))],
-        ["doc_id", "text"],
-    )
-    bench = spark.createDataFrame([(100, words)], ["bench_id", "text"])
-    pairs = {(r["doc_id"], r["bench_id"])
-             for r in analysis.contamination_pairs(docs, bench, n=13).collect()}
-    assert (1, 100) in pairs and all(d != 2 for d, _ in pairs)
-    kept = {r["doc_id"] for r in analysis.decontaminate(docs, bench, n=13).collect()}
-    assert kept == {2, 3}
-
-
-def test_build_vocab(spark):
-    docs = spark.createDataFrame(
-        [(1, "b a a B c"), (2, "a b rare"), (3, "  a  ")],
-        ["doc_id", "text"],
-    )
-    got = [tuple(r) for r in analysis.build_vocab(docs, min_count=2, top_n=10).collect()]
-    # counts: a=4 (lowercased), b=3, c/rare=1 (dropped by min_count)
-    assert got == [(1, "a", 4), (2, "b", 3)]
-    # top_n cuts deterministically on (count desc, token asc)
-    got1 = [r["tok"] for r in analysis.build_vocab(docs, min_count=1, top_n=3).collect()]
-    assert got1 == ["a", "b", "c"]  # c before rare on the count-1 tie
-
-
-def test_repetition_score(spark):
-    docs = spark.createDataFrame(
-        [(1, "x x x x x x"),       # all 3-grams identical -> 4 total, 1 uniq
-         (2, "a b c d e"),         # all distinct
-         (3, "a b"),               # shorter than n -> one truncated gram
-         (4, "")],                 # empty -> one "" gram (house convention)
-        ["doc_id", "text"],
-    )
-    got = {r["doc_id"]: (r["n_ngrams"], r["n_uniq_ngrams"], r["dup_ratio_x1000"])
-           for r in analysis.repetition_score(docs, n=3).collect()}
-    assert got[1] == (4, 1, 750)
-    assert got[2] == (3, 3, 0)
-    assert got[3] == (1, 1, 0)
-    assert got[4] == (1, 1, 0)
 
 
 def test_incremental_dedup(spark):
