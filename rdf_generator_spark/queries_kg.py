@@ -2,8 +2,9 @@
 
 The relational analogues in queries.py exercise each operator's *shape*
 on the TPC-H-ish testdata; the entries here run the operators on the
-actual KG path — the golden example corpus (the reference repo's shipped
-example files) and small VALUES fixtures — so EVERY §2 operator has a
+actual KG path — the golden example corpus (the repository's frozen
+corpus in the reference's five formats, sources/golden_corpus/) and
+small VALUES fixtures — so EVERY §2 operator has a
 driver-visible oracle row, not just pytest evidence.
 
 Round 3: the driver checks only the first 50 entries of the merged
@@ -44,9 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rdf_generator_spark import terms as T
-from rdf_generator_spark.sources.golden import REF as _REF
-
-_EX = os.path.join(_REF, "data/examples")
+from rdf_generator_spark.sources.golden import GOLDEN_DIR as _EX
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: Dict[str, str] = {}
@@ -307,43 +306,43 @@ QUERIES["s3_combined_outputs"] = s3_combined_outputs
 
 # >>> GOLDEN_PINS_START
 GOLDEN_PINS: Dict[str, Tuple[int, str]] = {
-    "a2_counter_labels_kg": (989, "8b93aa10001e81a2c10820b80e7cae13"),
-    "f10_tu_enrichment": (157, "ab797e952fbef1df0492e7477683fb13"),
-    "f11_revision_provenance": (30, "16beba8abb431832de6085f8b65fc2f5"),
-    "f12_matrix_node": (24, "ee8bbd33db2fec64e7d3b86270cc7890"),
-    "f1_cell_fanout": (868, "f92714be4f566e0967a2530111c25bd7"),
-    "f2_phe_statements": (1944, "1d0d1d46f91f9ed5f4525b233887f69d"),
-    "f3_statement_types_kg": (174, "02f7ec2521f4865801b4cf7aa895dfd1"),
-    "f4_locator_chain": (344, "e84506ed063be035e76f8457f0db0fe5"),
-    "f5_lastloc_quality": (174, "c94128cc4b9f69fcfc93d7321117607a"),
-    "f6_per_org_qua": (560, "b51fce3ed9fb84b55d833cf68b78e8cf"),
-    "f7_negation_complements": (21, "7462c7c78f72022d624036dd5f6d18cf"),
-    "f8_state_nodes": (88, "05902ea96cae1e4c0cad985103ec995c"),
-    "f9_species_dual_mint": (50, "2d9bb497d49695bbd5ef85da43a0de0c"),
-    "j4_char_cell_links": (100, "4fee09bbecc875c9c9323e76a5859ad7"),
-    "k3_org_mint": (210, "7314f7d7a9ec23bbc6b521c9cd3b4652"),
+    "a2_counter_labels_kg": (962, "c470bc541583fadfc0865ec4aafd6375"),
+    "f10_tu_enrichment": (157, "a6ecefed45fb48090d830ce189c21c7f"),
+    "f11_revision_provenance": (30, "78912223f06e107cef679b7fd8752b6d"),
+    "f12_matrix_node": (24, "6d137acaa98e4a459dcfe3ca317830f7"),
+    "f1_cell_fanout": (859, "d7226241c5d7fa923c148c274fd949ce"),
+    "f2_phe_statements": (1809, "39a7e3a3f79d25642fe60a4fabf358d2"),
+    "f3_statement_types_kg": (165, "cd2e86777aabb673fb77185e614c2f00"),
+    "f4_locator_chain": (410, "6373b8e1ce99567e4ba2b52ad32cf61c"),
+    "f5_lastloc_quality": (165, "3d581ee24d877f032c9bb5bb0f514ce9"),
+    "f6_per_org_qua": (453, "a8ef8337764244da296bdcdb6b828ad9"),
+    "f7_negation_complements": (7, "fc8db445118b9e943f6fbc12e212769a"),
+    "f8_state_nodes": (88, "0e244d0b48c005794955e2c1f2a257f8"),
+    "f9_species_dual_mint": (53, "a296001043cd0efc8a63f10292664e27"),
+    "j4_char_cell_links": (100, "0e442dc0be9ba641b437ea9319c0de26"),
+    "k3_org_mint": (245, "8663ce1a6f108e9b0a1ba89d34bdead7"),
 }
 CENSUS_PINS: List[Tuple[str, int, str]] = [
-    ("cell", 100, "30119292e6cd2e96b442aa43c9e0f276"),
+    ("cell", 100, "f1d11e3310987eefb7eed284805bfab7"),
     ("char", 10, "ba1413c76aa3c8e3f9a530d731bc2b18"),
-    ("comp", 3, "ebd3dc6699ae724ec65af4e8898a2d58"),
-    ("loc", 344, "5c455846e5ec6f7c86c129b7812a8ecc"),
+    ("comp", 1, "dec991942d481f16089f9f2e32f73398"),
+    ("loc", 410, "e5cc02f8a9bffa1c12ba6fece7bb0780"),
     ("mx", 1, "a0aef92755510bc6d8aab929196f94e2"),
-    ("org", 20, "f3829295692647c2635f89c00a673996"),
-    ("phe", 174, "e7d3f9016124ca7c898f8fa345de0122"),
-    ("qua", 174, "f6e9b1f0fccbc6dd9075f6f438486f15"),
-    ("restr", 3, "8e48291b7e8ef1f85492176b4a28ae3c"),
-    ("sp", 10, "cf456f193706784051c192cd150461f4"),
-    ("src", 10, "634011bbe29bbfaa8e1a20a06ae667c9"),
-    ("sta", 22, "957ac180ac65fb6123173cb634e7a932"),
-    ("tu", 10, "0dd3b9b2eed388a90e0791c56c156d1c"),
-    ("var", 154, "a6fa3a9c8c1026b45a6f5b31c1b5cf62"),
+    ("org", 20, "9d4314e806f19d129edbfe1b1abeb459"),
+    ("phe", 165, "eb099b2cc2733b6526df4e4ec78735fd"),
+    ("qua", 165, "b94e9a8c80b500b9d14e28a053c2829b"),
+    ("restr", 1, "a3d99463720e22f99fa74ddf554ff65e"),
+    ("sp", 10, "c7eacdc594a4ab39890f6e326dea55a3"),
+    ("src", 10, "9b494a46d1a5308e614807d2e695ae1e"),
+    ("sta", 22, "19eb5acb05df0e1d1584c16a81f7e9a3"),
+    ("tu", 10, "32157e65df702f0d67b66d502782ca2c"),
+    ("var", 79, "0ee8f30f32351e9684968a18886564be"),
 ]
 PARTS_PINS: List[Tuple[str, int, str]] = [
-    ("char", 209, "1b90021ddba3d88651bfcf4b33c6106e"),
-    ("matrix", 5845, "b2f8fe13ae6734ff9f8dbe4f55a8cc46"),
-    ("species", 80, "f9fae9f27e9743de17744c1d3cf6b3c1"),
-    ("final", 6012, "f1f4411eb41697e3dcbb413e8768f3b6"),
+    ("char", 209, "05255572a817b306690018fec3caf8a9"),
+    ("matrix", 5442, "3501295410390fbd92c64ffd63739e08"),
+    ("species", 83, "18bed4eb8bbc71de27dbb16c88d2191b"),
+    ("final", 5612, "7b7b0f30c526b74266c5299fc2514cde"),
 ]
 # <<< GOLDEN_PINS_END
 
@@ -1034,13 +1033,13 @@ ORACLES["src5_metadata_scan"] = f"""
 
 def src6_owl_label_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OWL label index (SRC6, main.py:277-293): normalized label -> URI,
-    first-wins in document order, from the golden pmck ontology."""
+    first-wins in document order, from the golden OWL vocabulary."""
     from rdf_generator_spark.sources.corpus import vocab_df_from_corpus
 
     return vocab_df_from_corpus(spark, _golden_corpus(spark))
 
 
-_OWL = os.path.join(_REF, "data/ontologies/pmck.owl")
+_OWL = os.path.join(_EX, "vocab.owl")
 ORACLES["src6_owl_label_index"] = f"""
     WITH doc AS (SELECT content FROM read_text('{_OWL}')),
     base AS (SELECT regexp_extract(content, 'xml:base="([^"]+)"', 1) AS b,
@@ -1243,22 +1242,22 @@ ORACLES["src7_shacl_shapes"] = _src7_oracle()
 
 # >>> O1O2_PIN_START
 O1O2_PINS: List[Tuple[int, int, int, str]] = [
-    (0, 0, 72, "1e3480a9c717b3168f1df26ee98b749c"),
-    (1, 0, 10, "ea7317c2a70e204aa832dfac8b5207f1"),
-    (1, 1, 174, "3448adadf57ca05120c71461c5529335"),
-    (1, 2, 20, "6dd23a42bb970f244180c3f2369dcf83"),
-    (1, 3, 344, "8bbcc0a0079972f3c56665492507dd67"),
-    (1, 4, 154, "d20d224428e6b9fb5ccc4bafcb56ca66"),
-    (1, 5, 174, "546ff84e5898dfccfa5b209fc8534bb8"),
-    (1, 6, 22, "98ad2531c995316531e870e40a4dae8d"),
+    (0, 0, 60, "cf0c9e411f5e6b13cd852d8dd14ff7d3"),
+    (1, 0, 10, "51d6d500e3bd87f2ebe9e88cdaff7a33"),
+    (1, 1, 165, "61379cc33129412001d0a639eb765334"),
+    (1, 2, 20, "e38d34b9aa1b3707c29ef9f760c42024"),
+    (1, 3, 410, "95a1af516bfb91a442fcecc80241175a"),
+    (1, 4, 79, "13e25a48bb8ac509b0356f161672b871"),
+    (1, 5, 165, "999feabbc28ba0c30624292441a66e1d"),
+    (1, 6, 22, "a9bcb4365e19f34402f65ca1d78ea93f"),
     (1, 7, 1, "882b09c960f05c561a6b4e6caae70ca6"),
     (1, 8, 10, "d46fdb968ade9a516aa0d9a835ad95a5"),
-    (1, 9, 10, "f16b4cae672e699bd7176ca03e359fc5"),
-    (1, 10, 100, "53b509948deb0bfb3af12dde4c05c456"),
+    (1, 9, 10, "0fe46b91715b73758258c064bf4f4507"),
+    (1, 10, 100, "4dd313042d7bf99a37d68e1919a5dace"),
     (2, 0, 15, "c2037f3f957d1b4c22bcb6a086c9d571"),
     (3, 0, 5, "140ac8eee8db8d3d8463e22e45d26a6f"),
     (4, 0, 3, "9cc9a21dccf11990a77382a4af847cdd"),
-    (5, 0, 10, "154c7a2bf6d24fdb2711cc8628b337d6"),
+    (5, 0, 10, "8bd4f67157903c01d020d4b44c050225"),
 ]
 # <<< O1O2_PIN_END
 
@@ -1277,10 +1276,11 @@ for _q in [v2_rdfs_closure, cc_canonical_map, lineage_resume_skip,
 
 def v3_validation_scopes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V3/S4: the 23-scope validation report on the golden corpus —
-    (scope, conforms, n_violations). Pinned oracle captured from a
-    validator run whose semantics are mutation-tested against the
-    reference's pySHACL behavior in tests/test_validation.py (the
-    matrix scope legitimately fails TUShape, matching the reference)."""
+    (scope, conforms, n_violations). The pinned oracle follows from the
+    scope rule below; the validator's semantics are mutation-tested
+    against the reference's pySHACL behavior in tests/test_validation.py
+    (the matrix scope legitimately fails TUShape, matching the
+    reference)."""
     rows = _golden_parts(spark)["scopes"]
     return spark.createDataFrame(
         rows, "scope string, conforms boolean, n_violations int"
@@ -1290,13 +1290,16 @@ def v3_validation_scopes(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUERIES["v3_validation_scopes"] = v3_validation_scopes
 
 
-# V3/S4 pinned oracle: captured from a verified validator run (the
-# validator's semantics — incl. the deliberate matrix-scope TUShape
-# failure matching pySHACL — are mutation-tested in
-# tests/test_validation.py; refsim has no validator to derive from).
+# V3/S4 pinned oracle, derived from the golden corpus files by the
+# scope rule (refsim has no validator to derive from): one scope per
+# Char_ID (C1-C10), per taxon of the NEXUS matrix, plus CDAO Matrix,
+# Species Combined and Final Combined Graph; every scope conforms with
+# 0 violations except CDAO Matrix, which fails TUShape minCount once
+# per taxon (TUs lack iao:denotes until TU enrichment, as pySHACL
+# reports for the reference; mutation-tested in tests/test_validation.py).
 ORACLES["v3_validation_scopes"] = (
     "SELECT scope, conforms, CAST(n_violations AS INT) AS n_violations "
-    "FROM (VALUES ('CDAO Matrix', FALSE, 10), ('Char_ID C1', TRUE, 0), ('Char_ID C10', TRUE, 0), ('Char_ID C2', TRUE, 0), ('Char_ID C3', TRUE, 0), ('Char_ID C4', TRUE, 0), ('Char_ID C5', TRUE, 0), ('Char_ID C6', TRUE, 0), ('Char_ID C7', TRUE, 0), ('Char_ID C8', TRUE, 0), ('Char_ID C9', TRUE, 0), ('Final Combined Graph', TRUE, 0), ('Species Combined', TRUE, 0), ('TU Ancyloscelis_apiformis', TRUE, 0), ('TU Anthidium_porterae', TRUE, 0), ('TU Arhysoceble_picta', TRUE, 0), ('TU Augochlora_pura', TRUE, 0), ('TU Coelioxys_octodentata', TRUE, 0), ('TU Diadasina_distincta', TRUE, 0), ('TU Euglossa_cordata', TRUE, 0), ('TU Halictus_rubicundus', TRUE, 0), ('TU Meganomia_gigas', TRUE, 0), ('TU Partamona_cupira', TRUE, 0)) "
+    "FROM (VALUES ('CDAO Matrix', FALSE, 10), ('Char_ID C1', TRUE, 0), ('Char_ID C10', TRUE, 0), ('Char_ID C2', TRUE, 0), ('Char_ID C3', TRUE, 0), ('Char_ID C4', TRUE, 0), ('Char_ID C5', TRUE, 0), ('Char_ID C6', TRUE, 0), ('Char_ID C7', TRUE, 0), ('Char_ID C8', TRUE, 0), ('Char_ID C9', TRUE, 0), ('Final Combined Graph', TRUE, 0), ('Species Combined', TRUE, 0), ('TU Ancyloscelis_gigas', TRUE, 0), ('TU Arhysoceble_tarsata', TRUE, 0), ('TU Centris_frontalis', TRUE, 0), ('TU Diadasina_pura', TRUE, 0), ('TU Euglossa_apiformis', TRUE, 0), ('TU Meganomia_frontalis', TRUE, 0), ('TU Meganomia_gigas', TRUE, 0), ('TU Melipona_octodentata', TRUE, 0), ('TU Xylocopa_apiformis', TRUE, 0), ('TU Xylocopa_cupira', TRUE, 0)) "
     "AS t(scope, conforms, n_violations)"
 )
 

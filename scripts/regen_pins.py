@@ -2,11 +2,15 @@
 """Regenerate the pinned oracle VALUES in rdf_generator_spark/queries_kg.py.
 
 Ground truth is the pure-Python executable reference spec
-(tests/oracle/refsim.py) run on the golden example corpus — an
-independent derivation from the Spark pipeline. Run after any semantic
-pipeline change:
+(tests/oracle/refsim.py) run on the golden example corpus (the frozen
+files in rdf_generator_spark/sources/golden_corpus/) — an independent
+derivation from the Spark pipeline. Run from the repository root after
+any semantic pipeline change or any edit of the corpus files:
 
-    PYTHONPATH=/root/repo python scripts/regen_pins.py
+    PYTHONPATH=. python scripts/regen_pins.py
+
+The pinned v3_validation_scopes values are not written here: refsim has
+no validator, so they follow from the scope rule stated next to them.
 """
 
 from __future__ import annotations

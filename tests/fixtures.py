@@ -1,18 +1,31 @@
-"""Golden fixture, Spark-free: the reference's shipped example corpus
-(loaded by rdf_generator_spark.sources.golden; FIXTURES.md §1) parsed
-by the pure-Python extractors."""
+"""Golden fixture, Spark-free: a golden corpus (by default the
+repository's frozen one, loaded by rdf_generator_spark.sources.golden;
+FIXTURES.md §1) parsed by the pure-Python extractors."""
 
 from __future__ import annotations
 
-from rdf_generator_spark.sources.golden import golden_corpus_rows
+import pytest
+
+from rdf_generator_spark.sources.golden import (
+    EXAMPLES, REF, golden_corpus_rows, reference_available,
+)
+
+# Tests on the reference's own example corpus run only where it is mounted.
+needs_reference = pytest.mark.skipif(
+    not reference_available(),
+    reason="reference example corpus not found under "
+    f"RDFGEN_REFERENCE_DIR={REF} ({', '.join(rel for rel, _ in EXAMPLES)})",
+)
 
 
-def golden_parsed():
-    """Parsed golden inputs, no Spark: (chars, cells, species, metadata, vocab)."""
+def golden_parsed(rows=None):
+    """Parsed golden inputs, no Spark: (chars, cells, species, metadata,
+    vocab) of `rows` (default: the golden corpus rows)."""
     from rdf_generator_spark.sources import parsers as P
     from rdf_generator_spark.sources.corpus import build_label_index
 
-    by_lang = {lang: content for _, _, _, lang, content in golden_corpus_rows()}
+    by_lang = {lang: content
+               for _, _, _, lang, content in rows or golden_corpus_rows()}
     chars = P.char_rows_from_json(by_lang["json"])
     cells = P._parse_nexus_matrix(by_lang["nexus"])
     species = P.species_rows_from_json(by_lang["species-json"])

@@ -1,12 +1,20 @@
+"""Parser tests. Most assert facts about the reference's own example
+files (C1's locator, the NEXUS gaps, the pmck.owl labels, the logged fill
+counts), so they run only where that corpus is mounted
+(RDFGEN_REFERENCE_DIR; sources/golden.py::reference_available)."""
+
 from __future__ import annotations
 
 from rdf_generator_spark.sources import parsers
 from rdf_generator_spark.sources.corpus import build_label_index, vocab_df_from_corpus
-from rdf_generator_spark.sources.golden import golden_corpus_df, golden_corpus_rows
+from rdf_generator_spark.sources.golden import reference_corpus_df, reference_corpus_rows
+
+from tests.fixtures import needs_reference
 
 
+@needs_reference
 def test_parse_chars(spark):
-    chars = parsers.parse_char_docs(golden_corpus_df(spark)).orderBy("char_pos").collect()
+    chars = parsers.parse_char_docs(reference_corpus_df(spark)).orderBy("char_pos").collect()
     assert len(chars) == 10
     c1 = chars[0]
     assert c1["char_id"] == "C1"
@@ -51,8 +59,9 @@ def test_parsers_never_emit_null_arrays(spark):
     assert [(len(r["locators"]), len(r["states"])) for r in got] == want
 
 
+@needs_reference
 def test_parse_nexus(spark):
-    cells = parsers.parse_nexus_docs(golden_corpus_df(spark)).collect()
+    cells = parsers.parse_nexus_docs(reference_corpus_df(spark)).collect()
     assert len(cells) == 100
     by = {(c["taxon"], c["char_index"]): c for c in cells}
     assert by[("Arhysoceble_picta", 0)]["symbol"] == "0"
@@ -64,8 +73,9 @@ def test_parse_nexus(spark):
     assert len(gaps) == 3
 
 
+@needs_reference
 def test_parse_species(spark):
-    sp = parsers.parse_species_docs(golden_corpus_df(spark)).orderBy("sp_pos").collect()
+    sp = parsers.parse_species_docs(reference_corpus_df(spark)).orderBy("sp_pos").collect()
     assert len(sp) == 10
     assert sp[0]["input_name"] == "Ancyloscelis_apiformis"
     assert sp[0]["valid_name"] == "Ancyloscelis_apiformis_(Fabricius,_1793)"
@@ -73,23 +83,26 @@ def test_parse_species(spark):
     assert sp[0]["zoobank_id"] is None
 
 
+@needs_reference
 def test_parse_metadata(spark):
-    meta = parsers.parse_metadata_docs(golden_corpus_df(spark)).collect()
+    meta = parsers.parse_metadata_docs(reference_corpus_df(spark)).collect()
     assert len(meta) == 10
     m = {r["char_id"]: r["source_text"] for r in meta}
     assert m["C1"] == "character 7 of Roig-Alsina and Michener (1993)"
 
 
+@needs_reference
 def test_owl_label_index(spark):
-    owl = next(r for r in golden_corpus_rows() if r[3] == "owl")
+    owl = next(r for r in reference_corpus_rows() if r[3] == "owl")
     index = build_label_index(owl[4])
     assert len(index) == 320
     assert index["about the same"].endswith("pmck.owl#PMCK_0000005")
     assert "glossal rod" in index
-    vocab = vocab_df_from_corpus(spark, golden_corpus_df(spark))
+    vocab = vocab_df_from_corpus(spark, reference_corpus_df(spark))
     assert vocab.count() == 320
 
 
+@needs_reference
 def test_fill_stats_matches_reference_counts(spark):
     """The reference logs filled=17 unresolved=3 on the example corpus
     (J1 summary, main.py:531-535 — 3 misses are the negation labels)."""
@@ -97,7 +110,7 @@ def test_fill_stats_matches_reference_counts(spark):
     from rdf_generator_spark.sources import parsers
     from rdf_generator_spark.sources.corpus import vocab_df_from_corpus
 
-    corpus = golden_corpus_df(spark)
+    corpus = reference_corpus_df(spark)
     chars = parsers.parse_char_docs(corpus)
     vocab = vocab_df_from_corpus(spark, corpus)
     row = fill_stats(chars, vocab).collect()
@@ -105,13 +118,14 @@ def test_fill_stats_matches_reference_counts(spark):
     assert row[0]["filled"] == 17 and row[0]["unresolved"] == 3
 
 
+@needs_reference
 def test_fuzzy_match_labels(spark):
     """Similarity tier: misspelled mentions resolve to the nearest vocab
     label; unrelated mentions stay unresolved."""
     from rdf_generator_spark.operators.linking import fuzzy_match_labels
     from rdf_generator_spark.sources.corpus import vocab_df_from_corpus
 
-    vocab = vocab_df_from_corpus(spark, golden_corpus_df(spark))
+    vocab = vocab_df_from_corpus(spark, reference_corpus_df(spark))
     mentions = spark.createDataFrame(
         [("glosal rod",), ("Basal  Area",), ("zzz qqq xxx",)], ["label"]
     )
@@ -127,6 +141,7 @@ def test_fuzzy_match_labels(spark):
     assert got["Basal  Area"] == idx["basal area"]
 
 
+@needs_reference
 def test_fuzzy_tier_wired_into_fill(spark):
     """Opt-in fuzzy second pass: a misspelled locator label resolves at
     threshold; the default (exact-only) path leaves it missing and the
@@ -139,7 +154,7 @@ def test_fuzzy_tier_wired_into_fill(spark):
     from rdf_generator_spark.sources import parsers
     from rdf_generator_spark.sources.corpus import vocab_df_from_corpus
 
-    corpus = golden_corpus_df(spark)
+    corpus = reference_corpus_df(spark)
     vocab = vocab_df_from_corpus(spark, corpus)
     chars = parsers.parse_char_docs(corpus)
     # plant a typo'd locator with no URI ("glosal rod" ~ "glossal rod")

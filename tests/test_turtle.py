@@ -110,7 +110,7 @@ def test_kb_iri_policy(rendered):
     text, _ = rendered
     # generated kb IRIs compact, species concept URIs full (main.py:1301-1325)
     assert re.search(r"kb:phe-[0-9a-f-]{36}", text)
-    assert "<http://www.phenobees.org/kb#Arhysoceble_picta>" in text
+    assert "<http://www.phenobees.org/kb#Diadasina_pura>" in text
     # forced-full prefixes stay full IRIs
     assert "cdao:0000075" not in text
     assert "<http://purl.obolibrary.org/obo/CDAO_0000075>" in text
@@ -142,13 +142,13 @@ def test_species_files(spark, tmp_path):
     n = write_species_files(res, str(tmp_path / "species"))
     assert n == 10
     files = sorted(os.listdir(tmp_path / "species"))
-    assert "Arhysoceble_picta.ttl" in files
-    text = open(tmp_path / "species" / "Arhysoceble_picta.ttl").read()
+    assert "Diadasina_pura.ttl" in files
+    text = open(tmp_path / "species" / "Diadasina_pura.ttl").read()
     got = parse_turtle(text)
     # species file holds exactly that taxon's concept + instance triples
     assert any("sp-" in t[0] for t in got)
-    assert any(t[2] == "Arhysoceble_picta" and t[3] for t in got)
-    assert all("Ancyloscelis" not in t[0] and "Ancyloscelis" not in str(t[2]) for t in got)
+    assert any(t[2] == "Diadasina_pura" and t[3] for t in got)
+    assert all("Centris_frontalis" not in t[0] and "Centris_frontalis" not in str(t[2]) for t in got)
 
 
 def test_shard_writer_matches_single_file(spark, tmp_path):

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from rdf_generator_spark import terms as T
 from rdf_generator_spark.plans.pipeline import build_graph
+from rdf_generator_spark.queries_kg import GOLDEN_PINS
 from rdf_generator_spark.sources.golden import golden_corpus_df
 from rdf_generator_spark.validation.shacl_rules import (
     RULES,
@@ -57,7 +58,7 @@ def test_mutation_missing_organism(spark, result):
     v = validate(mutated, scope="mut")
     rows = v.filter(F.col("path") == T.PHB_HAS_ORGANISM).collect()
     # every phenotype statement now violates its shape's org minCount
-    assert len(rows) == 174
+    assert len(rows) == GOLDEN_PINS["f3_statement_types_kg"][0]
     # and the organisms are no longer focus nodes of OrganismNodeShape
     assert v.filter(F.col("shape") == "OrganismNodeShape").count() == 0
 
@@ -121,7 +122,7 @@ def test_scoped_validation_report(spark, result):
     assert by["Species Combined"]["conforms"]
     assert not by["CDAO Matrix"]["conforms"]
     assert by["Char_ID C1"]["conforms"]
-    assert by["TU Arhysoceble_picta"]["conforms"]
+    assert by["TU Diadasina_pura"]["conforms"]
     text = render_summary(rows, violations.collect())
     assert "==== CDAO Matrix ====" in text and "TUShape" in text
     # pySHACL-shaped skeleton (reference main.py:1220-1225 appends the
