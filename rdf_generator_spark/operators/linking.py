@@ -146,11 +146,14 @@ def fill_character_uris(
     keys = [*DOC_KEYS, "path", "char_pos"]
 
     def _fill_all(df, v):
-        out = fill_scalar_uri(df, "org_label", "org_uri", v)
-        out = fill_scalar_uri(out, "var_label", "var_uri", v,
-                              enabled=F.col("has_variable"))
-        out = fill_both_arrays_uris(out, v, keys)
-        return out
+        # The array fill first: its join-back reads its input in two
+        # branches, so scalar fills beneath it would run twice. The
+        # fills touch disjoint columns (locators/states vs org_uri and
+        # var_uri), so they commute.
+        out = fill_both_arrays_uris(df, v, keys)
+        out = fill_scalar_uri(out, "org_label", "org_uri", v)
+        return fill_scalar_uri(out, "var_label", "var_uri", v,
+                               enabled=F.col("has_variable"))
 
     out = _fill_all(chars, vocab)
     if fuzzy_threshold is None:

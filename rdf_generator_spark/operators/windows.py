@@ -14,9 +14,13 @@ numbering in two phases:
 
 Phase 1 parallelizes a document across as many tasks as it has buckets;
 phase 2's window runs over a table whose size is documents x buckets,
-not rows. Equivalence to the single-window form is golden-tested
-(exact :id-N label equality on the reference corpus) and property-
-tested on skewed synthetic corpora.
+not rows. Its input is evaluated twice (numbering and counts), so the
+build uses it only where a document's rows grow with its cell count:
+cells, visits and first-visit entities. The state table (characters x
+states, from one character JSON parsed in one task) never needs it.
+Equivalence to the single-window form is golden-tested (exact :id-N
+label equality on the golden corpus) and property-tested on skewed
+synthetic corpora.
 
 Reference: the standard two-phase ranking pattern (e.g. Spark AQE docs
 and the zipWithIndex lineage) re-expressed in DataFrame algebra.
@@ -24,7 +28,7 @@ and the zipWithIndex lineage) re-expressed in DataFrame algebra.
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -37,7 +41,6 @@ def seq_number(
     order_cols: Sequence[str],
     bucket: Column,
     out: str = "rn",
-    counted: Optional[str] = None,
 ) -> DataFrame:
     """Add `out` = row_number() over (partition by part_cols order by
     order_cols), computed bucket-parallel.
@@ -46,27 +49,13 @@ def seq_number(
     partition (typically a block of the leading order column, e.g.
     ``floor(col("char_pos") / 8)``) — that is what makes within-bucket
     numbering + bucket offsets equal the global numbering.
-
-    With `counted` (the name of a boolean column) only counted rows
-    advance the number: `out` is the running count of counted rows up
-    to and including this row, i.e. ``sum(int(counted))`` over the
-    same window with a rows-unbounded-preceding frame.
     """
     part = list(part_cols)
-    b = bucket.cast("long").alias("__bkt")
-    dfb = df.withColumn("__bkt", b)
-
+    dfb = df.withColumn("__bkt", bucket.cast("long"))
     w_in = Window.partitionBy(*part, "__bkt").orderBy(*order_cols)
-    if counted is None:
-        one, rank_in = F.lit(1), F.row_number().over(w_in)
-    else:
-        one = F.col(counted).cast("int")
-        rank_in = F.sum(one).over(
-            w_in.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-    dfb = dfb.withColumn("__rn_in", rank_in)
+    dfb = dfb.withColumn("__rn_in", F.row_number().over(w_in))
 
-    counts = dfb.groupBy(*part, "__bkt").agg(F.sum(one).alias("__n"))
+    counts = dfb.groupBy(*part, "__bkt").agg(F.count(F.lit(1)).alias("__n"))
     w_off = (
         Window.partitionBy(*part)
         .orderBy("__bkt")

@@ -409,7 +409,9 @@ def build_graph(
     change, not a code change). `run_resumable` stages under its output
     directory automatically.
 
-    ``counter_buckets``: sequential :id-N counter execution strategy.
+    ``counter_buckets``: sequential :id-N counter execution strategy
+    for the cell-scale counters (cells, visits, first-visit entities;
+    the state counters always use one window per document).
     ``"auto"`` (default) gates on the footer probe `_max_doc_bytes`
     (zero jobs unless the footers are ambiguous): when the largest
     document's content reaches ``_GIANT_DOC_CONTENT_BYTES`` the counters
@@ -435,22 +437,16 @@ def build_graph(
         dim_broadcast = len(files) <= _DIM_BROADCAST_FILE_LIMIT
     bhint = F.broadcast if dim_broadcast else (lambda d: d)
 
-    def _seq(df, order_cols, out, counted=None):
-        """Per-document sequential numbering; two-phase when
-        counter_buckets is set (giant-document parallelism). With
-        `counted` (a boolean column) only those rows advance the
-        counter: `out` is the number of counted rows up to this one."""
+    def _seq(df, part_cols, order_cols, out):
+        """Sequential numbering of a cell-scale table within `part_cols`;
+        two-phase when counter_buckets is set (giant-document parallelism)."""
         if counter_buckets:
             return seq_number(
-                df, DOC, order_cols,
+                df, part_cols, order_cols,
                 F.floor(F.col(order_cols[0]) / counter_buckets), out=out,
-                counted=counted,
             )
-        w = Window.partitionBy(*DOC).orderBy(*order_cols)
-        if counted is None:
-            return df.withColumn(out, F.row_number().over(w))
-        w = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        return df.withColumn(out, F.sum(F.col(counted).cast("int")).over(w))
+        w = Window.partitionBy(*part_cols).orderBy(*order_cols)
+        return df.withColumn(out, F.row_number().over(w))
 
     # Hub-table materialization happens TOP-DOWN: each hub is
     # checkpointed as soon as its plan is complete, and every downstream
@@ -707,10 +703,9 @@ def build_graph(
             F.when(F.col("neg_resolved"), kb_iri("comp", F.col("resolved_uri"))),
         )
     )
-    # A2 counters (single per-document window by default; two-phase via
-    # counter_buckets — see build_graph docstring). The reference labels
-    # a STATE/QUALITY node only when it has no label yet (the has_label
-    # guards in refsim's process_phenotype and handle_quality): two
+    # A2 state/quality counters. The reference labels a STATE/QUALITY
+    # node only when it has no label yet (the has_label guards in
+    # refsim's process_phenotype and handle_quality): two
     # states of one character with the same IRI seed (same URI, or same
     # label and no URI) take ONE number, and the repeat carries the
     # first occurrence's label.
@@ -724,13 +719,20 @@ def build_graph(
         st.withColumn("__first_m", F.row_number().over(w_doc_seed) == 1)
         .withColumn("__first_b", F.row_number().over(w_char_seed) == 1)
     )
-    st = _seq(st, ["char_pos", "state_idx"], "__rn_m", counted="__first_m")
-    st = _seq(st, ["char_pos", "state_idx"], "__rn_b", counted="__first_b")
+    # The counters are running counts of first occurrences over one
+    # per-document window, whatever counter_buckets says: a document's
+    # state rows are its characters x states, all from one character
+    # JSON that the fused parse already handles in one Python call in
+    # one task, so numbering them in one task is never the straggler (a
+    # million-cell NEXUS has 2,000 characters, about 8k state rows).
+    w_doc_run = Window.partitionBy(*DOC).orderBy("char_pos", "state_idx").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow)
     n_first_b = F.sum(F.col("__first_b").cast("int"))
-    if counter_buckets:
-        st = st.join(st.groupBy(*DOC).agg(n_first_b.alias("__n_states")), DOC)
-    else:
-        st = st.withColumn("__n_states", n_first_b.over(Window.partitionBy(*DOC)))
+    st = (
+        st.withColumn("__rn_m", F.sum(F.col("__first_m").cast("int")).over(w_doc_run))
+        .withColumn("__rn_b", n_first_b.over(w_doc_run))
+        .withColumn("__n_states", n_first_b.over(Window.partitionBy(*DOC)))
+    )
     st = (
         st.withColumn("__rn_m", F.first("__rn_m").over(w_doc_seed))
         .withColumn("__label_m", F.first("labelN").over(w_doc_seed))
@@ -777,7 +779,7 @@ def build_graph(
         .withColumn("norm_taxon", norm_taxon_label(F.col("taxon")))
         .withColumn("state_index", strip_col(F.col("symbol")).try_cast("int"))
     )
-    cells_j = _seq(cells_j, ["char_pos", "taxon_pos"], "cell_n")
+    cells_j = _seq(cells_j, DOC, ["char_pos", "taxon_pos"], "cell_n")
 
     variants = F.when(
         F.col("dup_for_sex"),
@@ -839,7 +841,7 @@ def build_graph(
         "left",
     ).drop("__st_repo", "__st_commit")
 
-    visits = _seq(visits, ["char_pos", "taxon_pos", "vord"], "phe_n")
+    visits = _seq(visits, DOC, ["char_pos", "taxon_pos", "vord"], "phe_n")
 
     # The IRI mints below (5 sha1 forests per row + the locator-chain
     # fold) are the pipeline's heaviest per-row compute. Partitioning at
@@ -1154,9 +1156,8 @@ def _assemble(spark, corpus, charsx, states_x, cells_j, visits, species, cells, 
     # conditional var candidate, and one candidate per locator-chain
     # element; one (doc, kind, iri) min_by aggregation picks each
     # entity's first visit (order keys are unique per row within a
-    # document, so min_by picks exactly the old rn=1 row); the per-kind
-    # filters then feed the same per-document `seq` numbering as before
-    # over identical row sets. The per-document rank goes through `seq`
+    # document, so min_by picks exactly the old rn=1 row); one `seq`
+    # numbering partitioned by (doc, kind) then numbers all three kinds
     # (two-phase when counter_buckets is set).
     _FC = lambda kind, iri, lpos, pfx: F.struct(  # noqa: E731
         F.lit(kind).alias("kind"), iri.alias("iri"),
@@ -1196,25 +1197,22 @@ def _assemble(spark, corpus, charsx, states_x, cells_j, visits, species, cells, 
         Triple("iri", T.RDFS_LABEL, "concat(pfx, ':id-', __n)", lit=True),
     ]
 
-    def first_visit_labels(kind, order_cols, fallback):
-        firsts = firsts_all.filter(F.col("kind") == kind).drop("kind")
-        firsts = seq(firsts, list(order_cols), "__n")
-        firsts = firsts.withColumn(
-            "pfx",
-            F.when(F.col("pfx").isNull(), F.lit(fallback))
-            .otherwise(strip_col(F.col("pfx"))),
-        )
-        return emit(firsts, first_visit)
-
-    org_labels = first_visit_labels("org", ["char_pos", "taxon_pos", "vord"], "organism")
-    loc_labels = first_visit_labels(
-        "loc", ["char_pos", "taxon_pos", "vord", "lpos"], "locator")
-    var_labels = first_visit_labels("var", ["char_pos", "taxon_pos", "vord"], "variable")
+    # Each kind is numbered exactly as a window of its own would number
+    # it: org and var candidates carry lpos = 0, a visit row holds at
+    # most one org IRI and one var IRI, and a (row, lpos) pair holds one
+    # loc IRI, so within a kind the order keys are unique and adding
+    # lpos to the org/var order changes nothing.
+    firsts = seq(firsts_all, DOC + ["kind"],
+                 ["char_pos", "taxon_pos", "vord", "lpos"], "__n")
+    fallback = F.when(F.col("kind") == "org", "organism").when(
+        F.col("kind") == "loc", "locator").otherwise("variable")
+    firsts = firsts.withColumn("pfx", F.coalesce(strip_col(F.col("pfx")), fallback))
+    first_labels = emit(firsts, first_visit)
 
     matrix_part = union_emissions(
         mx_triples, mx_char_links, char_nodes.drop("char_id"),
         sp2_triples.drop("char_id"), sta_qua_triples,
-        cell_triples, visit_triples, loc_triples, org_labels, loc_labels, var_labels,
+        cell_triples, visit_triples, loc_triples, first_labels,
     )
 
     # -- species + TU parts ----------------------------------------------

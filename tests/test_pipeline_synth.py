@@ -15,21 +15,27 @@ from rdf_generator_spark import terms as T
 from rdf_generator_spark.plans.pipeline import build_graph
 from rdf_generator_spark.sources import parsers as P
 from rdf_generator_spark.sources.corpus import build_label_index, corpus_df
+from rdf_generator_spark.sources.golden import golden_corpus_rows
 from rdf_generator_spark.sources.synth import synth_corpus_rows
 
 from tests.oracle.refsim import RefSim
 
 
-@pytest.mark.parametrize("seed,dataset_id", [
-    pytest.param(7, None, id="7"),
-    pytest.param(23, None, id="23"),
+@pytest.mark.parametrize("seed,dataset_id,counter_buckets", [
+    pytest.param(7, None, "auto", id="7"),
+    pytest.param(23, None, "auto", id="23"),
     # run_pipeline.py --dataset-id: tier-1 salt over the metadata salt
-    pytest.param(7, "demo", id="7-demo"),
+    pytest.param(7, "demo", "auto", id="7-demo"),
+    # width 1: one bucket per character, so the two-phase numbering of
+    # cells, visits and the merged first-visit kinds crosses a bucket
+    # boundary at every character
+    pytest.param(23, None, 1, id="23-buckets1"),
 ])
-def test_synth_corpus_matches_oracle_per_doc(spark, seed, dataset_id):
+def test_synth_corpus_matches_oracle_per_doc(spark, seed, dataset_id, counter_buckets):
     rows = synth_corpus_rows(n_datasets=3, ntax=8, nchar=8, seed=seed)
     corpus = corpus_df(spark, rows)
-    res = build_graph(spark, corpus, dataset_id=dataset_id)
+    res = build_graph(spark, corpus, dataset_id=dataset_id,
+                      counter_buckets=counter_buckets)
     got_by_doc = defaultdict(set)
     for r in res["triples"].collect():
         got_by_doc[r["repo"]].add((r["s"], r["p"], r["o"], bool(r["lit"]), r["dt"]))
@@ -102,14 +108,18 @@ def test_repeated_state_seed_matches_oracle(spark, counter_buckets):
         assert got == want, (repo, sorted(got - want)[:4], sorted(want - got)[:4])
 
 
-@pytest.mark.parametrize("seed,counter_buckets", [(7, None), (23, 2)])
+@pytest.mark.parametrize("seed,counter_buckets", [
+    (7, None), (23, 2), pytest.param(None, None, id="golden"),
+])
 def test_label_subjects_only_premise(spark, seed, counter_buckets):
     """The final graph's apply_label_priority(label_subjects_only=True)
     assumes (a) every matrix-labelled subject of its target keeps an
     rdfs:label row there and (b) the target has no duplicate rows. The
     fast path keeps its target's subject set and label presence, so both
-    are checked on the outputs build_graph returns."""
-    rows = synth_corpus_rows(n_datasets=3, ntax=6, nchar=6, seed=seed)
+    are checked on the outputs build_graph returns, on seeded synthetic
+    corpora and on the golden corpus (seed None)."""
+    rows = (golden_corpus_rows() if seed is None
+            else synth_corpus_rows(n_datasets=3, ntax=6, nchar=6, seed=seed))
     res = build_graph(spark, corpus_df(spark, rows), counter_buckets=counter_buckets)
 
     def key(r):

@@ -609,13 +609,17 @@ FINAL_EXCHANGE_BUDGET = 22
 # Shuffle and broadcast exchange nodes over the plans one build executes
 # (the hub materializations, the contract check and the dimension
 # collect), as the SQL status store records them.
-BUILD_EXCHANGE_BUDGET = 26
-BUILD_BROADCAST_EXCHANGE_BUDGET = 11
+BUILD_EXCHANGE_BUDGET = 15
+BUILD_BROADCAST_EXCHANGE_BUDGET = 10
+# The same over a build of the same corpus on the two-phase counter path
+# (counter_buckets=2).
+BUCKETED_BUILD_EXCHANGE_BUDGET = 22
+BUCKETED_BUILD_BROADCAST_EXCHANGE_BUDGET = 16
 # py4j commands the driver sends for one build_graph on the same corpus
 # (plan construction plus the hub materialization jobs), not counting
 # the release commands py4j sends when Python garbage-collects a JVM
 # reference: their number follows the collector's timing.
-BUILD_PY4J_BUDGET = 20255
+BUILD_PY4J_BUDGET = 19855
 
 
 def test_final_graph_exchange_budget(synth_build):
@@ -625,13 +629,29 @@ def test_final_graph_exchange_budget(synth_build):
     assert n <= FINAL_EXCHANGE_BUDGET, n
 
 
+def _exchange_counts(execs):
+    names = [n for ns, _, _ in execs for n in ns]
+    return names.count("Exchange"), names.count("BroadcastExchange")
+
+
 def test_build_exchange_budget(synth_build):
     """Exchanges over every plan one build executes."""
     _, _, execs = synth_build
-    names = [n for ns, _, _ in execs for n in ns]
-    assert names.count("Exchange") <= BUILD_EXCHANGE_BUDGET, names.count("Exchange")
-    n_bcast = names.count("BroadcastExchange")
+    n, n_bcast = _exchange_counts(execs)
+    assert n <= BUILD_EXCHANGE_BUDGET, n
     assert n_bcast <= BUILD_BROADCAST_EXCHANGE_BUDGET, n_bcast
+
+
+def test_bucketed_build_exchange_budget(spark, synth_build):
+    """Exchanges over every plan one build on the two-phase counter path
+    executes: only the cell-scale counters take that form."""
+    corpus, _, _ = synth_build
+    _, execs = executions(
+        spark, lambda: build_graph(spark, corpus, counter_buckets=2)
+    )
+    n, n_bcast = _exchange_counts(execs)
+    assert n <= BUCKETED_BUILD_EXCHANGE_BUDGET, n
+    assert n_bcast <= BUCKETED_BUILD_BROADCAST_EXCHANGE_BUDGET, n_bcast
 
 
 def test_build_py4j_budget(spark, synth_build):
