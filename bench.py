@@ -27,7 +27,6 @@ HEADLINE = [
     "j5_symbol_state_join",
     "a5_prune_anti_join",
     "a2_sequential_counters",
-    "dedup_exact",
 ]
 
 

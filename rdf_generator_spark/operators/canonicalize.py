@@ -22,8 +22,6 @@ At the fixpoint the edge set is stars (node -> component minimum).
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -56,9 +54,7 @@ def _star_round(e: DataFrame, keys, mode: str) -> DataFrame:
     return out.filter(F.col("a") != F.col("b")).distinct()
 
 
-def connected_components(
-    edges: DataFrame, max_iters: int = 30, strict: bool = False
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iters: int = 30) -> DataFrame:
     """edges(a, b) [+ optional doc keys] -> mapping(node, canon).
 
     `canon` is the lexicographically smallest IRI in each component.
@@ -67,12 +63,12 @@ def connected_components(
     edge set stabilizes (O(log n) alternations); each round truncates
     lineage with an eager localCheckpoint so the plan never grows.
 
-    If ``max_iters`` is exhausted before the fixpoint is verified, the
-    groupBy-min fallback below can still leave distinct labels inside
-    one true component — a silently-wrong canonical mapping. That exit
-    therefore raises (``strict=True``) or emits a ``RuntimeWarning``
-    (default): O(log n) convergence means hitting it signals either a
-    pathological graph or a too-small budget, never normal operation.
+    If ``max_iters`` runs out before the fixpoint is verified, the edges
+    left are not yet stars and the groupBy-min below would leave
+    distinct labels inside one true component — a silently-wrong
+    canonical mapping — so that exit raises ``RuntimeError``. O(log n)
+    convergence means hitting it signals either a pathological graph or
+    a too-small budget, never normal operation.
     """
     keys = [c for c in DOC if c in edges.columns]
     e = (
@@ -96,18 +92,14 @@ def connected_components(
             break
         e, n_e = e2, n_e2
     if not converged and n_e > 0:
-        msg = (
+        raise RuntimeError(
             f"connected_components did not reach a verified fixpoint in "
             f"max_iters={max_iters} star-contraction rounds ({n_e} edges "
-            "remain); the returned mapping may merge components only "
-            "partially. Raise max_iters (each round is O(log n) progress)."
+            "remain); the mapping would merge components only partially. "
+            "Raise max_iters (each round is O(log n) progress)."
         )
-        if strict:
-            raise RuntimeError(msg)
-        warnings.warn(msg, RuntimeWarning, stacklevel=2)
     # fixpoint edges are stars (a=node, b=component root); roots map to
-    # themselves. groupBy-min is a no-op on a true fixpoint and a safe
-    # partial merge if max_iters was ever exhausted mid-contraction.
+    # themselves. groupBy-min is a no-op on a true fixpoint.
     star = (
         e.select(*keys, F.col("a").alias("node"), F.col("b").alias("canon"))
         .unionByName(

@@ -1374,10 +1374,11 @@ def _assemble(spark, corpus, charsx, states_x, cells_j, visits, species, cells, 
     # One groupBy over the emission union computes both at once: the
     # grouped key IS the triple identity, and max(part=='matrix') marks
     # matrix membership, so dedup(matrix) is a post-shuffle filter
-    # instead of a second full exchange. The deduped table (the smaller,
-    # already-combined set) is what gets checkpointed; `parts` itself
-    # stays a lazy plan over the checkpointed hubs (consumed exactly
-    # once here — its other consumer, char_combined, is a lazy output).
+    # instead of a second full exchange. The de-duplicated table (the
+    # smaller, already-combined set) is what gets checkpointed; `parts`
+    # itself stays a lazy plan over the checkpointed hubs (consumed
+    # exactly once here — its other consumer, char_combined, is a lazy
+    # output).
     dd = (
         parts.withColumn("__mx", F.col("part") == "matrix")
         .groupBy("repo", "commit", "s", "p", "o", "lit", "dt")

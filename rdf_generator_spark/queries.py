@@ -1,12 +1,12 @@
 """Driver-contract query registry: Spark impls + DuckDB oracle SQL.
 
-Each relational entry maps a SURVEY.md §2 KG operator (or a dedup
-operator of ``textops/dedupe.py``) onto the relational testdata (sf*/: region
-nation customer supplier part orders lineitem events documents
-embeddings). Numeric outputs are integers (cents / scaled) so the
-value-hash comparison is immune to float formatting; every computed
-column is aliased identically on both sides. ``kg_pipeline_synth`` runs
-the KG build itself on a seeded synthetic corpus.
+Each relational entry maps a SURVEY.md §2 KG operator onto the
+relational testdata (sf*/: region nation customer supplier part orders
+lineitem events documents). Numeric outputs are integers (cents /
+scaled) so the value-hash comparison is immune to float formatting;
+every computed column is aliased identically on both sides.
+``kg_pipeline_synth`` runs the KG build itself on a seeded synthetic
+corpus.
 """
 
 from __future__ import annotations
@@ -297,80 +297,7 @@ def o3_bucket_route(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# Training-data pipeline operators (documents / embeddings)
-# --------------------------------------------------------------------------
-
-def dedup_exact(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
-    return (
-        d.groupBy(F.md5("text").alias("h"))
-        .agg(F.count(F.lit(1)).alias("n"), F.min("doc_id").alias("keeper"))
-    )
-
-
-def _tokens(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
-    return d.select("doc_id", F.explode(F.split("text", " ")).alias("tok")).distinct()
-
-
-def dedup_jaccard_pairs(spark, sf_dir):
-    """n-gram (unigram) Jaccard near-dup candidates >= 0.6."""
-    toks = _tokens(spark, sf_dir)
-    sizes = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    a = toks.select(F.col("doc_id").alias("d1"), "tok")
-    b = toks.select(F.col("doc_id").alias("d2"), "tok")
-    inter = (
-        a.join(b, "tok")
-        .filter(F.col("d1") < F.col("d2"))
-        .groupBy("d1", "d2")
-        .agg(F.count(F.lit(1)).alias("inter_cnt"))
-    )
-    s1 = sizes.select(F.col("doc_id").alias("d1"), F.col("sz").alias("sz1"))
-    s2 = sizes.select(F.col("doc_id").alias("d2"), F.col("sz").alias("sz2"))
-    return (
-        inter.join(s1, "d1").join(s2, "d2")
-        .filter(
-            F.col("inter_cnt") * 10
-            >= 6 * (F.col("sz1") + F.col("sz2") - F.col("inter_cnt"))
-        )
-        .select("d1", "d2", "inter_cnt")
-    )
-
-
-def minhash_band_pairs(spark, sf_dir):
-    """MinHash+LSH candidate pairs: 8 md5 hashes, 2 bands of 4."""
-    toks = _tokens(spark, sf_dir)
-    hashed = toks.select(
-        "doc_id",
-        F.explode(F.array(*[F.lit(i) for i in range(8)])).alias("i"),
-        "tok",
-    ).select(
-        "doc_id",
-        "i",
-        F.md5(F.concat(F.col("i").cast("string"), F.lit(":"), F.col("tok"))).alias("h"),
-    )
-    sigs = hashed.groupBy("doc_id", "i").agg(F.min("h").alias("mh"))
-    bands = (
-        sigs.withColumn("band", (F.col("i") / 4).cast("int"))
-        .groupBy("doc_id", "band")
-        .agg(
-            F.md5(
-                F.array_join(F.array_sort(F.collect_list(F.concat_ws("@", F.col("i"), F.col("mh")))), "|")
-            ).alias("bh")
-        )
-    )
-    a = bands.select(F.col("doc_id").alias("d1"), "band", "bh")
-    b = bands.select(F.col("doc_id").alias("d2"), "band", "bh")
-    return (
-        a.join(b, ["band", "bh"])
-        .filter(F.col("d1") < F.col("d2"))
-        .select("d1", "d2")
-        .distinct()
-    )
-
-
-# --------------------------------------------------------------------------
-# Engine-native entries (no SQL oracle — rows-only checks)
+# Engine-native entries (oracles computed in Python: VALUES tables below)
 # --------------------------------------------------------------------------
 
 def k1_uuid5_mint(spark, sf_dir):
@@ -381,37 +308,6 @@ def k1_uuid5_mint(spark, sf_dir):
 
     n = _t(spark, sf_dir, "nation")
     return n.select("n_name", kb_iri("doc", F.col("n_name")).alias("iri"))
-
-
-def dedup_simhash_pairs(spark, sf_dir):
-    """SimHash near-dup pairs with the md5 token-hash variant so the
-    full fingerprint + pigeonhole-band algebra has a DuckDB twin (the
-    default xxhash64 variant is pytest-covered). The oracle brute-forces
-    all pairs; the pigeonhole guarantee (4 bands > 3 flips) makes the
-    banded Spark plan exactly equal to the brute-force answer."""
-    from rdf_generator_spark.textops.dedupe import simhash, simhash_near_pairs
-
-    d = _t(spark, sf_dir, "documents")
-    return simhash_near_pairs(simhash(d, token_hash="md5"), max_hamming=3)
-
-
-def dedup_embedding_neardup(spark, sf_dir):
-    """Embedding near-dup pairs with 20 planted scaled copies
-    (vec_id+1000000, vector*1.5 — cosine exactly 1.0). sign(p.v) is
-    scale-invariant, so every LSH band matches the planted pairs
-    deterministically; the 0.98 threshold is far above any natural pair
-    in the synthetic data, making the exact-cosine DuckDB twin a true
-    oracle (not a recall coin-flip)."""
-    from rdf_generator_spark.textops.dedupe import embedding_neardup_pairs
-
-    e = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    planted = e.filter(F.col("vec_id") < 20).select(
-        (F.col("vec_id") + 1000000).alias("vec_id"),
-        F.transform(F.col("embedding"), lambda x: x * F.lit(1.5)).alias("embedding"),
-    )
-    return embedding_neardup_pairs(
-        e.unionByName(planted), threshold=0.98
-    ).select("d1", "d2")
 
 
 def kg_pipeline_synth(spark, sf_dir):
@@ -447,13 +343,8 @@ QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "v1_cardinality_rule": v1_cardinality_rule,
     "a4_distinct_rollup": a4_distinct_rollup,
     "o3_bucket_route": o3_bucket_route,
-    "dedup_exact": dedup_exact,
-    "dedup_jaccard_pairs": dedup_jaccard_pairs,
-    "minhash_band_pairs": minhash_band_pairs,
     "k1_uuid5_mint": k1_uuid5_mint,
     "kg_pipeline_synth": kg_pipeline_synth,
-    "dedup_simhash_pairs": dedup_simhash_pairs,
-    "dedup_embedding_neardup": dedup_embedding_neardup,
 }
 
 ORACLES: Dict[str, str] = {
@@ -552,102 +443,6 @@ ORACLES: Dict[str, str] = {
                MIN(CAST(ROUND(p_retailprice*100) AS BIGINT)) AS min_price_cents
         FROM part GROUP BY 1
     """,
-    "dedup_exact": """
-        SELECT md5(text) AS h, COUNT(*) AS n, MIN(doc_id) AS keeper
-        FROM documents GROUP BY md5(text)
-    """,
-    "dedup_jaccard_pairs": """
-        WITH toks AS (
-            SELECT DISTINCT doc_id, t.tok
-            FROM documents, UNNEST(string_split(text,' ')) AS t(tok)
-        ),
-        sizes AS (SELECT doc_id, COUNT(*) AS sz FROM toks GROUP BY doc_id),
-        inter AS (
-            SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS inter_cnt
-            FROM toks a JOIN toks b ON a.tok=b.tok AND a.doc_id<b.doc_id
-            GROUP BY a.doc_id, b.doc_id
-        )
-        SELECT d1, d2, inter_cnt
-        FROM inter
-        JOIN sizes s1 ON s1.doc_id=d1
-        JOIN sizes s2 ON s2.doc_id=d2
-        WHERE inter_cnt*10 >= 6*(s1.sz + s2.sz - inter_cnt)
-    """,
-    "minhash_band_pairs": """
-        WITH toks AS (
-            SELECT DISTINCT doc_id, t.tok
-            FROM documents, UNNEST(string_split(text,' ')) AS t(tok)
-        ),
-        hashed AS (
-            SELECT doc_id, i.i, md5(CAST(i.i AS VARCHAR) || ':' || tok) AS h
-            FROM toks CROSS JOIN (SELECT UNNEST(range(8)) AS i) i
-        ),
-        sigs AS (SELECT doc_id, i, MIN(h) AS mh FROM hashed GROUP BY doc_id, i),
-        bands AS (
-            SELECT doc_id, CAST(i//4 AS INT) AS band,
-                   md5(string_agg(CAST(i AS VARCHAR) || '@' || mh, '|'
-                                  ORDER BY CAST(i AS VARCHAR) || '@' || mh)) AS bh
-            FROM sigs GROUP BY doc_id, CAST(i//4 AS INT)
-        )
-        SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-        FROM bands a JOIN bands b ON a.band=b.band AND a.bh=b.bh
-                                  AND a.doc_id<b.doc_id
-    """,
-    "dedup_embedding_neardup": """
-        WITH base AS (
-            SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        ),
-        planted AS (
-            SELECT vec_id + 1000000 AS vec_id,
-                   list_transform(embedding,
-                                  x -> CAST(CAST(x * 1.5 AS FLOAT) AS DOUBLE))
-                     AS v
-            FROM embeddings WHERE vec_id < 20
-        ),
-        allv AS (SELECT * FROM base UNION ALL SELECT * FROM planted)
-        SELECT a.vec_id AS d1, b.vec_id AS d2
-        FROM allv a JOIN allv b ON a.vec_id < b.vec_id
-        WHERE list_dot_product(a.v, b.v)
-              / (sqrt(list_dot_product(a.v, a.v))
-                 * sqrt(list_dot_product(b.v, b.v))) >= 0.98
-    """,
-    # simhash md5 mode: per token t, bit b of the fingerprint input is
-    # bit (b%4) of hex nibble b//4 of md5(t) — reproduced here verbatim;
-    # hamming distance is permutation-invariant so the bit->position
-    # mapping only has to agree per (token, b), which it does by
-    # construction. Brute-force all pairs (the banded Spark plan is
-    # exactly equal by the pigeonhole guarantee: 4 bands > 3 flips).
-    "dedup_simhash_pairs": """
-        WITH toks AS (
-            SELECT DISTINCT doc_id, t.tok
-            FROM documents, UNNEST(string_split_regex(text, '\\s+')) AS t(tok)
-            WHERE t.tok <> ''
-        ),
-        bits AS (
-            SELECT doc_id, bb.b,
-                   SUM(CASE WHEN (((strpos('0123456789abcdef',
-                                           substr(md5(tok), CAST(bb.b//4 + 1 AS INT), 1)) - 1)
-                                   >> (bb.b % 4)) & 1) = 1
-                            THEN 1 ELSE -1 END) AS s
-            FROM toks CROSS JOIN (SELECT unnest(range(64)) AS b) bb
-            GROUP BY doc_id, bb.b
-        ),
-        fp AS (
-            SELECT doc_id,
-                   string_agg(CASE WHEN s > 0 THEN '1' ELSE '0' END,
-                              '' ORDER BY b) AS f
-            FROM bits GROUP BY doc_id
-        ),
-        pr AS (
-            SELECT a.doc_id AS d1, b.doc_id AS d2,
-                   len(list_filter(range(64),
-                                   i -> a.f[CAST(i+1 AS INT)] <> b.f[CAST(i+1 AS INT)]))
-                     AS hamming
-            FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-        )
-        SELECT d1, d2, CAST(hamming AS INT) AS hamming
-        FROM pr WHERE hamming <= 3
-    """,
 }
 
 # UUID5 seeds are known a priori (the 25 fixed nation names), so the k1
@@ -670,190 +465,6 @@ ORACLES["kg_pipeline_synth"] = (
     + ", ".join(f"('{r}', {n})" for r, n in _KG_SYNTH_PINNED)
     + ") AS t(repo, n_triples)"
 )
-
-
-def dedup_near_groups(spark, sf_dir):
-    """The canonical corpus-dedup composition end-to-end — MinHash-LSH
-    candidates -> exact-Jaccard verify on candidates only -> connected
-    components -> keeper per group — against a full DuckDB twin that
-    replays every stage (md5 minhash signatures, banded buckets,
-    candidate-only verify, recursive-CTE components). Ten planted
-    near-copies (doc_id+500000, one appended token) guarantee
-    deterministic groups; every stage is deterministic on both engines
-    so even LSH recall behavior is twinned exactly."""
-    from rdf_generator_spark.textops.dedupe import near_dup_groups
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    planted = d.filter(F.col("doc_id") < 10).select(
-        (F.col("doc_id") + 500000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zz_planted_tail")).alias("text"),
-    )
-    return near_dup_groups(
-        d.unionByName(planted), threshold=0.8, shingle_k=3,
-        num_hashes=16, bands=4,
-    )
-
-
-ORACLES["dedup_near_groups"] = """
-    WITH RECURSIVE d0 AS (
-        SELECT doc_id, text FROM documents
-        UNION ALL
-        SELECT doc_id + 500000, text || ' zz_planted_tail'
-        FROM documents WHERE doc_id < 10
-    ),
-    tk AS (SELECT doc_id, string_split_regex(text, '\\s+') AS ts FROM d0),
-    sh AS (
-        SELECT DISTINCT doc_id,
-               unnest(list_transform(
-                   range(0, greatest(len(ts) - 3, 0) + 1),
-                   i -> array_to_string(ts[CAST(i+1 AS INT):CAST(i+3 AS INT)], ' ')))
-                 AS tok
-        FROM tk WHERE len(ts) >= 3
-    ),
-    hashed AS (
-        SELECT doc_id, i.i, md5(CAST(i.i AS VARCHAR) || ':' || tok) AS h
-        FROM sh CROSS JOIN (SELECT unnest(range(16)) AS i) i
-    ),
-    sigs AS (SELECT doc_id, i, MIN(h) AS mh FROM hashed GROUP BY doc_id, i),
-    bands AS (
-        SELECT doc_id, CAST(i//4 AS INT) AS band,
-               md5(string_agg(CAST(i AS VARCHAR) || '@' || mh, '|'
-                              ORDER BY CAST(i AS VARCHAR) || '@' || mh)) AS bh
-        FROM sigs GROUP BY doc_id, CAST(i//4 AS INT)
-    ),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-        FROM bands a JOIN bands b
-          ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
-    ),
-    sz AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-    inter AS (
-        SELECT c.d1, c.d2, COUNT(*) AS ic
-        FROM cand c
-        JOIN sh s1 ON s1.doc_id = c.d1
-        JOIN sh s2 ON s2.doc_id = c.d2 AND s2.tok = s1.tok
-        GROUP BY c.d1, c.d2
-    ),
-    ver AS (
-        SELECT CAST(i.d1 AS VARCHAR) AS a, CAST(i.d2 AS VARCHAR) AS b
-        FROM inter i
-        JOIN sz z1 ON z1.doc_id = i.d1
-        JOIN sz z2 ON z2.doc_id = i.d2
-        WHERE i.ic >= CAST(0.8 AS DOUBLE) * (z1.sz + z2.sz - i.ic)
-    ),
-    sym AS (SELECT a, b FROM ver UNION SELECT b, a FROM ver),
-    reach(node, r) AS (
-        SELECT a, a FROM sym
-        UNION
-        SELECT s.a, r.r FROM sym s JOIN reach r ON s.b = r.node
-    ),
-    mapping AS (SELECT node, MIN(r) AS canon FROM reach GROUP BY node),
-    gsz AS (SELECT canon, COUNT(*) AS group_size FROM mapping GROUP BY canon)
-    SELECT m.node AS doc_id, m.canon AS keeper, g.group_size
-    FROM mapping m JOIN gsz g ON g.canon = m.canon
-"""
-
-QUERIES["dedup_near_groups"] = dedup_near_groups
-
-
-def dedup_incremental(spark, sf_dir):
-    """Cross-corpus incremental dedup (the "new crawl vs existing
-    training set" step): band signatures per side, candidates ONLY from
-    the between-sides (band, bh) equi-join — ref-vs-ref pairs are never
-    generated — then exact-Jaccard verify on candidates. New batch =
-    ten planted near-copies (doc_id+900000, one appended token; must
-    match their source) + ten two-token uniques (below the 3-shingle
-    floor; must survive). Integer-only output columns so the DuckDB
-    twin is engine-exact."""
-    from rdf_generator_spark.textops.dedupe import incremental_dedup_matches
-
-    ref = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    planted = ref.filter(F.col("doc_id") < 10).select(
-        (F.col("doc_id") + 900000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zz_planted_tail")).alias("text"),
-    )
-    uniques = ref.filter(F.col("doc_id") < 10).select(
-        (F.col("doc_id") + 910000).alias("doc_id"),
-        F.concat(F.lit("uniq_"), F.col("doc_id"), F.lit(" zz")).alias("text"),
-    )
-    return incremental_dedup_matches(
-        planted.unionByName(uniques), ref,
-        threshold=0.8, shingle_k=3, num_hashes=16, bands=4,
-    )
-
-
-ORACLES["dedup_incremental"] = """
-    WITH ref0 AS (SELECT doc_id, text FROM documents),
-    new0 AS (
-        SELECT doc_id + 900000 AS doc_id, text || ' zz_planted_tail' AS text
-        FROM documents WHERE doc_id < 10
-        UNION ALL
-        SELECT doc_id + 910000, 'uniq_' || CAST(doc_id AS VARCHAR) || ' zz'
-        FROM documents WHERE doc_id < 10
-    ),
-    sh_ref AS (
-        SELECT DISTINCT doc_id,
-               unnest(list_transform(
-                   range(0, greatest(len(ts) - 3, 0) + 1),
-                   i -> array_to_string(ts[CAST(i+1 AS INT):CAST(i+3 AS INT)], ' ')))
-                 AS tok
-        FROM (SELECT doc_id, string_split_regex(text, '\\s+') AS ts FROM ref0)
-        WHERE len(ts) >= 3
-    ),
-    sh_new AS (
-        SELECT DISTINCT doc_id,
-               unnest(list_transform(
-                   range(0, greatest(len(ts) - 3, 0) + 1),
-                   i -> array_to_string(ts[CAST(i+1 AS INT):CAST(i+3 AS INT)], ' ')))
-                 AS tok
-        FROM (SELECT doc_id, string_split_regex(text, '\\s+') AS ts FROM new0)
-        WHERE len(ts) >= 3
-    ),
-    bands_ref AS (
-        SELECT doc_id, CAST(i//4 AS INT) AS band,
-               md5(string_agg(CAST(i AS VARCHAR) || '@' || mh, '|'
-                              ORDER BY CAST(i AS VARCHAR) || '@' || mh)) AS bh
-        FROM (
-            SELECT doc_id, i.i AS i,
-                   MIN(md5(CAST(i.i AS VARCHAR) || ':' || tok)) AS mh
-            FROM sh_ref CROSS JOIN (SELECT unnest(range(16)) AS i) i
-            GROUP BY doc_id, i.i
-        ) GROUP BY doc_id, CAST(i//4 AS INT)
-    ),
-    bands_new AS (
-        SELECT doc_id, CAST(i//4 AS INT) AS band,
-               md5(string_agg(CAST(i AS VARCHAR) || '@' || mh, '|'
-                              ORDER BY CAST(i AS VARCHAR) || '@' || mh)) AS bh
-        FROM (
-            SELECT doc_id, i.i AS i,
-                   MIN(md5(CAST(i.i AS VARCHAR) || ':' || tok)) AS mh
-            FROM sh_new CROSS JOIN (SELECT unnest(range(16)) AS i) i
-            GROUP BY doc_id, i.i
-        ) GROUP BY doc_id, CAST(i//4 AS INT)
-    ),
-    cand AS (
-        SELECT DISTINCT n.doc_id AS new_id, r.doc_id AS ref_id
-        FROM bands_new n JOIN bands_ref r
-          ON n.band = r.band AND n.bh = r.bh
-    ),
-    zn AS (SELECT doc_id, COUNT(*) AS sz_new FROM sh_new GROUP BY doc_id),
-    zr AS (SELECT doc_id, COUNT(*) AS sz_ref FROM sh_ref GROUP BY doc_id),
-    inter AS (
-        SELECT c.new_id, c.ref_id, COUNT(*) AS inter_cnt
-        FROM cand c
-        JOIN sh_new sn ON sn.doc_id = c.new_id
-        JOIN sh_ref sr ON sr.doc_id = c.ref_id AND sr.tok = sn.tok
-        GROUP BY c.new_id, c.ref_id
-    )
-    SELECT i.new_id, i.ref_id, i.inter_cnt, zn.sz_new, zr.sz_ref
-    FROM inter i
-    JOIN zn ON zn.doc_id = i.new_id
-    JOIN zr ON zr.doc_id = i.ref_id
-    WHERE i.inter_cnt
-          >= CAST(0.8 AS DOUBLE) * (zn.sz_new + zr.sz_ref - i.inter_cnt)
-"""
-
-QUERIES["dedup_incremental"] = dedup_incremental
 
 
 # --------------------------------------------------------------------------

@@ -1135,12 +1135,12 @@ _CC_EDGES = [
 
 
 def cc_canonical_map(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same-as connected components (canonicalize.py): min-label
-    propagation vs a DuckDB recursive reachability twin."""
+    """Same-as connected components (canonicalize.py): star contraction
+    vs a DuckDB recursive reachability twin."""
     from rdf_generator_spark.operators.canonicalize import connected_components
 
     edges = spark.createDataFrame(_CC_EDGES, "a string, b string")
-    return connected_components(edges, strict=True).select("node", "canon")
+    return connected_components(edges).select("node", "canon")
 
 
 ORACLES["cc_canonical_map"] = f"""

@@ -122,11 +122,11 @@ def main(argv=None) -> int:
 
         edges = species_same_as_edges(triples)
         if not edges.isEmpty():
-            # strict: an exhausted contraction budget must fail the batch
-            # run, not ship a partially-merged canonical table behind a
-            # RuntimeWarning lost in Spark log noise (ADVICE r4)
+            # connected_components raises on an exhausted contraction
+            # budget, so the batch fails instead of shipping a
+            # partially-merged canonical table
             triples = apply_canonical_mapping(
-                triples, connected_components(edges, strict=True)
+                triples, connected_components(edges)
             )
 
     if args.resume:

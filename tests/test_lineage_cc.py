@@ -164,18 +164,15 @@ def test_connected_components_long_path(spark):
 
 def test_connected_components_nonconvergence_signals(spark):
     """An exhausted round budget must never return a silently-partial
-    mapping (ADVICE r3): warn by default, raise with strict=True."""
+    mapping: it raises, and a converged run emits no warning."""
+    import warnings
+
     import pytest
 
     path = [(f"n{i:02d}", f"n{i+1:02d}") for i in range(30)]
     edges = spark.createDataFrame(path, ["a", "b"])
-    with pytest.warns(RuntimeWarning, match="did not reach a verified fixpoint"):
-        connected_components(edges, max_iters=1)
     with pytest.raises(RuntimeError, match="did not reach a verified fixpoint"):
-        connected_components(edges, max_iters=1, strict=True)
-    # a converged run emits nothing
-    import warnings
-
+        connected_components(edges, max_iters=1)
     with warnings.catch_warnings():
         warnings.simplefilter("error", RuntimeWarning)
         connected_components(edges)
