@@ -151,17 +151,13 @@ def species_same_as_edges(triples: DataFrame) -> DataFrame:
     )
 
 
-def apply_canonical_mapping(
-    triples: DataFrame, mapping: DataFrame, hint=None
-) -> DataFrame:
+def apply_canonical_mapping(triples: DataFrame, mapping: DataFrame) -> DataFrame:
     """Rewrite subjects and IRI objects through (node -> canon), then
     re-dedup (set semantics collapse the merged nodes).
 
-    The mapping grows with the corpus (one row per merged node), so no
-    broadcast hint by default — AQE broadcasts it at small scale and
-    shuffles past the threshold. Pass `hint=F.broadcast` to force."""
-    if hint is None:
-        hint = lambda d: d  # noqa: E731
+    The mapping grows with the corpus (one row per merged node), so its
+    joins carry no broadcast hint — AQE broadcasts it at small scale and
+    shuffles past the threshold."""
     keys = [c for c in DOC if c in mapping.columns]
     ms = mapping.select(
         *[F.col(k).alias(f"__s{k}") for k in keys],
@@ -171,7 +167,7 @@ def apply_canonical_mapping(
     for k in keys:
         cond_s = cond_s & (F.col(k) == F.col(f"__s{k}"))
     out = (
-        triples.join(hint(ms), cond_s, "left")
+        triples.join(ms, cond_s, "left")
         .withColumn("s", F.coalesce(F.col("__sc"), F.col("s")))
         .drop("__sn", "__sc", *[f"__s{k}" for k in keys])
     )
@@ -183,7 +179,7 @@ def apply_canonical_mapping(
     for k in keys:
         cond_o = cond_o & (F.col(k) == F.col(f"__o{k}"))
     out = (
-        out.join(hint(mo), cond_o, "left")
+        out.join(mo, cond_o, "left")
         .withColumn("o", F.coalesce(F.col("__oc"), F.col("o")))
         .drop("__on", "__oc", *[f"__o{k}" for k in keys])
     )

@@ -43,33 +43,6 @@ def fill_scalar_uri(
     ).drop("norm_label", "__resolved")
 
 
-def _missing_mention_labels(chars: DataFrame) -> DataFrame:
-    """Distinct normalized labels of mentions whose URI slot is still
-    missing after the exact tier — the fuzzy tier's candidate set."""
-    org = chars.select(F.col("org_label").alias("label"), F.col("org_uri").alias("uri"))
-    var = chars.filter(F.col("has_variable")).select(
-        F.col("var_label").alias("label"), F.col("var_uri").alias("uri")
-    )
-    loc = chars.select(F.explode("locators").alias("m")).select(
-        F.col("m.label").alias("label"), F.col("m.uri").alias("uri")
-    )
-    st = chars.select(F.explode("states").alias("m")).select(
-        F.col("m.label").alias("label"), F.col("m.uri").alias("uri")
-    )
-    mentions = org.unionByName(var).unionByName(loc).unionByName(st)
-    return (
-        mentions.filter(
-            missing_uri(F.col("uri")) & (norm_term_label(F.col("label")) != "")
-            # negation-form state labels are J2's job (resolve to the
-            # complement scaffold, F7) — fuzzy-matching "not pointed" to
-            # "pointed" would silently flip the negation semantics
-            & ~norm_term_label(F.col("label")).startswith("not ")
-        )
-        .select(norm_term_label(F.col("label")).alias("label"))
-        .distinct()
-    )
-
-
 def fill_both_arrays_uris(
     df: DataFrame, vocab: DataFrame, id_cols: Sequence[str]
 ) -> DataFrame:
@@ -130,98 +103,25 @@ def fill_both_arrays_uris(
     return df.drop("locators", "states").join(regrouped, keys, "left")
 
 
-def fill_character_uris(
-    chars: DataFrame, vocab: DataFrame, fuzzy_threshold: float = None
-) -> DataFrame:
+def fill_character_uris(chars: DataFrame, vocab: DataFrame) -> DataFrame:
     """apply_pmck_uri_fallbacks (main.py:296-343) over the parsed shape:
-    Organism / Locators / Variable / States slots.
-
-    Default is the reference's exact-match tier only (golden parity).
-    With ``fuzzy_threshold`` set, exact-tier misses are routed through
-    `fuzzy_match_labels` (character-trigram Dice similarity >= threshold)
-    as an opt-in second pass — a north-star generalization the exact
-    reference cannot do. The fuzzy map is distinct-labels-sized (bounded
-    by the vocabulary fan-in), so the second pass reuses the same
-    broadcast-join fills."""
+    Organism / Locators / Variable / States slots, exact-match tier only
+    (the reference's label-index lookup)."""
     keys = [*DOC_KEYS, "path", "char_pos"]
-
-    def _fill_all(df, v):
-        # The array fill first: its join-back reads its input in two
-        # branches, so scalar fills beneath it would run twice. The
-        # fills touch disjoint columns (locators/states vs org_uri and
-        # var_uri), so they commute.
-        out = fill_both_arrays_uris(df, v, keys)
-        out = fill_scalar_uri(out, "org_label", "org_uri", v)
-        return fill_scalar_uri(out, "var_label", "var_uri", v,
-                               enabled=F.col("has_variable"))
-
-    out = _fill_all(chars, vocab)
-    if fuzzy_threshold is None:
-        return out
-
-    misses = _missing_mention_labels(out)
-    fz = fuzzy_match_labels(misses, vocab, threshold=fuzzy_threshold)
-    # inputs were pre-normalized, so the fuzzy output label IS the
-    # norm_label key the fill joins expect
-    fz_vocab = fz.select(F.col("label").alias("norm_label"), "uri")
-    return _fill_all(out, fz_vocab)
+    # The array fill first: its join-back reads its input in two
+    # branches, so scalar fills beneath it would run twice. The fills
+    # touch disjoint columns (locators/states vs org_uri and var_uri),
+    # so they commute.
+    out = fill_both_arrays_uris(chars, vocab, keys)
+    out = fill_scalar_uri(out, "org_label", "org_uri", vocab)
+    return fill_scalar_uri(out, "var_label", "var_uri", vocab,
+                           enabled=F.col("has_variable"))
 
 
-def fuzzy_match_labels(
-    mentions: DataFrame, vocab: DataFrame, threshold: float = 0.7
-) -> DataFrame:
-    """Similarity tier of entity linking (north-star generalization of
-    the reference's exact-match-only J1): batched candidate generation
-    via character-trigram overlap against the broadcast vocabulary,
-    scored with Dice similarity, best-above-threshold per mention.
-
-    Input: distinct mention labels in a `label` column. Output:
-    (label, uri, score) for mentions resolvable at >= threshold. Keep
-    the exact tier first; route only its misses here."""
-    from pyspark.sql.window import Window
-
-    def grams(c: Column) -> Column:
-        padded = F.concat(F.lit(" "), norm_term_label(c), F.lit(" "))
-        n = F.greatest(F.length(padded) - 2, F.lit(1))
-        return F.array_distinct(
-            F.transform(F.sequence(F.lit(1), n), lambda i: padded.substr(i, F.lit(3)))
-        )
-
-    m = mentions.select("label").distinct().select(
-        "label", F.explode(grams(F.col("label"))).alias("g"),
-        F.size(grams(F.col("label"))).alias("n_m"),
-    )
-    v = vocab.select(
-        F.col("norm_label").alias("v_label"), "uri",
-        F.explode(grams(F.col("norm_label"))).alias("g"),
-        F.size(grams(F.col("norm_label"))).alias("n_v"),
-    )
-    scored = (
-        m.join(F.broadcast(v), "g")
-        .groupBy("label", "v_label", "uri", "n_m", "n_v")
-        .agg(F.count(F.lit(1)).alias("overlap"))
-        .withColumn("score", 2 * F.col("overlap") / (F.col("n_m") + F.col("n_v")))
-        .filter(F.col("score") >= threshold)
-    )
-    w = Window.partitionBy("label").orderBy(F.desc("score"), "uri")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("label", "uri", F.round("score", 4).alias("score"))
-    )
-
-
-def fill_stats(
-    chars: DataFrame, vocab: DataFrame, fuzzy_threshold: float = None
-) -> DataFrame:
+def fill_stats(chars: DataFrame, vocab: DataFrame) -> DataFrame:
     """J1 bookkeeping (main.py:302, 330-343): per document, how many
     missing-URI mentions were filled from the vocabulary vs left
-    unresolved. One exploded mention table + one broadcast join.
-
-    With ``fuzzy_threshold`` set the result distinguishes the resolution
-    tier: (filled, filled_fuzzy, unresolved), where `filled` is the
-    exact tier and exact-tier misses that the similarity tier resolves
-    count as `filled_fuzzy`."""
+    unresolved. One exploded mention table + one broadcast join."""
     org = chars.select(
         *DOC_KEYS, F.col("org_label").alias("label"), F.col("org_uri").alias("uri")
     )
@@ -242,30 +142,9 @@ def fill_stats(
     joined = cand.join(
         v, norm_term_label(F.col("label")) == v.norm_label, "left"
     )
-    if fuzzy_threshold is None:
-        return joined.groupBy(*DOC_KEYS).agg(
-            F.sum(F.when(F.col("__resolved").isNotNull(), 1).otherwise(0)).alias("filled"),
-            F.sum(F.when(F.col("__resolved").isNull(), 1).otherwise(0)).alias("unresolved"),
-        )
-    misses = joined.filter(
-        F.col("__resolved").isNull()
-        & ~norm_term_label(F.col("label")).startswith("not ")
-    ).select(norm_term_label(F.col("label")).alias("label")).distinct()
-    fz = fuzzy_match_labels(misses, vocab, threshold=fuzzy_threshold).select(
-        F.col("label").alias("__fz_label"), F.col("uri").alias("__fz_uri")
-    )
-    joined = joined.join(
-        fz,
-        F.col("__resolved").isNull()
-        & (norm_term_label(F.col("label")) == F.col("__fz_label")),
-        "left",
-    )
     return joined.groupBy(*DOC_KEYS).agg(
         F.sum(F.when(F.col("__resolved").isNotNull(), 1).otherwise(0)).alias("filled"),
-        F.sum(F.when(F.col("__resolved").isNull()
-                     & F.col("__fz_uri").isNotNull(), 1).otherwise(0)).alias("filled_fuzzy"),
-        F.sum(F.when(F.col("__resolved").isNull()
-                     & F.col("__fz_uri").isNull(), 1).otherwise(0)).alias("unresolved"),
+        F.sum(F.when(F.col("__resolved").isNull(), 1).otherwise(0)).alias("unresolved"),
     )
 
 

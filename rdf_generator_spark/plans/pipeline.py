@@ -224,8 +224,7 @@ def _max_doc_bytes(corpus: DataFrame, footers: Optional[_Footers]):
     Returns ``None`` for in-memory corpora (a local relation — tests and
     golden scale, small by construction) and when the footers can't be
     read; callers treat ``None`` as "keep the default plan". File count
-    is capped (footer reads are cheap but not free); an explicit
-    ``counter_buckets=`` always overrides.
+    is capped (footer reads are cheap but not free).
     """
     if footers is None:
         return None
@@ -264,25 +263,40 @@ def _truthy_uri(c) -> F.Column:
 _CONFIG_SCAN_LIMIT = 64
 
 
-def dataset_id_from_config(corpus: DataFrame) -> Optional[str]:
-    """SRC1: a lang='yaml' config row may carry `dataset_id` — the
-    highest-priority salt source (main.py:31-36, 232-235). Config rows
-    are tiny dimension docs, collected driver-side.
+def _dimension_rows(corpus: DataFrame) -> Tuple[list, list]:
+    """The corpus's OWL rows and its bounded, ordered yaml config rows,
+    from one filtered scan and one collect: ``(owl_rows, yaml_rows)``.
 
-    The collect is bounded (`limit(64)`) so the tiny-by-contract
-    assumption is structural rather than hoped-for, and ordered by
-    (repo, path, commit) so that when a corpus carries several yaml
-    docs the winning `dataset_id` is deterministic (the reference
-    reads exactly one config file; lexicographically-first is the
-    documented precedence here), not partition-order-dependent."""
+    Config and vocabulary rows are tiny dimension docs, collected
+    driver-side. The yaml side is bounded (the first
+    ``_CONFIG_SCAN_LIMIT`` rows in (repo, path, commit) order, by a
+    per-lang rank) so the tiny-by-contract assumption is structural
+    rather than hoped-for, and sorted so that when a corpus carries
+    several yaml docs the winning `dataset_id` is deterministic (the
+    reference reads exactly one config file; lexicographically-first is
+    the documented precedence here), not partition-order-dependent. OWL
+    rows are dimension docs by contract."""
+    w_yaml = Window.partitionBy("lang").orderBy("repo", "path", "commit")
     rows = (
-        corpus.filter(F.col("lang") == "yaml")
-        .select("repo", "path", "commit", "content")
-        .orderBy("repo", "path", "commit")
-        .limit(_CONFIG_SCAN_LIMIT)
+        corpus.filter(F.col("lang").isin("owl", "yaml"))
+        .select("repo", "path", "commit", "lang", "content")
+        .withColumn("__rn", F.row_number().over(w_yaml))
+        .filter((F.col("lang") == "owl")
+                | (F.col("__rn") <= _CONFIG_SCAN_LIMIT))
         .collect()
     )
-    return _dataset_id_from_yaml_rows(rows)
+    yaml_rows = sorted(
+        (r for r in rows if r["lang"] == "yaml"),
+        key=lambda r: (r["repo"], r["path"], r["commit"]),
+    )
+    return [r for r in rows if r["lang"] == "owl"], yaml_rows
+
+
+def dataset_id_from_config(corpus: DataFrame) -> Optional[str]:
+    """SRC1: a lang='yaml' config row may carry `dataset_id` — the
+    highest-priority salt source (main.py:31-36, 232-235). Reads the
+    yaml rows of the collect `build_graph` runs (`_dimension_rows`)."""
+    return _dataset_id_from_yaml_rows(_dimension_rows(corpus)[1])
 
 
 def _dataset_id_from_yaml_rows(rows) -> Optional[str]:
@@ -345,11 +359,12 @@ def build_salts(meta: DataFrame, json_names: DataFrame) -> DataFrame:
 
 
 def resolve_counter_buckets(corpus: DataFrame, counter_buckets):
-    """The counter strategy build_graph would pick, for callers that
-    report it: "auto" gates the two-phase bucketed numbering on the
-    giant-document probe (footer statistics when they decide, one
-    column-pruned job when they are ambiguous — see `_max_doc_bytes`);
-    int forces a bucket width; None forces the per-document window."""
+    """The counter strategy build_graph picks, for callers that report
+    it: "auto" gates the two-phase bucketed numbering on the giant-
+    document probe (footer statistics when they decide, one
+    column-pruned job when they are ambiguous — see `_max_doc_bytes`)
+    and returns its bucket width, or None for the per-document window.
+    Any other value is returned as given."""
     if counter_buckets != "auto":
         return counter_buckets
     return _auto_counter_buckets(corpus, _read_footers(_input_files(corpus)))
@@ -371,9 +386,7 @@ def build_graph(
     spark: SparkSession,
     corpus: DataFrame,
     dataset_id: Optional[str] = None,
-    dim_broadcast: Optional[bool] = None,
     staging_dir: Optional[str] = None,
-    counter_buckets="auto",
 ) -> Dict[str, DataFrame]:
     """Run the full pipeline; returns named DataFrames.
 
@@ -396,9 +409,11 @@ def build_graph(
 
     ``dataset_id`` is the tier-1 IRI salt; when it is ``None`` a
     ``dataset_id`` in the corpus's yaml config rows is used, if any
-    (see `dataset_id_from_config`). ``dim_broadcast`` (``None``: gated
-    on the corpus file count) keeps or drops the broadcast hints on the
-    per-document dimension joins.
+    (see `dataset_id_from_config`).
+
+    The per-document dimension joins carry broadcast hints up to
+    ``_DIM_BROADCAST_FILE_LIMIT`` corpus files; past it they fall back
+    to AQE's runtime choice.
 
     Materialization mechanism: ``localCheckpoint`` by default (fastest on
     a single box, but the blocks live on executors — a lost executor
@@ -409,33 +424,29 @@ def build_graph(
     change, not a code change). `run_resumable` stages under its output
     directory automatically.
 
-    ``counter_buckets``: sequential :id-N counter execution strategy
-    for the cell-scale counters (cells, visits, first-visit entities;
-    the state counters always use one window per document).
-    ``"auto"`` (default) gates on the footer probe `_max_doc_bytes`
-    (zero jobs unless the footers are ambiguous): when the largest
-    document's content reaches ``_GIANT_DOC_CONTENT_BYTES`` the counters
-    switch to the two-phase bucketed numbering in operators/windows.py
-    (identical output — golden-tested — but a giant matrix numbers
-    across nchar/``_AUTO_COUNTER_BUCKET_WIDTH`` tasks instead of sorting
-    in one); otherwise the plain per-document window runs (cheapest at
+    Sequential :id-N counter execution strategy for the cell-scale
+    counters (cells, visits, first-visit entities; the state counters
+    always use one window per document): the footer probe
+    `_max_doc_bytes` (zero jobs unless the footers are ambiguous) gates
+    it. When the largest document's content reaches
+    ``_GIANT_DOC_CONTENT_BYTES`` the counters switch to the two-phase
+    bucketed numbering in operators/windows.py (identical output —
+    golden-tested — but a giant matrix numbers across
+    nchar/``_AUTO_COUNTER_BUCKET_WIDTH`` tasks instead of sorting in
+    one); otherwise the plain per-document window runs (cheapest at
     normal document sizes — the two-phase variant's extra
-    aggregation+join rounds cost ~15% at bench scale). Pass an int
-    bucket width to force two-phase, or ``None`` to force the single
-    window.
+    aggregation+join rounds cost ~15% at bench scale).
     """
     # One file list and one footer pass (zero jobs) feed the input-sized
     # decisions: the counter gate, the broadcast gate and the task
     # counts of the parse and its hub.
     files = _input_files(corpus)
     footers = _read_footers(files)
-    if counter_buckets == "auto":
-        counter_buckets = _auto_counter_buckets(corpus, footers)
-    if dim_broadcast is None:
-        # file count bounds document count; an in-memory corpus (no
-        # files) is small enough to broadcast by construction
-        dim_broadcast = len(files) <= _DIM_BROADCAST_FILE_LIMIT
-    bhint = F.broadcast if dim_broadcast else (lambda d: d)
+    counter_buckets = _auto_counter_buckets(corpus, footers)
+    # file count bounds document count; an in-memory corpus (no files)
+    # is small enough to broadcast by construction
+    dim_small = len(files) <= _DIM_BROADCAST_FILE_LIMIT
+    bhint = F.broadcast if dim_small else (lambda d: d)
 
     def _seq(df, part_cols, order_cols, out):
         """Sequential numbering of a cell-scale table within `part_cols`;
@@ -499,30 +510,12 @@ def build_graph(
             ).alias("source_text")
         )
     )
-    # One combined dimension collect (round 6): the OWL vocabulary rows
-    # and the (bounded, ordered — see dataset_id_from_config) yaml config
-    # window come from one filtered scan. Bounds are preserved: yaml rows
-    # ride a per-lang rank capped at the config-scan limit, owl rows are
-    # dimension docs by contract.
-    w_yaml = Window.partitionBy("lang").orderBy("repo", "path", "commit")
-    dim_rows = (
-        corpus.filter(F.col("lang").isin("owl", "yaml"))
-        .select("repo", "path", "commit", "lang", "content")
-        .withColumn("__rn", F.row_number().over(w_yaml))
-        .filter((F.col("lang") == "owl")
-                | (F.col("__rn") <= _CONFIG_SCAN_LIMIT))
-        .collect()
-    )
-    vocab = vocab_df_from_owl_rows(
-        spark, [r for r in dim_rows if r["lang"] == "owl"]
-    )
+    # One dimension collect: the OWL vocabulary rows and the yaml
+    # config window.
+    owl_rows, yaml_rows = _dimension_rows(corpus)
+    vocab = vocab_df_from_owl_rows(spark, owl_rows)
     if dataset_id is None:
-        dataset_id = _dataset_id_from_yaml_rows(
-            sorted(
-                (r for r in dim_rows if r["lang"] == "yaml"),
-                key=lambda r: (r["repo"], r["path"], r["commit"]),
-            )
-        )
+        dataset_id = _dataset_id_from_yaml_rows(yaml_rows)
 
     # --- J1 vocab fill + per-char derived columns ------------------------
     chars_f = linking.fill_character_uris(chars_raw, vocab)

@@ -486,80 +486,3 @@ for _retired in [
 ]:
     QUERIES_EXTRA[_retired] = QUERIES.pop(_retired)
     ORACLES_EXTRA[_retired] = ORACLES.pop(_retired)
-
-
-def j1_fuzzy_fill(spark, sf_dir):
-    """J1 similarity tier, driver-visible (the north-star generalization
-    of the reference's exact-match-only vocabulary fill,
-    main.py:296-343; operators/linking.py::fuzzy_match_labels):
-    character-3-gram Dice matching of perturbed mention labels (each
-    nation name + a trailing 'x') against the nation-name vocabulary.
-    The exact tier stays first in the pipeline (reference parity); this
-    entry exercises the similarity tier itself against a full DuckDB
-    twin of the n-gram/Dice algebra. Score ships as x1e4 integer via
-    floor(round(score,4)*1e4 + 0.5) so the value hash is float-free."""
-    from rdf_generator_spark.operators.linking import fuzzy_match_labels
-
-    n = _t(spark, sf_dir, "nation")
-    mentions = n.select(F.concat(F.col("n_name"), F.lit("x")).alias("label"))
-    vocab = n.select(
-        F.lower(F.col("n_name")).alias("norm_label"),
-        F.concat(F.lit("uri:"), F.col("n_name")).alias("uri"),
-    )
-    fz = fuzzy_match_labels(mentions, vocab, threshold=0.7)
-    return fz.select(
-        "label", "uri",
-        F.floor(F.col("score") * 10000 + F.lit(0.5)).cast("bigint")
-        .alias("score_x1e4"),
-    )
-
-
-# Full algebra twin: same padding, 3-gram windows, distinct gram sets,
-# Dice = 2*overlap/(n_m+n_v) (double division on both engines), same
-# >=0.7 filter on the raw score, same (score DESC, uri) best-match
-# window, and the same round(.,4) -> floor(x*1e4+0.5) integerization.
-ORACLES["j1_fuzzy_fill"] = """
-    WITH m AS (
-        SELECT DISTINCT n_name || 'x' AS label,
-               ' ' || lower(n_name || 'x') || ' ' AS padded
-        FROM nation
-    ),
-    mg0 AS (
-        SELECT label,
-               list_distinct(list_transform(
-                   range(1, GREATEST(length(padded) - 2, 1) + 1),
-                   i -> substr(padded, CAST(i AS INT), 3))) AS gs
-        FROM m
-    ),
-    mg AS (SELECT label, unnest(gs) AS g, len(gs) AS n_m FROM mg0),
-    v AS (
-        SELECT lower(n_name) AS v_label, 'uri:' || n_name AS uri,
-               ' ' || lower(n_name) || ' ' AS padded
-        FROM nation
-    ),
-    vg0 AS (
-        SELECT v_label, uri,
-               list_distinct(list_transform(
-                   range(1, GREATEST(length(padded) - 2, 1) + 1),
-                   i -> substr(padded, CAST(i AS INT), 3))) AS gs
-        FROM v
-    ),
-    vg AS (SELECT v_label, uri, unnest(gs) AS g, len(gs) AS n_v FROM vg0),
-    scored AS (
-        SELECT label, v_label, uri, n_m, n_v, COUNT(*) AS overlap,
-               2 * COUNT(*) / (n_m + n_v) AS score
-        FROM mg JOIN vg USING (g)
-        GROUP BY label, v_label, uri, n_m, n_v
-    ),
-    best AS (
-        SELECT label, uri, score,
-               ROW_NUMBER() OVER (PARTITION BY label
-                                  ORDER BY score DESC, uri) AS rn
-        FROM scored WHERE score >= 0.7
-    )
-    SELECT label, uri,
-           CAST(FLOOR(ROUND(score, 4) * 10000 + 0.5) AS BIGINT) AS score_x1e4
-    FROM best WHERE rn = 1
-"""
-
-QUERIES["j1_fuzzy_fill"] = j1_fuzzy_fill

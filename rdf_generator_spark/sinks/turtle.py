@@ -328,29 +328,12 @@ def _species_ttl_text(rows) -> str:
 
 def write_species_files(result: dict, out_dir: str) -> int:
     """S2 (main.py:657-672): one Turtle file per species, named by the
-    normalized taxon label. Driver-side collect — fine at reference
-    parity (tens of species); use `write_species_files_distributed`
-    for corpora with many species."""
-    import os
+    normalized taxon label, written executor-side.
 
-    os.makedirs(out_dir, exist_ok=True)
-    by_taxon: dict = {}
-    for r in _species_joined(result).collect():
-        by_taxon.setdefault(r["taxon_label"], []).append(r)
-    for taxon_label, rows in by_taxon.items():
-        safe = taxon_label.replace("/", "_")
-        with open(os.path.join(out_dir, f"{safe}.ttl"), "w", encoding="utf-8") as f:
-            f.write(_species_ttl_text(rows))
-    return len(by_taxon)
-
-
-def write_species_files_distributed(result: dict, out_dir: str) -> int:
-    """Distributed S2: the same per-species files, written executor-side.
-
-    Repartition by taxon_label so each task holds whole species, render
-    with the same code path, write to the (shared at cluster scale)
-    filesystem from the executors — no driver collect, no per-species
-    driver loop. Returns the number of files written."""
+    Repartition by taxon_label so each task holds whole species and
+    writes their files to the (shared at cluster scale) filesystem — no
+    driver collect, no per-species driver loop. Returns the number of
+    files written."""
     import os
 
     os.makedirs(out_dir, exist_ok=True)

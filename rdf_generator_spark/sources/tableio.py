@@ -25,12 +25,14 @@ Semantics mapping (what the parquet/catalog fallbacks emulate):
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
 ICEBERG_PREFIX = "iceberg:"
 CATALOG_PREFIX = "table:"
+# Every table the pipeline writes (triples, lineage) is keyed by document.
+PARTITION_BY = ("repo", "commit")
 
 
 def is_iceberg_ref(ref: str) -> bool:
@@ -84,22 +86,16 @@ def read_table(
     return spark.read.parquet(ref)
 
 
-def write_table(
-    df: DataFrame,
-    ref: str,
-    partition_by: Sequence[str] = (),
-    mode: str = "overwrite-partitions",
-) -> None:
-    """Write with idempotent-commit semantics.
+def write_table(df: DataFrame, ref: str) -> None:
+    """Write with idempotent-commit semantics: the table is partitioned
+    by ``PARTITION_BY`` and the write replaces exactly the partitions
+    present in `df` (Iceberg: one atomic snapshot; catalog table:
+    INSERT OVERWRITE in dynamic mode; parquet: dynamic partition
+    overwrite), creating the table on its first write.
 
-    ``overwrite-partitions`` replaces exactly the partitions present in
-    `df` (Iceberg: one atomic snapshot; parquet: dynamic partition
-    overwrite). ``append`` blind-appends. ``overwrite`` replaces the
-    whole table.
-
-    Concurrency contract: the ``table:`` overwrite-partitions branch has
-    to toggle the session-global ``spark.sql.sources.partitionOverwriteMode``
-    (v1 ``insertInto`` has no per-write equivalent), so two concurrent
+    Concurrency contract: the ``table:`` branch has to toggle the
+    session-global ``spark.sql.sources.partitionOverwriteMode`` (v1
+    ``insertInto`` has no per-write equivalent), so two concurrent
     ``table:`` writers in ONE SparkSession can race each other's
     static/dynamic mode — this function assumes one writer per session
     at a time (the pipeline's lineage commits are sequential, satisfying
@@ -107,23 +103,18 @@ def write_table(
     ``option("partitionOverwriteMode", ...)``), and Iceberg commits are
     atomic snapshots; use either for multi-writer sessions."""
     if is_iceberg_ref(ref):
-        name = _name(ref)
-        try:
-            writer = df.writeTo(name).using("iceberg")
-            if partition_by:
-                from pyspark.sql import functions as F
+        from pyspark.sql import functions as F
 
-                writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
-            if mode == "append":
-                writer.append()
-            elif mode == "overwrite":
-                writer.createOrReplace()
-            else:  # overwrite-partitions
-                try:
-                    writer.overwritePartitions()
-                except Exception:
-                    # first write: table does not exist yet
-                    writer.create()
+        try:
+            writer = (
+                df.writeTo(_name(ref)).using("iceberg")
+                .partitionedBy(*[F.col(c) for c in PARTITION_BY])
+            )
+            try:
+                writer.overwritePartitions()
+            except Exception:
+                # first write: table does not exist yet
+                writer.create()
             return
         except RuntimeError:
             raise
@@ -132,21 +123,17 @@ def write_table(
     if is_catalog_ref(ref):
         name = _cat_name(ref)
         spark = df.sparkSession
-        if mode == "overwrite" or not spark.catalog.tableExists(name):
-            w = df.write.mode("overwrite").format("parquet")
-            if partition_by:
-                w = w.partitionBy(*partition_by)
-            w.saveAsTable(name)
+        if not spark.catalog.tableExists(name):
+            df.write.mode("overwrite").format("parquet").partitionBy(
+                *PARTITION_BY
+            ).saveAsTable(name)
             return
         # align to the table's stored column order (saveAsTable moves
-        # partition columns to the end); insertInto is positional
+        # partition columns to the end); insertInto is positional.
+        # INSERT OVERWRITE in dynamic mode replaces exactly the
+        # partitions present in df — the v1-catalog analogue of
+        # Iceberg's overwritePartitions snapshot commit
         cols = spark.table(name).columns
-        if mode == "append":
-            df.select(*cols).write.mode("append").insertInto(name)
-            return
-        # overwrite-partitions: INSERT OVERWRITE in dynamic mode replaces
-        # exactly the partitions present in df — the v1-catalog analogue
-        # of Iceberg's overwritePartitions snapshot commit
         conf = spark.conf
         prev = conf.get("spark.sql.sources.partitionOverwriteMode", "static")
         conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -155,16 +142,12 @@ def write_table(
         finally:
             conf.set("spark.sql.sources.partitionOverwriteMode", prev)
         return
-    w = df.write
-    if mode == "append":
-        w = w.mode("append")
-    elif mode == "overwrite":
-        w = w.mode("overwrite")
-    else:
-        w = w.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(ref)
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*PARTITION_BY)
+        .parquet(ref)
+    )
     # dynamic overwrite replaces part files in place; drop the session's
     # cached file listing or later reads serve stale paths
     df.sparkSession.catalog.refreshByPath(ref)

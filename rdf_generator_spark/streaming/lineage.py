@@ -96,7 +96,7 @@ def run_resumable(
         staging_dir=os.path.join(out_dir, "_staging"),
     )
     triples = res["triples"]
-    tableio.write_table(triples, triples_ref, partition_by=("repo", "commit"))
+    tableio.write_table(triples, triples_ref)
     wall_ms = int((time.perf_counter() - t0) * 1000)
 
     # Per-document counts come from the committed table, not a second
@@ -123,8 +123,6 @@ def run_resumable(
         .withColumn("wall_ms", F.lit(wall_ms))
         .select(*LINEAGE_COLS)
     )
-    tableio.write_table(
-        lineage_rows, lineage_ref, partition_by=("repo", "commit")
-    )
+    tableio.write_table(lineage_rows, lineage_ref)
     n_triples = committed.count()
     return {"docs": n_docs, "triples": n_triples}

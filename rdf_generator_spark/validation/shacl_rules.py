@@ -88,13 +88,16 @@ RULES: List[ShapeRule] = [
 ]
 
 
-def rdfs_subclass_closure(triples: DataFrame, max_iters: int = 12, keys=None) -> DataFrame:
+def rdfs_subclass_closure(triples: DataFrame, keys=None) -> DataFrame:
     """V2: transitive closure of rdfs:subClassOf, per document.
 
-    Iterative self-join to fixpoint with lineage truncation per round
-    (the standard Spark pattern for small-diameter closures). Returns
-    (doc, sub, sup) including the reflexive pairs actually needed by
-    type expansion (handled by the caller via union).
+    Iterative join with the one-step edges, with lineage truncation per
+    round; each round extends the closure's paths by one edge and runs
+    one count job. It loops until a round adds no pair: the closure only
+    grows and is a subset of the finite set of node pairs, so the loop
+    ends, cycles included. Returns (doc, sub, sup) including the
+    reflexive pairs actually needed by type expansion (handled by the
+    caller via union).
     """
     DOC = list(keys) if keys else ["repo", "commit"]
     edges = (
@@ -102,24 +105,22 @@ def rdfs_subclass_closure(triples: DataFrame, max_iters: int = 12, keys=None) ->
         .select(*DOC, F.col("s").alias("sub"), F.col("o").alias("sup"))
         .distinct()
     )
-    closure = edges
-    for _ in range(max_iters):
-        renamed = edges.select(
-            *[F.col(k).alias(f"__k_{k}") for k in DOC],
-            F.col("sub").alias("__mid"), F.col("sup").alias("__sup"),
-        )
-        cond = F.col("sup") == F.col("__mid")
-        for k in DOC:
-            cond = cond & (F.col(k) == F.col(f"__k_{k}"))
+    renamed = edges.select(
+        *[F.col(k).alias(f"__k_{k}") for k in DOC],
+        F.col("sub").alias("__mid"), F.col("sup").alias("__sup"),
+    )
+    cond = F.col("sup") == F.col("__mid")
+    for k in DOC:
+        cond = cond & (F.col(k) == F.col(f"__k_{k}"))
+    closure, n = edges, edges.count()
+    while True:
         nxt = closure.join(renamed, cond).select(
             *DOC, "sub", F.col("__sup").alias("sup")
         )
-        new_closure = closure.unionByName(nxt).distinct().localCheckpoint(eager=True)
-        if new_closure.count() == closure.count():
-            closure = new_closure
-            break
-        closure = new_closure
-    return closure
+        closure = closure.unionByName(nxt).distinct().localCheckpoint(eager=True)
+        n, prev = closure.count(), n
+        if n == prev:
+            return closure
 
 
 def expanded_types(triples: DataFrame, keys=None) -> DataFrame:

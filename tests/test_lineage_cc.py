@@ -279,10 +279,10 @@ def test_tableio_parquet_roundtrip_and_iceberg_gating(spark, tmp_path):
     ref = str(tmp_path / "t")
     df = spark.createDataFrame([("r1", "c", 1), ("r2", "c", 2)],
                                "repo string, commit string, v int")
-    tableio.write_table(df, ref, partition_by=("repo", "commit"))
+    tableio.write_table(df, ref)
     assert tableio.table_exists(spark, ref)
     # idempotent: same partitions overwritten, not appended
-    tableio.write_table(df, ref, partition_by=("repo", "commit"))
+    tableio.write_table(df, ref)
     assert tableio.read_table(spark, ref).count() == 2
     assert tableio.current_snapshot_id(spark, ref) == ""
 
@@ -291,5 +291,4 @@ def test_tableio_parquet_roundtrip_and_iceberg_gating(spark, tmp_path):
     with pytest.raises(RuntimeError, match="Iceberg"):
         tableio.read_table(spark, "iceberg:cat.db.corpus")
     with pytest.raises(RuntimeError, match="Iceberg"):
-        tableio.write_table(df, "iceberg:cat.db.triples",
-                            partition_by=("repo",))
+        tableio.write_table(df, "iceberg:cat.db.triples")

@@ -117,75 +117,3 @@ def test_fill_stats_matches_reference_counts(spark):
     assert len(row) == 1
     assert row[0]["filled"] == 17 and row[0]["unresolved"] == 3
 
-
-@needs_reference
-def test_fuzzy_match_labels(spark):
-    """Similarity tier: misspelled mentions resolve to the nearest vocab
-    label; unrelated mentions stay unresolved."""
-    from rdf_generator_spark.operators.linking import fuzzy_match_labels
-    from rdf_generator_spark.sources.corpus import vocab_df_from_corpus
-
-    vocab = vocab_df_from_corpus(spark, reference_corpus_df(spark))
-    mentions = spark.createDataFrame(
-        [("glosal rod",), ("Basal  Area",), ("zzz qqq xxx",)], ["label"]
-    )
-    got = {r["label"]: r["uri"] for r in
-           fuzzy_match_labels(mentions, vocab, threshold=0.6).collect()}
-    assert got.get("glosal rod", "").endswith("#SYN_") is False
-    assert "glosal rod" in got  # typo resolved
-    assert "Basal  Area" in got  # case/whitespace resolved
-    assert "zzz qqq xxx" not in got  # garbage stays unresolved
-    # the typo resolves to the right concept
-    idx = {r["norm_label"]: r["uri"] for r in vocab.collect()}
-    assert got["glosal rod"] == idx["glossal rod"]
-    assert got["Basal  Area"] == idx["basal area"]
-
-
-@needs_reference
-def test_fuzzy_tier_wired_into_fill(spark):
-    """Opt-in fuzzy second pass: a misspelled locator label resolves at
-    threshold; the default (exact-only) path leaves it missing and the
-    fill_stats tiers account for the difference."""
-    from pyspark.sql import functions as F
-
-    from rdf_generator_spark.operators.linking import (
-        fill_character_uris, fill_stats,
-    )
-    from rdf_generator_spark.sources import parsers
-    from rdf_generator_spark.sources.corpus import vocab_df_from_corpus
-
-    corpus = reference_corpus_df(spark)
-    vocab = vocab_df_from_corpus(spark, corpus)
-    chars = parsers.parse_char_docs(corpus)
-    # plant a typo'd locator with no URI ("glosal rod" ~ "glossal rod")
-    chars = chars.withColumn(
-        "locators",
-        F.concat(
-            F.col("locators"),
-            F.array(F.struct(F.lit("glosal rod").alias("label"),
-                             F.lit(None).cast("string").alias("uri"))),
-        ),
-    )
-
-    def typo_uris(df):
-        return {
-            r["u"]
-            for r in df.select(F.explode("locators").alias("m"))
-            .filter(F.col("m.label") == "glosal rod")
-            .select(F.col("m.uri").alias("u")).collect()
-        }
-
-    exact = fill_character_uris(chars, vocab)
-    assert typo_uris(exact) == {None}
-
-    fuzzy = fill_character_uris(chars, vocab, fuzzy_threshold=0.6)
-    got = typo_uris(fuzzy)
-    idx = {r["norm_label"]: r["uri"] for r in vocab.collect()}
-    assert got == {idx["glossal rod"]}
-
-    stats = fill_stats(chars, vocab, fuzzy_threshold=0.6).collect()[0]
-    # 17 exact (reference parity), the planted typo resolves fuzzily,
-    # the 3 negation labels stay unresolved
-    assert stats["filled"] == 17
-    assert stats["filled_fuzzy"] >= 10  # typo'd locator on every char row
-    assert stats["unresolved"] == 3

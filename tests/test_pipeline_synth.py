@@ -18,6 +18,7 @@ from rdf_generator_spark.sources.corpus import build_label_index, corpus_df
 from rdf_generator_spark.sources.golden import golden_corpus_rows
 from rdf_generator_spark.sources.synth import synth_corpus_rows
 
+from tests.fixtures import force_counter_buckets
 from tests.oracle.refsim import RefSim
 
 
@@ -31,11 +32,13 @@ from tests.oracle.refsim import RefSim
     # boundary at every character
     pytest.param(23, None, 1, id="23-buckets1"),
 ])
-def test_synth_corpus_matches_oracle_per_doc(spark, seed, dataset_id, counter_buckets):
+def test_synth_corpus_matches_oracle_per_doc(spark, monkeypatch, seed, dataset_id,
+                                            counter_buckets):
     rows = synth_corpus_rows(n_datasets=3, ntax=8, nchar=8, seed=seed)
     corpus = corpus_df(spark, rows)
-    res = build_graph(spark, corpus, dataset_id=dataset_id,
-                      counter_buckets=counter_buckets)
+    if counter_buckets != "auto":
+        force_counter_buckets(monkeypatch, counter_buckets)
+    res = build_graph(spark, corpus, dataset_id=dataset_id)
     got_by_doc = defaultdict(set)
     for r in res["triples"].collect():
         got_by_doc[r["repo"]].add((r["s"], r["p"], r["o"], bool(r["lit"]), r["dt"]))
@@ -76,7 +79,7 @@ def _kgbench_jobs():
 
 
 @pytest.mark.parametrize("counter_buckets", [None, 2])
-def test_repeated_state_seed_matches_oracle(spark, counter_buckets):
+def test_repeated_state_seed_matches_oracle(spark, monkeypatch, counter_buckets):
     """A character with two states of one IRI seed (same label, no URI):
     the reference numbers the state once (has_label guards), so the
     STATE/QUALITY :id-N counters must skip the repeat, on the single
@@ -86,7 +89,8 @@ def test_repeated_state_seed_matches_oracle(spark, counter_buckets):
     jobs = _kgbench_jobs()
     flagged = [r[0] for r in rows if r[3] == "json" and jobs.repeated_state_seed(r[4])]
     assert flagged, "seed no longer draws a repeated state seed"
-    res = build_graph(spark, corpus_df(spark, rows), counter_buckets=counter_buckets)
+    force_counter_buckets(monkeypatch, counter_buckets)
+    res = build_graph(spark, corpus_df(spark, rows))
     got_by_doc = defaultdict(set)
     for r in res["triples"].collect():
         got_by_doc[r["repo"]].add((r["s"], r["p"], r["o"], bool(r["lit"]), r["dt"]))
@@ -111,7 +115,7 @@ def test_repeated_state_seed_matches_oracle(spark, counter_buckets):
 @pytest.mark.parametrize("seed,counter_buckets", [
     (7, None), (23, 2), pytest.param(None, None, id="golden"),
 ])
-def test_label_subjects_only_premise(spark, seed, counter_buckets):
+def test_label_subjects_only_premise(spark, monkeypatch, seed, counter_buckets):
     """The final graph's apply_label_priority(label_subjects_only=True)
     assumes (a) every matrix-labelled subject of its target keeps an
     rdfs:label row there and (b) the target has no duplicate rows. The
@@ -120,7 +124,8 @@ def test_label_subjects_only_premise(spark, seed, counter_buckets):
     corpora and on the golden corpus (seed None)."""
     rows = (golden_corpus_rows() if seed is None
             else synth_corpus_rows(n_datasets=3, ntax=6, nchar=6, seed=seed))
-    res = build_graph(spark, corpus_df(spark, rows), counter_buckets=counter_buckets)
+    force_counter_buckets(monkeypatch, counter_buckets)
+    res = build_graph(spark, corpus_df(spark, rows))
 
     def key(r):
         return r["repo"], r["commit"], r["s"]
@@ -393,8 +398,12 @@ def test_dataset_id_config_deterministic_and_bounded(spark):
     corpus, the winning dataset_id is the lexicographically-first
     (repo, path, commit) row carrying one — not partition-order luck —
     malformed yaml and dataset_id-less docs are skipped, and the
-    driver-side collect is bounded by a structural limit()."""
-    from rdf_generator_spark.plans.pipeline import dataset_id_from_config
+    driver-side collect is bounded: it keeps the first
+    _CONFIG_SCAN_LIMIT yaml rows in (repo, path, commit) order and warns
+    when it hits the bound."""
+    from rdf_generator_spark.plans.pipeline import (
+        _CONFIG_SCAN_LIMIT, _dimension_rows, dataset_id_from_config,
+    )
     from rdf_generator_spark.sources.corpus import corpus_df
 
     docs = [
@@ -408,11 +417,13 @@ def test_dataset_id_config_deterministic_and_bounded(spark):
         assert dataset_id_from_config(
             corpus_df(spark, rows).repartition(7)
         ) == "first"
-    # the scan plan carries the structural bound
-    plan = (
-        corpus_df(spark, docs)
-        .filter("lang = 'yaml'")
-        .orderBy("repo", "path", "commit")
-        .limit(64)
-    )._jdf.queryExecution().toString()
-    assert "Limit" in plan or "TakeOrdered" in plan
+    # past the bound: the first rows in order, and a warning
+    many = [("r", f"cfg-{i:03d}.yaml", "c" * 40, "yaml", f"dataset_id: d{i}\n")
+            for i in range(_CONFIG_SCAN_LIMIT + 6)]
+    corpus = corpus_df(spark, many[::-1]).repartition(3)
+    _, yaml_rows = _dimension_rows(corpus)
+    assert [r["path"] for r in yaml_rows] == [
+        p for _, p, _, _, _ in many[:_CONFIG_SCAN_LIMIT]
+    ]
+    with pytest.warns(UserWarning, match="bound"):
+        assert dataset_id_from_config(corpus) == "d0"

@@ -14,6 +14,8 @@ import pytest
 from rdf_generator_spark import queries as Q
 from rdf_generator_spark.plans.pipeline import build_graph
 
+from tests.fixtures import force_counter_buckets, trip_broadcast_gate
+
 SF = "/root/testdata/sf0.01"
 
 
@@ -255,26 +257,6 @@ def test_parse_task_sizing(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(P, "_PROBE_FILE_CAP", 2)
     over = P._read_footers(files)
     assert over is not None and over.total is None
-
-
-def test_fuzzy_match_plan_is_gram_bucketed(spark):
-    """j1_fuzzy_fill's engine (fuzzy_match_labels) must generate
-    candidates through the n-gram equi-join — a broadcast hash join on
-    the gram key — never an all-pairs comparison."""
-    from pyspark.sql import functions as F
-
-    from rdf_generator_spark.operators.linking import fuzzy_match_labels
-
-    n = spark.read.parquet(f"{SF}/nation.parquet")
-    mentions = n.select(F.concat(F.col("n_name"), F.lit("x")).alias("label"))
-    vocab = n.select(
-        F.lower(F.col("n_name")).alias("norm_label"),
-        F.concat(F.lit("uri:"), F.col("n_name")).alias("uri"),
-    )
-    plan = plan_of(fuzzy_match_labels(mentions, vocab))
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-    assert "BroadcastHashJoin" in plan, plan
 
 
 def test_emit_compiles_family_rows(spark):
@@ -527,7 +509,7 @@ def test_kg_join_broadcasts_character_dimension(synth_build):
     assert "BroadcastHashJoin" in plan_of(res["cells"])
 
 
-def test_kg_join_shuffle_fallback_past_gate(spark, synth_build):
+def test_kg_join_shuffle_fallback_past_gate(spark, synth_build, monkeypatch):
     """The dimension-broadcast gate controls the broadcast hint: with it
     tripped (many-document corpus) the char join carries no hint, and
     the planner picks the join from statistics alone."""
@@ -537,7 +519,8 @@ def test_kg_join_shuffle_fallback_past_gate(spark, synth_build):
         return df._jdf.queryExecution().analyzed().toString()
 
     assert "ResolvedHint" in analyzed(res["cells"])
-    off = build_graph(spark, corpus, dim_broadcast=False)
+    trip_broadcast_gate(monkeypatch)
+    off = build_graph(spark, corpus)
     assert "ResolvedHint" not in analyzed(off["cells"])
 
 
@@ -556,9 +539,66 @@ def test_build_graph_options():
     """build_graph's options are the ones callers set; a new option
     fails here until it has a caller that needs it."""
     assert list(inspect.signature(build_graph).parameters) == [
-        "spark", "corpus", "dataset_id", "dim_broadcast", "staging_dir",
-        "counter_buckets",
+        "spark", "corpus", "dataset_id", "staging_dir",
     ]
+
+
+# Every optional parameter of the library, as (function, parameter).
+LIBRARY_OPTIONS = [
+    ("operators/canonicalize.py::connected_components", "max_iters"),
+    ("operators/graph_ops.py::apply_label_priority", "label_subjects_only"),
+    ("operators/linking.py::fill_scalar_uri", "enabled"),
+    ("operators/windows.py::seq_number", "out"),
+    ("plans/base_scaffold.py::a", "lit"),
+    ("plans/base_scaffold.py::a", "dt"),
+    ("plans/emit.py::emit", "doc_cols"),
+    ("plans/pipeline.py::build_graph", "dataset_id"),
+    ("plans/pipeline.py::build_graph", "staging_dir"),
+    ("queries_kg.py::_golden_df", "key"),
+    ("sinks/turtle.py::write_turtle_auto", "n_triples"),
+    ("sinks/turtle.py::write_turtle_auto", "threshold"),
+    ("sources/corpus.py::corpus_parquet_df", "path"),
+    ("sources/parsers.py::parse_docs", "langs"),
+    ("sources/synth.py::synth_corpus_rows", "n_datasets"),
+    ("sources/synth.py::synth_corpus_rows", "ntax"),
+    ("sources/synth.py::synth_corpus_rows", "nchar"),
+    ("sources/synth.py::synth_corpus_rows", "seed"),
+    ("sources/synth.py::synth_corpus_rows", "giant_every"),
+    ("sources/synth.py::synth_corpus_rows", "giant_scale"),
+    ("sources/synth.py::synth_corpus_rows", "giant_shape"),
+    ("sources/tableio.py::read_table", "snapshot_id"),
+    ("streaming/lineage.py::run_resumable", "dataset_id"),
+    ("streaming/lineage.py::run_resumable", "snapshot_id"),
+    ("streaming/lineage.py::run_resumable", "triples_table"),
+    ("streaming/lineage.py::run_resumable", "lineage_table"),
+    ("validation/shacl_rules.py::rdfs_subclass_closure", "keys"),
+    ("validation/shacl_rules.py::expanded_types", "keys"),
+    ("validation/shacl_rules.py::validate", "scope"),
+    ("validation/shacl_rules.py::validate", "keys"),
+    ("validation/shacl_rules.py::conformance_report", "universe"),
+]
+
+
+def test_library_options():
+    """Every optional parameter (one with a default) of every function
+    in the library, nested ones included, is pinned in LIBRARY_OPTIONS.
+    A new option fails here until two callers outside the tests need
+    different values of it; an option whose callers all pass one value
+    becomes a constant instead."""
+    pkg = Path(__file__).resolve().parent.parent / "rdf_generator_spark"
+    got = []
+    for f in sorted(pkg.rglob("*.py")):
+        for node in ast.walk(ast.parse(f.read_text(encoding="utf-8"))):
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            a = node.args
+            pos = a.posonlyargs + a.args
+            names = [x.arg for x in pos[len(pos) - len(a.defaults):]]
+            names += [x.arg for x, d in zip(a.kwonlyargs, a.kw_defaults)
+                      if d is not None]
+            fn = f"{f.relative_to(pkg).as_posix()}::{node.name}"
+            got += [(fn, n) for n in names]
+    assert sorted(got) == sorted(LIBRARY_OPTIONS)
 
 
 def test_library_defs_are_referenced():
@@ -597,7 +637,7 @@ FINAL_EXCHANGE_BUDGET = 22
 BUILD_EXCHANGE_BUDGET = 15
 BUILD_BROADCAST_EXCHANGE_BUDGET = 10
 # The same over a build of the same corpus on the two-phase counter path
-# (counter_buckets=2).
+# (bucket width 2).
 BUCKETED_BUILD_EXCHANGE_BUDGET = 22
 BUCKETED_BUILD_BROADCAST_EXCHANGE_BUDGET = 16
 # py4j commands the driver sends for one build_graph on the same corpus
@@ -627,13 +667,12 @@ def test_build_exchange_budget(synth_build):
     assert n_bcast <= BUILD_BROADCAST_EXCHANGE_BUDGET, n_bcast
 
 
-def test_bucketed_build_exchange_budget(spark, synth_build):
+def test_bucketed_build_exchange_budget(spark, synth_build, monkeypatch):
     """Exchanges over every plan one build on the two-phase counter path
     executes: only the cell-scale counters take that form."""
     corpus, _, _ = synth_build
-    _, execs = executions(
-        spark, lambda: build_graph(spark, corpus, counter_buckets=2)
-    )
+    force_counter_buckets(monkeypatch, 2)
+    _, execs = executions(spark, lambda: build_graph(spark, corpus))
     n, n_bcast = _exchange_counts(execs)
     assert n <= BUCKETED_BUILD_EXCHANGE_BUDGET, n
     assert n_bcast <= BUCKETED_BUILD_BROADCAST_EXCHANGE_BUDGET, n_bcast

@@ -115,25 +115,6 @@ def test_kb_iri_policy(rendered):
     assert "cdao:0000075" not in text
     assert "<http://purl.obolibrary.org/obo/CDAO_0000075>" in text
 
-def test_species_files_distributed_matches_driver(spark, tmp_path):
-    """The executor-side S2 writer produces byte-identical files to the
-    driver-side one (shared render path, no collect)."""
-    from rdf_generator_spark.sinks.turtle import (
-        write_species_files, write_species_files_distributed,
-    )
-
-    res = build_graph(spark, golden_corpus_df(spark))
-    n1 = write_species_files(res, str(tmp_path / "drv"))
-    n2 = write_species_files_distributed(res, str(tmp_path / "dist"))
-    assert n1 == n2 == 10
-    f1 = sorted(os.listdir(tmp_path / "drv"))
-    f2 = sorted(os.listdir(tmp_path / "dist"))
-    assert f1 == f2
-    for name in f1:
-        a = open(tmp_path / "drv" / name, encoding="utf-8").read()
-        b = open(tmp_path / "dist" / name, encoding="utf-8").read()
-        assert a == b, name
-
 
 def test_species_files(spark, tmp_path):
     res = build_graph(spark, golden_corpus_df(spark))

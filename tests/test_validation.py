@@ -101,6 +101,24 @@ def test_rdfs_closure_expansion(spark):
     assert ("ex:i", "ex:Root") in types
 
 
+def test_rdfs_closure_long_chain(spark):
+    """The closure runs to its fixpoint however long the chain: an
+    instance typed C0 on a 20-edge rdfs:subClassOf chain C0 -> ... -> C20
+    gets every class of the chain, C20 included (each round extends the
+    closure's paths by one edge)."""
+    rows = [("r", "c", "ex:i", T.RDF_TYPE, "ex:C0", False, None)] + [
+        ("r", "c", f"ex:C{i}", T.RDFS_SUBCLASSOF, f"ex:C{i + 1}", False, None)
+        for i in range(20)
+    ]
+    df = spark.createDataFrame(
+        rows, "repo string, commit string, s string, p string, o string, lit boolean, dt string"
+    )
+    types = {
+        r["type"] for r in expanded_types(df).collect() if r["node"] == "ex:i"
+    }
+    assert types == {f"ex:C{i}" for i in range(21)}
+
+
 def test_scoped_validation_report(spark, result):
     from rdf_generator_spark.validation.scopes import (
         render_summary,
