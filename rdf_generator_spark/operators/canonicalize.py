@@ -26,6 +26,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 DOC = ["repo", "commit"]
+# Star-contraction rounds before connected_components gives up; each
+# round is O(log n) progress, so reaching it is never normal operation.
+MAX_ITERS = 30
 
 
 def _star_round(e: DataFrame, keys, mode: str) -> DataFrame:
@@ -54,7 +57,7 @@ def _star_round(e: DataFrame, keys, mode: str) -> DataFrame:
     return out.filter(F.col("a") != F.col("b")).distinct()
 
 
-def connected_components(edges: DataFrame, max_iters: int = 30) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """edges(a, b) [+ optional doc keys] -> mapping(node, canon).
 
     `canon` is the lexicographically smallest IRI in each component.
@@ -63,7 +66,7 @@ def connected_components(edges: DataFrame, max_iters: int = 30) -> DataFrame:
     edge set stabilizes (O(log n) alternations); each round truncates
     lineage with an eager localCheckpoint so the plan never grows.
 
-    If ``max_iters`` runs out before the fixpoint is verified, the edges
+    If ``MAX_ITERS`` runs out before the fixpoint is verified, the edges
     left are not yet stars and the groupBy-min below would leave
     distinct labels inside one true component — a silently-wrong
     canonical mapping — so that exit raises ``RuntimeError``. O(log n)
@@ -79,7 +82,7 @@ def connected_components(edges: DataFrame, max_iters: int = 30) -> DataFrame:
     )
     n_e = e.count()
     converged = False
-    for _ in range(max_iters):
+    for _ in range(MAX_ITERS):
         if n_e == 0:
             converged = True
             break
@@ -94,9 +97,9 @@ def connected_components(edges: DataFrame, max_iters: int = 30) -> DataFrame:
     if not converged and n_e > 0:
         raise RuntimeError(
             f"connected_components did not reach a verified fixpoint in "
-            f"max_iters={max_iters} star-contraction rounds ({n_e} edges "
-            "remain); the mapping would merge components only partially. "
-            "Raise max_iters (each round is O(log n) progress)."
+            f"canonicalize.MAX_ITERS={MAX_ITERS} star-contraction rounds "
+            f"({n_e} edges remain); the mapping would merge components only "
+            "partially. Raise MAX_ITERS (each round is O(log n) progress)."
         )
     # fixpoint edges are stars (a=node, b=component root); roots map to
     # themselves. groupBy-min is a no-op on a true fixpoint.

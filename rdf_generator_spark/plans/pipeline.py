@@ -148,12 +148,10 @@ def _read_footers(files: List[str]) -> Optional[_Footers]:
     without a configured pyarrow fs) or no footer has a ``content``
     chunk (not a corpus-shaped table). ``total`` is known only when
     every file's footer was read."""
+    import pyarrow.parquet as pq
+    from urllib.parse import unquote, urlparse
+
     if not files:
-        return None
-    try:
-        import pyarrow.parquet as pq
-        from urllib.parse import unquote, urlparse
-    except Exception:
         return None
     max_mean = max_group = total = 0
     # deterministic capped scan: inputFiles() order is arbitrary, so an

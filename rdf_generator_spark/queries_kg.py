@@ -102,8 +102,8 @@ def _golden_parts(spark: SparkSession) -> Dict[str, List[tuple]]:
     return _GOLDEN
 
 
-def _golden_df(spark: SparkSession, key: str = "final") -> DataFrame:
-    return spark.createDataFrame(_golden_parts(spark)[key], _TRIPLE_SCHEMA)
+def _golden_df(spark: SparkSession) -> DataFrame:
+    return spark.createDataFrame(_golden_parts(spark)["final"], _TRIPLE_SCHEMA)
 
 
 def _digest_agg(df: DataFrame) -> DataFrame:
@@ -1108,11 +1108,11 @@ def v2_rdfs_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rdf_generator_spark.validation.shacl_rules import rdfs_subclass_closure
 
     rows = [
-        ("r", "c", a, T.RDFS_SUBCLASSOF, b, False, None) for a, b in _V2_EDGES
+        ("r", "c", "g", a, T.RDFS_SUBCLASSOF, b, False, None) for a, b in _V2_EDGES
     ]
     triples = spark.createDataFrame(
-        rows, "repo string, commit string, s string, p string, o string, "
-              "lit boolean, dt string"
+        rows, "repo string, commit string, scope string, s string, p string, "
+              "o string, lit boolean, dt string"
     )
     return rdfs_subclass_closure(triples).select("sub", "sup")
 

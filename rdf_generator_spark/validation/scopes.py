@@ -13,11 +13,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rdf_generator_spark.validation.shacl_rules import conformance_report, validate  # noqa: F401
+from rdf_generator_spark.validation.shacl_rules import KEYS, conformance_report, validate
 
 DOC = ["repo", "commit"]
 TRIPLE = ["s", "p", "o", "lit", "dt"]
-SKEYS = ["repo", "commit", "scope"]
 
 
 def scoped_triples(result: dict) -> DataFrame:
@@ -46,27 +45,27 @@ def scoped_triples(result: dict) -> DataFrame:
     char_scoped = charp.withColumn(
         "scope", F.concat(F.lit("Char_ID "), F.col("char_id"))
     )
-    per_char = base_per_char.select(*SKEYS, *TRIPLE).unionByName(
-        char_scoped.select(*SKEYS, *TRIPLE)
+    per_char = base_per_char.select(*KEYS, *TRIPLE).unionByName(
+        char_scoped.select(*KEYS, *TRIPLE)
     )
 
     matrix = result["matrix_part"].withColumn("scope", F.lit("CDAO Matrix")).select(
-        *SKEYS, *TRIPLE
+        *KEYS, *TRIPLE
     )
 
     tu_template = base.select(*DOC, *TRIPLE).unionByName(
         charp.select(*DOC, *TRIPLE)
     ).withColumn("scope", F.lit("TU __template__"))
     scopes = per_char.unionByName(matrix).unionByName(
-        tu_template.select(*SKEYS, *TRIPLE)
+        tu_template.select(*KEYS, *TRIPLE)
     )
 
     species = result["species_part"].withColumn(
         "scope", F.lit("Species Combined")
-    ).select(*SKEYS, *TRIPLE)
+    ).select(*KEYS, *TRIPLE)
     final = result["triples"].withColumn(
         "scope", F.lit("Final Combined Graph")
-    ).select(*SKEYS, *TRIPLE)
+    ).select(*KEYS, *TRIPLE)
     return scopes.unionByName(species).unionByName(final)
 
 
@@ -85,7 +84,7 @@ def validation_report(result: dict):
     """(violations, conformance) over all scopes — the DataFrame
     equivalent of validation_summary.txt + validation_report.ttl."""
     scoped = scoped_triples(result)
-    violations = validate(scoped, keys=SKEYS)
+    violations = validate(scoped)
 
     # scope universe from the small dimension frames (not by re-running
     # the scoped union)

@@ -27,6 +27,10 @@ from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 from rdf_generator_spark import terms as T
 from rdf_generator_spark.sources.corpus import local_df
 
+# The validation key: every rule is evaluated per document and scope
+# (one of the reference's per-graph validations, validation/scopes.py).
+KEYS = ["repo", "commit", "scope"]
+
 
 @dataclass(frozen=True)
 class ShapeRule:
@@ -88,64 +92,66 @@ RULES: List[ShapeRule] = [
 ]
 
 
-def rdfs_subclass_closure(triples: DataFrame, keys=None) -> DataFrame:
-    """V2: transitive closure of rdfs:subClassOf, per document.
+def _prefixed(df: DataFrame, **cols: str) -> DataFrame:
+    """`df`'s KEYS renamed to ``__k_<key>`` next to `cols` (new name ->
+    column), so it joins back on KEYS without ambiguous columns."""
+    return df.select(*[F.col(k).alias(f"__k_{k}") for k in KEYS],
+                     *[F.col(c).alias(a) for a, c in cols.items()])
 
-    Iterative join with the one-step edges, with lineage truncation per
-    round; each round extends the closure's paths by one edge and runs
-    one count job. It loops until a round adds no pair: the closure only
-    grows and is a subset of the finite set of node pairs, so the loop
-    ends, cycles included. Returns (doc, sub, sup) including the
-    reflexive pairs actually needed by type expansion (handled by the
-    caller via union).
+
+def _same_keys(cond):
+    """`cond` and equal KEYS across a `_prefixed` join."""
+    for k in KEYS:
+        cond = cond & (F.col(k) == F.col(f"__k_{k}"))
+    return cond
+
+
+def rdfs_subclass_closure(triples: DataFrame) -> DataFrame:
+    """V2: transitive closure of rdfs:subClassOf, per KEYS.
+
+    The one-step edges are read from `triples` once, into a checkpoint.
+    Each round joins the closure with them (with lineage truncation),
+    extending its paths by one edge, and runs one count job. It loops
+    while a round adds a pair: the closure only grows and is a subset of
+    the finite set of node pairs, so the loop ends, cycles included.
+    With no edge it ends after the edge count and returns an empty
+    plan (``limit(0)``), which the optimizer folds out of the joins on
+    it, so they run no job. Returns (KEYS, sub, sup); the caller keeps
+    each node's asserted types itself.
     """
-    DOC = list(keys) if keys else ["repo", "commit"]
     edges = (
         triples.filter((F.col("p") == T.RDFS_SUBCLASSOF) & (~F.col("lit")))
-        .select(*DOC, F.col("s").alias("sub"), F.col("o").alias("sup"))
+        .select(*KEYS, F.col("s").alias("sub"), F.col("o").alias("sup"))
         .distinct()
+        .localCheckpoint(eager=True)
     )
-    renamed = edges.select(
-        *[F.col(k).alias(f"__k_{k}") for k in DOC],
-        F.col("sub").alias("__mid"), F.col("sup").alias("__sup"),
-    )
-    cond = F.col("sup") == F.col("__mid")
-    for k in DOC:
-        cond = cond & (F.col(k) == F.col(f"__k_{k}"))
-    closure, n = edges, edges.count()
-    while True:
-        nxt = closure.join(renamed, cond).select(
-            *DOC, "sub", F.col("__sup").alias("sup")
+    n = edges.count()
+    if not n:
+        return edges.limit(0)
+    step = _prefixed(edges, __mid="sub", __sup="sup")
+    closure, prev = edges, 0
+    while n > prev:
+        nxt = closure.join(step, _same_keys(F.col("sup") == F.col("__mid")))
+        closure = (
+            closure.unionByName(nxt.select(*KEYS, "sub", F.col("__sup").alias("sup")))
+            .distinct()
+            .localCheckpoint(eager=True)
         )
-        closure = closure.unionByName(nxt).distinct().localCheckpoint(eager=True)
-        n, prev = closure.count(), n
-        if n == prev:
-            return closure
+        prev, n = n, closure.count()
+    return closure
 
 
-def expanded_types(triples: DataFrame, keys=None) -> DataFrame:
-    """(doc, node, type) with rdfs-subclass expansion — what pySHACL's
+def expanded_types(triples: DataFrame) -> DataFrame:
+    """(KEYS, node, type) with rdfs-subclass expansion — what pySHACL's
     inference='rdfs' contributes to targetClass matching."""
-    DOC = list(keys) if keys else ["repo", "commit"]
-    types = (
-        triples.filter((F.col("p") == T.RDF_TYPE) & (~F.col("lit")))
-        .select(*DOC, F.col("s").alias("node"), F.col("o").alias("type"))
-        .distinct()
+    asserted = triples.filter((F.col("p") == T.RDF_TYPE) & (~F.col("lit"))).select(
+        *KEYS, F.col("s").alias("node"), F.col("o").alias("type")
     )
-    closure = rdfs_subclass_closure(triples, keys=DOC)
-    if closure.isEmpty():
-        return types
-    cl = closure.select(
-        *[F.col(k).alias(f"__k_{k}") for k in DOC],
-        F.col("sub").alias("__sub"), F.col("sup").alias("__sup"),
-    )
-    cond = types["type"] == cl["__sub"]
-    for k in DOC:
-        cond = cond & (types[k] == cl[f"__k_{k}"])
-    inherited = types.join(cl, cond).select(
-        *DOC, "node", F.col("__sup").alias("type")
-    )
-    return types.unionByName(inherited).distinct()
+    cl = _prefixed(rdfs_subclass_closure(triples), __sub="sub", __sup="sup")
+    inherited = asserted.join(
+        cl, _same_keys(F.col("type") == F.col("__sub"))
+    ).select(*KEYS, "node", F.col("__sup").alias("type"))
+    return asserted.unionByName(inherited).distinct()
 
 
 _RULES_SCHEMA = StructType(
@@ -169,61 +175,56 @@ def _rules_df(spark):
     return local_df(spark, rows, _RULES_SCHEMA)
 
 
-def validate(triples: DataFrame, scope: str = "final", keys=None) -> DataFrame:
+def validate(triples: DataFrame) -> DataFrame:
     """Evaluate all rules in a fixed number of joins (rule count does not
     add scans): broadcast the rule table against the type scan / predicate
     scan, aggregate per (rule, focus), anti-compare against [min, max].
 
-    Returns (doc, scope, focus, shape, path, constraint, actual, expected).
+    `triples` is (KEYS, s, p, o, lit, dt). Returns (KEYS, focus, shape,
+    path, constraint, actual, expected).
     """
-    DOC = list(keys) if keys else ["repo", "commit"]
     spark = triples.sparkSession
     triples = triples.localCheckpoint(eager=True)
     rules = _rules_df(spark)
-    types = expanded_types(triples, keys=DOC)
+    types = expanded_types(triples)
 
     class_rules = F.broadcast(rules.filter(F.col("kind").isin("class", "sparql_class")))
     obj_rules = F.broadcast(rules.filter(F.col("kind") == "objects_of"))
 
     focus_class = types.join(
         class_rules, types["type"] == class_rules["target"]
-    ).select(*DOC, "rule_id", F.col("node").alias("focus"))
+    ).select(*KEYS, "rule_id", F.col("node").alias("focus"))
     focus_obj = (
         triples.join(obj_rules, triples["p"] == obj_rules["target"])
-        .select(*DOC, "rule_id", F.col("o").alias("focus"))
+        .select(*KEYS, "rule_id", F.col("o").alias("focus"))
         .distinct()
     )
     focus = focus_class.unionByName(focus_obj)
 
     p1 = F.broadcast(rules.select("rule_id", "p1", "p2"))
     hop1 = triples.join(p1, triples["p"] == p1["p1"]).select(
-        *DOC, "rule_id", "p2",
+        *KEYS, "rule_id", "p2",
         F.col("s").alias("focus"), F.col("o").alias("v1"), F.col("lit").alias("l1"),
     )
     vals1 = hop1.filter(F.col("p2").isNull()).select(
-        *DOC, "rule_id", "focus", F.col("v1").alias("value"), F.col("l1").alias("vlit")
+        *KEYS, "rule_id", "focus", F.col("v1").alias("value"), F.col("l1").alias("vlit")
     )
-    hop2_src = triples.select(
-        *[F.col(k).alias(f"__k_{k}") for k in DOC],
-        F.col("p").alias("__p"), F.col("s").alias("__mid"),
-        F.col("o").alias("value"), F.col("lit").alias("vlit"),
-    )
-    cond2 = (F.col("v1") == F.col("__mid")) & (F.col("p2") == F.col("__p"))
-    for k in DOC:
-        cond2 = cond2 & (F.col(k) == F.col(f"__k_{k}"))
+    hop2_src = _prefixed(triples, __p="p", __mid="s", value="o", vlit="lit")
     vals2 = (
         hop1.filter(F.col("p2").isNotNull() & (~F.col("l1")))
-        .join(hop2_src, cond2)
-        .select(*DOC, "rule_id", "focus", "value", "vlit")
+        .join(hop2_src, _same_keys(
+            (F.col("v1") == F.col("__mid")) & (F.col("p2") == F.col("__p"))
+        ))
+        .select(*KEYS, "rule_id", "focus", "value", "vlit")
     )
     counts = (
         vals1.unionByName(vals2)
-        .groupBy(*DOC, "rule_id", "focus")
+        .groupBy(*KEYS, "rule_id", "focus")
         .agg(F.count_distinct(F.col("value"), F.col("vlit")).alias("actual"))
     )
 
     checked = (
-        focus.join(counts, DOC + ["rule_id", "focus"], "left")
+        focus.join(counts, KEYS + ["rule_id", "focus"], "left")
         .fillna(0, subset=["actual"])
         .join(F.broadcast(rules), "rule_id")
     )
@@ -231,39 +232,30 @@ def validate(triples: DataFrame, scope: str = "final", keys=None) -> DataFrame:
         F.col("min_count").isNotNull() & (F.col("min_count") > 0)
         & (F.col("actual") < F.col("min_count"))
     ).select(
-        *DOC, "focus", "shape", "p1", "p2", "actual",
+        *KEYS, "focus", "shape", "p1", "p2", "actual",
         F.lit("minCount").alias("constraint"), F.col("min_count").alias("expected"),
     )
     viol_max = checked.filter(
         F.col("max_count").isNotNull() & (F.col("actual") > F.col("max_count"))
     ).select(
-        *DOC, "focus", "shape", "p1", "p2", "actual",
+        *KEYS, "focus", "shape", "p1", "p2", "actual",
         F.lit("maxCount").alias("constraint"), F.col("max_count").alias("expected"),
     )
-    scope_col = F.col("scope") if "scope" in DOC else F.lit(scope)
     return (
         viol_min.unionByName(viol_max)
-        .withColumn("__scope_out", scope_col)
-        .drop(*( ["scope"] if "scope" in DOC else [] ))
-        .withColumnRenamed("__scope_out", "scope")
         .withColumn("path", F.concat_ws("/", F.col("p1"), F.col("p2")))
-        .select(*[k for k in DOC if k != "scope"], "scope", "focus", "shape",
-                "path", "constraint", "actual", "expected")
+        .select(*KEYS, "focus", "shape", "path", "constraint", "actual", "expected")
     )
 
 
-def conformance_report(violations: DataFrame, universe: DataFrame = None) -> DataFrame:
-    """Per-document summary: scope, n_violations, conforms.
+def conformance_report(violations: DataFrame, universe: DataFrame) -> DataFrame:
+    """Per-scope summary: (KEYS, n_violations, conforms).
 
-    `universe` is the full (doc..., scope) key set; without it only
-    violating scopes appear (conforming scopes have no violation rows to
-    aggregate), so pass it whenever conforms=True rows matter."""
-    keys = [k for k in ["repo", "commit"] if k in violations.columns]
-    counts = violations.groupBy(*keys, "scope").agg(
-        F.count(F.lit(1)).alias("n_violations")
+    `universe` is the full KEYS set: conforming scopes have no violation
+    rows to aggregate, so only it makes their conforms=True rows."""
+    counts = violations.groupBy(*KEYS).agg(F.count(F.lit(1)).alias("n_violations"))
+    return (
+        universe.join(counts, KEYS, "left")
+        .fillna(0, subset=["n_violations"])
+        .withColumn("conforms", F.col("n_violations") == 0)
     )
-    if universe is not None:
-        counts = universe.join(counts, keys + ["scope"], "left").fillna(
-            0, subset=["n_violations"]
-        )
-    return counts.withColumn("conforms", F.col("n_violations") == 0)

@@ -162,17 +162,21 @@ def test_connected_components_long_path(spark):
     assert by_node["p"] == by_node["q"] == "p"
 
 
-def test_connected_components_nonconvergence_signals(spark):
+def test_connected_components_nonconvergence_signals(spark, monkeypatch):
     """An exhausted round budget must never return a silently-partial
     mapping: it raises, and a converged run emits no warning."""
     import warnings
 
     import pytest
 
+    from rdf_generator_spark.operators import canonicalize
+
     path = [(f"n{i:02d}", f"n{i+1:02d}") for i in range(30)]
     edges = spark.createDataFrame(path, ["a", "b"])
-    with pytest.raises(RuntimeError, match="did not reach a verified fixpoint"):
-        connected_components(edges, max_iters=1)
+    with monkeypatch.context() as m:
+        m.setattr(canonicalize, "MAX_ITERS", 1)
+        with pytest.raises(RuntimeError, match="did not reach a verified fixpoint"):
+            connected_components(edges)
     with warnings.catch_warnings():
         warnings.simplefilter("error", RuntimeWarning)
         connected_components(edges)

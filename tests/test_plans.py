@@ -545,7 +545,6 @@ def test_build_graph_options():
 
 # Every optional parameter of the library, as (function, parameter).
 LIBRARY_OPTIONS = [
-    ("operators/canonicalize.py::connected_components", "max_iters"),
     ("operators/graph_ops.py::apply_label_priority", "label_subjects_only"),
     ("operators/linking.py::fill_scalar_uri", "enabled"),
     ("operators/windows.py::seq_number", "out"),
@@ -554,7 +553,6 @@ LIBRARY_OPTIONS = [
     ("plans/emit.py::emit", "doc_cols"),
     ("plans/pipeline.py::build_graph", "dataset_id"),
     ("plans/pipeline.py::build_graph", "staging_dir"),
-    ("queries_kg.py::_golden_df", "key"),
     ("sinks/turtle.py::write_turtle_auto", "n_triples"),
     ("sinks/turtle.py::write_turtle_auto", "threshold"),
     ("sources/corpus.py::corpus_parquet_df", "path"),
@@ -571,11 +569,6 @@ LIBRARY_OPTIONS = [
     ("streaming/lineage.py::run_resumable", "snapshot_id"),
     ("streaming/lineage.py::run_resumable", "triples_table"),
     ("streaming/lineage.py::run_resumable", "lineage_table"),
-    ("validation/shacl_rules.py::rdfs_subclass_closure", "keys"),
-    ("validation/shacl_rules.py::expanded_types", "keys"),
-    ("validation/shacl_rules.py::validate", "scope"),
-    ("validation/shacl_rules.py::validate", "keys"),
-    ("validation/shacl_rules.py::conformance_report", "universe"),
 ]
 
 
@@ -704,16 +697,44 @@ def test_build_py4j_budget(spark, synth_build):
 def test_validate_runs_no_python_rdd(spark, synth_build, tmp_path):
     """validate() on a file-backed triples table runs no stage with a
     PythonRDD: the rule table is an Arrow-built local relation."""
+    from pyspark.sql import functions as F
+
     from rdf_generator_spark.validation.shacl_rules import validate
 
     _, res, _ = synth_build
     path = str(tmp_path / "triples")
-    res["triples"].write.parquet(path)
+    res["triples"].withColumn("scope", F.lit("final")).write.parquet(path)
     triples = spark.read.parquet(path)
     sc = spark.sparkContext
     sc.setJobGroup("validate-budget", "validation python-stage budget")
     try:
-        validate(triples, scope="final").count()
+        validate(triples).count()
     finally:
         sc._jsc.clearJobGroup()
     assert _python_rdd_stages(sc, "validate-budget") == 0
+
+
+def test_expanded_types_edge_free_job_budget(spark):
+    """On a scope-tagged table with no rdfs:subClassOf edge (every graph
+    the pipeline emits), building the type expansion runs two jobs: the
+    edge checkpoint and its count. The closure loop and the join of the
+    empty closure start none."""
+    from rdf_generator_spark import terms as T
+    from rdf_generator_spark.validation.shacl_rules import expanded_types
+
+    triples = spark.createDataFrame(
+        [("r", "c", g, "ex:i", T.RDF_TYPE, "ex:A", False, None) for g in "xy"]
+        + [("r", "c", "x", "ex:i", T.RDFS_LABEL, "i", True, None)],
+        "repo string, commit string, scope string, s string, p string, "
+        "o string, lit boolean, dt string",
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("types-budget", "type expansion job budget")
+    try:
+        types = expanded_types(triples)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup("types-budget")) <= 2
+    assert {tuple(r) for r in types.collect()} == {
+        ("r", "c", "x", "ex:i", "ex:A"), ("r", "c", "y", "ex:i", "ex:A"),
+    }

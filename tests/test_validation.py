@@ -15,16 +15,27 @@ from rdf_generator_spark.plans.pipeline import build_graph
 from rdf_generator_spark.queries_kg import GOLDEN_PINS
 from rdf_generator_spark.sources.golden import golden_corpus_df
 from rdf_generator_spark.validation.shacl_rules import (
+    KEYS,
     RULES,
     conformance_report,
     expanded_types,
     validate,
 )
 
+_SCOPED_SCHEMA = (
+    "repo string, commit string, scope string, s string, p string, "
+    "o string, lit boolean, dt string"
+)
+
 
 @pytest.fixture(scope="module")
 def result(spark):
     return build_graph(spark, golden_corpus_df(spark))
+
+
+def scoped(triples, scope):
+    """`triples` as the one validation scope `scope`."""
+    return triples.withColumn("scope", F.lit(scope))
 
 
 def test_rule_table_covers_shapes():
@@ -39,23 +50,24 @@ def test_rule_table_covers_shapes():
 
 
 def test_final_graph_conforms(spark, result):
-    v = validate(result["triples"], scope="final")
+    v = validate(scoped(result["triples"], "final"))
     assert v.count() == 0
 
 
 def test_matrix_scope_tu_violations(spark, result):
-    v = validate(result["matrix_pruned"], scope="matrix").collect()
+    matrix = scoped(result["matrix_pruned"], "matrix")
+    v = validate(matrix).collect()
     assert len(v) == 10
     assert all(r["shape"] == "TUShape" and r["constraint"] == "minCount" for r in v)
     rep = conformance_report(
-        validate(result["matrix_pruned"], scope="matrix")
+        validate(matrix), universe=matrix.select(*KEYS).distinct()
     ).collect()
     assert len(rep) == 1 and not rep[0]["conforms"]
 
 
 def test_mutation_missing_organism(spark, result):
     mutated = result["triples"].filter(F.col("p") != T.PHB_HAS_ORGANISM)
-    v = validate(mutated, scope="mut")
+    v = validate(scoped(mutated, "mut"))
     rows = v.filter(F.col("path") == T.PHB_HAS_ORGANISM).collect()
     # every phenotype statement now violates its shape's org minCount
     assert len(rows) == GOLDEN_PINS["f3_statement_types_kg"][0]
@@ -77,7 +89,7 @@ def test_mutation_extra_quality_label(spark, result):
         .withColumn("dt", F.lit(None).cast("string"))
     )
     mutated = tri.unionByName(one_qua.select(tri.columns))
-    v = validate(mutated, scope="mut").filter(F.col("shape") == "QualityNodeShape")
+    v = validate(scoped(mutated, "mut")).filter(F.col("shape") == "QualityNodeShape")
     rows = v.collect()
     assert len(rows) == 1
     assert rows[0]["constraint"] == "maxCount" and rows[0]["actual"] == 2
@@ -86,13 +98,11 @@ def test_mutation_extra_quality_label(spark, result):
 def test_rdfs_closure_expansion(spark):
     # subclass chain: instance typed Leaf counts as Mid and Root
     rows = [
-        ("r", "c", "ex:i", T.RDF_TYPE, "ex:Leaf", False, None),
-        ("r", "c", "ex:Leaf", T.RDFS_SUBCLASSOF, "ex:Mid", False, None),
-        ("r", "c", "ex:Mid", T.RDFS_SUBCLASSOF, "ex:Root", False, None),
+        ("r", "c", "g", "ex:i", T.RDF_TYPE, "ex:Leaf", False, None),
+        ("r", "c", "g", "ex:Leaf", T.RDFS_SUBCLASSOF, "ex:Mid", False, None),
+        ("r", "c", "g", "ex:Mid", T.RDFS_SUBCLASSOF, "ex:Root", False, None),
     ]
-    df = spark.createDataFrame(
-        rows, "repo string, commit string, s string, p string, o string, lit boolean, dt string"
-    )
+    df = spark.createDataFrame(rows, _SCOPED_SCHEMA)
     types = {
         (r["node"], r["type"]) for r in expanded_types(df).collect()
     }
@@ -106,17 +116,35 @@ def test_rdfs_closure_long_chain(spark):
     instance typed C0 on a 20-edge rdfs:subClassOf chain C0 -> ... -> C20
     gets every class of the chain, C20 included (each round extends the
     closure's paths by one edge)."""
-    rows = [("r", "c", "ex:i", T.RDF_TYPE, "ex:C0", False, None)] + [
-        ("r", "c", f"ex:C{i}", T.RDFS_SUBCLASSOF, f"ex:C{i + 1}", False, None)
+    rows = [("r", "c", "g", "ex:i", T.RDF_TYPE, "ex:C0", False, None)] + [
+        ("r", "c", "g", f"ex:C{i}", T.RDFS_SUBCLASSOF, f"ex:C{i + 1}", False, None)
         for i in range(20)
     ]
-    df = spark.createDataFrame(
-        rows, "repo string, commit string, s string, p string, o string, lit boolean, dt string"
-    )
+    df = spark.createDataFrame(rows, _SCOPED_SCHEMA)
     types = {
         r["type"] for r in expanded_types(df).collect() if r["node"] == "ex:i"
     }
     assert types == {f"ex:C{i}" for i in range(21)}
+
+
+def test_rdfs_closure_is_per_scope(spark):
+    """Two scopes of one document with different rdfs:subClassOf edges
+    keep separate closures: in scope A, Leaf < Mid; in scope B,
+    Mid < Root. An instance typed Leaf in both gets Mid in A only and
+    never Root, which only a closure across the scopes would give."""
+    rows = [
+        ("r", "c", "A", "ex:i", T.RDF_TYPE, "ex:Leaf", False, None),
+        ("r", "c", "A", "ex:Leaf", T.RDFS_SUBCLASSOF, "ex:Mid", False, None),
+        ("r", "c", "B", "ex:i", T.RDF_TYPE, "ex:Leaf", False, None),
+        ("r", "c", "B", "ex:Mid", T.RDFS_SUBCLASSOF, "ex:Root", False, None),
+    ]
+    df = spark.createDataFrame(rows, _SCOPED_SCHEMA)
+    types = {(r["scope"], r["node"], r["type"])
+             for r in expanded_types(df).collect()}
+    assert types == {
+        ("A", "ex:i", "ex:Leaf"), ("A", "ex:i", "ex:Mid"),
+        ("B", "ex:i", "ex:Leaf"),
+    }
 
 
 def test_scoped_validation_report(spark, result):
