@@ -1,26 +1,31 @@
-"""Scalable sequential numbering (A2 at 100 TB).
+"""Scalable sequential numbering (A2 at 100 TB) as running sums.
 
-The reference's `:id-N` counters are sequential in emission order. The
-direct Spark expression is `row_number() over (partition by document
-order by emission key)` — correct, but one giant document (NTAX x NCHAR
-cells) then sorts in a SINGLE task. `seq_number` computes the identical
-numbering in two phases:
+The reference's `:id-N` counters are sequential in emission order. A
+counter is a running sum over a per-document ROWS frame: a row number is
+the running sum of 1, and a row that stands for several numbered items
+(a cell with one phenotype statement per organism variant) weighs as
+many. `seq_number` computes any number of such sums in one pass.
 
-1. row_number within (document, bucket), where the bucket is a
-   monotone function of the leading order column (so bucket boundaries
-   respect the global order);
-2. add each bucket's starting offset, computed on the tiny
-   (document x bucket) count table with a cumulative-sum window.
+The direct Spark form is one window per document — correct, but one
+giant document (NTAX x NCHAR cells) then sorts in a SINGLE task. With a
+bucket width, `seq_number` computes the identical sums in two phases:
+
+1. running sums within (document, bucket), where the bucket is a block
+   of the leading order column (so bucket boundaries respect the global
+   order);
+2. add each bucket's starting offsets, computed on the tiny
+   (document x bucket) totals table with a cumulative-sum window.
 
 Phase 1 parallelizes a document across as many tasks as it has buckets;
 phase 2's window runs over a table whose size is documents x buckets,
-not rows. Its input is evaluated twice (numbering and counts), so the
-build uses it only where a document's rows grow with its cell count:
-cells, visits and first-visit entities. The state table (characters x
-states, from one character JSON parsed in one task) never needs it.
+not rows. The totals come from a second aggregation over the input, so
+the two-phase form evaluates its input twice within the job that reads
+it; the build's inputs are plans over materialized hubs (the cells join
+over the parse and character hubs, the first-visit table over the
+visits hub), so neither evaluation re-runs the parse.
 Equivalence to the single-window form is golden-tested (exact :id-N
 label equality on the golden corpus) and property-tested on skewed
-synthetic corpora.
+synthetic inputs.
 
 Reference: the standard two-phase ranking pattern (e.g. Spark AQE docs
 and the zipWithIndex lineage) re-expressed in DataFrame algebra.
@@ -28,45 +33,52 @@ and the zipWithIndex lineage) re-expressed in DataFrame algebra.
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import Dict, Optional, Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+
+def _running(weight: str, part: str, order: str) -> str:
+    return (f"sum({weight}) OVER (PARTITION BY {part} ORDER BY {order} "
+            "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)")
 
 
 def seq_number(
     df: DataFrame,
     part_cols: Sequence[str],
     order_cols: Sequence[str],
-    bucket: Column,
-    out: str = "rn",
+    sums: Dict[str, str],
+    width: Optional[int],
 ) -> DataFrame:
-    """Add `out` = row_number() over (partition by part_cols order by
-    order_cols), computed bucket-parallel.
+    """Add one long column per `sums` entry (output name -> SQL weight
+    expression over `df`'s row): the running sum of the weight over
+    (PARTITION BY part_cols ORDER BY order_cols ROWS BETWEEN UNBOUNDED
+    PRECEDING AND CURRENT ROW).
 
-    `bucket` MUST be non-decreasing along `order_cols` within a
-    partition (typically a block of the leading order column, e.g.
-    ``floor(col("char_pos") / 8)``) — that is what makes within-bucket
-    numbering + bucket offsets equal the global numbering.
+    ``width=None`` computes the sums in one window per partition; an
+    integer computes them bucket-parallel, bucketing by blocks of
+    ``width`` values of the leading order column (numeric).
     """
-    part = list(part_cols)
-    dfb = df.withColumn("__bkt", bucket.cast("long"))
-    w_in = Window.partitionBy(*part, "__bkt").orderBy(*order_cols)
-    dfb = dfb.withColumn("__rn_in", F.row_number().over(w_in))
-
-    counts = dfb.groupBy(*part, "__bkt").agg(F.count(F.lit(1)).alias("__n"))
-    w_off = (
-        Window.partitionBy(*part)
-        .orderBy("__bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
+    part, order = ", ".join(part_cols), ", ".join(order_cols)
+    if width is None:
+        return df.selectExpr(
+            "*", *(f"{_running(w, part, order)} AS {n}" for n, w in sums.items())
+        )
+    dfb = df.selectExpr("*", f"CAST(floor({order_cols[0]} / {int(width)}) AS BIGINT) AS __bkt")
+    inner = dfb.selectExpr(
+        "*", *(f"{_running(w, part + ', __bkt', order)} AS __in_{n}"
+               for n, w in sums.items())
     )
-    offsets = counts.withColumn(
-        "__off", F.coalesce(F.sum("__n").over(w_off), F.lit(0))
-    ).select(*part, "__bkt", "__off")
-
-    return (
-        dfb.join(offsets, part + ["__bkt"], "left")
-        .withColumn(out, (F.col("__rn_in") + F.col("__off")).cast("int"))
-        .drop("__bkt", "__rn_in", "__off")
+    totals = dfb.groupBy(*part_cols, "__bkt").agg(
+        *(F.expr(f"sum({w})").alias(f"__t_{n}") for n, w in sums.items())
+    )
+    offsets = totals.selectExpr(*part_cols, "__bkt", *(
+        f"coalesce(sum(__t_{n}) OVER (PARTITION BY {part} ORDER BY __bkt "
+        f"ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS __off_{n}"
+        for n in sums
+    ))
+    return inner.join(offsets, list(part_cols) + ["__bkt"], "left").selectExpr(
+        *(f"`{c}`" for c in df.columns),
+        *(f"__in_{n} + __off_{n} AS {n}" for n in sums),
     )

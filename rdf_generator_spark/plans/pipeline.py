@@ -388,12 +388,15 @@ def build_graph(
 ) -> Dict[str, DataFrame]:
     """Run the full pipeline; returns named DataFrames.
 
-    The hub tables (the fused parse, chars/states/visits, taxa, the
-    deduplicated triple union and the prune flags) are materialized as
-    the build goes: every downstream branch (per-part outputs, prune,
-    label priority, validation) reuses one materialized dataset instead
-    of replaying the parse+join lineage. The returned outputs are lazy
-    plans over those hubs.
+    The hub tables (the fused parse, chars/states, the numbered cells,
+    visits, taxa, the deduplicated triple union, the prune flags and
+    the final graph) are materialized as the build goes: every
+    downstream branch (per-part outputs, prune, label priority,
+    validation) reuses one materialized dataset instead of replaying
+    the parse+join lineage. ``triples`` is the final-graph hub itself,
+    so its consumers (the write, counts, Turtle, validation, lineage)
+    read one result; the other returned outputs are lazy plans over the
+    hubs.
 
     Task counts come from the ``content`` column's uncompressed size
     summed over the corpus files' parquet footers (the footer pass the
@@ -423,8 +426,9 @@ def build_graph(
     directory automatically.
 
     Sequential :id-N counter execution strategy for the cell-scale
-    counters (cells, visits, first-visit entities; the state counters
-    always use one window per document): the footer probe
+    counters (cells and phenotype visits, numbered in one pass, and the
+    first-visit entities; the state counters always use one window per
+    document): the footer probe
     `_max_doc_bytes` (zero jobs unless the footers are ambiguous) gates
     it. When the largest document's content reaches
     ``_GIANT_DOC_CONTENT_BYTES`` the counters switch to the two-phase
@@ -445,17 +449,6 @@ def build_graph(
     # is small enough to broadcast by construction
     dim_small = len(files) <= _DIM_BROADCAST_FILE_LIMIT
     bhint = F.broadcast if dim_small else (lambda d: d)
-
-    def _seq(df, part_cols, order_cols, out):
-        """Sequential numbering of a cell-scale table within `part_cols`;
-        two-phase when counter_buckets is set (giant-document parallelism)."""
-        if counter_buckets:
-            return seq_number(
-                df, part_cols, order_cols,
-                F.floor(F.col(order_cols[0]) / counter_buckets), out=out,
-            )
-        w = Window.partitionBy(*part_cols).orderBy(*order_cols)
-        return df.withColumn(out, F.row_number().over(w))
 
     # Hub-table materialization happens TOP-DOWN: each hub is
     # checkpointed as soon as its plan is complete, and every downstream
@@ -770,7 +763,29 @@ def build_graph(
         .withColumn("norm_taxon", norm_taxon_label(F.col("taxon")))
         .withColumn("state_index", strip_col(F.col("symbol")).try_cast("int"))
     )
-    cells_j = _seq(cells_j, DOC, ["char_pos", "taxon_pos"], "cell_n")
+    # One numbering pass gives both cell-scale counters (A2). cell_n
+    # counts cells in (char_pos, taxon_pos) order. A cell with a state
+    # index is visited once per organism variant (F2: two for an adult-
+    # organism character, one otherwise; none without a state index),
+    # and phe_n numbers the visits in (char_pos, taxon_pos, vord) order,
+    # so a visit's phe_n is the visits of the cells before its own
+    # (phe_base) plus vord + 1.
+    n_visits = "CASE WHEN state_index IS NULL THEN 0 WHEN dup_for_sex THEN 2 ELSE 1 END"
+    cells_j = seq_number(
+        cells_j, DOC, ["char_pos", "taxon_pos"],
+        {"cell_n": "1", "__visits": n_visits}, counter_buckets,
+    )
+    # The cells hub, read by visits below and by cell_triples in
+    # _assemble, projected to the columns they read (a checkpoint scan
+    # cannot column-prune): the join and its numbering run once.
+    cells_j = mat(cells_j.selectExpr(
+        *DOC, "char_pos", "taxon_pos", "taxon", "state_index", "dup_for_sex",
+        "org_label", "org_uri_eff", "salt", "locators", "chain_seed",
+        "has_variable", "char_sort_num", "norm_taxon", "char_label", "char_id",
+        "char_iri", "stmt_type", "cell_iri", "mx_iri", "var_uri",
+        "var_label_eff", "var_comment", "cell_n",
+        f"__visits - ({n_visits}) AS phe_base",
+    ), "cells")
 
     variants = F.when(
         F.col("dup_for_sex"),
@@ -806,10 +821,10 @@ def build_graph(
         .drop("__v")
     )
 
-    # state/quality join (J5) — the broadcast join and the phe_n window
-    # run FIRST, on the narrow pre-mint rows. Both are keyed by document,
-    # so this whole sub-plan executes doc-partitioned (max parallelism =
-    # document count, with giant documents hot — guide §2.5 skew).
+    # state/quality join (J5) — the broadcast join runs FIRST, on the
+    # narrow pre-mint rows, in the cells hub's partitioning (its
+    # numbering window's, by document: max parallelism = document count,
+    # with giant documents hot — guide §2.5 skew).
     stj = states_x.select(
         F.col("repo").alias("__st_repo"),
         F.col("commit").alias("__st_commit"),
@@ -832,11 +847,9 @@ def build_graph(
         "left",
     ).drop("__st_repo", "__st_commit")
 
-    visits = _seq(visits, DOC, ["char_pos", "taxon_pos", "vord"], "phe_n")
-
     # The IRI mints below (5 sha1 forests per row + the locator-chain
     # fold) are the pipeline's heaviest per-row compute. Partitioning at
-    # this point is by document (the window above), so one giant matrix
+    # this point is by document (the cells hub's), so one giant matrix
     # would mint in ONE task. Spread the rows over a high-cardinality
     # deterministic composite key first (guide §2.5: deterministic
     # synthetic partitioning — char_pos splits a giant document across
@@ -946,8 +959,8 @@ def build_graph(
     # `locators`/`states` arrays and the pre-mint intermediates through
     # every one of those deserializing scans measurably dominated the
     # final job's CPU.
-    visits = visits.select(
-        *DOC, "char_pos", "taxon_pos", "vord", "phe_n",
+    visits = visits.selectExpr(
+        *DOC, "char_pos", "taxon_pos", "vord", "phe_base + vord + 1 AS phe_n",
         "char_sort_num", "norm_taxon", "char_label", "char_id",
         "phe_iri", "stmt_type", "v_org_uri", "v_org_label", "org_iri",
         "tu_iri", "cell_iri", "mx_iri", "var_iri", "var_uri",
@@ -956,19 +969,9 @@ def build_graph(
         "st_var_uri", "last_loc_iri", "st_sta_iri", "loc_chain",
     )
     visits = mat(visits, "visits")
-    # cells_j deliberately NOT checkpointed: its two consumers (visits
-    # above, cell_triples in _assemble) each sit directly on the
-    # materialized charsx and parsed hubs, so each consumer re-runs only
-    # the cheap join (its NEXUS rows come from the parsed hub, not a
-    # second parse). An interleaved A/B at bench scale (24 datasets, one
-    # JVM) measured skipping this checkpoint at 40.4 s vs 73.4 s for the
-    # full-mat ladder. charsx/states_x/visits/parts stay materialized:
-    # they bound Catalyst plan depth and keep the final-graph plan free
-    # of Python stages (test_plans.py).
-
     return _assemble(
         spark, corpus, charsx, states_x, cells_j, visits, species, cells, meta,
-        bhint, mat, _seq,
+        bhint, mat, counter_buckets,
     )
 
 
@@ -996,7 +999,7 @@ def _materializer(spark, staging_dir: Optional[str]):
 
 
 def _assemble(spark, corpus, charsx, states_x, cells_j, visits, species, cells, meta,
-              bhint, mat, seq):
+              bhint, mat, counter_buckets):
     """Emit all triple families, tag parts, and build the final graph."""
     NI = const(T.OWL_NAMED_INDIVIDUAL)
 
@@ -1147,9 +1150,9 @@ def _assemble(spark, corpus, charsx, states_x, cells_j, visits, species, cells, 
     # conditional var candidate, and one candidate per locator-chain
     # element; one (doc, kind, iri) min_by aggregation picks each
     # entity's first visit (order keys are unique per row within a
-    # document, so min_by picks exactly the old rn=1 row); one `seq`
-    # numbering partitioned by (doc, kind) then numbers all three kinds
-    # (two-phase when counter_buckets is set).
+    # document, so min_by picks exactly the old rn=1 row); one
+    # `seq_number` pass partitioned by (doc, kind) then numbers all three
+    # kinds (two-phase when counter_buckets is set).
     _FC = lambda kind, iri, lpos, pfx: F.struct(  # noqa: E731
         F.lit(kind).alias("kind"), iri.alias("iri"),
         F.col("char_pos").alias("char_pos"),
@@ -1193,8 +1196,9 @@ def _assemble(spark, corpus, charsx, states_x, cells_j, visits, species, cells, 
     # most one org IRI and one var IRI, and a (row, lpos) pair holds one
     # loc IRI, so within a kind the order keys are unique and adding
     # lpos to the org/var order changes nothing.
-    firsts = seq(firsts_all, DOC + ["kind"],
-                 ["char_pos", "taxon_pos", "vord", "lpos"], "__n")
+    firsts = seq_number(firsts_all, DOC + ["kind"],
+                        ["char_pos", "taxon_pos", "vord", "lpos"], {"__n": "1"},
+                        counter_buckets)
     fallback = F.when(F.col("kind") == "org", "organism").when(
         F.col("kind") == "loc", "locator").otherwise("variable")
     firsts = firsts.withColumn("pfx", F.coalesce(strip_col(F.col("pfx")), fallback))
@@ -1483,6 +1487,10 @@ def _assemble(spark, corpus, charsx, states_x, cells_j, visits, species, cells, 
     # full graph, so the replaced-subject set derives from label rows
     final = apply_label_priority(matrix_labels, pruned, hint=bhint,
                                  label_subjects_only=True)
+    # The final graph is the last hub: the write, the recount, Turtle,
+    # validation and the lineage counts all read one result instead of
+    # each re-running prune and label priority.
+    final = mat(final, "final")
 
     # characters_combined output (S3): base + char graphs, with matrix
     # labels made authoritative before writing (main.py:2129-2137)
@@ -1495,7 +1503,6 @@ def _assemble(spark, corpus, charsx, states_x, cells_j, visits, species, cells, 
     )
 
     return {
-        "cells": cells_j,
         "taxa": taxa_sp,
         "char_part_tagged": char_part_tagged,
         "matrix_part": matrix_part,

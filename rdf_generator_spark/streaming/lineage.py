@@ -99,22 +99,13 @@ def run_resumable(
     tableio.write_table(triples, triples_ref)
     wall_ms = int((time.perf_counter() - t0) * 1000)
 
-    # Per-document counts come from the committed table, not a second
-    # run of the final plan. Every document group emits at least its
-    # base scaffold, so the write replaces each of the batch's
-    # (repo, commit) partitions (dynamic partition overwrite), which
-    # then hold exactly this batch's triples. The batch side of the
-    # semi-join carries no selective filter, so no dynamic partition
-    # pruning applies: the count opens every file of the committed
-    # table (row counts only, no data columns), a cost that grows with
-    # the table's file count rather than with the batch.
+    # Per-document counts come from the batch's final graph, staged under
+    # `_staging/final` (build_graph materializes it before returning), so
+    # the count reads only this batch's triples: the committed table,
+    # whose file count grows with every batch, is opened once, for the
+    # returned total.
     files = content_lineage(todo)
-    committed = tableio.read_table(spark, triples_ref)
-    counts = (
-        committed.join(files.select(*DOC).distinct(), DOC, "left_semi")
-        .groupBy(*DOC)
-        .agg(F.count(F.lit(1)).alias("n_triples"))
-    )
+    counts = triples.groupBy(*DOC).agg(F.count(F.lit(1)).alias("n_triples"))
     lineage_rows = (
         files.join(counts, DOC, "left")
         .fillna(0, subset=["n_triples"])
@@ -124,5 +115,5 @@ def run_resumable(
         .select(*LINEAGE_COLS)
     )
     tableio.write_table(lineage_rows, lineage_ref)
-    n_triples = committed.count()
+    n_triples = tableio.read_table(spark, triples_ref).count()
     return {"docs": n_docs, "triples": n_triples}

@@ -84,7 +84,13 @@ def validation_report(result: dict):
     """(violations, conformance) over all scopes — the DataFrame
     equivalent of validation_summary.txt + validation_report.ttl."""
     scoped = scoped_triples(result)
-    violations = validate(scoped)
+    # Computed once, here: the conformance frame aggregates the
+    # violations, and a caller writes and counts both frames, so lazy
+    # violations would re-run the rule plan (type expansion, hop joins,
+    # aggregation) for each of those actions. A local checkpoint, like
+    # the build's default hubs: validation reads the in-memory build
+    # result and never runs on the resumable path.
+    violations = validate(scoped).localCheckpoint(eager=True)
 
     # scope universe from the small dimension frames (not by re-running
     # the scoped union)

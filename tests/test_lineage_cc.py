@@ -58,12 +58,12 @@ def test_resume_skips_done_docs(spark, tmp_path):
 
 
 def test_resume_runs_final_graph_once(spark, tmp_path):
-    """run_resumable runs the final graph once, for the triples write,
-    and takes the lineage's per-document counts from the committed
-    table. The final plan is the only reader of the staged prune flags;
-    the staged dedup hub is read by the flags and by that write. Every
-    document group writes triples (its base scaffold at least), so the
-    write replaces each group's partition and its count is this run's."""
+    """run_resumable runs the final graph once, for its staged hub, and
+    takes the lineage's per-document counts from that hub. The final
+    plan is the only reader of the staged prune flags; the staged dedup
+    hub is read by the flags and by the final plan; the staged final
+    graph is read by the triples write and by the per-document counts,
+    so only the returned total opens the committed table's files."""
     import re
 
     from tests.test_plans import executions
@@ -74,15 +74,17 @@ def test_resume_runs_final_graph_once(spark, tmp_path):
         spark, lambda: L.run_resumable(spark, corpus_df(spark, rows), out)
     )
 
-    def scans(hub):
+    def scans(path):
         return sum(
-            any(loc.endswith("/_staging/" + hub) for loc in
+            any(loc.endswith(path) for loc in
                 re.findall(r"InMemoryFileIndex[^\[]*\[([^\]]*)\]", desc))
             for _, desc, _ in execs
         )
 
-    assert scans("victim_flags") == 1
-    assert scans("dedup") == 2
+    assert scans("/_staging/victim_flags") == 1
+    assert scans("/_staging/dedup") == 2
+    assert scans("/_staging/final") == 2
+    assert scans("/out/triples") == 1  # the returned total only
     per_doc = (
         spark.read.parquet(os.path.join(out, "lineage"))
         .select("repo", "commit", "n_triples").distinct().collect()

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import ast
 import inspect
+import re
 from pathlib import Path
 
 import pytest
@@ -21,12 +22,6 @@ SF = "/root/testdata/sf0.01"
 
 def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def formatted(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
 
 
 def executions(spark, run):
@@ -60,6 +55,23 @@ def executions(spark, run):
             [s.numTasks for s in stages if s is not None],
         ))
     return out, execs
+
+
+def computing(execs, column):
+    """The one execution among `execs` whose plan computes `column`
+    (names it as an alias): the hub that materializes it."""
+    hits = [e for e in execs if re.search(rf"\bAS {column}#", e[1])]
+    assert len(hits) == 1, [names for names, _, _ in hits]
+    return hits[0]
+
+
+def product_path(spark, corpus, out):
+    """build_graph and run_pipeline.py's default path over its result:
+    the partitioned triples write and the triples count."""
+    res = build_graph(spark, corpus)
+    res["triples"].write.mode("overwrite").partitionBy("repo").parquet(out)
+    res["triples"].count()
+    return res
 
 
 def test_anti_join_is_real_antijoin(spark):
@@ -414,16 +426,17 @@ def test_corpus_staging_runs_no_python_rdd(spark, tmp_path):
 
 @pytest.fixture(scope="module")
 def synth_build(spark, tmp_path_factory):
-    """(corpus, build_graph result, the build's SQL executions) for a
-    seeded file-backed synth corpus."""
+    """(corpus, build_graph result, the SQL executions of `product_path`)
+    for a seeded file-backed synth corpus."""
     from rdf_generator_spark.sources.corpus import corpus_parquet_df
     from rdf_generator_spark.sources.synth import synth_corpus_rows
 
     rows = synth_corpus_rows(n_datasets=2, ntax=4, nchar=4, seed=11)
-    corpus = corpus_parquet_df(
-        spark, rows, str(tmp_path_factory.mktemp("synth") / "corpus")
+    tmp = tmp_path_factory.mktemp("synth")
+    corpus = corpus_parquet_df(spark, rows, str(tmp / "corpus"))
+    res, execs = executions(
+        spark, lambda: product_path(spark, corpus, str(tmp / "triples"))
     )
-    res, execs = executions(spark, lambda: build_graph(spark, corpus))
     return corpus, res, execs
 
 
@@ -503,34 +516,45 @@ def test_kg_pipeline_python_only_at_parse(spark, synth_build):
 
 
 def test_kg_join_broadcasts_character_dimension(synth_build):
-    """The cells ⋈ chars join (lazy over the parsed and charsx hubs)
-    broadcasts the character side."""
-    _, res, _ = synth_build
-    assert "BroadcastHashJoin" in plan_of(res["cells"])
+    """The cells ⋈ chars join (over the parsed and charsx hubs, in the
+    job that materializes the numbered cells hub) broadcasts the
+    character side."""
+    _, _, execs = synth_build
+    names, _, _ = computing(execs, "cell_n")
+    assert "BroadcastHashJoin" in names
 
 
 def test_kg_join_shuffle_fallback_past_gate(spark, synth_build, monkeypatch):
-    """The dimension-broadcast gate controls the broadcast hint: with it
-    tripped (many-document corpus) the char join carries no hint, and
-    the planner picks the join from statistics alone."""
-    corpus, res, _ = synth_build
+    """The dimension-broadcast gate controls the broadcast hint. With
+    size-based broadcasts off, the hinted char join still broadcasts;
+    with the gate tripped (many-document corpus) it carries no hint, so
+    the planner falls back to a shuffle join."""
+    corpus, _, _ = synth_build
 
-    def analyzed(df):
-        return df._jdf.queryExecution().analyzed().toString()
+    def cells_join():
+        _, execs = executions(spark, lambda: build_graph(spark, corpus))
+        names, _, _ = computing(execs, "cell_n")
+        return {n for n in names if n.endswith("Join")}
 
-    assert "ResolvedHint" in analyzed(res["cells"])
-    trip_broadcast_gate(monkeypatch)
-    off = build_graph(spark, corpus)
-    assert "ResolvedHint" not in analyzed(off["cells"])
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        assert cells_join() == {"BroadcastHashJoin"}
+        trip_broadcast_gate(monkeypatch)
+        assert cells_join() == {"SortMergeJoin"}
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
 def test_final_graph_plan_is_jvm_only(synth_build):
     """Past the hub materialization, the entire graph algebra (dedup,
     prune, label priority, canonicalization inputs) is pure JVM column
-    work — no Python stage anywhere in the final plan."""
-    _, res, _ = synth_build
-    for key in ["triples", "matrix_pruned", "char_combined"]:
-        plan = plan_of(res[key])
+    work — no Python stage anywhere in the final plan (run by the final
+    hub's job) or in the lazy outputs."""
+    _, res, execs = synth_build
+    plans = {key: plan_of(res[key]) for key in ["matrix_pruned", "char_combined"]}
+    plans["triples"] = computing(execs, "__mo")[1]
+    for key, plan in plans.items():
         assert "BatchEvalPython" not in plan, key
         assert "MapInPandas" not in plan, key
 
@@ -547,7 +571,6 @@ def test_build_graph_options():
 LIBRARY_OPTIONS = [
     ("operators/graph_ops.py::apply_label_priority", "label_subjects_only"),
     ("operators/linking.py::fill_scalar_uri", "enabled"),
-    ("operators/windows.py::seq_number", "out"),
     ("plans/base_scaffold.py::a", "lit"),
     ("plans/base_scaffold.py::a", "dt"),
     ("plans/emit.py::emit", "doc_cols"),
@@ -621,29 +644,40 @@ def test_library_defs_are_referenced():
 # Plan-shape budgets on the synth_build corpus. Each is pinned at the
 # value it has now; a change that grows a plan fails here before it
 # shows in wall time, and one that shrinks it should lower the budget.
-# "Exchange" mentions in the final graph's formatted explain (shuffle +
-# broadcast exchanges; each node is named twice there).
+# "Exchange" mentions in the formatted explain of the final adaptive plan
+# that materializes the final graph (shuffle, broadcast and reused
+# exchanges; each node is named twice there, in the tree and in its
+# details).
 FINAL_EXCHANGE_BUDGET = 22
-# Shuffle and broadcast exchange nodes over the plans one build executes
-# (the hub materializations, the contract check and the dimension
-# collect), as the SQL status store records them.
-BUILD_EXCHANGE_BUDGET = 15
-BUILD_BROADCAST_EXCHANGE_BUDGET = 10
+# Shuffle and broadcast exchange nodes over the plans `product_path`
+# executes (the hub materializations, the final graph among them, the
+# contract check, the dimension collect, the write and the count), as
+# the SQL status store records them.
+BUILD_EXCHANGE_BUDGET = 19
+BUILD_BROADCAST_EXCHANGE_BUDGET = 15
 # The same over a build of the same corpus on the two-phase counter path
 # (bucket width 2).
-BUCKETED_BUILD_EXCHANGE_BUDGET = 22
-BUCKETED_BUILD_BROADCAST_EXCHANGE_BUDGET = 16
-# py4j commands the driver sends for one build_graph on the same corpus
-# (plan construction plus the hub materialization jobs), not counting
-# the release commands py4j sends when Python garbage-collects a JVM
-# reference: their number follows the collector's timing.
-BUILD_PY4J_BUDGET = 19855
+BUCKETED_BUILD_EXCHANGE_BUDGET = 24
+BUCKETED_BUILD_BROADCAST_EXCHANGE_BUDGET = 18
+# py4j commands Python sends the JVM for `product_path` on the same corpus
+# (plan construction, the hub materialization jobs, the write and the
+# count), not counting the release commands py4j sends when Python
+# garbage-collects a JVM reference: their number follows the
+# collector's timing.
+BUILD_PY4J_BUDGET = 19656
 
 
 def test_final_graph_exchange_budget(synth_build):
-    """The final `triples` plan, built over the materialized hubs."""
-    _, res, _ = synth_build
-    n = formatted(res["triples"]).count("Exchange")
+    """The final graph's plan, in the job that materializes it over the
+    other hubs."""
+    _, _, execs = synth_build
+    _, desc, _ = computing(execs, "__mo")
+    tree = desc.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    ids = set(re.findall(r"\((\d+)\)", tree))
+    details = re.findall(r"^\((\d+)\) (\w+)", desc, re.M)
+    n = tree.count("Exchange") + sum(
+        "Exchange" in name for i, name in details if i in ids
+    )
     assert n <= FINAL_EXCHANGE_BUDGET, n
 
 
@@ -653,27 +687,32 @@ def _exchange_counts(execs):
 
 
 def test_build_exchange_budget(synth_build):
-    """Exchanges over every plan one build executes."""
+    """Exchanges over every plan a build and its write and count
+    execute."""
     _, _, execs = synth_build
     n, n_bcast = _exchange_counts(execs)
     assert n <= BUILD_EXCHANGE_BUDGET, n
     assert n_bcast <= BUILD_BROADCAST_EXCHANGE_BUDGET, n_bcast
 
 
-def test_bucketed_build_exchange_budget(spark, synth_build, monkeypatch):
-    """Exchanges over every plan one build on the two-phase counter path
-    executes: only the cell-scale counters take that form."""
+def test_bucketed_build_exchange_budget(spark, synth_build, monkeypatch, tmp_path):
+    """Exchanges over every plan a build on the two-phase counter path
+    and its write and count execute: only the cell-scale counters take
+    that form."""
     corpus, _, _ = synth_build
     force_counter_buckets(monkeypatch, 2)
-    _, execs = executions(spark, lambda: build_graph(spark, corpus))
+    _, execs = executions(
+        spark, lambda: product_path(spark, corpus, str(tmp_path / "triples"))
+    )
     n, n_bcast = _exchange_counts(execs)
     assert n <= BUCKETED_BUILD_EXCHANGE_BUDGET, n
     assert n_bcast <= BUCKETED_BUILD_BROADCAST_EXCHANGE_BUDGET, n_bcast
 
 
-def test_build_py4j_budget(spark, synth_build):
-    """py4j commands of one materialized build, counted by wrapping the
-    gateway client's send_command for the duration of the call."""
+def test_build_py4j_budget(spark, synth_build, tmp_path):
+    """py4j commands of one materialized build and its write and count,
+    counted by wrapping the gateway client's send_command for the
+    duration of the calls."""
     from py4j.protocol import MEMORY_COMMAND_NAME
 
     corpus, _, _ = synth_build
@@ -688,7 +727,7 @@ def test_build_py4j_budget(spark, synth_build):
 
     client.send_command = send_command
     try:
-        build_graph(spark, corpus)
+        product_path(spark, corpus, str(tmp_path / "triples"))
     finally:
         client.send_command = orig
     assert calls <= BUILD_PY4J_BUDGET, calls

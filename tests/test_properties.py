@@ -93,33 +93,36 @@ def test_uuid5_matches_stdlib(spark, seeds):
 @given(
     st.lists(
         st.tuples(st.sampled_from(["d1", "d2"]), st.integers(0, 30),
-                  st.integers(0, 5)),
+                  st.integers(0, 5), st.integers(0, 2)),
         min_size=1, max_size=60,
     ),
     st.integers(1, 7),
 )
 @settings(**_SETTINGS)
 def test_seq_number_property(spark, rows, width):
+    """The bucketed running sums of 1 and of a weight column (0, 1 or
+    2) equal one global window's row number and running sum."""
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
     from rdf_generator_spark.operators.windows import seq_number
 
-    data = [(d, a, b, i) for i, (d, a, b) in enumerate(rows)]
-    df = spark.createDataFrame(data, "doc string, a int, b int, uid int")
+    data = [(d, a, b, i, w) for i, (d, a, b, w) in enumerate(rows)]
+    df = spark.createDataFrame(data, "doc string, a int, b int, uid int, w int")
+    w_run = Window.partitionBy("doc").orderBy("a", "b", "uid")
     want = {
-        (r["doc"], r["uid"]): r["rn"]
-        for r in df.withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("doc").orderBy("a", "b", "uid")
-            ),
+        (r["doc"], r["uid"]): (r["rn"], r["ws"])
+        for r in df.select(
+            "doc", "uid", F.row_number().over(w_run).alias("rn"),
+            F.sum("w").over(
+                w_run.rowsBetween(Window.unboundedPreceding, 0)
+            ).alias("ws"),
         ).collect()
     }
     got = {
-        (r["doc"], r["uid"]): r["rn"]
+        (r["doc"], r["uid"]): (r["rn"], r["ws"])
         for r in seq_number(
-            df, ["doc"], ["a", "b", "uid"], F.floor(F.col("a") / width)
+            df, ["doc"], ["a", "b", "uid"], {"rn": "1", "ws": "w"}, width
         ).collect()
     }
     assert got == want

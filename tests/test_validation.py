@@ -147,6 +147,26 @@ def test_rdfs_closure_is_per_scope(spark):
     }
 
 
+def test_validation_report_runs_rules_once(spark, result, tmp_path):
+    """validation_report computes the violations once: the four actions
+    run_pipeline.py --validate takes on its frames (two writes, two
+    counts) join no rule table."""
+    from rdf_generator_spark.validation.scopes import validation_report
+    from tests.test_plans import executions
+
+    violations, conformance = validation_report(result)
+
+    def actions():
+        violations.write.parquet(str(tmp_path / "violations"))
+        conformance.write.parquet(str(tmp_path / "conformance"))
+        return conformance.count(), violations.count()
+
+    (n_scopes, _), execs = executions(spark, actions)
+    assert n_scopes == 23
+    assert len(execs) >= 4
+    assert not [desc for _, desc, _ in execs if "rule_id" in desc]
+
+
 def test_scoped_validation_report(spark, result):
     from rdf_generator_spark.validation.scopes import (
         render_summary,
