@@ -1,21 +1,24 @@
-"""Entity linking: ontology-label URI fill (J1) and negation resolution (J2).
+"""Entity linking (J1, J2) and state numbering (A2) of one character
+document, inside the fused parse.
 
-The reference does O(1) dict lookups against a label index
-(/root/reference/rdf_generator/main.py:296-343, 566-572, 1018-1021).
-Spark-first equivalent: the vocabulary is a broadcast dimension table and
-every lookup is a broadcast hash join — no shuffle on the fact side except
-the array-reassembly groupBy, which runs on the (small) characters table,
-never on the cells fan-out.
+The reference (rdf_generator/main.py) resolves a document's missing
+URIs against the ontology label index (J1, main.py:296-343), its
+negated states against the document's own first-wins label index (J2,
+main.py:566-572, 1018-1021) and numbers its STATE/QUALITY nodes (A2) in
+per-document Python loops over dimension-sized data. `link_characters`
+does all three in the one Python call the parse already makes per
+character document, so none of it costs a Spark job. `fill_stats` is
+the J1 bookkeeping over a parsed characters table.
 """
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import Dict, List
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from rdf_generator_spark.normalize import norm_term_label, strip_col
+from rdf_generator_spark.normalize import norm_term_label, py_norm_term_label, strip_col
 
 DOC_KEYS = ("repo", "commit")
 
@@ -26,102 +29,87 @@ def missing_uri(c: Column) -> Column:
     return c.isNull() | (s == "") | (s == "null")
 
 
-def fill_scalar_uri(
-    df: DataFrame, label_col: str, uri_col: str, vocab: DataFrame, enabled: Column = None
-) -> DataFrame:
-    """Broadcast-left-join fill of one (label, uri) slot."""
-    v = F.broadcast(vocab.withColumnRenamed("uri", "__resolved"))
-    cond = missing_uri(F.col(uri_col)) & (norm_term_label(F.col(label_col)) != "")
-    if enabled is not None:
-        cond = cond & enabled
-    out = df.join(v, cond & (norm_term_label(F.col(label_col)) == v.norm_label), "left")
-    return out.withColumn(
-        uri_col,
-        F.when(cond & F.col("__resolved").isNotNull(), F.col("__resolved")).otherwise(
-            F.col(uri_col)
-        ),
-    ).drop("norm_label", "__resolved")
+def _filled(uri, label, vocab: Dict[str, str]):
+    """J1 fill of one (label, uri) slot: a missing URI (`missing_uri`)
+    takes the vocabulary URI of the label's normalized form, if any."""
+    if uri is None or uri.strip().lower() in ("", "null"):
+        return vocab.get(py_norm_term_label(label), uri)
+    return uri
 
 
-def fill_both_arrays_uris(
-    df: DataFrame, vocab: DataFrame, id_cols: Sequence[str]
-) -> DataFrame:
-    """Fused fill of the `locators` and `states` array slots (round 6).
-
-    A fill per array column costs one explode + one groupBy exchange +
-    one join-back each; tagging both arrays' elements with a kind and
-    exploding them TOGETHER halves that machinery (one explode pass, one
-    vocabulary join, one re-assembly aggregation, one join-back) while
-    producing byte-identical arrays: positions are assigned within the
-    concatenated (locators ++ states) array, so per-kind sort order
-    equals the original element order. Neither array is ever NULL (the
-    parser emits ``[]`` for a missing or null list), so the concat is
-    never NULL either."""
-    keys = list(id_cols)
-    loc_tagged = F.transform(
-        F.col("locators"),
-        lambda l: F.struct(
-            F.lit("L").alias("kind"), l["label"].alias("label"),
-            l["uri"].alias("uri"), F.lit(None).cast("string").alias("token"),
-        ),
-    )
-    st_tagged = F.transform(
-        F.col("states"),
-        lambda s: F.struct(
-            F.lit("S").alias("kind"), s["label"].alias("label"),
-            s["uri"].alias("uri"), s["token"].alias("token"),
-        ),
-    )
-    ex = df.select(
-        *keys, F.posexplode_outer(F.concat(loc_tagged, st_tagged)).alias("__pos", "__item")
-    )
-    item = F.col("__item")
-    cond = missing_uri(item["uri"]) & (norm_term_label(item["label"]) != "")
-    v = F.broadcast(vocab.withColumnRenamed("uri", "__resolved"))
-    ex = ex.join(v, cond & (norm_term_label(item["label"]) == v.norm_label), "left")
-    filled_uri = (
-        F.when(cond & F.col("__resolved").isNotNull(), F.col("__resolved"))
-        .otherwise(item["uri"])
-    )
-    packed = lambda want, inner: F.when(  # noqa: E731
-        F.col("__pos").isNotNull() & (item["kind"] == want),
-        F.struct(F.col("__pos").alias("p"), inner.alias("i")),
-    )
-    loc_inner = F.struct(item["label"].alias("label"), filled_uri.alias("uri"))
-    st_inner = F.struct(item["label"].alias("label"), filled_uri.alias("uri"),
-                        item["token"].alias("token"))
-    regrouped = (
-        ex.groupBy(*keys)
-        .agg(
-            F.sort_array(F.collect_list(packed("L", loc_inner))).alias("__pl"),
-            F.sort_array(F.collect_list(packed("S", st_inner))).alias("__ps"),
-        )
-        .withColumn("locators", F.expr("transform(__pl, x -> x.i)"))
-        .withColumn("states", F.expr("transform(__ps, x -> x.i)"))
-        .drop("__pl", "__ps")
-    )
-    return df.drop("locators", "states").join(regrouped, keys, "left")
+def _id_label(label: str, fallback: str, n: int) -> str:
+    return f"{label or fallback}:id-{n}"
 
 
-def fill_character_uris(chars: DataFrame, vocab: DataFrame) -> DataFrame:
-    """apply_pmck_uri_fallbacks (main.py:296-343) over the parsed shape:
-    Organism / Locators / Variable / States slots, exact-match tier only
-    (the reference's label-index lookup)."""
-    keys = [*DOC_KEYS, "path", "char_pos"]
-    # The array fill first: its join-back reads its input in two
-    # branches, so scalar fills beneath it would run twice. The fills
-    # touch disjoint columns (locators/states vs org_uri and var_uri),
-    # so they commute.
-    out = fill_both_arrays_uris(chars, vocab, keys)
-    out = fill_scalar_uri(out, "org_label", "org_uri", vocab)
-    return fill_scalar_uri(out, "var_label", "var_uri", vocab,
-                           enabled=F.col("has_variable"))
+def link_characters(chars: List[dict], vocab: Dict[str, str]) -> List[dict]:
+    """apply_pmck_uri_fallbacks (J1), the negation index (J2) and the
+    STATE/QUALITY counters (A2) over one document's characters, the
+    `char_rows_from_json` records in document order. Updates them in
+    place and returns them.
+
+    J1 fills the organism, variable, locator and state URIs from
+    `vocab` (normalized label -> URI). Each state then gets its derived
+    fields: ``labelN`` (the stripped label, ``not <base>`` when
+    negated), ``base_label``, ``uri_t`` (the URI when truthy), the IRI
+    ``seed`` and, for a negated state without a URI, ``resolved_uri``
+    from the first state of the document carrying the same label and a
+    URI (``neg_resolved`` when one was found).
+
+    A2: the reference labels a STATE or QUALITY node only when it has
+    no label yet (the has_label guards of refsim's process_phenotype
+    and handle_quality), so two states with one seed (same URI, or same
+    label and no URI) take one number and the repeat carries the first
+    occurrence's label. Phase b (per-character graphs) guards within
+    the character; the matrix round guards within the document, and its
+    STATE counter continues after phase b's. The counters are per
+    document because a ``(repo, commit)`` group has one character JSON,
+    the input contract `build_graph` checks before it returns anything.
+    """
+    negation: Dict[str, str] = {}
+    for ch in chars:
+        ch["org_uri"] = _filled(ch["org_uri"], ch["org_label"], vocab)
+        ch["var_uri"] = _filled(ch["var_uri"], ch["var_label"], vocab)
+        for slot in ch["locators"] + ch["states"]:
+            slot["uri"] = _filled(slot["uri"], slot["label"], vocab)
+        for st in ch["states"]:
+            key = (st["label"] or "").strip().lower()
+            if key and st["uri"]:
+                negation.setdefault(key, st["uri"])
+
+    firsts_m: Dict[str, tuple] = {}
+    n_b = 0
+    for ch in chars:
+        firsts_b: Dict[str, tuple] = {}
+        for st in ch["states"]:
+            label = "unknown" if st["label"] is None else st["label"].strip()
+            is_neg = label.lower().startswith("not ")
+            base = label[4:].strip() if is_neg else None
+            st["labelN"] = f"not {base}" if is_neg else label
+            st["base_label"] = base
+            st["uri_t"] = st["uri"] or None
+            st["seed"] = f"{ch['char_id']}_{st['uri_t'] or st['labelN'].lower()}"
+            st["resolved_uri"] = st["uri_t"] or (
+                negation.get(base.lower()) if is_neg else None)
+            st["neg_resolved"] = is_neg and st["resolved_uri"] is not None
+            if st["seed"] not in firsts_b:
+                n_b += 1
+                firsts_b[st["seed"]] = (n_b, st["labelN"])
+            firsts_m.setdefault(st["seed"], (len(firsts_m) + 1, st["labelN"]))
+            n, label_b = firsts_b[st["seed"]]
+            st["sta_label_phase_b"] = _id_label(label_b, "state", n)
+    for ch in chars:
+        for st in ch["states"]:
+            n, label_m = firsts_m[st["seed"]]
+            st["sta_label"] = _id_label(label_m, "state", n_b + n)
+            st["qua_label"] = _id_label(label_m, "quality", n)
+    return chars
 
 
 def fill_stats(chars: DataFrame, vocab: DataFrame) -> DataFrame:
     """J1 bookkeeping (main.py:302, 330-343): per document, how many
-    missing-URI mentions were filled from the vocabulary vs left
-    unresolved. One exploded mention table + one broadcast join."""
+    missing-URI mentions of an unlinked characters table (a single-family
+    view) the vocabulary fills vs leaves unresolved. One exploded
+    mention table + one broadcast join."""
     org = chars.select(
         *DOC_KEYS, F.col("org_label").alias("label"), F.col("org_uri").alias("uri")
     )
@@ -145,32 +133,4 @@ def fill_stats(chars: DataFrame, vocab: DataFrame) -> DataFrame:
     return joined.groupBy(*DOC_KEYS).agg(
         F.sum(F.when(F.col("__resolved").isNotNull(), 1).otherwise(0)).alias("filled"),
         F.sum(F.when(F.col("__resolved").isNull(), 1).otherwise(0)).alias("unresolved"),
-    )
-
-
-def state_label_index(states_long: DataFrame) -> DataFrame:
-    """J2 (main.py:566-572): dataset-wide raw-label -> first truthy URI,
-    first-wins in (char order, state order).
-
-    Input: long states table with doc keys + char_pos + state_idx +
-    label + uri. Output: (doc keys, base_key, pos_uri).
-    """
-    from pyspark.sql.window import Window
-
-    cand = states_long.filter(
-        (F.coalesce(strip_col(F.col("label")), F.lit("")) != "")
-        & F.col("uri").isNotNull()
-        & (F.col("uri") != "")
-    ).select(
-        *DOC_KEYS,
-        F.lower(strip_col(F.col("label"))).alias("base_key"),
-        F.col("uri").alias("pos_uri"),
-        "char_pos",
-        "state_idx",
-    )
-    w = Window.partitionBy(*DOC_KEYS, "base_key").orderBy("char_pos", "state_idx")
-    return (
-        cand.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(*DOC_KEYS, "base_key", "pos_uri")
     )

@@ -3,10 +3,12 @@
 Dataflow (SURVEY.md §3 "Spark lifecycle"):
 
     corpus(repo,path,commit,lang,content)
+      ├─ dimension collect (OWL label index, yaml config)
       ├─ fused parse (one Arrow mapInPandas, one "parsed" hub)
+      │    per character document, in the same Python call:
+      │    J1 URI fill, J2 negation index, A2 state numbering
       │                             -> chars / cells / species / meta views
-      ├─ vocab broadcast join (J1)  -> URI-filled chars
-      ├─ per-state derivation (J2, K1) -> states_x   [long table]
+      ├─ posexplode(states) + sta/qua/restr/comp mints (K1) -> states_x
       ├─ cells ⋈ chars (J4/J5) × sex variants (F2)   -> visits
       │    locator-chain UUID5 fold (F4) in a built-in `aggregate`
       ├─ per-document windows (A1/A2) -> sequential :id-N labels
@@ -48,7 +50,6 @@ from rdf_generator_spark.normalize import (
     parse_char_num_col,
     strip_col,
 )
-from rdf_generator_spark.operators import linking
 from rdf_generator_spark.operators.graph_ops import (
     apply_label_priority,
     dedup_triples,
@@ -58,7 +59,7 @@ from rdf_generator_spark.operators.windows import seq_number
 from rdf_generator_spark.plans.base_scaffold import BASE_SCHEMA, base_triples
 from rdf_generator_spark.plans.emit import Triple, const, emit, union_emissions
 from rdf_generator_spark.sources import parsers
-from rdf_generator_spark.sources.corpus import local_df, vocab_df_from_owl_rows
+from rdf_generator_spark.sources.corpus import label_index_from_owl_rows, local_df
 
 DOC = ["repo", "commit"]
 
@@ -68,8 +69,8 @@ _LOC_CHAIN_TYPE = (
 
 # Above this many corpus FILES the dimension-side broadcast hints are
 # dropped and the joins fall back to AQE's runtime choice: the per-
-# document dimension tables (characters, states, species keys, J2 index)
-# are tiny per document, but the broadcast is of their union across ALL
+# document dimension tables (characters, states, species keys) are
+# tiny per document, but the broadcast is of their union across ALL
 # documents, which grows linearly with the corpus and would exceed the
 # 8 GB broadcast ceiling long before 100 TB. All of these joins carry
 # (repo, commit) in the key, so the shuffle fallback co-locates by
@@ -427,8 +428,8 @@ def build_graph(
 
     Sequential :id-N counter execution strategy for the cell-scale
     counters (cells and phenotype visits, numbered in one pass, and the
-    first-visit entities; the state counters always use one window per
-    document): the footer probe
+    first-visit entities; the parse numbers the states, one document
+    per Python call): the footer probe
     `_max_doc_bytes` (zero jobs unless the footers are ambiguous) gates
     it. When the largest document's content reaches
     ``_GIANT_DOC_CONTENT_BYTES`` the counters switch to the two-phase
@@ -470,21 +471,29 @@ def build_graph(
     # adaptive plan (one with exchanges, e.g. a resumed batch's
     # semi-join) learns its partition count only by running its stages,
     # so it keeps its own partitioning.
+    #
+    # The parse links each character document against the OWL label
+    # index, so the one dimension collect (the OWL rows and the yaml
+    # config window) runs first.
+    owl_rows, yaml_rows = _dimension_rows(corpus)
+    vocab = label_index_from_owl_rows(owl_rows)
+    if dataset_id is None:
+        dataset_id = _dataset_id_from_yaml_rows(yaml_rows)
     adaptive = (
         corpus._jdf.queryExecution().executedPlan().nodeName()
         == "AdaptiveSparkPlan"
     )
     if footers is None or footers.total is None or adaptive:
-        parsed = parsers.parse_docs(corpus)
+        parsed = parsers.parse_docs(corpus, vocab)
     else:
         n_parse, n_hub = _task_counts(
             footers.total, corpus._jdf.rdd().getNumPartitions()
         )
-        parsed = parsers.parse_docs(corpus.coalesce(n_parse))
+        parsed = parsers.parse_docs(corpus.coalesce(n_parse), vocab)
         if n_hub > n_parse:
             parsed = parsed.repartition(n_hub)
     parsed = mat(parsed, "parsed")
-    chars_raw = parsers.family_view(parsed, "json")
+    chars = parsers.family_view(parsed, "json")
     cells = parsers.family_view(parsed, "nexus")
     species = parsers.family_view(parsed, "species-json")
     # Last-row-wins per Char_ID, replaying the reference's dict overwrite
@@ -501,19 +510,11 @@ def build_graph(
             ).alias("source_text")
         )
     )
-    # One dimension collect: the OWL vocabulary rows and the yaml
-    # config window.
-    owl_rows, yaml_rows = _dimension_rows(corpus)
-    vocab = vocab_df_from_owl_rows(spark, owl_rows)
-    if dataset_id is None:
-        dataset_id = _dataset_id_from_yaml_rows(yaml_rows)
 
-    # --- J1 vocab fill + per-char derived columns ------------------------
-    chars_f = linking.fill_character_uris(chars_raw, vocab)
-
+    # --- per-char derived columns ----------------------------------------
     if dataset_id is not None:
         did = norm_seed_component(F.lit(dataset_id))
-        salts = chars_f.select(*DOC).distinct().withColumn(
+        salts = chars.select(*DOC).distinct().withColumn(
             "salt", F.concat(F.lit("dataset::"), did)
         )
     else:
@@ -523,7 +524,7 @@ def build_graph(
         salts = build_salts(meta, json_names)
 
     charsx = (
-        chars_f.join(salts, DOC, "left")
+        chars.join(salts, DOC, "left")
         .withColumn("salt", F.coalesce(F.col("salt"), F.lit("dataset::default")))
         .join(
             meta.select(*DOC, "char_id", "source_text"),
@@ -597,11 +598,14 @@ def build_graph(
     charsx = mat(charsx, "charsx")
     # Contract check rides the (cheap, already-materialized) parsed
     # characters table instead of re-scanning the raw corpus: a second
-    # char-JSON in a group shows up as a second distinct `path` here.
-    # Raises before any result is returned.
+    # char-JSON in a group shows up as a second distinct `path` here,
+    # counted in one aggregation per document (one exchange). Raises
+    # before any result is returned, so no output carries the parse's
+    # per-document state numbering of a group with two JSONs.
     bad = (
-        charsx.select(*DOC, "path").distinct()
-        .groupBy(*DOC).count().filter(F.col("count") > 1)
+        charsx.groupBy(*DOC)
+        .agg(F.size(F.collect_set("path")).alias("count"))
+        .filter(F.col("count") > 1)
         .limit(10).collect()
     )
     if bad:
@@ -618,136 +622,26 @@ def build_graph(
             "split the groups yourself."
         )
 
-    # --- states_x: long per-state table with J2 + counters (K1/A2) -------
+    # --- states_x: long per-state table (K1) ----------------------------
+    # J2 resolution and the A2 STATE/QUALITY labels came out of the parse
+    # (linking.link_characters); what is left is one projection: a row
+    # per state and its IRI mints.
     st = charsx.select(
-        *DOC,
-        "char_pos",
-        "char_id",
-        "char_iri",
+        *DOC, "char_pos", "char_id", "char_iri",
         _truthy_uri(F.col("var_uri")).alias("char_var_uri"),
-        F.posexplode_outer("states").alias("state_idx", "st"),
-    ).filter(F.col("state_idx").isNotNull())
-    label0 = F.when(F.col("st.label").isNull(), F.lit("unknown")).otherwise(
-        strip_col(F.col("st.label"))
+        F.posexplode("states").alias("state_idx", "st"),
     )
-    st = (
-        st.withColumn("label0", label0)
-        .withColumn("is_neg", F.lower(F.col("label0")).startswith("not "))
-        .withColumn(
-            "base_label", strip_col(F.substring(F.col("label0"), 5, 2 ** 30))
-        )
-        .withColumn(
-            "labelN",
-            F.when(F.col("is_neg"), F.concat(F.lit("not "), F.col("base_label"))).otherwise(
-                F.col("label0")
-            ),
-        )
-        .withColumn("uri_t", _truthy_uri(F.col("st.uri")))
-        .withColumn(
-            "seed",
-            F.concat(
-                F.col("char_id"),
-                F.lit("_"),
-                F.coalesce(F.col("uri_t"), F.lower(F.col("labelN"))),
-            ),
-        )
-        .withColumn("sta_iri", kb_iri("sta", F.col("seed")))
-        .withColumn("qua_iri", kb_iri("qua", F.col("seed")))
-    )
-    j2 = linking.state_label_index(
-        st.select(*DOC, "char_pos", "state_idx", F.col("st.label").alias("label"),
-                  F.col("uri_t").alias("uri"))
-    )
-    j2r = j2.select(
-        F.col("repo").alias("__j2_repo"),
-        F.col("commit").alias("__j2_commit"),
-        F.col("base_key").alias("__j2_key"),
-        F.col("pos_uri").alias("__j2uri"),
-    )
-    st = st.join(
-        bhint(j2r),
-        (F.col("repo") == F.col("__j2_repo"))
-        & (F.col("commit") == F.col("__j2_commit"))
-        & (F.lower(F.col("base_label")) == F.col("__j2_key"))
-        & F.col("is_neg")
-        & F.col("uri_t").isNull(),
-        "left",
-    ).drop("__j2_repo", "__j2_commit", "__j2_key")
-    st = st.withColumn("resolved_uri", F.coalesce(F.col("uri_t"), F.col("__j2uri"))).drop(
-        "__j2uri"
-    )
-    st = (
-        st.withColumn("neg_resolved", F.col("is_neg") & F.col("resolved_uri").isNotNull())
-        .withColumn(
-            "restr_iri",
-            F.when(F.col("neg_resolved"), kb_iri("restr", F.col("resolved_uri"))),
-        )
-        .withColumn(
-            "comp_iri",
-            F.when(F.col("neg_resolved"), kb_iri("comp", F.col("resolved_uri"))),
-        )
-    )
-    # A2 state/quality counters. The reference labels a STATE/QUALITY
-    # node only when it has no label yet (the has_label guards in
-    # refsim's process_phenotype and handle_quality): two
-    # states of one character with the same IRI seed (same URI, or same
-    # label and no URI) take ONE number, and the repeat carries the
-    # first occurrence's label.
-    # Phase b (per-character graphs) guards within the character row;
-    # the matrix round guards within the document; the matrix STATE
-    # counter continues after phase b's, so its offset counts phase-b
-    # first occurrences.
-    w_doc_seed = Window.partitionBy(*DOC, "seed").orderBy("char_pos", "state_idx")
-    w_char_seed = Window.partitionBy(*DOC, "char_pos", "seed").orderBy("state_idx")
-    st = (
-        st.withColumn("__first_m", F.row_number().over(w_doc_seed) == 1)
-        .withColumn("__first_b", F.row_number().over(w_char_seed) == 1)
-    )
-    # The counters are running counts of first occurrences over one
-    # per-document window, whatever counter_buckets says: a document's
-    # state rows are its characters x states, all from one character
-    # JSON that the fused parse already handles in one Python call in
-    # one task, so numbering them in one task is never the straggler (a
-    # million-cell NEXUS has 2,000 characters, about 8k state rows).
-    w_doc_run = Window.partitionBy(*DOC).orderBy("char_pos", "state_idx").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow)
-    n_first_b = F.sum(F.col("__first_b").cast("int"))
-    st = (
-        st.withColumn("__rn_m", F.sum(F.col("__first_m").cast("int")).over(w_doc_run))
-        .withColumn("__rn_b", n_first_b.over(w_doc_run))
-        .withColumn("__n_states", n_first_b.over(Window.partitionBy(*DOC)))
-    )
-    st = (
-        st.withColumn("__rn_m", F.first("__rn_m").over(w_doc_seed))
-        .withColumn("__label_m", F.first("labelN").over(w_doc_seed))
-        .withColumn("__rn_b", F.first("__rn_b").over(w_char_seed))
-        .withColumn("__label_b", F.first("labelN").over(w_char_seed))
-    )
-
-    def _id_label(label, fallback, n):
-        prefix = F.when(F.col(label) == "", F.lit(fallback)).otherwise(F.col(label))
-        return F.concat(prefix, F.lit(":id-"), n)
-
-    st = (
-        st.withColumn(
-            "sta_label",
-            _id_label("__label_m", "state", F.col("__n_states") + F.col("__rn_m")),
-        )
-        # phase-b label (build_character_graphs round): visible only in
-        # per-character graphs; label priority replaces it with the
-        # matrix-round label in every written output
-        .withColumn("sta_label_phase_b", _id_label("__label_b", "state", F.col("__rn_b")))
-        .withColumn("qua_label", _id_label("__label_m", "quality", F.col("__rn_m")))
-    )
-    # checkpoint only what downstream consumers read (RDD scans cannot
-    # column-prune — see the visits projection note)
-    st = st.select(
-        *DOC, "char_pos", "state_idx", "char_id", "char_iri",
-        "char_var_uri", "base_label", "labelN", "uri_t", "sta_iri",
-        "qua_iri", "resolved_uri", "neg_resolved", "restr_iri",
-        "comp_iri", "sta_label", "sta_label_phase_b", "qua_label",
-    )
-    states_x = mat(st, "states_x")
+    neg = F.col("st.neg_resolved")
+    states_x = mat(st.select(
+        *DOC, "char_pos", "state_idx", "char_id", "char_iri", "char_var_uri",
+        "st.base_label", "st.labelN", "st.uri_t",
+        kb_iri("sta", F.col("st.seed")).alias("sta_iri"),
+        kb_iri("qua", F.col("st.seed")).alias("qua_iri"),
+        "st.resolved_uri", "st.neg_resolved",
+        F.when(neg, kb_iri("restr", F.col("st.resolved_uri"))).alias("restr_iri"),
+        F.when(neg, kb_iri("comp", F.col("st.resolved_uri"))).alias("comp_iri"),
+        "st.sta_label", "st.sta_label_phase_b", "st.qua_label",
+    ), "states_x")
 
     # --- cells ⋈ chars (J4): broadcast the dimension-sized character
     # table keyed on the matrix column index (char_ids_in_order semantics,

@@ -3,8 +3,8 @@
 The engine's only large input is the corpus table
 ``(repo, path, commit, lang, content)`` (Iceberg at scale; any DataFrame
 source here). Ontologies are tiny dimension inputs: parsed driver-side
-into a ``vocab(norm_label, uri)`` DataFrame that is broadcast into the
-entity-linking join (SURVEY.md §2 J1).
+into a label index (normalized label -> URI) that the fused parse links
+each character document against (SURVEY.md §2 J1).
 """
 
 from __future__ import annotations
@@ -136,15 +136,15 @@ def build_label_index(content: str) -> Dict[str, str]:
     return index
 
 
-def vocab_df_from_owl_rows(spark: SparkSession, rows) -> DataFrame:
-    """The vocab table of collected lang='owl' rows: label index entries
-    first-wins across documents in (repo, path, commit) order, so the
-    winner does not depend on collect order."""
+def label_index_from_owl_rows(rows) -> Dict[str, str]:
+    """The label index of collected lang='owl' rows: entries first-wins
+    across documents in (repo, path, commit) order, so the winner does
+    not depend on collect order."""
     index: Dict[str, str] = {}
     for r in sorted(rows, key=lambda r: (r["repo"], r["path"], r["commit"])):
         for k, v in build_label_index(r["content"]).items():
             index.setdefault(k, v)
-    return local_df(spark, sorted(index.items()), VOCAB_SCHEMA)
+    return index
 
 
 def vocab_df_from_corpus(spark: SparkSession, corpus: DataFrame) -> DataFrame:
@@ -153,7 +153,8 @@ def vocab_df_from_corpus(spark: SparkSession, corpus: DataFrame) -> DataFrame:
     rows = corpus.filter(corpus.lang == "owl").select(
         "repo", "path", "commit", "content"
     )
-    return vocab_df_from_owl_rows(spark, rows.collect())
+    index = label_index_from_owl_rows(rows.collect())
+    return local_df(spark, sorted(index.items()), VOCAB_SCHEMA)
 
 
 def local_df(

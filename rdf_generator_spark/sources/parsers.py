@@ -12,7 +12,10 @@ one family back to its flat table.
 The irregular positional key names of the character JSON ("Locator 1 label",
 "State 0 URI" — /root/reference/rdf_generator/main.py:752,1003,1099) are
 normalized to fixed StructTypes here so everything downstream is
-statically typed and stays in the JVM.
+statically typed and stays in the JVM. Each character document is also
+linked here, in the same Python call (`operators/linking.py`): URI
+fill, negation resolution and state numbering are per-document loops
+over dimension-sized data.
 """
 
 from __future__ import annotations
@@ -35,6 +38,7 @@ from rdf_generator_spark.normalize import (
     py_norm_taxon_label,
     py_norm_species_uri,
 )
+from rdf_generator_spark.operators.linking import link_characters
 
 _DOC_KEY_FIELDS = [
     T.StructField("repo", T.StringType()),
@@ -46,12 +50,15 @@ LABEL_URI = T.StructType(
     [T.StructField("label", T.StringType()), T.StructField("uri", T.StringType())]
 )
 
+# A state as parsed (label, uri, token) plus what
+# operators/linking.py::link_characters derives from it
 STATE_STRUCT = T.StructType(
-    [
-        T.StructField("label", T.StringType()),
-        T.StructField("uri", T.StringType()),
-        T.StructField("token", T.StringType()),
-    ]
+    [T.StructField(n, T.StringType())
+     for n in ("label", "uri", "token", "labelN", "base_label", "uri_t",
+               "seed", "resolved_uri")]
+    + [T.StructField("neg_resolved", T.BooleanType())]
+    + [T.StructField(n, T.StringType())
+       for n in ("sta_label", "sta_label_phase_b", "qua_label")]
 )
 
 CHARS_FIELDS = [
@@ -323,7 +330,9 @@ FAMILIES: Dict[str, Family] = {
 }
 
 
-def parse_docs(corpus: DataFrame, langs: Sequence[str] = tuple(FAMILIES)) -> DataFrame:
+def parse_docs(
+    corpus: DataFrame, vocab: Dict[str, str], langs: Sequence[str] = tuple(FAMILIES)
+) -> DataFrame:
     """Fused parse of every document whose ``lang`` is in `langs`.
 
     Output: the document key, ``lang``, and one nullable struct column
@@ -332,6 +341,11 @@ def parse_docs(corpus: DataFrame, langs: Sequence[str] = tuple(FAMILIES)) -> Dat
     the result reads each record's own fields plus a few null markers,
     not the union of every family's columns. Python runs once per
     document here, whatever number of families a build reads.
+
+    Each character document's records go through
+    `linking.link_characters` against `vocab`, the OWL label index
+    (normalized label -> URI; ``{}`` fills no URI): URI fill,
+    negation resolution and state numbering ride this pass.
     """
     fams = {lang: FAMILIES[lang] for lang in langs}
     schema = T.StructType(
@@ -348,6 +362,8 @@ def parse_docs(corpus: DataFrame, langs: Sequence[str] = tuple(FAMILIES)) -> Dat
                            pdf["lang"], pdf["content"]):
                 fam = fams[doc[3]]
                 recs = fam.extract(doc[4])
+                if doc[3] == "json":
+                    link_characters(recs, vocab)
                 for n, v in zip(names, doc[:4]):
                     out[n].extend([v] * len(recs))
                 for f in fams.values():
@@ -370,7 +386,7 @@ def family_view(parsed: DataFrame, lang: str) -> DataFrame:
 
 
 def _parse_one(corpus: DataFrame, lang: str) -> DataFrame:
-    return family_view(parse_docs(corpus, [lang]), lang)
+    return family_view(parse_docs(corpus, {}, [lang]), lang)
 
 
 def parse_char_docs(corpus: DataFrame) -> DataFrame:

@@ -35,8 +35,8 @@ def test_parse_chars(spark):
 def test_parsers_never_emit_null_arrays(spark):
     """`locators` and `states` are [] — never NULL — for a null, missing
     or empty list, in the pure-Python extractor and in the fused parse.
-    linking.fill_both_arrays_uris concatenates the two arrays, and a
-    NULL input would make the whole concat NULL."""
+    linking.link_characters iterates both lists of every character, so
+    a None would fail the parse task."""
     import json
 
     from rdf_generator_spark.sources.corpus import corpus_df
@@ -52,7 +52,7 @@ def test_parsers_never_emit_null_arrays(spark):
     rows = parsers.char_rows_from_json(content)
     assert [(len(r["locators"]), len(r["states"])) for r in rows] == want
     corpus = corpus_df(spark, [("r", "chars.json", "c" * 40, "json", content)])
-    view = parsers.family_view(parsers.parse_docs(corpus), "json")
+    view = parsers.family_view(parsers.parse_docs(corpus, {}), "json")
     got = view.orderBy("char_pos").collect()
     assert [r["locators"] is not None and r["states"] is not None
             for r in got] == [True] * 4

@@ -22,6 +22,74 @@ from tests.fixtures import force_counter_buckets
 from tests.oracle.refsim import RefSim
 
 
+def edge_case_rows():
+    """One hand-written dataset of linking and state-numbering edge
+    cases: organism, variable, locator and state URIs that are "",
+    blank or "NULL" (filled from the vocabulary or left as they are);
+    `not X` states resolved through the document's first-wins index
+    (J2) against an explicit and a vocabulary-filled URI, resolved by
+    the vocabulary itself, and left unresolved; states repeating an IRI
+    seed within a character (same URI; same label and no URI, in
+    another case) and labels and URIs repeated across characters; a
+    label that is empty after strip (the `state:id-N` fallback), a
+    missing one ("unknown"), and labels edged or spaced with non-ASCII
+    whitespace."""
+    import json
+
+    obo = "http://purl.obolibrary.org/obo/"
+    rugose = obo + "PATO_0000701"
+
+    def states(*specs):
+        return [{f"State {k} label": label, f"State {k} URI": uri,
+                 f"State {k} token": str(k)}
+                for k, (label, uri) in enumerate(specs)]
+
+    chars = [
+        {"Char_ID": "C1", "CharacterLabel": "labrum width",
+         "Organism": {"Label": "worker organism", "URI": "NULL"},
+         "Locators": [{"Locator 1 label": "labrum", "Locator 1 URI": ""},
+                      {"Locator 2 label": "distal region", "Locator 2 URI": "  "}],
+         "Variable": {"Variable label": "width", "Variable URI": "null"},
+         "States": states(("smooth", ""), ("not smooth", None),
+                          ("rugose", rugose), ("not rugose", None),
+                          ("\u00a0rugose\u2003", rugose))},
+        {"Char_ID": "C2",
+         "Organism": {"Label": "adult organism", "URI": "  "},
+         "Locators": [{"Locator 1 label": "mandible", "Locator 1 URI": None}],
+         "Variable": {"Variable label": "shape", "Variable URI": ""},
+         "States": states(("not punctate", "NULL"), ("not incised", None),
+                          ("   ", None), ("smooth", None), ("Not  Incised", ""),
+                          ("broad\u00a0 surface", "  "), (None, None))},
+        {"Char_ID": "C3",
+         "Organism": {"Label": "female organism", "URI": ""},
+         "Locators": [],
+         "States": states(("not rugose", "  "), ("rugose", None),
+                          ("\u3000", None))},
+    ]
+    taxa = {"Apis_mellifera": "046", "Bombus_terrestris": "152",
+            "Xylocopa_violacea": "2?0", "Melipona_beecheii": "3-1"}
+    nexus = "\n".join(
+        ["#NEXUS", "BEGIN DATA;", "\tDIMENSIONS NTAX=4 NCHAR=3;", "\tMATRIX"]
+        + [f"\t'{t}'    {syms}" for t, syms in taxa.items()]
+        + [";", "END;", ""])
+    species = [{"input_species_name": t, "valid_species_name": t.replace("_", " "),
+                "ID": 1000 + i} for i, t in enumerate(taxa)]
+    vocab = {"worker organism": "HAO_0000001", "labrum": "HAO_0000456",
+             "width": "PATO_0000921", "smooth": "PATO_0000702",
+             "not punctate": "PATO_0000950", "broad surface": "BSPO_0000010"}
+    owl = "\n".join(
+        ['<rdf:RDF xml:base="http://purl.obolibrary.org/obo/edge.owl">']
+        + [f'<owl:Class rdf:about="{obo}{uri}"><rdfs:label>{label}'
+           "</rdfs:label></owl:Class>" for label, uri in vocab.items()]
+        + ["</rdf:RDF>"])
+    meta = "Char_ID,Comment\nC1,Modified from character 1 of Edge (2000)\n"
+    docs = [("chars.json", "json", json.dumps(chars)), ("matrix.nex", "nexus", nexus),
+            ("species.json", "species-json", json.dumps(species)),
+            ("metadata.csv", "csv", meta), ("vocab.owl", "owl", owl)]
+    return [("edge/dataset", path, "e" * 40, lang, content)
+            for path, lang, content in docs]
+
+
 @pytest.mark.parametrize("seed,dataset_id,counter_buckets", [
     pytest.param(7, None, "auto", id="7"),
     pytest.param(23, None, "auto", id="23"),
@@ -31,10 +99,15 @@ from tests.oracle.refsim import RefSim
     # cells, visits and the merged first-visit kinds crosses a bucket
     # boundary at every character
     pytest.param(23, None, 1, id="23-buckets1"),
+    pytest.param(None, None, "auto", id="edge"),
+    pytest.param(None, None, 1, id="edge-buckets1"),
 ])
 def test_synth_corpus_matches_oracle_per_doc(spark, monkeypatch, seed, dataset_id,
                                             counter_buckets):
-    rows = synth_corpus_rows(n_datasets=3, ntax=8, nchar=8, seed=seed)
+    """Per document, the build's triples equal refsim's on seeded synth
+    corpora and on `edge_case_rows` (seed None)."""
+    rows = (edge_case_rows() if seed is None
+            else synth_corpus_rows(n_datasets=3, ntax=8, nchar=8, seed=seed))
     corpus = corpus_df(spark, rows)
     if counter_buckets != "auto":
         force_counter_buckets(monkeypatch, counter_buckets)
@@ -47,7 +120,7 @@ def test_synth_corpus_matches_oracle_per_doc(spark, monkeypatch, seed, dataset_i
     for repo, path, commit, lang, content in rows:
         by_repo[repo][lang] = content
 
-    assert len(got_by_doc) == 3
+    assert set(got_by_doc) == set(by_repo)
     for repo, docs in by_repo.items():
         chars = P.char_rows_from_json(docs["json"])
         cells = P._parse_nexus_matrix(docs["nexus"])

@@ -315,16 +315,21 @@ def _family_rows(df):
 
 @pytest.mark.parametrize("extras", [True, False])
 def test_fused_parse_family_views_match_parsers(spark, extras):
-    """Each family view of the fused parse equals its single-kind
-    parse_*_docs output and the pure-Python extractor's records. Without
-    csv / species-json / owl documents those families are empty and the
-    Arrow-built vocabulary has no rows but keeps its schema."""
+    """Each family view of the fused parse equals the pure-Python
+    extractor's records, the character documents' followed by the
+    linker against the corpus's OWL label index; each single-kind
+    parse_*_docs output equals the same with an empty index. Without
+    csv / species-json / owl documents those families are empty, the
+    label index is empty, and the Arrow-built vocabulary has no rows
+    but keeps its schema."""
     import json
 
+    from rdf_generator_spark.operators.linking import link_characters
     from rdf_generator_spark.sources import parsers
     from rdf_generator_spark.sources.corpus import (
         VOCAB_SCHEMA,
         corpus_df,
+        label_index_from_owl_rows,
         vocab_df_from_corpus,
     )
     from rdf_generator_spark.sources.synth import synth_corpus_rows
@@ -333,26 +338,37 @@ def test_fused_parse_family_views_match_parsers(spark, extras):
     if not extras:
         rows = [r for r in rows if r[3] not in ("csv", "species-json", "owl")]
     corpus = corpus_df(spark, rows)
-    fused = parsers.parse_docs(corpus)
+    index = label_index_from_owl_rows(
+        [dict(zip(("repo", "path", "commit", "lang", "content"), r))
+         for r in rows if r[3] == "owl"])
+    assert bool(index) == extras
+    fused = parsers.parse_docs(corpus, index)
     single = {
         "json": parsers.parse_char_docs,
         "nexus": parsers.parse_nexus_docs,
         "species-json": parsers.parse_species_docs,
         "csv": parsers.parse_metadata_docs,
     }
-    for lang, fam in parsers.FAMILIES.items():
+
+    def records(lang, vocab):
+        return sorted(
+            json.dumps({"repo": r[0], "path": r[1], "commit": r[2], **rec},
+                       sort_keys=True)
+            for r in rows if r[3] == lang
+            for rec in (link_characters(parsers.char_rows_from_json(r[4]), vocab)
+                        if lang == "json" else parsers.FAMILIES[lang].extract(r[4]))
+        )
+
+    for lang in parsers.FAMILIES:
         view = parsers.family_view(fused, lang)
         got = _family_rows(view)
         assert view.schema == single[lang](corpus).schema, lang
-        assert got == _family_rows(single[lang](corpus)), lang
-        want = sorted(
-            json.dumps({"repo": r[0], "path": r[1], "commit": r[2], **rec},
-                       sort_keys=True)
-            for r in rows if r[3] == lang for rec in fam.extract(r[4])
-        )
-        assert got == want, lang
+        assert got == records(lang, index), lang
+        assert _family_rows(single[lang](corpus)) == records(lang, {}), lang
         if lang not in ("json", "nexus"):
             assert bool(got) == extras, lang
+    # the index fills some URI of this corpus
+    assert (records("json", index) != records("json", {})) == extras
     vocab = vocab_df_from_corpus(spark, corpus)
     assert vocab.schema == VOCAB_SCHEMA
     assert (vocab.count() > 0) == extras
@@ -386,8 +402,7 @@ def test_build_runs_python_once(spark, tmp_path):
     """Python-stage budget of one materialized build on a file-backed
     corpus: exactly one MapInPandas evaluation (the fused parse hub)
     across the build's SQL executions, and no stage scanning a Python
-    RDD (the vocabulary and base scaffold are Arrow-built local
-    relations)."""
+    RDD (the base scaffold is an Arrow-built local relation)."""
     from rdf_generator_spark.sources.corpus import corpus_parquet_df
     from rdf_generator_spark.sources.synth import synth_corpus_rows
 
@@ -481,20 +496,49 @@ def test_hub_keeps_scan_parallelism(spark, synth_build, monkeypatch, parse_tasks
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
-def test_exchange_plan_is_not_run_for_sizing(spark, synth_build):
+def test_exchange_plan_is_not_run_for_sizing(spark, synth_build, monkeypatch):
     """Under adaptive execution a corpus plan with exchanges (a resumed
     batch is the corpus semi-joined to its pending documents) learns
     its partition count only by running its stages, so build_graph
-    keeps that plan's partitioning: no execution before the parse runs
-    a stage."""
+    keeps that plan's partitioning. The one execution before the parse
+    is the dimension collect the parse links against, which reads only
+    the owl and yaml rows, and no job before the parse runs the corpus
+    plan to size it: the jobs started by the time the parse is planned
+    are the collect's own."""
+    from rdf_generator_spark.plans import pipeline as P
+
     corpus, _, _ = synth_build
     keys = corpus.select("repo", "commit").distinct()
     todo = corpus.join(keys, ["repo", "commit"], "left_semi")
-    _, execs = executions(spark, lambda: build_graph(spark, todo))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def group_jobs(group, run):
+        sc.setJobGroup(group, group)
+        try:
+            return run()
+        finally:
+            sc._jsc.clearJobGroup()
+
+    group_jobs("collect", lambda: P._dimension_rows(todo))
+    n_collect = len(tracker.getJobIdsForGroup("collect"))
+    assert n_collect > 0
+    planned = []
+    parse_docs = P.parsers.parse_docs
+
+    def parse_docs_after_jobs(*args):
+        planned.append(len(tracker.getJobIdsForGroup("sizing")))
+        return parse_docs(*args)
+
+    monkeypatch.setattr(P.parsers, "parse_docs", parse_docs_after_jobs)
+    _, execs = group_jobs("sizing", lambda: executions(
+        spark, lambda: build_graph(spark, todo)))
+    assert planned == [n_collect]
     first = next(
         i for i, (names, _, _) in enumerate(execs) if "MapInPandas" in names
     )
-    assert not any(tasks for _, _, tasks in execs[:first]), execs[:first]
+    assert first == 1, [names for names, _, _ in execs[:first]]
+    assert re.search(r"lang#\d+ IN \(owl,yaml\)", execs[0][1]), execs[0][1]
 
 
 def test_kg_pipeline_python_only_at_parse(spark, synth_build):
@@ -546,6 +590,17 @@ def test_kg_join_shuffle_fallback_past_gate(spark, synth_build, monkeypatch):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
+def test_states_hub_is_one_projection(synth_build):
+    """Entity linking and the state counters run inside the parse: the
+    job that materializes the states hub is a scan of the characters
+    hub and one projection (no window, no exchange), and no execution
+    of the build joins a vocabulary relation."""
+    _, _, execs = synth_build
+    names, _, _ = computing(execs, "sta_iri")
+    assert not [n for n in names if "Window" in n or "Exchange" in n], names
+    assert not any("norm_label" in desc for _, desc, _ in execs)
+
+
 def test_final_graph_plan_is_jvm_only(synth_build):
     """Past the hub materialization, the entire graph algebra (dedup,
     prune, label priority, canonicalization inputs) is pure JVM column
@@ -570,7 +625,6 @@ def test_build_graph_options():
 # Every optional parameter of the library, as (function, parameter).
 LIBRARY_OPTIONS = [
     ("operators/graph_ops.py::apply_label_priority", "label_subjects_only"),
-    ("operators/linking.py::fill_scalar_uri", "enabled"),
     ("plans/base_scaffold.py::a", "lit"),
     ("plans/base_scaffold.py::a", "dt"),
     ("plans/emit.py::emit", "doc_cols"),
@@ -653,18 +707,18 @@ FINAL_EXCHANGE_BUDGET = 22
 # executes (the hub materializations, the final graph among them, the
 # contract check, the dimension collect, the write and the count), as
 # the SQL status store records them.
-BUILD_EXCHANGE_BUDGET = 19
-BUILD_BROADCAST_EXCHANGE_BUDGET = 15
+BUILD_EXCHANGE_BUDGET = 15
+BUILD_BROADCAST_EXCHANGE_BUDGET = 12
 # The same over a build of the same corpus on the two-phase counter path
 # (bucket width 2).
-BUCKETED_BUILD_EXCHANGE_BUDGET = 24
-BUCKETED_BUILD_BROADCAST_EXCHANGE_BUDGET = 18
+BUCKETED_BUILD_EXCHANGE_BUDGET = 20
+BUCKETED_BUILD_BROADCAST_EXCHANGE_BUDGET = 15
 # py4j commands Python sends the JVM for `product_path` on the same corpus
 # (plan construction, the hub materialization jobs, the write and the
 # count), not counting the release commands py4j sends when Python
 # garbage-collects a JVM reference: their number follows the
 # collector's timing.
-BUILD_PY4J_BUDGET = 19656
+BUILD_PY4J_BUDGET = 16199
 
 
 def test_final_graph_exchange_budget(synth_build):
