@@ -2,7 +2,9 @@
 
 ``entry`` runs the flagship KG build on a seeded synthetic corpus;
 ``queries`` / ``oracle_sql`` expose the operator registry
-(rdf_generator_spark.queries) checked against DuckDB at sf0.01.
+(rdf_generator_spark.queries): every entry runs on the KG path and
+ignores its ``sf_dir`` argument, and every oracle is DuckDB SQL over
+VALUES tables or the golden corpus files.
 """
 
 from __future__ import annotations
@@ -18,7 +20,6 @@ if _REPO_ROOT not in sys.path:
     sys.path.insert(0, _REPO_ROOT)
 
 from rdf_generator_spark import queries as Q  # noqa: E402
-from rdf_generator_spark import queries_kg as QK  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -30,16 +31,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Canonical registry (<= 50 entries so every SURVEY.md §2 operator
-    sits inside the driver's 50-row correctness window): relational KG
-    operator analogues (rdf_generator_spark.queries) and KG-native
-    golden-corpus entries incl. the consolidated family/suite digests
-    (rdf_generator_spark.queries_kg). Granular variants live in
-    the modules' QUERIES_EXTRA dicts, checked by pytest."""
-    return {**Q.QUERIES, **QK.QUERIES}
+    """The operator registry (<= 50 entries, so every one sits inside
+    the driver's 50-row correctness window)."""
+    return dict(Q.QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-equivalent SQL (or a pinned VALUES table) for every
     queries() entry."""
-    return {**Q.ORACLES, **QK.ORACLES}
+    return dict(Q.ORACLES)

@@ -1,14 +1,16 @@
 #!/usr/bin/env python
-"""Benchmark harness: headline relational queries at $SPARK_GRAFT_SF_DIR
-plus KG-construction throughput on a deterministic synthetic corpus.
+"""Benchmark harness: KG-construction throughput on a deterministic
+synthetic corpus.
 
 Prints ONE JSON line:
-  {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": <sf>, "kg": {...}}
+  {"metric": "kg_pipeline", "value": <sec>, "unit": "sec",
+   "capacity_sha1_sec": <sec>, "kg_over_capacity": <ratio>,
+   "kg": {...}, "cpus": <n>}
 
-Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32),
-     SPARK_GRAFT_KG_SCALE (default 1 — multiplies synthetic corpus size).
+Env: SPARK_GRAFT_CPUS (default 32),
+     SPARK_GRAFT_KG_SCALE (default 4 — multiplies synthetic corpus size),
+     SPARK_GRAFT_KG_ITERS (default 3 — best-of-N builds),
+     SPARK_GRAFT_DRIVER_MEM (default: see default_driver_mem).
 """
 
 from __future__ import annotations
@@ -21,14 +23,6 @@ import time
 REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
-
-HEADLINE = [
-    "j1_broadcast_fill",
-    "j5_symbol_state_join",
-    "a5_prune_anti_join",
-    "a2_sequential_counters",
-]
-
 
 def _machine_ram_gb() -> int:
     try:
@@ -84,19 +78,14 @@ def build_session(cpus: int, kg_scale: int = 1):
     )
 
 
-def materialize(df) -> int:
-    """Force full computation; returns row count."""
-    return df.count()
-
-
 def capacity_sha1_sec(spark) -> float:
-    """Box-state normalization cell (VERDICT r4 item 1): the same
-    embarrassingly-parallel sha1 microbenchmark scaling_bench.py uses,
-    run in THIS bench session so every BENCH_rN JSON line carries its
-    own capacity reference. The sandbox swings ±40% run-to-run
-    (BENCH.md variance table); dividing kg_pipeline seconds by this
-    cell separates code regressions from box noise. Best-of-2; 40M
-    sha1s over 64 partitions, pure JVM codegen, no shuffle."""
+    """Box-state normalization cell (VERDICT r4 item 1): an
+    embarrassingly-parallel sha1 microbenchmark, run in THIS bench
+    session so every BENCH_rN JSON line carries its own capacity
+    reference. The sandbox swings ±40% run-to-run (BENCH.md variance
+    table); dividing kg_pipeline seconds by this cell separates code
+    regressions from box noise. Best-of-2; 40M sha1s over 64
+    partitions, pure JVM codegen, no shuffle."""
     from pyspark.sql import functions as F
 
     best = None
@@ -111,20 +100,15 @@ def capacity_sha1_sec(spark) -> float:
     return best
 
 
-def run_bench(spark, sf_dir: str, kg_scale: int) -> dict:
-    from rdf_generator_spark import queries as Q
+def run_bench(spark, kg_scale: int) -> dict:
     from rdf_generator_spark.plans.pipeline import build_graph
+    from rdf_generator_spark.queries import ensure_workers_can_import
     from rdf_generator_spark.sources.corpus import corpus_parquet_df
     from rdf_generator_spark.sources.synth import synth_corpus_rows
 
-    timings = {}
-
-    # KG pipeline throughput first (fresh JVM, no GC debris from other
-    # queries) — extract -> link -> canonicalize -> final graph, the
-    # engine's primary workload. Best-of-2: the sandbox box swings
-    # +/-40% run-to-run (BENCH.md variance table), and the steady-state
-    # number is the honest per-job figure for a long-lived cluster.
-    Q.ensure_workers_can_import(spark)
+    # KG build throughput: parse -> link -> mint -> prune -> label
+    # priority, the engine's one job.
+    ensure_workers_can_import(spark)
     rows = synth_corpus_rows(
         n_datasets=6 * kg_scale, ntax=40, nchar=40, seed=1234,
         giant_every=6, giant_scale=3,
@@ -143,37 +127,18 @@ def run_bench(spark, sf_dir: str, kg_scale: int) -> dict:
     for _ in range(kg_iters):
         t0 = time.perf_counter()
         res = build_graph(spark, corpus)
-        n_triples = materialize(res["triples"])
+        n_triples = res["triples"].count()
         sec = round(time.perf_counter() - t0, 3)
         kg_sec = sec if kg_sec is None else min(kg_sec, sec)
-    timings["kg_pipeline"] = kg_sec
-
-    # Best-of-2 for the relational headline queries too (the kg cell
-    # already is): the box swings ±40% run-to-run, and single-shot
-    # numbers made healthy plans look like regressions (VERDICT r2
-    # item 8).
-    allq = {**Q.QUERIES, **Q.QUERIES_EXTRA}
-    for name in HEADLINE:
-        fn = allq[name]
-        best = None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            materialize(fn(spark, sf_dir))
-            sec = round(time.perf_counter() - t0, 3)
-            best = sec if best is None else min(best, sec)
-        timings[name] = best
 
     cap_sec = capacity_sha1_sec(spark)
 
-    total = round(sum(timings.values()), 3)
     return {
-        "metric": "headline_total",
-        "value": total,
+        "metric": "kg_pipeline",
+        "value": kg_sec,
         "unit": "sec",
         "capacity_sha1_sec": cap_sec,
         "kg_over_capacity": round(kg_sec / cap_sec, 3) if cap_sec else None,
-        "queries": timings,
-        "sf": float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0),
         "kg": {
             "datasets": 6 * kg_scale,
             "n_triples": n_triples,
@@ -184,13 +149,12 @@ def run_bench(spark, sf_dir: str, kg_scale: int) -> dict:
 
 
 def main():
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     kg_scale = int(os.environ.get("SPARK_GRAFT_KG_SCALE", "4"))
     spark = build_session(cpus, kg_scale)
     spark.sparkContext.setLogLevel("ERROR")
     try:
-        out = run_bench(spark, sf_dir, kg_scale)
+        out = run_bench(spark, kg_scale)
         out["cpus"] = cpus
     finally:
         spark.stop()

@@ -6,7 +6,7 @@ into the engine's corpus-table shape (one repo, one commit):
 
 * the golden corpus, frozen in `golden_corpus/` next to this module
   (10 taxa x 10 characters; FIXTURES.md §1). The query registry
-  (queries_kg.py), `scripts/regen_pins.py` and the tests load it
+  (queries.py), `scripts/regen_pins.py` and the tests load it
   through `golden_corpus_rows` / `golden_corpus_df`. The files, not a
   generator, are the corpus, so its expected values stay put when
   `sources/synth.py` changes.

@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Regenerate the pinned oracle VALUES in rdf_generator_spark/queries_kg.py.
+"""Regenerate the pinned oracle VALUES in rdf_generator_spark/queries.py.
 
 Ground truth is the pure-Python executable reference spec
 (tests/oracle/refsim.py) run on the golden example corpus (the frozen
@@ -21,7 +21,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from rdf_generator_spark.queries_kg import (  # noqa: E402
+from rdf_generator_spark.queries import (  # noqa: E402
     FAMILIES, census_py, digest_py, family_pred_py,
 )
 from tests.fixtures import golden_parsed  # noqa: E402
@@ -29,7 +29,7 @@ from tests.oracle.refsim import RefSim  # noqa: E402
 
 TARGET = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "rdf_generator_spark", "queries_kg.py",
+    "rdf_generator_spark", "queries.py",
 )
 
 

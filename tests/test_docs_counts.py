@@ -2,10 +2,10 @@
 
 COVERAGE.md / README.md / BASELINE.md repeatedly drifted from the live
 registry ("46 canonical" vs "47" vs "49" across round-3 docs). This
-test derives the real numbers from the registry modules and asserts
-every "<N> canonical quer..." / "<N> granular" / "<N> oracle checks"
-claim in the docs matches them, so a stale count fails CI instead of
-confusing the next reader.
+test derives the real numbers from the registry module and asserts
+every "<N> canonical quer..." / "<N> oracle checks" claim in the docs
+matches them, so a stale count fails CI instead of confusing the next
+reader.
 """
 
 from __future__ import annotations
@@ -14,36 +14,24 @@ import os
 import re
 
 from rdf_generator_spark import queries as Q
-from rdf_generator_spark import queries_kg as QK
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-N_CANONICAL = len({**Q.QUERIES, **QK.QUERIES})
-N_EXTRA = len({**Q.QUERIES_EXTRA, **QK.QUERIES_EXTRA})
-N_ORACLE_CHECKS = len({**Q.ORACLES, **QK.ORACLES}) + len(
-    {**Q.ORACLES_EXTRA, **QK.ORACLES_EXTRA}
-)
+N_CANONICAL = len(Q.QUERIES)
+N_ORACLE_CHECKS = len(Q.ORACLES)
 
 DOCS = ["COVERAGE.md", "README.md", "BASELINE.md"]
 
 PATTERNS = [
     # "46 canonical queries/operator entries/entries"
     (re.compile(r"(\d+) canonical (?:quer|operator|entr)"), N_CANONICAL),
-    # "45 granular EXTRA entries" / "45 granular variants"
-    (re.compile(r"(\d+) granular (?:EXTRA|variant)"), N_EXTRA),
     # "91 oracle checks"
     (re.compile(r"(\d+) oracle checks"), N_ORACLE_CHECKS),
 ]
 
 
 def test_registry_is_fully_oracled():
-    canon = {**Q.QUERIES, **QK.QUERIES}
-    oracles = {**Q.ORACLES, **QK.ORACLES}
-    assert set(oracles) == set(canon)
-    extra_q = {**Q.QUERIES_EXTRA, **QK.QUERIES_EXTRA}
-    extra_o = {**Q.ORACLES_EXTRA, **QK.ORACLES_EXTRA}
-    assert set(extra_o) == set(extra_q)
-    assert not set(canon) & set(extra_q)
+    assert set(Q.ORACLES) == set(Q.QUERIES)
 
 
 def test_doc_count_claims_match_registry():

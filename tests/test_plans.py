@@ -12,12 +12,9 @@ from pathlib import Path
 
 import pytest
 
-from rdf_generator_spark import queries as Q
 from rdf_generator_spark.plans.pipeline import build_graph
 
 from tests.fixtures import force_counter_buckets, trip_broadcast_gate
-
-SF = "/root/testdata/sf0.01"
 
 
 def plan_of(df) -> str:
@@ -72,17 +69,6 @@ def product_path(spark, corpus, out):
     res["triples"].write.mode("overwrite").partitionBy("repo").parquet(out)
     res["triples"].count()
     return res
-
-
-def test_anti_join_is_real_antijoin(spark):
-    plan = plan_of(Q.a5_prune_anti_join(spark, SF))
-    assert "LeftAnti" in plan
-
-
-def test_no_python_eval_in_relational_queries(spark):
-    plan = plan_of(Q.a2_sequential_counters(spark, SF))
-    assert "BatchEvalPython" not in plan
-    assert "MapInPandas" not in plan
 
 
 def test_counter_bucket_auto_gate(spark, tmp_path):
@@ -605,13 +591,15 @@ def test_final_graph_plan_is_jvm_only(synth_build):
     """Past the hub materialization, the entire graph algebra (dedup,
     prune, label priority, canonicalization inputs) is pure JVM column
     work — no Python stage anywhere in the final plan (run by the final
-    hub's job) or in the lazy outputs."""
+    hub's job) or in the lazy outputs. The matrix prune is a real
+    anti-join."""
     _, res, execs = synth_build
     plans = {key: plan_of(res[key]) for key in ["matrix_pruned", "char_combined"]}
     plans["triples"] = computing(execs, "__mo")[1]
     for key, plan in plans.items():
         assert "BatchEvalPython" not in plan, key
         assert "MapInPandas" not in plan, key
+    assert "LeftAnti" in plans["matrix_pruned"]
 
 
 def test_build_graph_options():

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from rdf_generator_spark import terms as T
 from rdf_generator_spark.plans.pipeline import build_graph
-from rdf_generator_spark.queries_kg import GOLDEN_PINS
+from rdf_generator_spark.queries import GOLDEN_PINS
 from rdf_generator_spark.sources.golden import golden_corpus_df
 from rdf_generator_spark.validation.shacl_rules import (
     KEYS,
