@@ -591,15 +591,19 @@ def test_final_graph_plan_is_jvm_only(synth_build):
     """Past the hub materialization, the entire graph algebra (dedup,
     prune, label priority, canonicalization inputs) is pure JVM column
     work — no Python stage anywhere in the final plan (run by the final
-    hub's job) or in the lazy outputs. The matrix prune is a real
-    anti-join."""
+    hub's job) or in the lazy outputs."""
     _, res, execs = synth_build
     plans = {key: plan_of(res[key]) for key in ["matrix_pruned", "char_combined"]}
     plans["triples"] = computing(execs, "__mo")[1]
     for key, plan in plans.items():
         assert "BatchEvalPython" not in plan, key
         assert "MapInPandas" not in plan, key
-    assert "LeftAnti" in plans["matrix_pruned"]
+
+
+def test_anti_join_is_real_antijoin(synth_build):
+    """The matrix prune (A5) of the KG build is a real anti-join."""
+    _, res, _ = synth_build
+    assert "LeftAnti" in plan_of(res["matrix_pruned"])
 
 
 def test_build_graph_options():
