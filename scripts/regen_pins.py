@@ -26,6 +26,7 @@ from rdf_generator_spark.queries import (  # noqa: E402
 )
 from tests.fixtures import golden_parsed  # noqa: E402
 from tests.oracle.refsim import RefSim  # noqa: E402
+from tests.oracle.turtle_ref import ordered_blocks  # noqa: E402
 
 TARGET = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -34,67 +35,15 @@ TARGET = os.path.join(
 
 
 def o1o2_rows(final):
-    """Independent Python derivation of the Turtle writer's ordering
-    keys (O1 section/bucket routing + O2 phenotype sort,
-    main.py:1424-1494) over the refsim final graph."""
+    """Per (section, bucket) of the Turtle writer's ordering (O1
+    section/bucket routing + O2 phenotype sort, main.py:1424-1494) over
+    the refsim final graph: the block count and the digest of the
+    ordered subject keys. The ordering comes from the pure-Python
+    Turtle oracle (tests/oracle/turtle_ref.py)."""
     import hashlib
 
-    from rdf_generator_spark import terms as T
-    from rdf_generator_spark.sinks.turtle import (
-        _BUCKETS, SECTION_ANNOT_PROPS, SECTION_CLASSES, SECTION_DATA_PROPS,
-        SECTION_INDIVIDUALS, SECTION_OBJ_PROPS, SECTION_OTHER,
-    )
-
-    def typed(klass):
-        return {s for (s, p, o, lit, dt) in final
-                if p == T.RDF_TYPE and o == klass and not lit}
-
-    classes = (
-        typed(T.OWL_CLASS) | typed(T.RDF_NS + "Class")
-        | typed(T.RDFS_NS + "Class") | typed(T.OWL_RESTRICTION)
-        | {o for (s, p, o, lit, dt) in final
-           if p == T.RDF_TYPE and not lit and o.startswith(T.KB)}
-    )
-    individuals = typed(T.OWL_NAMED_INDIVIDUAL)
-    objp = typed(T.OWL_OBJECT_PROPERTY)
-    datap = typed(T.OWL_DATATYPE_PROPERTY)
-    annotp = typed(T.OWL_ANNOTATION_PROPERTY)
-    subjects_with_triples = {s for (s, p, o, lit, dt) in final}
-
-    sectioned = []
-    for sset, sec in [
-        (classes, SECTION_CLASSES), (individuals, SECTION_INDIVIDUALS),
-        (objp, SECTION_OBJ_PROPS), (datap, SECTION_DATA_PROPS),
-        (annotp, SECTION_ANNOT_PROPS),
-    ]:
-        sectioned += [(s, sec) for s in sset]
-    in_any = classes | individuals | objp | datap | annotp
-    sectioned += [(s, SECTION_OTHER) for s in subjects_with_triples - in_any]
-    # blocks exist only for subjects that carry at least one triple
-    sectioned = [(s, sec) for s, sec in sectioned if s in subjects_with_triples]
-
-    sort_char, sort_sp = {}, {}
-    for (s, p, o, lit, dt) in final:
-        if p == T.KB_SORT_CHAR_NUM:
-            sort_char[s] = min(sort_char.get(s, 10 ** 18), int(o))
-        elif p == T.KB_SORT_SPECIES:
-            sort_sp[s] = min(sort_sp.get(s, "￿"), o)
-
-    def bucket_of(s):
-        local = s[len(T.KB):] if s.startswith(T.KB) else ""
-        for i in range(len(_BUCKETS) - 1):
-            if local.startswith(_BUCKETS[i][0]):
-                return i
-        return len(_BUCKETS) - 1
-
     groups = {}
-    for s, sec in sectioned:
-        b = bucket_of(s) if sec == SECTION_INDIVIDUALS else 0
-        if (sec == SECTION_INDIVIDUALS and b == 1
-                and s in sort_char and s in sort_sp):
-            s1, s2 = sort_char[s], sort_sp[s]
-        else:
-            s1, s2 = 10 ** 9, ""
+    for sec, b, s1, s2, s in ordered_blocks(final):
         groups.setdefault((sec, b), []).append(f"{s1:010d}|{s2}|{s}")
 
     out = []

@@ -320,9 +320,10 @@ def test_skewed_corpus_giant_matrix_exact(spark):
     assert max(sizes.values()) > 8 * min(sizes.values())
 
 
-def test_adversarial_labels_exact(spark, tmp_path):
-    """Labels with quotes, backslashes, newlines-in-comments, unicode and
-    odd whitespace must survive seeding, emission and Turtle roundtrip."""
+def adversarial_rows():
+    """One dataset of hostile labels: quotes, backslashes, newlines and
+    a Turtle terminator look-alike (`  .`, `  ;`) in comments, unicode
+    and odd whitespace."""
     import json as _json
 
     chars = [
@@ -336,7 +337,7 @@ def test_adversarial_labels_exact(spark, tmp_path):
             ],
             "Variable": {"Variable label": "forma  doble espacio",
                          "Variable URI": None,
-                         "Variable comment": "line one\nline two"},
+                         "Variable comment": "line one\nline two\nends  . and  ; here"},
             "States": [
                 {"State 0 label": "présent", "State 0 URI": None, "State 0 token": "0"},
                 {"State 1 label": 'not "quoted"', "State 1 URI": None, "State 1 token": "1"},
@@ -368,12 +369,18 @@ def test_adversarial_labels_exact(spark, tmp_path):
          "ID": 123, "zoobank_identifier": None, "match_level": "species"},
     ])
     meta = 'Char_ID,Comment\nC1,Modified from "weird" source\n'
-    rows = [
+    return [
         ("adv/repo", "c.json", "a" * 40, "json", _json.dumps(chars)),
         ("adv/repo", "m.nex", "a" * 40, "nexus", nexus),
         ("adv/repo", "s.json", "a" * 40, "species-json", species),
         ("adv/repo", "md.csv", "a" * 40, "csv", meta),
     ]
+
+
+def test_adversarial_labels_exact(spark, tmp_path):
+    """Labels with quotes, backslashes, newlines-in-comments, unicode and
+    odd whitespace must survive seeding, emission and Turtle roundtrip."""
+    rows = adversarial_rows()
     res = build_graph(spark, corpus_df(spark, rows))
     got = {
         (r["s"], r["p"], r["o"], bool(r["lit"]), r["dt"])
@@ -381,9 +388,9 @@ def test_adversarial_labels_exact(spark, tmp_path):
     }
     want = RefSim(
         P.char_rows_from_json(rows[0][4]),
-        P._parse_nexus_matrix(nexus),
-        P.species_rows_from_json(species),
-        {r["char_id"]: r["source_text"] for r in P.metadata_rows_from_csv(meta)},
+        P._parse_nexus_matrix(rows[1][4]),
+        P.species_rows_from_json(rows[2][4]),
+        {r["char_id"]: r["source_text"] for r in P.metadata_rows_from_csv(rows[3][4])},
         {},
     ).run()["final"].triples()
     assert got == want, (len(got - want), len(want - got),
@@ -391,12 +398,13 @@ def test_adversarial_labels_exact(spark, tmp_path):
 
     # turtle roundtrip with the hostile literals
     import os as _os
-    from rdf_generator_spark.sinks.turtle import write_turtle
+    from rdf_generator_spark.sinks.turtle import write_turtle_auto
     from tests.test_turtle import parse_turtle
 
-    out = str(tmp_path / "adv.ttl")
-    write_turtle(res["triples"], lambda r, c: out)
-    got_ttl = parse_turtle(open(out, encoding="utf-8").read())
+    out = tmp_path / "ttl"
+    write_turtle_auto(res["triples"], str(out))
+    (name,) = _os.listdir(out)
+    got_ttl = parse_turtle(open(out / name, encoding="utf-8").read())
     assert got_ttl == want
 
 

@@ -606,6 +606,46 @@ def test_anti_join_is_real_antijoin(synth_build):
     assert "LeftAnti" in plan_of(res["matrix_pruned"])
 
 
+def test_turtle_blocks_plan_is_one_aggregation(synth_build):
+    """The Turtle blocks are classified, ordered and rendered by the
+    JVM: no Python evaluation in their plan, and one shuffle (the
+    per-node aggregation)."""
+    from rdf_generator_spark.sinks.turtle import turtle_blocks
+
+    _, res, _ = synth_build
+    plan = plan_of(turtle_blocks(res["triples"]))
+    for node in ("FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan
+    assert plan.count("Exchange") <= 1
+
+
+# Spark jobs of write_turtle_auto on the golden graph, per layout, with
+# the triple count passed in (as run_pipeline.py and kgbench do).
+TURTLE_JOB_BUDGET = {"per-document": 3, "shards": 4}
+
+
+def test_turtle_job_budget(spark, tmp_path):
+    """Each Turtle layout is a fixed handful of jobs: the blocks
+    aggregation, the partitioning of its result and the file writes."""
+    from rdf_generator_spark.sinks.turtle import write_turtle_auto
+    from rdf_generator_spark.sources.golden import golden_corpus_df
+
+    triples = build_graph(spark, golden_corpus_df(spark))["triples"]
+    n = triples.count()
+    sc = spark.sparkContext
+    for layout, threshold in [("per-document", n), ("shards", 0)]:
+        sc.setJobGroup(f"turtle-{layout}", "Turtle job budget")
+        try:
+            info = write_turtle_auto(triples, str(tmp_path / layout),
+                                     n_triples=n, threshold=threshold)
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert info["mode"] == layout
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(f"turtle-{layout}"))
+        assert n_jobs <= TURTLE_JOB_BUDGET[layout], (layout, n_jobs)
+
+
 def test_build_graph_options():
     """build_graph's options are the ones callers set; a new option
     fails here until it has a caller that needs it."""

@@ -11,7 +11,12 @@ import pytest
 from rdf_generator_spark import terms as T
 from rdf_generator_spark.plans.pipeline import build_graph
 from rdf_generator_spark.sinks import turtle
-from rdf_generator_spark.sources.golden import golden_corpus_df
+from rdf_generator_spark.sources.corpus import corpus_df
+from rdf_generator_spark.sources.golden import golden_corpus_df, golden_corpus_rows
+from rdf_generator_spark.sources.synth import synth_corpus_rows
+
+from tests.oracle import turtle_ref
+from tests.test_pipeline_synth import adversarial_rows, edge_case_rows
 
 PREFIX_MAP = dict(T.PREFIXES)
 
@@ -62,15 +67,10 @@ def parse_turtle(text: str):
 def rendered(spark, tmp_path_factory):
     res = build_graph(spark, golden_corpus_df(spark))
     out = tmp_path_factory.mktemp("ttl")
-    paths = {}
-
-    def path_fn(repo, commit):
-        p = os.path.join(out, f"{repo.replace('/', '_')}.ttl")
-        paths[(repo, commit)] = p
-        return p
-
-    turtle.write_turtle(res["triples"], path_fn)
-    text = open(next(iter(paths.values())), encoding="utf-8").read()
+    info = turtle.write_turtle_auto(res["triples"], str(out))
+    assert info["mode"] == "per-document"
+    (name,) = os.listdir(out)
+    text = open(out / name, encoding="utf-8").read()
     want = {
         (r["s"], r["p"], r["o"], bool(r["lit"]), r["dt"])
         for r in res["triples"].collect()
@@ -130,6 +130,47 @@ def test_species_files(spark, tmp_path):
     assert any("sp-" in t[0] for t in got)
     assert any(t[2] == "Diadasina_pura" and t[3] for t in got)
     assert all("Centris_frontalis" not in t[0] and "Centris_frontalis" not in str(t[2]) for t in got)
+    # every file's bytes are the oracle's rendering of that taxon's triples
+    nodes = {}
+    for r in res["taxa"].collect():
+        for node in (r["sp_uri"], r["sp_inst"]):
+            nodes.setdefault((r["repo"], r["commit"], node), set()).add(r["taxon_label"])
+    by_taxon = {}
+    for r in res["species_part"].collect():
+        for label in nodes.get((r["repo"], r["commit"], r["s"]), ()):
+            by_taxon.setdefault(label, []).append(
+                (r["s"], r["p"], r["o"], r["lit"], r["dt"]))
+    assert files == sorted(f"{label.replace('/', '_')}.ttl" for label in by_taxon)
+    for label, rows in by_taxon.items():
+        path = tmp_path / "species" / f"{label.replace('/', '_')}.ttl"
+        assert path.read_bytes() == turtle_ref.species_text(rows).encode("utf-8"), label
+
+
+# Corpora of the byte-equality test, each as a rows function.
+ORACLE_CORPORA = {
+    "golden": golden_corpus_rows,
+    "synth": lambda: synth_corpus_rows(n_datasets=3, ntax=4, nchar=4, seed=7),
+    "edge": edge_case_rows,
+    "adversarial": adversarial_rows,
+}
+
+
+@pytest.mark.parametrize("corpus", sorted(ORACLE_CORPORA))
+def test_per_document_files_match_oracle(spark, tmp_path, corpus):
+    """Every per-document file the executor-side writer writes is,
+    byte for byte, the pure-Python oracle's rendering of that
+    document's collected final graph."""
+    res = build_graph(spark, corpus_df(spark, ORACLE_CORPORA[corpus]()))
+    info = turtle.write_turtle_auto(res["triples"], str(tmp_path))
+    by_doc = {}
+    for r in res["triples"].collect():
+        by_doc.setdefault((r["repo"], r["commit"]), []).append(
+            (r["s"], r["p"], r["o"], r["lit"], r["dt"]))
+    files = os.listdir(tmp_path)
+    assert info["n_docs"] == len(files) == len(by_doc)
+    got = sorted((tmp_path / f).read_bytes() for f in files)
+    want = sorted(turtle_ref.document_text(t).encode("utf-8") for t in by_doc.values())
+    assert got == want
 
 
 def test_shard_writer_matches_single_file(spark, tmp_path):
@@ -199,10 +240,7 @@ def test_write_turtle_auto_no_path_collision(spark, tmp_path):
     per-document writer must still produce two distinct files (a stable
     hash of the unsanitized identity is appended), and n_docs must equal
     the number of files actually on disk."""
-    from rdf_generator_spark.sources.golden import golden_corpus_rows
-
     from rdf_generator_spark.sinks.turtle import write_turtle_auto
-    from rdf_generator_spark.sources.corpus import corpus_df
 
     rows = [
         (repo,) + r[1:]
