@@ -6,20 +6,25 @@ Dataflow (SURVEY.md §3 "Spark lifecycle"):
       ├─ dimension collect (OWL label index, yaml config)
       ├─ fused parse (one Arrow mapInPandas, one "parsed" hub)
       │    per character document, in the same Python call:
-      │    J1 URI fill, J2 negation index, A2 state numbering
-      │                             -> chars / cells / species / meta views
+      │    J1 URI fill, J2 negation index, A2 state numbering;
+      │    per NEXUS document: one row per taxon with its column state
+      │    indexes and stated-taxa counts
+      │                             -> chars / taxa / species / meta views
+      ├─ chars + per-character visit offsets (a window over characters)
       ├─ posexplode(states) + sta/qua/restr/comp mints (K1) -> states_x
-      ├─ cells ⋈ chars (J4/J5) × sex variants (F2)   -> visits
+      ├─ taxa ⋈ chars (J4/J5): the cell grid, its :id-N counters (A2) in
+      │    closed form, × sex variants (F2)          -> visits
       │    locator-chain UUID5 fold (F4) in a built-in `aggregate`
-      ├─ per-document windows (A1/A2) -> sequential :id-N labels
+      ├─ one window per (document, kind) -> first-visit :id-N labels (A1)
       ├─ select/explode triple structs (F1..F12) per part
       └─ union -> dedup (A3) -> prune (A5) -> label priority (J6) -> final
 
 Everything between parse and the final union is built-in Column algebra
 (uuid5 == sha1, see ids.py) — no Python in the fan-out path. All windows
 are partitioned by document, so corpora parallelize across documents and
-no operator needs a global shuffle. The cells⋈chars join broadcasts the
-character side (dimension-sized per corpus design).
+no operator needs a global shuffle; none of them runs over cells. The
+taxa⋈chars join broadcasts the character side (dimension-sized per
+corpus design).
 
 Scoping note (SURVEY.md §7): the reference's global sequential counters
 are scoped per document here — the one semantic the single-process
@@ -36,7 +41,7 @@ into one group per matrix automatically (json/nexus paired by path stem).
 
 from __future__ import annotations
 
-from typing import Dict, List, NamedTuple, Optional, Tuple
+from typing import Dict, List, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -55,7 +60,6 @@ from rdf_generator_spark.operators.graph_ops import (
     dedup_triples,
     prune_unreferenced_scoped,
 )
-from rdf_generator_spark.operators.windows import seq_number
 from rdf_generator_spark.plans.base_scaffold import BASE_SCHEMA, base_triples
 from rdf_generator_spark.plans.emit import Triple, const, emit, union_emissions
 from rdf_generator_spark.sources import parsers
@@ -77,30 +81,9 @@ _LOC_CHAIN_TYPE = (
 # document and stays skew-free.
 _DIM_BROADCAST_FILE_LIMIT = 2000
 
-# Giant-document auto-gate (VERDICT r3 item 1): the sequential :id-N
-# counters default to one window per document — correct everywhere, but
-# a single million-cell matrix then sorts in ONE task. When the probe
-# below sees a document at least this large, build_graph switches to
-# the two-phase bucketed numbering (operators/windows.py::seq_number,
-# golden-equal) with this bucket width (characters per bucket). Two
-# thresholds, matched to the two signals the probe can produce:
-#
-# - _GIANT_DOC_CONTENT_BYTES gates the PER-ROW-GROUP MEAN (the footer
-#   statistic available without touching data pages): measured means
-#   are ~16 KB for the bench-shaped corpus vs ~198-479 KB for the
-#   straggler corpus (one 500x2000 NEXUS, 1.6 MB content). A mean this
-#   high means large docs dominate the group — gate on, zero jobs.
-# - _GIANT_DOC_EXACT_BYTES gates the EXACT max(octet_length(content))
-#   when the footer signal is ambiguous (VERDICT r4 item 2: a writer
-#   that packs one giant among thousands of small rows keeps the mean
-#   tiny, but the group's TOTAL content bytes >= the giant's size, so
-#   ambiguity is detectable from the footer alone). Calibration: the
-#   largest normal bench doc is 98.8 KB (a 120x120 matrix, ~0.7 M
-#   triples — one window task handles it; bucketing costs ~15% at that
-#   mix), the straggler is 1.6 MB (~50 M triples in one task, 2.7-7x
-#   slower without bucketing); 192 KiB sits 2x above the former and
-#   8x below the latter.
-_GIANT_DOC_CONTENT_BYTES = 96 * 1024
+# The benchmark's giant-document classifier (`resolve_counter_buckets`):
+# a corpus whose largest document reaches this many content bytes is
+# reported with the bucket width kgbench's workload table expects.
 _GIANT_DOC_EXACT_BYTES = 192 * 1024
 _AUTO_COUNTER_BUCKET_WIDTH = 64
 _PROBE_FILE_CAP = 4096
@@ -123,14 +106,6 @@ _PARSE_TASK_BYTES = 32 * 1024 * 1024
 _HUB_TASK_BYTES = 256 * 1024
 
 
-class _Footers(NamedTuple):
-    """Parquet-footer statistics of the corpus's ``content`` column."""
-
-    max_mean: int  # largest per-row-group mean bytes per row
-    max_group: int  # largest row-group total bytes
-    total: Optional[int]  # bytes over all files; None past the file cap
-
-
 def _input_files(corpus: DataFrame) -> List[str]:
     """The corpus's file list from its already-built file index (no
     job); empty for in-memory corpora."""
@@ -140,25 +115,21 @@ def _input_files(corpus: DataFrame) -> List[str]:
         return []
 
 
-def _read_footers(files: List[str]) -> Optional[_Footers]:
-    """Read the ``content`` column's uncompressed byte totals from the
-    parquet footers of up to ``_PROBE_FILE_CAP`` files, driver-side with
-    pyarrow (metadata only: no data pages, no Spark job). ``None`` when
-    there are no files, a footer is unreadable (not parquet, or a
-    filesystem pyarrow can't reach driver-side, e.g. an hdfs:// URI
-    without a configured pyarrow fs) or no footer has a ``content``
-    chunk (not a corpus-shaped table). ``total`` is known only when
-    every file's footer was read."""
+def _content_bytes(files: List[str]) -> Optional[int]:
+    """The ``content`` column's uncompressed bytes summed over the
+    parquet footers of `files`, read driver-side with pyarrow (metadata
+    only: no data pages, no Spark job). ``None`` when there are no
+    files or more than ``_PROBE_FILE_CAP`` of them, a footer is
+    unreadable (not parquet, or a filesystem pyarrow can't reach
+    driver-side, e.g. an hdfs:// URI without a configured pyarrow fs) or
+    no footer has a ``content`` chunk (not a corpus-shaped table)."""
     import pyarrow.parquet as pq
     from urllib.parse import unquote, urlparse
 
-    if not files:
+    if not files or len(files) > _PROBE_FILE_CAP:
         return None
-    max_mean = max_group = total = 0
-    # deterministic capped scan: inputFiles() order is arbitrary, so an
-    # over-cap corpus would otherwise probe a different file subset per
-    # run; sorting pins which footers are read
-    for f in sorted(files)[:_PROBE_FILE_CAP]:
+    total = 0
+    for f in files:
         try:
             p = f
             if f.startswith("file:"):
@@ -168,20 +139,11 @@ def _read_footers(files: List[str]) -> Optional[_Footers]:
             return None
         for rg in range(md.num_row_groups):
             g = md.row_group(rg)
-            if not g.num_rows:
-                continue
             for ci in range(g.num_columns):
                 col = g.column(ci)
                 if col.path_in_schema == "content":
-                    size = col.total_uncompressed_size
-                    max_mean = max(max_mean, size // g.num_rows)
-                    max_group = max(max_group, size)
-                    total += size
-    if not max_group:
-        return None
-    return _Footers(
-        max_mean, max_group, total if len(files) <= _PROBE_FILE_CAP else None
-    )
+                    total += col.total_uncompressed_size
+    return total or None
 
 
 def _task_counts(total: int, n_scan: int) -> Tuple[int, int]:
@@ -193,61 +155,6 @@ def _task_counts(total: int, n_scan: int) -> Tuple[int, int]:
         min(n_scan, max(1, -(-total // per)))
         for per in (_PARSE_TASK_BYTES, _HUB_TASK_BYTES)
     )
-
-
-def _max_doc_bytes(corpus: DataFrame, footers: Optional[_Footers]):
-    """Estimate (or exactly measure) the largest document's content size.
-
-    Returns ``(bytes, exact)`` or ``None``. File-backed corpora
-    (parquet/Iceberg — every real deployment) expose their file list
-    from the already-built file index (``inputFiles()``, no job);
-    parquet footers then give per-row-group uncompressed byte totals
-    for the ``content`` column (`footers`, from `_read_footers`: the
-    footer pass that also sizes the parse). Three footer-only outcomes:
-
-    - max per-row-group MEAN >= ``_GIANT_DOC_CONTENT_BYTES``: large
-      docs dominate some group — return ``(mean, exact=False)``,
-      zero jobs (the gate turns on upstream).
-    - every row group's TOTAL content bytes <
-      ``_GIANT_DOC_EXACT_BYTES`` and every file's footer read: no
-      single document can reach the exact threshold (a parquet row
-      never spans row groups), so the footer alone PROVES the gate can
-      stay off — zero jobs.
-    - otherwise the footer is ambiguous (a packed row group could hide
-      a giant behind a small mean — VERDICT r4 item 2); run ONE
-      column-pruned ``max(octet_length(content))`` job and return
-      ``(exact_max, exact=True)``. At any scale this is one scan of the
-      one column the pipeline reads anyway; it runs on every call, since
-      nothing caches a job result across builds.
-
-    Returns ``None`` for in-memory corpora (a local relation — tests and
-    golden scale, small by construction) and when the footers can't be
-    read; callers treat ``None`` as "keep the default plan". File count
-    is capped (footer reads are cheap but not free).
-    """
-    if footers is None:
-        return None
-    if footers.max_mean >= _GIANT_DOC_CONTENT_BYTES:
-        return (footers.max_mean, False)
-    if footers.max_group < _GIANT_DOC_EXACT_BYTES and footers.total is not None:
-        # no row group could hold a gate-worthy document (a parquet row
-        # never spans row groups) — proven off, zero jobs. The proof
-        # only holds when EVERY file's footer was read: past the file
-        # cap a tail giant would be invisible (VERDICT r5 item 1), so
-        # an over-cap corpus falls through to the exact job instead of
-        # claiming proof it doesn't have.
-        return (max(footers.max_mean, 1), False)
-    try:
-        exact = corpus.select(
-            F.max(F.octet_length(F.col("content"))).alias("m")
-        ).first()[0]
-    except Exception:
-        # fallback job failed (column renamed, source gone) — the
-        # footer mean is still a usable conservative estimate
-        return (max(footers.max_mean, 1), False)
-    if exact is None:
-        return None
-    return (int(exact), True)
 
 
 def _nonempty(c) -> F.Column:
@@ -357,26 +264,16 @@ def build_salts(meta: DataFrame, json_names: DataFrame) -> DataFrame:
     )
 
 
-def resolve_counter_buckets(corpus: DataFrame, counter_buckets):
-    """The counter strategy build_graph picks, for callers that report
-    it: "auto" gates the two-phase bucketed numbering on the giant-
-    document probe (footer statistics when they decide, one
-    column-pruned job when they are ambiguous — see `_max_doc_bytes`)
-    and returns its bucket width, or None for the per-document window.
-    Any other value is returned as given."""
-    if counter_buckets != "auto":
-        return counter_buckets
-    return _auto_counter_buckets(corpus, _read_footers(_input_files(corpus)))
-
-
-def _auto_counter_buckets(corpus: DataFrame, footers: Optional[_Footers]):
-    """The "auto" counter strategy over already-read footers."""
-    probed = _max_doc_bytes(corpus, footers)
-    if probed is None:
-        return None
-    mx, exact = probed
-    threshold = _GIANT_DOC_EXACT_BYTES if exact else _GIANT_DOC_CONTENT_BYTES
-    if mx >= threshold:
+def resolve_counter_buckets(corpus: DataFrame, counter_buckets) -> Optional[int]:
+    """The benchmark's giant-document classifier: ``_AUTO_COUNTER_BUCKET_WIDTH``
+    when the corpus's largest document has at least
+    ``_GIANT_DOC_EXACT_BYTES`` of content, else None, from one exact
+    ``max(octet_length(content))`` job. kgbench/run.py calls it with
+    ``counter_buckets="auto"`` after each job and checks the answer
+    against its workload table. No build path reads it: the :id-N
+    counters have one path. It goes with the next benchmark change."""
+    largest = corpus.select(F.max(F.octet_length("content"))).first()[0]
+    if (largest or 0) >= _GIANT_DOC_EXACT_BYTES:
         return _AUTO_COUNTER_BUCKET_WIDTH
     return None
 
@@ -389,7 +286,7 @@ def build_graph(
 ) -> Dict[str, DataFrame]:
     """Run the full pipeline; returns named DataFrames.
 
-    The hub tables (the fused parse, chars/states, the numbered cells,
+    The hub tables (the fused parse, chars/states, the cell grid,
     visits, taxa, the deduplicated triple union, the prune flags and
     the final graph) are materialized as the build goes: every
     downstream branch (per-part outputs, prune, label priority,
@@ -400,8 +297,8 @@ def build_graph(
     hubs.
 
     Task counts come from the ``content`` column's uncompressed size
-    summed over the corpus files' parquet footers (the footer pass the
-    counter gate reads anyway, zero jobs), capped at the scan's
+    summed over the corpus files' parquet footers (`_content_bytes`,
+    zero jobs), capped at the scan's
     partition count: the fused parse (the build's one Python stage)
     runs one task per ``_PARSE_TASK_BYTES``, so a small corpus starts
     one Python worker however many files it spans, and the stages that
@@ -426,26 +323,20 @@ def build_graph(
     change, not a code change). `run_resumable` stages under its output
     directory automatically.
 
-    Sequential :id-N counter execution strategy for the cell-scale
-    counters (cells and phenotype visits, numbered in one pass, and the
-    first-visit entities; the parse numbers the states, one document
-    per Python call): the footer probe
-    `_max_doc_bytes` (zero jobs unless the footers are ambiguous) gates
-    it. When the largest document's content reaches
-    ``_GIANT_DOC_CONTENT_BYTES`` the counters switch to the two-phase
-    bucketed numbering in operators/windows.py (identical output —
-    golden-tested — but a giant matrix numbers across
-    nchar/``_AUTO_COUNTER_BUCKET_WIDTH`` tasks instead of sorting in
-    one); otherwise the plain per-document window runs (cheapest at
-    normal document sizes — the two-phase variant's extra
-    aggregation+join rounds cost ~15% at bench scale).
+    The sequential :id-N counters have one path, whatever the document
+    sizes. The parse numbers the states, one character document per
+    Python call, and gives each NEXUS taxon row its per-column stated-
+    taxa counts. A cell's ``cell:id-N`` and ``phenotype:id-N`` are then
+    closed forms over the taxa ⋈ chars grid, with a per-character visit
+    offset from a window over characters, so no window runs over cells.
+    The first-visit labels (organism, locator, variable) run one window
+    per (document, kind) over distinct entities.
     """
     # One file list and one footer pass (zero jobs) feed the input-sized
-    # decisions: the counter gate, the broadcast gate and the task
-    # counts of the parse and its hub.
+    # decisions: the broadcast gate and the task counts of the parse and
+    # its hub.
     files = _input_files(corpus)
-    footers = _read_footers(files)
-    counter_buckets = _auto_counter_buckets(corpus, footers)
+    total = _content_bytes(files)
     # file count bounds document count; an in-memory corpus (no files)
     # is small enough to broadcast by construction
     dim_small = len(files) <= _DIM_BROADCAST_FILE_LIMIT
@@ -467,7 +358,7 @@ def build_graph(
     # exactly once however many jobs read its records. The footers size
     # the parse and the hub separately (`_task_counts`); a hub wider
     # than its parse gets the parsed records dealt round-robin, which
-    # spreads even one giant document's cells over the hub's tasks. An
+    # spreads even one giant matrix's taxon rows over the hub's tasks. An
     # adaptive plan (one with exchanges, e.g. a resumed batch's
     # semi-join) learns its partition count only by running its stages,
     # so it keeps its own partitioning.
@@ -483,18 +374,40 @@ def build_graph(
         corpus._jdf.queryExecution().executedPlan().nodeName()
         == "AdaptiveSparkPlan"
     )
-    if footers is None or footers.total is None or adaptive:
+    if total is None or adaptive:
         parsed = parsers.parse_docs(corpus, vocab)
     else:
         n_parse, n_hub = _task_counts(
-            footers.total, corpus._jdf.rdd().getNumPartitions()
+            total, corpus._jdf.rdd().getNumPartitions()
         )
         parsed = parsers.parse_docs(corpus.coalesce(n_parse), vocab)
         if n_hub > n_parse:
             parsed = parsed.repartition(n_hub)
     parsed = mat(parsed, "parsed")
-    chars = parsers.family_view(parsed, "json")
-    cells = parsers.family_view(parsed, "nexus")
+    taxon_rows = parsers.family_view(parsed, "nexus")
+    # Phenotype visits before each character (A2): a cell with a state
+    # index is visited once per organism variant (F2: two for an adult-
+    # organism character, one otherwise), so a character's column holds
+    # its document's stated taxa (the NEXUS parse's per-column totals,
+    # carried by every taxon row) times that weight, and the offset is
+    # a running sum over characters. The first taxon row hands the
+    # totals to its document's characters through a window over the
+    # document, not a join.
+    chars = (
+        parsed.filter("lang = 'json' OR taxa.taxon_pos = 0")
+        .selectExpr("repo", "path", "commit", "lang", "chars.*",
+                    "max(taxa.col_stated) OVER (PARTITION BY repo, commit) AS col_stated")
+        .filter("lang = 'json'")
+        .withColumn("dup_for_sex", F.col("org_label").isNotNull()
+                    & (F.lower(strip_col(F.col("org_label"))) == "adult organism"))
+        .selectExpr(
+            "* EXCEPT (lang, col_stated)",
+            "coalesce(sum(coalesce(try_element_at(col_stated, char_pos + 1), 0)"
+            " * IF(dup_for_sex, 2, 1)) OVER (PARTITION BY repo, commit"
+            " ORDER BY char_pos ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),"
+            " 0) AS phe_off",
+        )
+    )
     species = parsers.family_view(parsed, "species-json")
     # Last-row-wins per Char_ID, replaying the reference's dict overwrite
     # (main.py:214-221): a repeated Char_ID must update, not fan out the
@@ -557,11 +470,6 @@ def build_graph(
             .when(_nonempty(F.col("var_comment")), F.lit(T.PHB_TRANSF_COMPLEX))
             .otherwise(F.lit(T.PHB_TRANSF_SIMPLE)),
         )
-        .withColumn(
-            "dup_for_sex",
-            F.col("org_label").isNotNull()
-            & (F.lower(strip_col(F.col("org_label"))) == "adult organism"),
-        )
         .withColumn("char_sort_num", parse_char_num_col(F.col("char_id")))
         .withColumn(
             "org_uri_eff",
@@ -576,7 +484,6 @@ def build_graph(
             kb_iri("mx", F.coalesce(F.col("doc_matrix_label"), F.lit("default_matrix"))),
         )
     )
-
     # Variable locator-chain seed (main.py:929-953; 'None' stringification
     # quirk replicated).
     uri_comps = F.transform(
@@ -643,42 +550,38 @@ def build_graph(
         "st.sta_label", "st.sta_label_phase_b", "st.qua_label",
     ), "states_x")
 
-    # --- cells ⋈ chars (J4): broadcast the dimension-sized character
-    # table keyed on the matrix column index (char_ids_in_order semantics,
-    # main.py:1731-1733) --------------------------------------------------
-    chars_b = charsx.drop("path").withColumn("char_index", F.col("char_pos"))
-    cells_j = cells.select(
-        *DOC, "taxon_pos", "taxon", "char_index", "symbol"
-    ).join(bhint(chars_b), DOC + ["char_index"], "inner")
-
-    cells_j = (
-        cells_j.withColumn("cell_iri",
-                           kb_iri("cell", F.concat(F.col("taxon"), F.lit("_"), F.col("char_index"))))
-        .withColumn("norm_taxon", norm_taxon_label(F.col("taxon")))
-        .withColumn("state_index", strip_col(F.col("symbol")).try_cast("int"))
-    )
-    # One numbering pass gives both cell-scale counters (A2). cell_n
-    # counts cells in (char_pos, taxon_pos) order. A cell with a state
-    # index is visited once per organism variant (F2: two for an adult-
-    # organism character, one otherwise; none without a state index),
-    # and phe_n numbers the visits in (char_pos, taxon_pos, vord) order,
-    # so a visit's phe_n is the visits of the cells before its own
-    # (phe_base) plus vord + 1.
-    n_visits = "CASE WHEN state_index IS NULL THEN 0 WHEN dup_for_sex THEN 2 ELSE 1 END"
-    cells_j = seq_number(
-        cells_j, DOC, ["char_pos", "taxon_pos"],
-        {"cell_n": "1", "__visits": n_visits}, counter_buckets,
+    # --- taxa ⋈ chars (J4): the cell grid. The reference walks every
+    # (character, taxon) pair of a document (main.py:1731-1780), so one
+    # cell per taxon row and character, a symbol or not: a ragged row's
+    # missing symbols make cells with no state index. The join
+    # broadcasts the dimension-sized character table. ------------------
+    cells_j = taxon_rows.select(
+        *DOC, "taxon_pos", "taxon", "n_taxa", "cell_states", "stated_above",
+    ).join(bhint(charsx.drop("path")), DOC, "inner")
+    # Both cell-scale counters (A2) are closed forms over the grid:
+    # cell_n counts cells in (char_pos, taxon_pos) order, and a visit's
+    # phe_n is the visits before its character (phe_off), plus the
+    # stated taxa above it in its column times the character's weight
+    # (phe_base), plus vord + 1.
+    cells_j = cells_j.select(
+        "*",
+        kb_iri("cell", F.concat(F.col("taxon"), F.lit("_"), F.col("char_pos")))
+        .alias("cell_iri"),
+        norm_taxon_label(F.col("taxon")).alias("norm_taxon"),
     )
     # The cells hub, read by visits below and by cell_triples in
     # _assemble, projected to the columns they read (a checkpoint scan
-    # cannot column-prune): the join and its numbering run once.
+    # cannot column-prune): the join runs once.
     cells_j = mat(cells_j.selectExpr(
-        *DOC, "char_pos", "taxon_pos", "taxon", "state_index", "dup_for_sex",
-        "org_label", "org_uri_eff", "salt", "locators", "chain_seed",
-        "has_variable", "char_sort_num", "norm_taxon", "char_label", "char_id",
-        "char_iri", "stmt_type", "cell_iri", "mx_iri", "var_uri",
-        "var_label_eff", "var_comment", "cell_n",
-        f"__visits - ({n_visits}) AS phe_base",
+        *DOC, "char_pos", "taxon_pos", "taxon",
+        "try_element_at(cell_states, char_pos + 1) AS state_index",
+        "dup_for_sex", "org_label", "org_uri_eff", "salt", "locators",
+        "chain_seed", "has_variable", "char_sort_num", "norm_taxon",
+        "char_label", "char_id", "char_iri", "stmt_type", "cell_iri",
+        "mx_iri", "var_uri", "var_label_eff", "var_comment",
+        "CAST(char_pos AS BIGINT) * n_taxa + taxon_pos + 1 AS cell_n",
+        "phe_off + coalesce(try_element_at(stated_above, char_pos + 1), 0)"
+        " * IF(dup_for_sex, 2, 1) AS phe_base",
     ), "cells")
 
     variants = F.when(
@@ -716,9 +619,7 @@ def build_graph(
     )
 
     # state/quality join (J5) — the broadcast join runs FIRST, on the
-    # narrow pre-mint rows, in the cells hub's partitioning (its
-    # numbering window's, by document: max parallelism = document count,
-    # with giant documents hot — guide §2.5 skew).
+    # narrow pre-mint rows, in the cells hub's partitioning.
     stj = states_x.select(
         F.col("repo").alias("__st_repo"),
         F.col("commit").alias("__st_commit"),
@@ -743,8 +644,9 @@ def build_graph(
 
     # The IRI mints below (5 sha1 forests per row + the locator-chain
     # fold) are the pipeline's heaviest per-row compute. Partitioning at
-    # this point is by document (the cells hub's), so one giant matrix
-    # would mint in ONE task. Spread the rows over a high-cardinality
+    # this point is the parse hub's, which keeps a document's taxon rows
+    # together unless the hub was dealt wider than the parse, so one
+    # giant matrix could mint in ONE task. Spread the rows over a high-cardinality
     # deterministic composite key first (guide §2.5: deterministic
     # synthetic partitioning — char_pos splits a giant document across
     # tasks); everything after this is per-row column algebra, and every
@@ -864,8 +766,8 @@ def build_graph(
     )
     visits = mat(visits, "visits")
     return _assemble(
-        spark, corpus, charsx, states_x, cells_j, visits, species, cells, meta,
-        bhint, mat, counter_buckets,
+        spark, corpus, charsx, states_x, cells_j, visits, species, taxon_rows,
+        meta, bhint, mat,
     )
 
 
@@ -892,8 +794,8 @@ def _materializer(spark, staging_dir: Optional[str]):
     return stage
 
 
-def _assemble(spark, corpus, charsx, states_x, cells_j, visits, species, cells, meta,
-              bhint, mat, counter_buckets):
+def _assemble(spark, corpus, charsx, states_x, cells_j, visits, species, taxon_rows,
+              meta, bhint, mat):
     """Emit all triple families, tag parts, and build the final graph."""
     NI = const(T.OWL_NAMED_INDIVIDUAL)
 
@@ -1044,9 +946,9 @@ def _assemble(spark, corpus, charsx, states_x, cells_j, visits, species, cells, 
     # conditional var candidate, and one candidate per locator-chain
     # element; one (doc, kind, iri) min_by aggregation picks each
     # entity's first visit (order keys are unique per row within a
-    # document, so min_by picks exactly the old rn=1 row); one
-    # `seq_number` pass partitioned by (doc, kind) then numbers all three
-    # kinds (two-phase when counter_buckets is set).
+    # document, so min_by picks exactly the old rn=1 row); one window
+    # partitioned by (doc, kind) then numbers all three kinds. Its rows
+    # are distinct entities, not cells.
     _FC = lambda kind, iri, lpos, pfx: F.struct(  # noqa: E731
         F.lit(kind).alias("kind"), iri.alias("iri"),
         F.col("char_pos").alias("char_pos"),
@@ -1090,9 +992,9 @@ def _assemble(spark, corpus, charsx, states_x, cells_j, visits, species, cells, 
     # most one org IRI and one var IRI, and a (row, lpos) pair holds one
     # loc IRI, so within a kind the order keys are unique and adding
     # lpos to the org/var order changes nothing.
-    firsts = seq_number(firsts_all, DOC + ["kind"],
-                        ["char_pos", "taxon_pos", "vord", "lpos"], {"__n": "1"},
-                        counter_buckets)
+    firsts = firsts_all.selectExpr(
+        "*", "row_number() OVER (PARTITION BY repo, commit, kind"
+        " ORDER BY char_pos, taxon_pos, vord, lpos) AS __n")
     fallback = F.when(F.col("kind") == "org", "organism").when(
         F.col("kind") == "loc", "locator").otherwise("variable")
     firsts = firsts.withColumn("pfx", F.coalesce(strip_col(F.col("pfx")), fallback))
@@ -1105,9 +1007,9 @@ def _assemble(spark, corpus, charsx, states_x, cells_j, visits, species, cells, 
     )
 
     # -- species + TU parts ----------------------------------------------
-    taxa = (
-        cells.select(*DOC, "taxon_pos", "taxon").distinct()
-        .withColumn("taxon_label", norm_taxon_label(F.col("taxon")))
+    taxa = taxon_rows.select(
+        *DOC, "taxon_pos", "taxon",
+        norm_taxon_label(F.col("taxon")).alias("taxon_label"),
     )
     skeys = species.select(
         *DOC, "sp_pos", "input_name", "valid_name", "gbif_id", "zoobank_id", "uri",

@@ -943,11 +943,13 @@ ORACLES["src2_char_json_scan"] = f"""
 
 def src3_nexus_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NEXUS STANDARD-matrix scan (SRC3): long cells table from the
-    golden example matrix."""
+    golden example matrix's taxon rows."""
     from rdf_generator_spark.sources.parsers import parse_nexus_docs
 
-    cells = parse_nexus_docs(_golden_corpus(spark))
-    return cells.select("taxon_pos", "taxon", "char_index", "symbol")
+    taxa = parse_nexus_docs(_golden_corpus(spark))
+    return taxa.select(
+        "taxon_pos", "taxon", F.posexplode("symbols").alias("char_index", "symbol")
+    )
 
 
 ORACLES["src3_nexus_scan"] = f"""

@@ -82,11 +82,20 @@ CHARS_FIELDS = [
     T.StructField("doc_matrix_label", T.StringType()),
 ]
 
-CELLS_FIELDS = [
+# One taxon row of a NEXUS matrix. Per matrix column (array index =
+# character position): the symbol, its state index (the reference's
+# `int(symbol.strip())` guard, else null), and how many taxa above this one
+# have a state index there; plus the document's per-column totals of
+# such taxa and its taxon count. The cells and their :id-N counters are
+# closed forms of these (plans/pipeline.py).
+TAXON_FIELDS = [
     T.StructField("taxon_pos", T.IntegerType()),
     T.StructField("taxon", T.StringType()),
-    T.StructField("char_index", T.IntegerType()),
-    T.StructField("symbol", T.StringType()),
+    T.StructField("n_taxa", T.IntegerType()),
+    T.StructField("symbols", T.ArrayType(T.StringType())),
+    T.StructField("cell_states", T.ArrayType(T.IntegerType())),
+    T.StructField("stated_above", T.ArrayType(T.IntegerType())),
+    T.StructField("col_stated", T.ArrayType(T.IntegerType())),
 ]
 
 SPECIES_FIELDS = [
@@ -136,7 +145,9 @@ def _none_or_str(v: Any) -> Optional[str]:
 
 def char_rows_from_json(content: str) -> List[dict]:
     """One character JSON document -> list of normalized char dicts
-    (without the repo/path/commit keys)."""
+    (without the repo/path/commit keys). ``char_pos`` numbers the
+    object entries only, as the reference's character index does: an
+    entry that is not an object is skipped and shifts no position."""
     try:
         raw = json.loads(content)
     except (ValueError, TypeError):
@@ -146,9 +157,10 @@ def char_rows_from_json(content: str) -> List[dict]:
     if rows and isinstance(rows[-1], dict):
         doc_matrix_label = _none_or_str(rows[-1].get("MatrixLabel"))
     out: List[dict] = []
-    for pos, row in enumerate(rows):
+    for row in rows:
         if not isinstance(row, dict):
             continue
+        pos = len(out)
         org = row.get("Organism") or {}
         var = row.get("Variable")
         locators = [
@@ -303,12 +315,36 @@ def metadata_rows_from_csv(content: str) -> List[dict]:
     return out
 
 
+def _state_index(symbol: str) -> Optional[int]:
+    """A matrix symbol's state index, by the reference's `int()` guard
+    (main.py:1775-1780): gaps, missing data and polymorphic groups have
+    none."""
+    try:
+        return int(symbol.strip())
+    except ValueError:
+        return None
+
+
 def nexus_rows(content: Optional[str]) -> List[dict]:
-    """One NEXUS document -> long cell records (taxon x character)."""
-    return [
-        {"taxon_pos": pos, "taxon": taxon, "char_index": idx, "symbol": sym}
-        for pos, taxon, idx, sym in _parse_nexus_matrix(content or "")
-    ]
+    """One NEXUS document -> one record per taxon row (`TAXON_FIELDS`).
+
+    Taxa without symbols are left out (they make no cell), so
+    ``taxon_pos`` numbers the rest densely in matrix order."""
+    rows: Dict[str, List[str]] = {}
+    for _pos, taxon, _idx, sym in _parse_nexus_matrix(content or ""):
+        rows.setdefault(taxon, []).append(sym)
+    totals: List[int] = []
+    out: List[dict] = []
+    for pos, (taxon, syms) in enumerate(rows.items()):
+        states = [_state_index(s) for s in syms]
+        totals += [0] * (len(states) - len(totals))
+        out.append({"taxon_pos": pos, "taxon": taxon, "n_taxa": len(rows),
+                    "symbols": syms, "cell_states": states,
+                    "stated_above": totals[:len(states)],
+                    "col_stated": totals})
+        for c, st in enumerate(states):
+            totals[c] += st is not None
+    return out
 
 
 class Family(NamedTuple):
@@ -324,7 +360,7 @@ class Family(NamedTuple):
 # lang -> family: the single table the fused parse dispatches on
 FAMILIES: Dict[str, Family] = {
     "json": Family("chars", char_rows_from_json, CHARS_FIELDS),
-    "nexus": Family("cells", nexus_rows, CELLS_FIELDS),
+    "nexus": Family("taxa", nexus_rows, TAXON_FIELDS),
     "species-json": Family("species", species_rows_from_json, SPECIES_FIELDS),
     "csv": Family("meta", metadata_rows_from_csv, METADATA_FIELDS),
 }
@@ -395,7 +431,8 @@ def parse_char_docs(corpus: DataFrame) -> DataFrame:
 
 
 def parse_nexus_docs(corpus: DataFrame) -> DataFrame:
-    """NEXUS documents (lang='nexus') -> long cells table."""
+    """NEXUS documents (lang='nexus') -> one row per taxon (see
+    `TAXON_FIELDS`)."""
     return _parse_one(corpus, "nexus")
 
 

@@ -35,15 +35,6 @@ def golden_parsed(rows=None):
     return chars, cells, species, metadata, vocab
 
 
-def force_counter_buckets(monkeypatch, width):
-    """Make build_graph's counter gate pick `width`: a bucket width runs
-    the two-phase cell-scale counters, None the per-document window."""
-    from rdf_generator_spark.plans import pipeline
-
-    monkeypatch.setattr(pipeline, "_auto_counter_buckets",
-                        lambda corpus, footers: width)
-
-
 def trip_broadcast_gate(monkeypatch):
     """Make build_graph take the dimension joins' many-document path:
     no broadcast hints, AQE picks each join at run time."""

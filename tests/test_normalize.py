@@ -54,31 +54,3 @@ def test_extract_revision_source(spark):
     got = _col_eval(spark, N.extract_revision_source_col, vals)
     for v, g in zip(vals, got):
         assert g == N.py_extract_revision_source(v), (v, g)
-
-
-def test_seq_number_matches_global_window(spark):
-    """Running sums, one-window and two-phase, == the single global
-    window, on ties, skew (one giant group), multiple partitions and a
-    weighted column (weights 0, 1 and 2)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from rdf_generator_spark.operators.windows import seq_number
-
-    rows = []
-    for d in ["d1", "d2"]:
-        n = 200 if d == "d1" else 7  # skewed partition sizes
-        for i in range(n):
-            rows.append((d, i % 13, i // 13, i, i % 3))
-    df = spark.createDataFrame(rows, "doc string, a int, b int, uid int, w int")
-    w_run = Window.partitionBy("doc").orderBy("a", "b", "uid")
-    want = df.select(
-        "doc", "uid", F.row_number().over(w_run).alias("rn"),
-        F.sum("w").over(w_run.rowsBetween(Window.unboundedPreceding, 0)).alias("ws"),
-    )
-    w = {(r["doc"], r["uid"]): (r["rn"], r["ws"]) for r in want.collect()}
-    for width in [None, 3]:
-        got = seq_number(df, ["doc"], ["a", "b", "uid"], {"rn": "1", "ws": "w"}, width)
-        assert got.columns == df.columns + ["rn", "ws"]
-        g = {(r["doc"], r["uid"]): (r["rn"], r["ws"]) for r in got.collect()}
-        assert g == w, width

@@ -61,7 +61,10 @@ def test_parsers_never_emit_null_arrays(spark):
 
 @needs_reference
 def test_parse_nexus(spark):
-    cells = parsers.parse_nexus_docs(reference_corpus_df(spark)).collect()
+    taxa = parsers.parse_nexus_docs(reference_corpus_df(spark))
+    cells = taxa.selectExpr(
+        "taxon_pos", "taxon", "posexplode(symbols) AS (char_index, symbol)"
+    ).collect()
     assert len(cells) == 100
     by = {(c["taxon"], c["char_index"]): c for c in cells}
     assert by[("Arhysoceble_picta", 0)]["symbol"] == "0"

@@ -19,9 +19,7 @@ from rdf_generator_spark.sources.golden import (
     golden_corpus_df, reference_corpus_df, reference_corpus_rows,
 )
 
-from tests.fixtures import (
-    force_counter_buckets, golden_parsed, needs_reference, trip_broadcast_gate,
-)
+from tests.fixtures import golden_parsed, needs_reference, trip_broadcast_gate
 from tests.oracle.refsim import RefSim
 
 
@@ -100,18 +98,6 @@ def test_durable_staging_is_golden_equal(spark, oracle, tmp_path):
     res = build_graph(
         spark, golden_corpus_df(spark), staging_dir=str(tmp_path / "staging")
     )
-    got = _collect(res["triples"])
-    want = oracle["final"].triples()
-    assert got == want, _diff_report(got, want)
-
-
-def test_two_phase_counters_are_golden_equal(spark, monkeypatch, oracle):
-    """A bucket width from the counter gate switches the :id-N numbering
-    to the bucket-parallel two-phase form (operators/windows.py); output
-    must be identical — the counters are the most order-sensitive
-    output."""
-    force_counter_buckets(monkeypatch, 3)
-    res = build_graph(spark, golden_corpus_df(spark))
     got = _collect(res["triples"])
     want = oracle["final"].triples()
     assert got == want, _diff_report(got, want)

@@ -18,11 +18,10 @@ from rdf_generator_spark.sources.corpus import build_label_index, corpus_df
 from rdf_generator_spark.sources.golden import golden_corpus_rows
 from rdf_generator_spark.sources.synth import synth_corpus_rows
 
-from tests.fixtures import force_counter_buckets
 from tests.oracle.refsim import RefSim
 
 
-def edge_case_rows():
+def edge_case_rows(variant=None):
     """One hand-written dataset of linking and state-numbering edge
     cases: organism, variable, locator and state URIs that are "",
     blank or "NULL" (filled from the vocabulary or left as they are);
@@ -33,7 +32,12 @@ def edge_case_rows():
     another case) and labels and URIs repeated across characters; a
     label that is empty after strip (the `state:id-N` fallback), a
     missing one ("unknown"), and labels edged or spaced with non-ASCII
-    whitespace."""
+    whitespace.
+
+    `variant` bends the inputs the cell grid reads: "ragged" drops the
+    last symbol of one taxon row, "short" the last column of every row
+    (the matrix is one column short of the character list), and
+    "nonobject" puts a non-object entry among the characters."""
     import json
 
     obo = "http://purl.obolibrary.org/obo/"
@@ -66,8 +70,14 @@ def edge_case_rows():
          "States": states(("not rugose", "  "), ("rugose", None),
                           ("\u3000", None))},
     ]
+    if variant == "nonobject":
+        chars.insert(1, "junk")
     taxa = {"Apis_mellifera": "046", "Bombus_terrestris": "152",
             "Xylocopa_violacea": "2?0", "Melipona_beecheii": "3-1"}
+    if variant == "ragged":
+        taxa["Xylocopa_violacea"] = "2?"
+    elif variant == "short":
+        taxa = {t: syms[:-1] for t, syms in taxa.items()}
     nexus = "\n".join(
         ["#NEXUS", "BEGIN DATA;", "\tDIMENSIONS NTAX=4 NCHAR=3;", "\tMATRIX"]
         + [f"\t'{t}'    {syms}" for t, syms in taxa.items()]
@@ -90,27 +100,22 @@ def edge_case_rows():
             for path, lang, content in docs]
 
 
-@pytest.mark.parametrize("seed,dataset_id,counter_buckets", [
-    pytest.param(7, None, "auto", id="7"),
-    pytest.param(23, None, "auto", id="23"),
+@pytest.mark.parametrize("seed,dataset_id", [
+    pytest.param(7, None, id="7"),
+    pytest.param(23, None, id="23"),
     # run_pipeline.py --dataset-id: tier-1 salt over the metadata salt
-    pytest.param(7, "demo", "auto", id="7-demo"),
-    # width 1: one bucket per character, so the two-phase numbering of
-    # cells, visits and the merged first-visit kinds crosses a bucket
-    # boundary at every character
-    pytest.param(23, None, 1, id="23-buckets1"),
-    pytest.param(None, None, "auto", id="edge"),
-    pytest.param(None, None, 1, id="edge-buckets1"),
+    pytest.param(7, "demo", id="7-demo"),
+    pytest.param(None, None, id="edge"),
+    pytest.param("ragged", None, id="edge-ragged"),
+    pytest.param("short", None, id="edge-short"),
+    pytest.param("nonobject", None, id="edge-nonobject"),
 ])
-def test_synth_corpus_matches_oracle_per_doc(spark, monkeypatch, seed, dataset_id,
-                                            counter_buckets):
+def test_synth_corpus_matches_oracle_per_doc(spark, seed, dataset_id):
     """Per document, the build's triples equal refsim's on seeded synth
-    corpora and on `edge_case_rows` (seed None)."""
-    rows = (edge_case_rows() if seed is None
-            else synth_corpus_rows(n_datasets=3, ntax=8, nchar=8, seed=seed))
+    corpora and on `edge_case_rows` (seed None or an edge variant)."""
+    rows = (synth_corpus_rows(n_datasets=3, ntax=8, nchar=8, seed=seed)
+            if isinstance(seed, int) else edge_case_rows(seed))
     corpus = corpus_df(spark, rows)
-    if counter_buckets != "auto":
-        force_counter_buckets(monkeypatch, counter_buckets)
     res = build_graph(spark, corpus, dataset_id=dataset_id)
     got_by_doc = defaultdict(set)
     for r in res["triples"].collect():
@@ -151,18 +156,50 @@ def _kgbench_jobs():
     return mod
 
 
-@pytest.mark.parametrize("counter_buckets", [None, 2])
-def test_repeated_state_seed_matches_oracle(spark, monkeypatch, counter_buckets):
+def test_graph_stats_count_every_document(spark):
+    """run_pipeline.py counts documents on the final graph: every corpus
+    document keeps its base-scaffold rows there, one with no character
+    JSON (a NEXUS matrix and species only) and one with only a config
+    file included, so the graph's distinct (repo, commit) are the
+    corpus's documents."""
+    import importlib.util
+    import os
+
+    from rdf_generator_spark.plans.base_scaffold import base_triples
+
+    rows = synth_corpus_rows(n_datasets=2, ntax=4, nchar=4, seed=5)
+    rows += [("nojson/repo", path, commit, lang, content)
+             for repo, path, commit, lang, content in rows
+             if repo == rows[0][0] and lang != "json"]
+    rows.append(("config/only", "config.yaml", "c" * 40, "yaml", "other: 1\n"))
+    res = build_graph(spark, corpus_df(spark, rows))
+    got = defaultdict(set)
+    for r in res["triples"].collect():
+        got[(r["repo"], r["commit"])].add(
+            (r["s"], r["p"], r["o"], bool(r["lit"]), r["dt"]))
+    docs = {(repo, commit) for repo, _, commit, _, _ in rows}
+    assert len(docs) == 4
+    for doc in docs:
+        assert set(base_triples()) <= got[doc], doc
+
+    path = os.path.join(os.path.dirname(os.path.dirname(__file__)),
+                        "scripts", "run_pipeline.py")
+    spec = importlib.util.spec_from_file_location("run_pipeline", path)
+    run_pipeline = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(run_pipeline)
+    assert run_pipeline.graph_stats(res["triples"]) == {
+        "docs": len(docs), "triples": sum(map(len, got.values()))}
+
+
+def test_repeated_state_seed_matches_oracle(spark):
     """A character with two states of one IRI seed (same label, no URI):
     the reference numbers the state once (has_label guards), so the
-    STATE/QUALITY :id-N counters must skip the repeat, on the single
-    window and on the bucketed path alike, or every later label of the
-    document differs."""
+    STATE/QUALITY :id-N counters must skip the repeat, or every later
+    label of the document differs."""
     rows = synth_corpus_rows(n_datasets=3, ntax=5, nchar=5, seed=7)
     jobs = _kgbench_jobs()
     flagged = [r[0] for r in rows if r[3] == "json" and jobs.repeated_state_seed(r[4])]
     assert flagged, "seed no longer draws a repeated state seed"
-    force_counter_buckets(monkeypatch, counter_buckets)
     res = build_graph(spark, corpus_df(spark, rows))
     got_by_doc = defaultdict(set)
     for r in res["triples"].collect():
@@ -185,10 +222,8 @@ def test_repeated_state_seed_matches_oracle(spark, monkeypatch, counter_buckets)
         assert got == want, (repo, sorted(got - want)[:4], sorted(want - got)[:4])
 
 
-@pytest.mark.parametrize("seed,counter_buckets", [
-    (7, None), (23, 2), pytest.param(None, None, id="golden"),
-])
-def test_label_subjects_only_premise(spark, monkeypatch, seed, counter_buckets):
+@pytest.mark.parametrize("seed", [7, 23, pytest.param(None, id="golden")])
+def test_label_subjects_only_premise(spark, seed):
     """The final graph's apply_label_priority(label_subjects_only=True)
     assumes (a) every matrix-labelled subject of its target keeps an
     rdfs:label row there and (b) the target has no duplicate rows. The
@@ -197,7 +232,6 @@ def test_label_subjects_only_premise(spark, monkeypatch, seed, counter_buckets):
     corpora and on the golden corpus (seed None)."""
     rows = (golden_corpus_rows() if seed is None
             else synth_corpus_rows(n_datasets=3, ntax=6, nchar=6, seed=seed))
-    force_counter_buckets(monkeypatch, counter_buckets)
     res = build_graph(spark, corpus_df(spark, rows))
 
     def key(r):
@@ -293,7 +327,7 @@ def test_dataset_id_from_yaml_config(spark):
 def test_skewed_corpus_giant_matrix_exact(spark):
     """Skew path: one 10x-larger NEXUS matrix among small documents —
     per-document exactness must hold and the giant must not perturb its
-    neighbors (windows are per-document)."""
+    neighbors (counters are per-document)."""
     rows = synth_corpus_rows(
         n_datasets=3, ntax=6, nchar=6, seed=31, giant_every=3, giant_scale=5
     )

@@ -14,7 +14,7 @@ import pytest
 
 from rdf_generator_spark.plans.pipeline import build_graph
 
-from tests.fixtures import force_counter_buckets, trip_broadcast_gate
+from tests.fixtures import trip_broadcast_gate
 
 
 def plan_of(df) -> str:
@@ -72,18 +72,14 @@ def product_path(spark, corpus, out):
 
 
 def test_counter_bucket_auto_gate(spark, tmp_path):
-    """VERDICT r3 item 1: the giant-document probe must (a) run zero
-    Spark jobs, (b) stay off for normal file-backed corpora and
-    in-memory corpora, (c) turn the two-phase counters on when a
-    straggler-sized document is present."""
+    """The benchmark's giant-document classifier: None on a corpus of
+    normal documents, the bucket width on one holding a straggler-sized
+    matrix, whether the corpus is file-backed or in memory."""
     from rdf_generator_spark.plans.pipeline import (
         _AUTO_COUNTER_BUCKET_WIDTH,
-        _input_files,
-        _max_doc_bytes,
-        _read_footers,
         resolve_counter_buckets,
     )
-    from rdf_generator_spark.sources.corpus import corpus_df
+    from rdf_generator_spark.sources.corpus import corpus_df, corpus_parquet_df
     from rdf_generator_spark.sources.synth import synth_corpus_rows
 
     normal = synth_corpus_rows(n_datasets=4, ntax=10, nchar=10, seed=7)
@@ -91,116 +87,11 @@ def test_counter_bucket_auto_gate(spark, tmp_path):
         n_datasets=4, ntax=10, nchar=10, seed=7,
         giant_every=4, giant_shape=(500, 2000),
     )
-
-    def staged(rows, name):
-        corpus_df(spark, rows).write.mode("overwrite").parquet(
-            str(tmp_path / name)
-        )
-        return spark.read.parquet(str(tmp_path / name))
-
-    c_norm, c_skew = staged(normal, "n"), staged(skew, "s")
-    mem = corpus_df(spark, normal)
-
-    tracker = spark.sparkContext.statusTracker()
-    jobs_before = len(tracker.getJobIdsForGroup(None) or [])
-    assert _max_doc_bytes(mem, _read_footers(_input_files(mem))) is None
+    c_norm = corpus_parquet_df(spark, normal, str(tmp_path / "n"))
+    c_skew = corpus_parquet_df(spark, skew, str(tmp_path / "s"))
     assert resolve_counter_buckets(c_norm, "auto") is None
+    assert resolve_counter_buckets(corpus_df(spark, normal), "auto") is None
     assert resolve_counter_buckets(c_skew, "auto") == _AUTO_COUNTER_BUCKET_WIDTH
-    jobs_after = len(tracker.getJobIdsForGroup(None) or [])
-    assert jobs_after == jobs_before, "probe must not launch Spark jobs"
-    # explicit settings always win
-    assert resolve_counter_buckets(c_skew, None) is None
-    assert resolve_counter_buckets(c_norm, 8) == 8
-
-
-def test_probe_exact_fallback_packed_row_group(spark, tmp_path):
-    """VERDICT r4 item 2: a writer that packs one giant document into a
-    row group with thousands of small rows keeps the footer MEAN tiny —
-    the pre-round-5 probe missed the giant and the 592 s straggler
-    returned. The hardened probe detects the ambiguity from the group's
-    TOTAL content bytes (a giant row forces total >= its own size, even
-    dictionary-encoded) and settles it with ONE column-pruned
-    max(octet_length) job, run on every probe (no cross-build cache)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from rdf_generator_spark.plans.pipeline import (
-        _AUTO_COUNTER_BUCKET_WIDTH,
-        _input_files,
-        _max_doc_bytes,
-        _read_footers,
-        resolve_counter_buckets,
-    )
-
-    def probe(df):
-        return _max_doc_bytes(df, _read_footers(_input_files(df)))
-
-    n = 4000
-    giant = 1600 * 1024
-    tbl = pa.table(
-        {
-            "repo": [f"r{i}" for i in range(n)] + ["giant"],
-            "path": ["chars.json"] * (n + 1),
-            "commit": ["c"] * (n + 1),
-            "lang": ["json"] * (n + 1),
-            "content": [f"x{i:04d}" * 128 for i in range(n)] + ["y" * giant],
-        }
-    )
-    p = str(tmp_path / "packed.parquet")
-    pq.write_table(tbl, p, row_group_size=n + 1)
-    md = pq.ParquetFile(p).metadata
-    assert md.num_row_groups == 1  # the packing the probe must survive
-    df = spark.read.parquet(p)
-
-    got = probe(df)
-    assert got == (giant, True)  # exact job ran and found the giant
-    assert resolve_counter_buckets(df, "auto") == _AUTO_COUNTER_BUCKET_WIDTH
-    # not memoized: a second probe of the same file list runs the job
-    # again and gets the same answer
-    tracker = spark.sparkContext.statusTracker()
-    before = len(tracker.getJobIdsForGroup(None) or [])
-    assert probe(df) == (giant, True)
-    assert len(tracker.getJobIdsForGroup(None) or []) > before
-
-
-def test_probe_file_cap_falls_through_to_exact(spark, tmp_path, monkeypatch):
-    """VERDICT r5 item 1: with more corpus files than the probe's footer
-    cap, a tail giant beyond the cap is never footer-read — the probe
-    must treat the footer signal as unproven and run the exact job
-    instead of claiming a zero-job proof. Cap shrunk via monkeypatch so
-    the fixture stays small."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from rdf_generator_spark.plans import pipeline as P
-
-    small = pa.table(
-        {
-            "repo": ["r0"], "path": ["chars.json"], "commit": ["c"],
-            "lang": ["json"], "content": ["tiny"],
-        }
-    )
-    giant = pa.table(
-        {
-            "repo": ["giant"], "path": ["chars.json"], "commit": ["c"],
-            "lang": ["json"], "content": ["y" * (1600 * 1024)],
-        }
-    )
-    d = tmp_path / "corpus"
-    d.mkdir()
-    # file list sorts lexicographically in inputFiles(); keep the giant
-    # in the LAST file so a capped footer scan never sees it
-    pq.write_table(small, str(d / "part-aaa.parquet"))
-    pq.write_table(small, str(d / "part-bbb.parquet"))
-    pq.write_table(giant, str(d / "part-zzz.parquet"))
-    df = spark.read.parquet(str(d))
-
-    monkeypatch.setattr(P, "_PROBE_FILE_CAP", 2)
-    got = P._max_doc_bytes(df, P._read_footers(P._input_files(df)))
-    assert got == (1600 * 1024, True)  # exact job ran, tail giant found
-    assert (
-        P.resolve_counter_buckets(df, "auto") == P._AUTO_COUNTER_BUCKET_WIDTH
-    )
 
 
 def test_parse_task_sizing(spark, tmp_path, monkeypatch):
@@ -231,7 +122,7 @@ def test_parse_task_sizing(spark, tmp_path, monkeypatch):
     assert P._task_counts(big, 1) == (1, 1)
 
     mem = corpus_df(spark, [("r", "chars.json", "c", "json", "{}")])
-    assert P._read_footers(P._input_files(mem)) is None
+    assert P._content_bytes(P._input_files(mem)) is None
 
     d = tmp_path / "corpus"
     d.mkdir()
@@ -251,10 +142,9 @@ def test_parse_task_sizing(spark, tmp_path, monkeypatch):
             for c in range(md.num_columns)
             if md.row_group(g).column(c).path_in_schema == "content"
         )
-    assert P._read_footers(files).total == want
+    assert P._content_bytes(files) == want
     monkeypatch.setattr(P, "_PROBE_FILE_CAP", 2)
-    over = P._read_footers(files)
-    assert over is not None and over.total is None
+    assert P._content_bytes(files) is None
 
 
 def test_emit_compiles_family_rows(spark):
@@ -464,7 +354,7 @@ def test_hub_keeps_scan_parallelism(spark, synth_build, monkeypatch, parse_tasks
     corpus, res, _ = synth_build
     n_scan = corpus._jdf.rdd().getNumPartitions()
     assert n_scan > 2
-    total = P._read_footers(P._input_files(corpus)).total
+    total = P._content_bytes(P._input_files(corpus))
     monkeypatch.setattr(P, "_HUB_TASK_BYTES", 1)
     if parse_tasks == "scan":
         monkeypatch.setattr(P, "_PARSE_TASK_BYTES", 1)
@@ -574,6 +464,37 @@ def test_kg_join_shuffle_fallback_past_gate(spark, synth_build, monkeypatch):
         assert cells_join() == {"SortMergeJoin"}
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_cells_hub_has_no_cell_scale_shuffle(synth_build):
+    """The cell counters are closed forms over the taxa ⋈ chars grid:
+    the job that materializes the cells hub runs no window and no
+    shuffle, only the broadcast of the character table."""
+    _, _, execs = synth_build
+    names, _, _ = computing(execs, "cell_n")
+    assert not [n for n in names if "Window" in n or n == "Exchange"], names
+    assert "BroadcastExchange" in names
+
+
+def test_first_visit_numbering_exchanges(synth_build):
+    """The first-visit labels take two shuffles in the job that
+    materializes the deduplicated union: the per-entity first-visit
+    aggregation on (document, kind, iri) and the one numbering window
+    on (document, kind)."""
+    _, _, execs = synth_build
+    _, desc, _ = computing(execs, "__n")
+    final = desc.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    ids = set(re.findall(r"\((\d+)\)", final))
+    keys = [
+        tuple(re.sub(r"#\d+", "", k) for k in m.split(", ")[:-1])
+        for i, m in re.findall(
+            r"^\((\d+)\) Exchange\n(?:.+\n)*?Arguments: hashpartitioning\(([^)]*)\)",
+            desc, re.M)
+        if i in ids
+    ]
+    kind_keyed = sorted(k for k in keys if "kind" in k)
+    assert kind_keyed == [("repo", "commit", "kind"),
+                          ("repo", "commit", "kind", "iri")], keys
 
 
 def test_states_hub_is_one_projection(synth_build):
@@ -741,16 +662,12 @@ FINAL_EXCHANGE_BUDGET = 22
 # the SQL status store records them.
 BUILD_EXCHANGE_BUDGET = 15
 BUILD_BROADCAST_EXCHANGE_BUDGET = 12
-# The same over a build of the same corpus on the two-phase counter path
-# (bucket width 2).
-BUCKETED_BUILD_EXCHANGE_BUDGET = 20
-BUCKETED_BUILD_BROADCAST_EXCHANGE_BUDGET = 15
 # py4j commands Python sends the JVM for `product_path` on the same corpus
 # (plan construction, the hub materialization jobs, the write and the
 # count), not counting the release commands py4j sends when Python
 # garbage-collects a JVM reference: their number follows the
 # collector's timing.
-BUILD_PY4J_BUDGET = 16199
+BUILD_PY4J_BUDGET = 16161
 
 
 def test_final_graph_exchange_budget(synth_build):
@@ -779,20 +696,6 @@ def test_build_exchange_budget(synth_build):
     n, n_bcast = _exchange_counts(execs)
     assert n <= BUILD_EXCHANGE_BUDGET, n
     assert n_bcast <= BUILD_BROADCAST_EXCHANGE_BUDGET, n_bcast
-
-
-def test_bucketed_build_exchange_budget(spark, synth_build, monkeypatch, tmp_path):
-    """Exchanges over every plan a build on the two-phase counter path
-    and its write and count execute: only the cell-scale counters take
-    that form."""
-    corpus, _, _ = synth_build
-    force_counter_buckets(monkeypatch, 2)
-    _, execs = executions(
-        spark, lambda: product_path(spark, corpus, str(tmp_path / "triples"))
-    )
-    n, n_bcast = _exchange_counts(execs)
-    assert n <= BUCKETED_BUILD_EXCHANGE_BUDGET, n
-    assert n_bcast <= BUCKETED_BUILD_BROADCAST_EXCHANGE_BUDGET, n_bcast
 
 
 def test_build_py4j_budget(spark, synth_build, tmp_path):

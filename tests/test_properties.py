@@ -1,7 +1,7 @@
 """Property-based tests (hypothesis): the JVM Column normalizers must
 agree with their Python twins on arbitrary inputs, UUID5 minting must
-match the stdlib, and the two-phase counter must match the global
-window — beyond the hand-picked fixtures."""
+match the stdlib, and the NEXUS taxon rows must number the cell grid
+as the reference's counters do — beyond the hand-picked fixtures."""
 
 from __future__ import annotations
 
@@ -90,42 +90,55 @@ def test_uuid5_matches_stdlib(spark, seeds):
         assert got[i] == str(_uuid.uuid5(_UUID_NAMESPACE, s)), repr(s)
 
 
-@given(
-    st.lists(
-        st.tuples(st.sampled_from(["d1", "d2"]), st.integers(0, 30),
-                  st.integers(0, 5), st.integers(0, 2)),
-        min_size=1, max_size=60,
-    ),
-    st.integers(1, 7),
-)
-@settings(**_SETTINGS)
-def test_seq_number_property(spark, rows, width):
-    """The bucketed running sums of 1 and of a weight column (0, 1 or
-    2) equal one global window's row number and running sum."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
+def test_nexus_taxon_rows_number_the_grid():
+    """The NEXUS taxon rows' counts give the reference's sequential
+    counters in closed form (plans/pipeline.py): on random ragged grids,
+    with rows longer or shorter than the character list and taxa
+    without symbols, walking characters then taxa as the reference does
+    numbers cell (c, t) char_pos * n_taxa + taxon_pos + 1 and visit
+    (c, t, v) the visits before character c (a running sum over
+    characters) + stated taxa above t in column c times c's weight +
+    v + 1."""
+    import random
 
-    from rdf_generator_spark.operators.windows import seq_number
+    from rdf_generator_spark.sources.parsers import nexus_rows
 
-    data = [(d, a, b, i, w) for i, (d, a, b, w) in enumerate(rows)]
-    df = spark.createDataFrame(data, "doc string, a int, b int, uid int, w int")
-    w_run = Window.partitionBy("doc").orderBy("a", "b", "uid")
-    want = {
-        (r["doc"], r["uid"]): (r["rn"], r["ws"])
-        for r in df.select(
-            "doc", "uid", F.row_number().over(w_run).alias("rn"),
-            F.sum("w").over(
-                w_run.rowsBetween(Window.unboundedPreceding, 0)
-            ).alias("ws"),
-        ).collect()
-    }
-    got = {
-        (r["doc"], r["uid"]): (r["rn"], r["ws"])
-        for r in seq_number(
-            df, ["doc"], ["a", "b", "uid"], {"rn": "1", "ws": "w"}, width
-        ).collect()
-    }
-    assert got == want
+    rnd = random.Random(7)
+    for _ in range(40):
+        nchar = rnd.randint(1, 6)
+        weights = [rnd.choice([1, 2]) for _ in range(nchar)]
+        grid = {
+            f"T{i}": [rnd.choice(["0", "1", "-", "?", "(01)"])
+                      for _ in range(rnd.randint(0, nchar + 2))]
+            for i in range(rnd.randint(1, 6))
+        }
+        lines = ["#NEXUS", "BEGIN DATA;", "MATRIX"]
+        lines += [f"  {t}  {''.join(row)}" for t, row in grid.items()]
+        recs = nexus_rows("\n".join(lines + [";", "END;"]))
+        taxa = [t for t, row in grid.items() if row]
+        assert [r["taxon"] for r in recs] == taxa
+        assert [r["taxon_pos"] for r in recs] == list(range(len(taxa)))
+
+        def at(arr, c):
+            return arr[c] if c < len(arr) else None
+
+        offsets, off = [], 0
+        for c in range(nchar):
+            offsets.append(off)
+            off += (at(recs[0]["col_stated"], c) or 0) * weights[c] if recs else 0
+        cell = phe = 0
+        for c in range(nchar):
+            for r in recs:
+                cell += 1
+                assert c * r["n_taxa"] + r["taxon_pos"] + 1 == cell
+                sym = at(grid[r["taxon"]], c)
+                if sym is None or not sym.isdigit():
+                    assert at(r["cell_states"], c) is None
+                    continue
+                assert at(r["cell_states"], c) == int(sym)
+                for v in range(weights[c]):
+                    phe += 1
+                    assert offsets[c] + r["stated_above"][c] * weights[c] + v + 1 == phe
 
 
 def test_nexus_roundtrip_property():
