@@ -191,12 +191,16 @@ def test_graph_stats_count_every_document(spark):
         "docs": len(docs), "triples": sum(map(len, got.values()))}
 
 
-def test_repeated_state_seed_matches_oracle(spark):
+@pytest.mark.parametrize("giant_every", [None, 2])
+def test_repeated_state_seed_matches_oracle(spark, giant_every):
     """A character with two states of one IRI seed (same label, no URI):
     the reference numbers the state once (has_label guards), so the
     STATE/QUALITY :id-N counters must skip the repeat, or every later
-    label of the document differs."""
-    rows = synth_corpus_rows(n_datasets=3, ntax=5, nchar=5, seed=7)
+    label of the document differs. `giant_every=2` makes the second
+    dataset a 3x larger matrix among normal ones: the counters stay
+    per-document on a skewed corpus too."""
+    rows = synth_corpus_rows(n_datasets=3, ntax=5, nchar=5, seed=7,
+                             giant_every=giant_every, giant_scale=3)
     jobs = _kgbench_jobs()
     flagged = [r[0] for r in rows if r[3] == "json" and jobs.repeated_state_seed(r[4])]
     assert flagged, "seed no longer draws a repeated state seed"
@@ -222,16 +226,20 @@ def test_repeated_state_seed_matches_oracle(spark):
         assert got == want, (repo, sorted(got - want)[:4], sorted(want - got)[:4])
 
 
-@pytest.mark.parametrize("seed", [7, 23, pytest.param(None, id="golden")])
-def test_label_subjects_only_premise(spark, seed):
+@pytest.mark.parametrize("seed,giant_every", [
+    (7, None), (23, 2), pytest.param(None, None, id="golden"),
+])
+def test_label_subjects_only_premise(spark, seed, giant_every):
     """The final graph's apply_label_priority(label_subjects_only=True)
     assumes (a) every matrix-labelled subject of its target keeps an
     rdfs:label row there and (b) the target has no duplicate rows. The
     fast path keeps its target's subject set and label presence, so both
     are checked on the outputs build_graph returns, on seeded synthetic
-    corpora and on the golden corpus (seed None)."""
+    corpora (seed 23 with a 3x larger matrix every second dataset) and
+    on the golden corpus (seed None)."""
     rows = (golden_corpus_rows() if seed is None
-            else synth_corpus_rows(n_datasets=3, ntax=6, nchar=6, seed=seed))
+            else synth_corpus_rows(n_datasets=3, ntax=6, nchar=6, seed=seed,
+                                   giant_every=giant_every, giant_scale=3))
     res = build_graph(spark, corpus_df(spark, rows))
 
     def key(r):
