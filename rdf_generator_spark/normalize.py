@@ -1,9 +1,10 @@
 """Label/seed normalizers — Column expressions plus plain-Python twins.
 
-Each function reproduces one reference normalizer (SURVEY.md §2 P2-P7).
+Each function reproduces one reference normalizer (SURVEY.md §2 P2-P8).
 Column versions are built-in-only (regexp/lower/trim) so they run inside
 whole-stage codegen; the `py_*` twins are used by parsers (which already
 run in Python inside Arrow-batched UDFs), tests, and the golden oracle.
+The build and the driver registry's P entries call the same functions.
 """
 
 from __future__ import annotations
@@ -11,7 +12,7 @@ from __future__ import annotations
 import re
 from typing import Any, Optional
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from rdf_generator_spark.terms import DEFAULT_CHAR_SORT_NUM, KB
@@ -67,6 +68,45 @@ def extract_revision_source_col(c: Column) -> Column:
     """extract_revision_source (main.py:199-205)."""
     s = F.when(c.isNull(), F.lit("")).otherwise(c)
     return strip_col(F.regexp_replace(strip_col(s), r"(?iU)^\s*modified\s+from\s+", ""))
+
+
+def norm_species_uri(uri: Column, fallback: Column) -> Column:
+    """normalize_species_uri (main.py:146-167), the Column twin of
+    `py_norm_species_uri` for an already taxon-normalized `fallback`.
+    Python truthiness: a whitespace-only uri is truthy, strips to '' and
+    is returned as-is."""
+    stripped = strip_col(uri)
+    return F.when(
+        uri.isNull() | (uri == ""), F.concat(F.lit(KB), fallback),
+    ).when(
+        stripped.startswith("kb:"),
+        F.concat(F.lit(KB), norm_taxon_label(F.substring(stripped, 4, 2 ** 30))),
+    ).when(
+        stripped.startswith(KB),
+        F.concat(F.lit(KB), norm_taxon_label(F.substring(stripped, len(KB) + 1, 2 ** 30))),
+    ).otherwise(stripped)
+
+
+def split_binomial(df: DataFrame, label: str) -> DataFrame:
+    """Binomial/author split and italic TU comment (P8, main.py:2005-2016):
+    `df` plus ``binomial`` and ``author`` (`label` split on ' ' with
+    limit 3, so the author tail stays intact) and ``tu_comment``
+    (``<i>binomial</i> author``, stripped)."""
+    df = df.select("*", F.split(F.col(label), " ", 3).alias("__parts"))
+    df = df.select(
+        "*",
+        F.when(
+            F.size("__parts") >= 2,
+            F.concat(F.col("__parts")[0], F.lit(" "), F.col("__parts")[1]),
+        ).otherwise(F.col(label)).alias("binomial"),
+        F.when(F.size("__parts") == 3, F.col("__parts")[2])
+        .otherwise(F.lit("")).alias("author"),
+    )
+    return df.select(
+        "*",
+        strip_col(F.concat(F.lit("<i>"), F.col("binomial"),
+                           F.lit("</i> "), F.col("author"))).alias("tu_comment"),
+    )
 
 
 # ---------------------------------------------------------------------------

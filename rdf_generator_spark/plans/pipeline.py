@@ -48,11 +48,21 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from rdf_generator_spark import terms as T
-from rdf_generator_spark.ids import kb_iri
+from rdf_generator_spark.ids import (
+    cell_seed,
+    chain_seed,
+    kb_iri,
+    org_seed,
+    phe_seed,
+    taxon_seed,
+    var_seed,
+)
 from rdf_generator_spark.normalize import (
     norm_seed_component,
+    norm_species_uri,
     norm_taxon_label,
     parse_char_num_col,
+    split_binomial,
     strip_col,
 )
 from rdf_generator_spark.operators.graph_ops import (
@@ -86,7 +96,6 @@ _DIM_BROADCAST_FILE_LIMIT = 2000
 # reported with the bucket width kgbench's workload table expects.
 _GIANT_DOC_EXACT_BYTES = 192 * 1024
 _AUTO_COUNTER_BUCKET_WIDTH = 64
-_PROBE_FILE_CAP = 4096
 
 # Content bytes per parse task. The fused parse is the build's one
 # Python stage; it runs at ~16-28 MiB/s of content per core, while
@@ -113,6 +122,11 @@ def _input_files(corpus: DataFrame) -> List[str]:
         return corpus.inputFiles()
     except Exception:
         return []
+
+
+# Above this many corpus files `_content_bytes` reads no footer and
+# reports the total as unknown.
+_PROBE_FILE_CAP = 4096
 
 
 def _content_bytes(files: List[str]) -> Optional[int]:
@@ -484,23 +498,8 @@ def build_graph(
             kb_iri("mx", F.coalesce(F.col("doc_matrix_label"), F.lit("default_matrix"))),
         )
     )
-    # Variable locator-chain seed (main.py:929-953; 'None' stringification
-    # quirk replicated).
-    uri_comps = F.transform(
-        F.col("locators"),
-        lambda l: F.when(l["uri"].isNull(), F.lit("None")).otherwise(strip_col(l["uri"])),
-    )
-    label_comps = F.transform(
-        F.col("locators"),
-        lambda l: F.when(l["label"].isNull(), F.lit("None")).otherwise(strip_col(l["label"])),
-    )
-    has_locs = F.size(F.col("locators")) > 0
-    all_of = lambda comps: F.forall(comps, lambda c: c != "")  # noqa: E731
     charsx = charsx.withColumn(
-        "chain_seed",
-        F.when(has_locs & all_of(uri_comps), F.array_join(uri_comps, "::"))
-        .when(has_locs & all_of(label_comps), F.array_join(label_comps, "::"))
-        .when(has_locs, F.concat(F.lit("__malformed__::"), F.col("char_id"))),
+        "chain_seed", chain_seed(F.col("locators"), F.col("char_id"))
     )
     charsx = mat(charsx, "charsx")
     # Contract check rides the (cheap, already-materialized) parsed
@@ -565,8 +564,7 @@ def build_graph(
     # (phe_base), plus vord + 1.
     cells_j = cells_j.select(
         "*",
-        kb_iri("cell", F.concat(F.col("taxon"), F.lit("_"), F.col("char_pos")))
-        .alias("cell_iri"),
+        kb_iri("cell", cell_seed(F.col("taxon"), F.col("char_pos"))).alias("cell_iri"),
         norm_taxon_label(F.col("taxon")).alias("norm_taxon"),
     )
     # The cells hub, read by visits below and by cell_triples in
@@ -658,32 +656,13 @@ def build_graph(
     # The mint/fold columns apply in three chained projections that
     # respect their data dependencies (org_iri -> loc_chain/var;
     # loc_chain -> last_loc_iri).
-    org_seed = F.concat_ws(
-        "::",
-        F.col("salt"),
-        F.coalesce(
-            F.nullif(norm_seed_component(F.col("norm_taxon")), F.lit("")),
-            F.lit("unknown-taxon"),
-        ),
-        F.coalesce(
-            F.nullif(norm_seed_component(F.col("v_org_label")), F.lit("")),
-            F.lit("organism"),
-        ),
-    )
     visits = visits.select(
         "*",
-        kb_iri("org", org_seed).alias("org_iri"),
-        kb_iri(
-            "phe",
-            F.concat(
-                F.lit("pheno-"),
-                F.col("char_id"),
-                F.lit("::"),
-                F.lower(strip_col(F.col("taxon"))),
-                F.col("suffix"),
-            ),
-        ).alias("phe_iri"),
-        kb_iri("tu", F.lower(strip_col(F.col("norm_taxon")))).alias("tu_iri"),
+        kb_iri("org", org_seed(F.col("salt"), F.col("norm_taxon"),
+                               F.col("v_org_label"))).alias("org_iri"),
+        kb_iri("phe", phe_seed(F.col("char_id"), F.col("taxon"),
+                               F.col("suffix"))).alias("phe_iri"),
+        kb_iri("tu", taxon_seed(F.col("norm_taxon"))).alias("tu_iri"),
     )
     # Locator-chain fold (F4): sequential-in-array, parallel-across-rows.
     loc_filtered = F.filter(
@@ -719,24 +698,16 @@ def build_graph(
             lambda acc: acc["acc"],
         ).alias("loc_chain"),
     )
-    var_seed = F.when(
-        F.col("chain_seed").isNotNull(),
-        F.concat(
-            F.col("org_iri"), F.lit("::"), F.col("chain_seed"), F.lit("::"),
-            F.lower(strip_col(F.col("var_label_eff"))),
-        ),
-    ).otherwise(
-        F.concat(
-            F.lit("__noloc__::"), F.col("char_id"), F.lit("::"),
-            F.lower(strip_col(F.col("var_label_eff"))),
-        )
-    )
     visits = visits.select(
         "*",
         F.when(
             F.size("loc_chain") > 0, F.element_at("loc_chain", -1)["iri"]
         ).alias("last_loc_iri"),
-        F.when(F.col("has_variable"), kb_iri("var", var_seed)).alias("var_iri"),
+        F.when(
+            F.col("has_variable"),
+            kb_iri("var", var_seed(F.col("org_iri"), F.col("chain_seed"),
+                                   F.col("char_id"), F.col("var_label_eff"))),
+        ).alias("var_iri"),
         F.when(
             F.col("st_qua_iri").isNotNull(),
             kb_iri(
@@ -1042,26 +1013,14 @@ def _assemble(spark, corpus, charsx, states_x, cells_j, visits, species, taxon_r
     )
     # normalize_species_uri(info.URI, taxon_label) — input uri is already
     # load-normalized; renormalization is idempotent (main.py:146-167,627).
-    sp_uri = F.when(
-        F.col("uri").isNull() | (F.col("uri") == ""),
-        F.concat(F.lit(T.KB), F.col("taxon_label")),
-    ).when(
-        strip_col(F.col("uri")).startswith("kb:"),
-        F.concat(F.lit(T.KB),
-                 norm_taxon_label(F.substring(strip_col(F.col("uri")), 4, 2 ** 30))),
-    ).when(
-        strip_col(F.col("uri")).startswith(T.KB),
-        F.concat(F.lit(T.KB),
-                 norm_taxon_label(F.substring(strip_col(F.col("uri")), len(T.KB) + 1, 2 ** 30))),
-    ).otherwise(strip_col(F.col("uri")))
     taxa_sp = taxa_sp.select(
         "*",
-        sp_uri.alias("sp_uri"),
+        norm_species_uri(F.col("uri"), F.col("taxon_label")).alias("sp_uri"),
         norm_taxon_label(
             F.coalesce(F.nullif(F.col("valid_name"), F.lit("")), F.col("taxon_label"))
         ).alias("concept_label"),
-        kb_iri("sp", F.lower(strip_col(F.col("taxon_label")))).alias("sp_inst"),
-        kb_iri("tu", F.lower(strip_col(F.col("taxon_label")))).alias("tu_iri"),
+        kb_iri("sp", taxon_seed(F.col("taxon_label"))).alias("sp_inst"),
+        kb_iri("tu", taxon_seed(F.col("taxon_label"))).alias("tu_iri"),
     )
     # taxa_sp is a per-taxon dimension table (rows = distinct taxa)
     # consumed by TWO emission branches (species_part and tu_part) —
@@ -1093,17 +1052,8 @@ def _assemble(spark, corpus, charsx, states_x, cells_j, visits, species, taxon_r
         )
         .select(
             *DOC,
-            kb_iri(
-                "org",
-                F.concat_ws(
-                    "::",
-                    F.col("d.salt"),
-                    F.coalesce(F.nullif(norm_seed_component(F.col("d.species_label")), F.lit("")),
-                               F.lit("unknown-taxon")),
-                    F.coalesce(F.nullif(norm_seed_component(F.col("d.org_label")), F.lit("")),
-                               F.lit("organism")),
-                ),
-            ).alias("default_org_iri"),
+            kb_iri("org", org_seed(F.col("d.salt"), F.col("d.species_label"),
+                                   F.col("d.org_label"))).alias("default_org_iri"),
         )
     )
     # tu enrichment columns apply in dependency-ordered projections
@@ -1111,7 +1061,7 @@ def _assemble(spark, corpus, charsx, states_x, cells_j, visits, species, taxon_r
         "*",
         F.coalesce(
             F.col("default_org_iri"),
-            kb_iri("org", F.concat(F.lower(strip_col(F.col("taxon_label"))),
+            kb_iri("org", F.concat(taxon_seed(F.col("taxon_label")),
                                    F.lit("::organism"))),
         ).alias("org_eff"),
         strip_col(
@@ -1123,21 +1073,7 @@ def _assemble(spark, corpus, charsx, states_x, cells_j, visits, species, taxon_r
             )
         ).alias("valid_label"),
     )
-    tu_rows = tu_rows.select("*", F.split(F.col("valid_label"), " ", 3).alias("__parts"))
-    tu_rows = tu_rows.select(
-        "*",
-        F.when(
-            F.size("__parts") >= 2,
-            F.concat(F.col("__parts")[0], F.lit(" "), F.col("__parts")[1]),
-        ).otherwise(F.col("valid_label")).alias("binomial"),
-        F.when(F.size("__parts") == 3, F.col("__parts")[2])
-        .otherwise(F.lit("")).alias("author"),
-    )
-    tu_rows = tu_rows.select(
-        "*",
-        strip_col(F.concat(F.lit("<i>"), F.col("binomial"),
-                           F.lit("</i> "), F.col("author"))).alias("tu_comment"),
-    )
+    tu_rows = split_binomial(tu_rows, "valid_label")
     tu_part = emit(tu_rows, [
         Triple("tu_iri", T.RDF_TYPE, NI),
         Triple("tu_iri", T.RDFS_LABEL, "taxon_label", lit=True),

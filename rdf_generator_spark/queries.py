@@ -17,7 +17,11 @@ Oracle strategy per group:
   REFERENCE SPEC (tests/oracle/refsim.py) by scripts/regen_pins.py —
   an independent derivation, not a Spark snapshot.
 * Normalizer / seed-grammar entries — VALUES inputs on both sides with
-  a genuine DuckDB SQL twin of the transformation.
+  a genuine DuckDB SQL twin of the transformation. The Spark side runs
+  the build's own code: the Column normalizers of normalize.py, the
+  seed builders of ids.py, and, for what the build does in Python
+  (locator normalization, negation detection, the state seed), the
+  parse of a one-document corpus (`_char_doc`).
 * Parser entries — Spark parses the golden files through the corpus
   table; DuckDB re-derives the same rows straight from the files via
   read_text + JSON/CSV/regexp functions.
@@ -28,6 +32,7 @@ Oracle strategy per group:
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 import re
 import shutil
@@ -434,15 +439,24 @@ _P1_INPUTS = [
 ]
 
 
+def _char_doc(spark: SparkSession, chars: List[dict]) -> DataFrame:
+    """`chars` as one character-JSON document through the build's parse
+    and linker (`parse_char_docs`, empty label index)."""
+    from rdf_generator_spark.sources.corpus import corpus_df
+    from rdf_generator_spark.sources.parsers import parse_char_docs
+
+    ensure_workers_can_import(spark)
+    doc = ("r", "chars.json", "c" * 40, "json", json.dumps(chars))
+    return parse_char_docs(corpus_df(spark, [doc]))
+
+
 def p1_locator_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """String-locator normalization (P1, main.py:500-512): label is the
-    last '/'-segment, uri the full string."""
-    df = spark.createDataFrame(_P1_INPUTS, "i int, x string")
-    return df.select(
-        "i",
-        F.element_at(F.split(F.col("x"), "/"), -1).alias("label"),
-        F.col("x").alias("uri"),
-    )
+    """String-locator normalization (P1, main.py:500-512), the parse's
+    `_norm_locator`: label is the last '/'-segment, uri the full string.
+    One character per input, its Char_ID the input's i."""
+    chars = _char_doc(spark, [{"Char_ID": i, "Locators": [x]} for i, x in _P1_INPUTS])
+    return chars.selectExpr("CAST(char_id AS INT) AS i", "locators[0].label AS label",
+                            "locators[0].uri AS uri")
 
 
 ORACLES["p1_locator_norm"] = f"""
@@ -520,28 +534,14 @@ _P5_INPUTS = [
 
 
 def p5_species_uri_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """normalize_species_uri (P5, main.py:146-167) as column algebra,
-    including the Python-truthiness quirk: a whitespace-only uri is
-    truthy, strips to '', and is returned as-is."""
-    from rdf_generator_spark.normalize import norm_taxon_label
-    from rdf_generator_spark.normalize import strip_col
+    """normalize_species_uri (P5, main.py:146-167), the build's
+    `norm_species_uri`, including the Python-truthiness quirk: a
+    whitespace-only uri is truthy, strips to '', and is returned as-is."""
+    from rdf_generator_spark.normalize import norm_species_uri, norm_taxon_label
 
     df = spark.createDataFrame(_P5_INPUTS, "i int, uri string, fb string")
-    fbn = norm_taxon_label(F.col("fb"))
-    stripped = strip_col(F.col("uri"))
-    out = (
-        F.when(F.col("uri").isNull() | (F.col("uri") == ""),
-               F.concat(F.lit(T.KB), fbn))
-        .when(stripped.startswith("kb:"),
-              F.concat(F.lit(T.KB),
-                       norm_taxon_label(F.substring(stripped, 4, 2 ** 30))))
-        .when(stripped.startswith(T.KB),
-              F.concat(F.lit(T.KB),
-                       norm_taxon_label(
-                           F.substring(stripped, len(T.KB) + 1, 2 ** 30))))
-        .otherwise(stripped)
-    )
-    return df.select("i", out.alias("sp_uri"))
+    return df.select(
+        "i", norm_species_uri(F.col("uri"), norm_taxon_label(F.col("fb"))).alias("sp_uri"))
 
 
 ORACLES["p5_species_uri_norm"] = f"""
@@ -619,18 +619,12 @@ _P8_INPUTS = [
 
 
 def p8_binomial_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binomial/author split + italic TU comment (P8, main.py:2005-2016):
-    split(' ', limit=3) keeps the author tail intact."""
+    """Binomial/author split + italic TU comment (P8, main.py:2005-2016),
+    the build's `split_binomial`: split(' ', limit=3) keeps the author."""
+    from rdf_generator_spark.normalize import split_binomial
+
     df = spark.createDataFrame(_P8_INPUTS, "i int, x string")
-    parts = F.split(F.col("x"), " ", 3)
-    binom = F.when(
-        F.size(parts) >= 2, F.concat(parts[0], F.lit(" "), parts[1])
-    ).otherwise(F.col("x"))
-    author = F.when(F.size(parts) == 3, parts[2]).otherwise(F.lit(""))
-    from rdf_generator_spark.normalize import strip_col
-    html = strip_col(F.concat(F.lit("<i>"), binom, F.lit("</i> "), author))
-    return df.select("i", binom.alias("binomial"), author.alias("author"),
-                     html.alias("html"))
+    return split_binomial(df, "x").selectExpr("i", "binomial", "author", "tu_comment AS html")
 
 
 ORACLES["p8_binomial_split"] = f"""
@@ -659,20 +653,14 @@ _P9_INPUTS = [
 
 
 def p9_negation_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """State-label negation detection (P9, main.py:1000-1018)."""
-    from rdf_generator_spark.normalize import strip_col
-
-    df = spark.createDataFrame(_P9_INPUTS, "i int, x string")
-    label0 = F.when(F.col("x").isNull(), F.lit("unknown")).otherwise(
-        strip_col(F.col("x"))
-    )
-    is_neg = F.lower(label0).startswith("not ")
-    base = strip_col(F.substring(label0, 5, 2 ** 30))
-    labeln = F.when(is_neg, F.concat(F.lit("not "), base)).otherwise(label0)
-    return df.select(
-        "i", is_neg.alias("is_neg"),
-        F.when(is_neg, base).otherwise(F.lit("")).alias("base_label"),
-        labeln.alias("labelN"),
+    """State-label negation detection (P9, main.py:1000-1018), the
+    parse's `link_characters`: ``base_label`` is set exactly when the
+    label is negated. One character per input, its Char_ID the input's
+    i, its one state labeled by the input."""
+    chars = _char_doc(spark, [{"Char_ID": i, "States": [{"label": x}]} for i, x in _P9_INPUTS])
+    return chars.selectExpr(
+        "CAST(char_id AS INT) AS i", "states[0].base_label IS NOT NULL AS is_neg",
+        "coalesce(states[0].base_label, '') AS base_label", "states[0].labelN AS labelN",
     )
 
 
@@ -690,10 +678,10 @@ ORACLES["p9_negation_detect"] = f"""
 
 
 # ---------------------------------------------------------------------------
-# K-family seed grammar (K3/K4/K5): the exact pre-UUID5 seed strings vs
-# DuckDB concat twins (VERDICT r1 item 2). The minted-IRI census above
-# already pins the grammar end-to-end through sha1; these entries make
-# the grammar itself inspectable.
+# K-family seed grammar (K3/K4/K5): the exact pre-UUID5 seed strings of
+# the build's seed builders (ids.py) and parse vs DuckDB concat twins.
+# The minted-IRI census above already pins the grammar end-to-end
+# through sha1; these entries make the grammar itself inspectable.
 # ---------------------------------------------------------------------------
 
 _K3_INPUTS = [
@@ -705,26 +693,13 @@ _K3_INPUTS = [
 
 
 def k3_org_seed_grammar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Organism-instance seed (K3, main.py:929-940):
-    salt :: (seednorm(taxnorm(taxon)) or 'unknown-taxon') ::
-    (seednorm(org_label) or 'organism')."""
-    from rdf_generator_spark.normalize import (
-        norm_seed_component, norm_taxon_label,
-    )
+    """Organism-instance seed (K3, main.py:929-940), `ids.org_seed` on
+    the taxon-normalized label, as the cell visits call it."""
+    from rdf_generator_spark.ids import org_seed
+    from rdf_generator_spark.normalize import norm_taxon_label
 
     df = spark.createDataFrame(_K3_INPUTS, "i int, salt string, taxon string, org string")
-    seed = F.concat_ws(
-        "::",
-        F.col("salt"),
-        F.coalesce(
-            F.nullif(norm_seed_component(norm_taxon_label(F.col("taxon"))), F.lit("")),
-            F.lit("unknown-taxon"),
-        ),
-        F.coalesce(
-            F.nullif(norm_seed_component(F.col("org")), F.lit("")),
-            F.lit("organism"),
-        ),
-    )
+    seed = org_seed(F.col("salt"), norm_taxon_label(F.col("taxon")), F.col("org"))
     return df.select("i", seed.alias("org_seed"))
 
 
@@ -748,30 +723,23 @@ _K4_INPUTS = [
 
 def k4_seed_grammar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """State/quality, cell and phenotype seed grammar (K4,
-    main.py:996-1018, 1740, 1790): sta/qua seed is
-    char_id + '_' + (truthy uri | lower(labelN)); cell seed uses the RAW
-    taxon label; phe seed the lowered+stripped one."""
-    from rdf_generator_spark.normalize import strip_col
+    main.py:996-1018, 1740, 1790): the sta/qua seed,
+    char_id + '_' + (truthy uri | lower(labelN)), from the parse (one
+    character per input with its one state); `ids.cell_seed` on the RAW
+    taxon label; `ids.phe_seed` (no sex-variant suffix)."""
+    from rdf_generator_spark.ids import cell_seed, phe_seed
 
+    chars = _char_doc(spark, [{"Char_ID": c, "States": [{"label": lb, "uri": u}]}
+                              for _, c, lb, u, _, _ in _K4_INPUTS])
+    sta = chars.selectExpr("char_id", "states[0].seed AS sta_seed")
     df = spark.createDataFrame(
         _K4_INPUTS, "i int, char_id string, label string, uri string, taxon string, ci int"
     )
-    label0 = F.when(F.col("label").isNull(), F.lit("unknown")).otherwise(
-        strip_col(F.col("label"))
+    return df.join(sta, "char_id").select(
+        "i", "sta_seed",
+        cell_seed(F.col("taxon"), F.col("ci")).alias("cell_seed"),
+        phe_seed(F.col("char_id"), F.col("taxon"), F.lit("")).alias("phe_seed"),
     )
-    is_neg = F.lower(label0).startswith("not ")
-    base = strip_col(F.substring(label0, 5, 2 ** 30))
-    labeln = F.when(is_neg, F.concat(F.lit("not "), base)).otherwise(label0)
-    uri_t = F.when(F.col("uri").isNull() | (F.col("uri") == ""), F.lit(None)).otherwise(
-        F.col("uri")
-    )
-    sta_seed = F.concat(F.col("char_id"), F.lit("_"),
-                        F.coalesce(uri_t, F.lower(labeln)))
-    cell_seed = F.concat(F.col("taxon"), F.lit("_"), F.col("ci").cast("string"))
-    phe_seed = F.concat(F.lit("pheno-"), F.col("char_id"), F.lit("::"),
-                        F.lower(strip_col(F.col("taxon"))))
-    return df.select("i", sta_seed.alias("sta_seed"), cell_seed.alias("cell_seed"),
-                     phe_seed.alias("phe_seed"))
 
 
 _K4_L0 = "CASE WHEN label IS NULL THEN 'unknown' ELSE " + _strip_sql("label") + " END"
@@ -791,10 +759,10 @@ ORACLES["k4_seed_grammar"] = f"""
 
 def k5_fallback_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Locator-chain seed with the reference's fallback ladder (K5,
-    main.py:929-962): all-URIs, else all-labels, else the deterministic
-    '__malformed__' stand-in; no locators -> the '__noloc__' variable
-    seed (documented uuid4 replacement, SURVEY §7)."""
-    from rdf_generator_spark.normalize import strip_col
+    main.py:929-962), `ids.chain_seed`: all-URIs, else all-labels, else
+    the '__malformed__' stand-in; and `ids.var_seed` over it (organism
+    'ORG', label 'width'): no locators -> the '__noloc__' seed."""
+    from rdf_generator_spark.ids import chain_seed, var_seed
 
     rows = [
         (1, "C1", [("labrum", "http://x/1"), ("area", "http://x/2")]),
@@ -806,26 +774,9 @@ def k5_fallback_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = spark.createDataFrame(
         rows, "i int, char_id string, locs array<struct<label:string,uri:string>>"
     )
-    uc = F.transform(
-        F.col("locs"),
-        lambda l: F.when(l["uri"].isNull(), F.lit("None")).otherwise(strip_col(l["uri"])),
-    )
-    lc = F.transform(
-        F.col("locs"),
-        lambda l: F.when(l["label"].isNull(), F.lit("None")).otherwise(strip_col(l["label"])),
-    )
-    has = F.size(F.col("locs")) > 0
-    all_of = lambda comps: F.forall(comps, lambda c: c != "")  # noqa: E731
-    chain = (
-        F.when(has & all_of(uc), F.array_join(uc, "::"))
-        .when(has & all_of(lc), F.array_join(lc, "::"))
-        .when(has, F.concat(F.lit("__malformed__::"), F.col("char_id")))
-    )
-    var_seed = F.when(
-        chain.isNotNull(),
-        F.concat(F.lit("ORG::"), chain, F.lit("::width")),
-    ).otherwise(F.concat(F.lit("__noloc__::"), F.col("char_id"), F.lit("::width")))
-    return df.select("i", chain.alias("chain_seed"), var_seed.alias("var_seed"))
+    chain = chain_seed(F.col("locs"), F.col("char_id"))
+    var = var_seed(F.lit("ORG"), chain, F.col("char_id"), F.lit("width"))
+    return df.select("i", chain.alias("chain_seed"), var.alias("var_seed"))
 
 
 ORACLES["k5_fallback_seeds"] = """

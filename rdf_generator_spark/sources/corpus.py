@@ -69,8 +69,8 @@ def corpus_parquet_df(
     file-backed shape real corpora have (tableio parquet/Iceberg refs).
 
     A file-backed corpus exposes its file list and parquet footers, which
-    `build_graph` reads (no job) to gate the counters and dimension
-    broadcasts and to size the parse, and its path/lang-only subtrees
+    `build_graph` reads (no job) to gate the dimension broadcasts and to
+    size the parse and its hub, and its path/lang-only subtrees
     become pruned columnar scans that never read `content`. The staging
     write is a JVM job over `corpus_df`'s local relation. Use for
     benchmarks and any multi-action workload; plain `corpus_df` remains

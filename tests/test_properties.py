@@ -1,7 +1,8 @@
 """Property-based tests (hypothesis): the JVM Column normalizers must
 agree with their Python twins on arbitrary inputs, UUID5 minting must
-match the stdlib, and the NEXUS taxon rows must number the cell grid
-as the reference's counters do — beyond the hand-picked fixtures."""
+match the stdlib, the seed builders must build refsim's seeds, and the
+NEXUS taxon rows must number the cell grid as the reference's counters
+do — beyond the hand-picked fixtures."""
 
 from __future__ import annotations
 
@@ -88,6 +89,55 @@ def test_uuid5_matches_stdlib(spark, seeds):
            df.select("i", uuid5_col(F.col("s")).alias("u")).collect()}
     for i, s in enumerate(seeds):
         assert got[i] == str(_uuid.uuid5(_UUID_NAMESPACE, s)), repr(s)
+
+
+_MAYBE_TEXT = st.one_of(st.none(), _TEXT)
+# (salt, taxon, organism label, locators as (label, uri), Char_ID,
+# variable label)
+_SEED_INPUTS = st.tuples(
+    _TEXT, _MAYBE_TEXT, _MAYBE_TEXT,
+    st.lists(st.tuples(_MAYBE_TEXT, _MAYBE_TEXT), max_size=4),
+    _TEXT, _MAYBE_TEXT,
+)
+
+
+@given(st.lists(_SEED_INPUTS, min_size=1, max_size=8))
+@settings(**_SETTINGS)
+def test_seed_builders_match_refsim(spark, rows):
+    """The build's organism, locator-chain and variable seed builders
+    (ids.py) equal the seeds refsim builds: `RefSim.org_seed`,
+    `RefSim.variable_chain_seed` and the seed `RefSim.handle_variable`
+    mints its IRI from, on random salts, taxa, organism labels, locator
+    lists (None labels and URIs included) and variable labels. The var
+    seed builder takes the effective variable label, so the input gets
+    refsim's fallback for a falsy label ('Unnamed Variable') first."""
+    from pyspark.sql import functions as F
+
+    from rdf_generator_spark.ids import chain_seed, kb_iri, org_seed, uuid5_kb, var_seed
+    from tests.oracle.refsim import OGraph, RefSim
+
+    df = spark.createDataFrame(
+        [(i, salt, taxon, org, char_id, var_label or "Unnamed Variable", locs)
+         for i, (salt, taxon, org, locs, char_id, var_label) in enumerate(rows)],
+        "i int, salt string, taxon string, org string, char_id string,"
+        " var_label string, locs array<struct<label:string,uri:string>>",
+    )
+    org = org_seed(F.col("salt"), F.col("taxon"), F.col("org"))
+    chain = chain_seed(F.col("locs"), F.col("char_id"))
+    var = kb_iri("var", var_seed(kb_iri("org", org), chain, F.col("char_id"),
+                                 F.col("var_label")))
+    got = {r["i"]: r for r in df.select(
+        "i", org.alias("org"), chain.alias("chain"), var.alias("var")).collect()}
+    sim = RefSim([], [], [], {}, {})
+    for i, (salt, taxon, org_label, locs, char_id, var_label) in enumerate(rows):
+        sim.salt = salt
+        row = {"char_id": char_id, "has_variable": True, "var_label": var_label,
+               "locators": [{"label": label, "uri": uri} for label, uri in locs]}
+        want_org = sim.org_seed(org_label, taxon)
+        assert got[i]["org"] == want_org, (i, rows[i])
+        assert got[i]["chain"] == sim.variable_chain_seed(row), (i, rows[i])
+        want_var = sim.handle_variable(OGraph(), row, uuid5_kb("org", want_org))
+        assert got[i]["var"] == want_var, (i, rows[i])
 
 
 def test_nexus_taxon_rows_number_the_grid():
